@@ -30,6 +30,7 @@ import datetime
 import os
 
 from ..registry import table_path
+from ..storage.stats import footer_bounds
 
 # Physical types whose parquet min/max statistics are exact values.
 # BYTE_ARRAY stats may be truncated bounds; FLOAT/DOUBLE min/max can be
@@ -57,31 +58,20 @@ def parquet_minmax(path: str, column: str):
     ``path`` from footer statistics alone.  Returns ``None`` when any
     row group lacks exact stats (caller falls back to an aggregate);
     raises ``KeyError`` on an unknown column."""
-    import pyarrow.parquet as pq
-
     lo = hi = None
-    files = _parquet_files(path)
-    if not files:
-        return None
-    for fpath in files:
-        md = pq.ParquetFile(fpath).metadata
-        sch = md.schema
-        try:
-            idx = next(i for i in range(md.num_columns)
-                       if sch.column(i).name == column)
-        except StopIteration:
+    for fpath in _parquet_files(path):
+        rows, cols = footer_bounds(fpath, [column])
+        if column not in cols:
             raise KeyError(f"column {column!r} not in {fpath}")
-        if sch.column(idx).physical_type not in _EXACT_PHYSICAL:
+        b = cols[column]
+        if b.physical_type not in _EXACT_PHYSICAL:
             return None
-        for rg in range(md.num_row_groups):
-            cc = md.row_group(rg).column(idx)
-            if cc.num_values == 0:
-                continue
-            st = cc.statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
+        if rows == 0:
+            continue
+        if b.lo is None:
+            return None
+        lo = b.lo if lo is None else min(lo, b.lo)
+        hi = b.hi if hi is None else max(hi, b.hi)
     if lo is None:
         return None
     return lo, hi

@@ -47,6 +47,7 @@ format; this backs SURVEY §2 OP-SRC interop at 100 TB scale.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -55,6 +56,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .stats import DAY, US, as_of_ms, epoch, may_match
 
 _AVRO_MAGIC = b"Obj\x01"
 
@@ -317,21 +320,12 @@ def _lit_physical(type_name: str, lit):
     epoch-days in manifests, but callers pass datetime/date objects —
     without this mapping every temporal comparison raised TypeError
     and file-level pruning silently kept everything."""
-    import datetime
-
     if type_name in ("timestamp", "timestamptz") \
             and isinstance(lit, datetime.datetime):
-        v = lit if lit.tzinfo is not None \
-            else lit.replace(tzinfo=datetime.timezone.utc)
-        # exact integer micros: float .timestamp() can land 1µs off
-        # near representability edges, and pruning must stay
-        # conservative even for equality on a bound value
-        epoch = datetime.datetime(1970, 1, 1,
-                                  tzinfo=datetime.timezone.utc)
-        return (v - epoch) // datetime.timedelta(microseconds=1)
+        return epoch(lit, US)
     if type_name == "date" and isinstance(lit, datetime.date) \
             and not isinstance(lit, datetime.datetime):
-        return lit.toordinal() - 719163
+        return epoch(lit, DAY)
     return lit
 
 
@@ -350,18 +344,8 @@ def _file_may_match(df_entry: dict, preds, field_id: dict,
         lit = _lit_physical(field_type.get(col), raw_lit)
         lo = _decode_bound(field_type.get(col), lowers.get(fid))
         hi = _decode_bound(field_type.get(col), uppers.get(fid))
-        try:
-            if op == "=" and ((lo is not None and lit < lo)
-                              or (hi is not None and lit > hi)):
-                return False
-            if op in (">", ">=") and hi is not None and (
-                    lit > hi if op == ">=" else lit >= hi):
-                return False
-            if op in ("<", "<=") and lo is not None and (
-                    lit < lo if op == "<=" else lit <= lo):
-                return False
-        except TypeError:  # incomparable literal: stay conservative
-            continue
+        if not may_match(lo, hi, op, lit):
+            return False
     return True
 
 
@@ -387,17 +371,11 @@ def _transform_pred_literal(transform: str, type_name: str):
     is a sound exclusion; range predicates are not).  ``(None, None,
     False)`` means no pruning (unknown transform / unsupported
     literal — always sound)."""
-    import datetime
-
     if transform == "identity":
         return type_name, (lambda v: v), False
 
     def us(v):
-        if isinstance(v, datetime.datetime):
-            if v.tzinfo is None:
-                v = v.replace(tzinfo=datetime.timezone.utc)
-            return int(v.timestamp() * 1_000_000)
-        return None
+        return epoch(v, US) if isinstance(v, datetime.datetime) else None
 
     if transform == "day":
         if type_name in ("timestamp", "timestamptz"):
@@ -406,7 +384,7 @@ def _transform_pred_literal(transform: str, type_name: str):
                 else us(v) // 86_400_000_000)), False
         if type_name == "date":
             return "int", (lambda v: (
-                v.toordinal() - 719163
+                epoch(v, DAY)
                 if isinstance(v, datetime.date)
                 and not isinstance(v, datetime.datetime)
                 else None)), False
@@ -488,23 +466,14 @@ def _manifest_may_match(m: dict, preds, specs: dict,
                 continue
             if eq_only and op != "=":
                 continue  # bucket: only equality prunes soundly
+            if not strict:
+                op = {">": ">=", "<": "<="}.get(op, op)
             try:
                 plit = to_part(lit)
-                if plit is None:
-                    continue
-                if op == "=" and ((lo is not None and plit < lo)
-                                  or (hi is not None and plit > hi)):
-                    return False
-                if op in (">", ">=") and hi is not None and (
-                        plit > hi if (op == ">=" or not strict)
-                        else plit >= hi):
-                    return False
-                if op in ("<", "<=") and lo is not None and (
-                        plit < lo if (op == "<=" or not strict)
-                        else plit <= lo):
-                    return False
             except TypeError:
                 continue
+            if plit is not None and not may_match(lo, hi, op, plit):
+                return False
     return True
 
 
@@ -691,8 +660,7 @@ class IcebergTable:
         pre-round-6 tables; real writers always record it) and a
         timestamp before the first snapshot.  ``timestamp`` may be a
         datetime (naive = UTC), an ISO-8601 string, or epoch ms."""
-        from .delta import _to_epoch_ms
-        ms = _to_epoch_ms(timestamp)
+        ms = as_of_ms(timestamp)
         snaps = self.metadata().get("snapshots") or []
         if not snaps:
             raise ValueError(

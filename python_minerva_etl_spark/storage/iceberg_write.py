@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .iceberg import IcebergTable, _localize, _to_spark_schema
+from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
+                    zorder_proxy_sql)
 
 
 class IcebergConcurrentCommit(FileExistsError):
@@ -184,19 +186,13 @@ _BOUND_ENCODERS = {
     "double": lambda v: struct.pack("<d", float(v)),
     "string": lambda v: str(v).encode("utf-8"),
     "date": lambda v: struct.pack(
-        "<i", v if isinstance(v, int) else v.toordinal() - 719163),
+        "<i", v if isinstance(v, int) else epoch(v, DAY)),
     # parquet stats hand back datetimes; Iceberg bounds are micros LE
-    "timestamp": lambda v: struct.pack("<q", _micros(v)),
-    "timestamptz": lambda v: struct.pack("<q", _micros(v)),
+    "timestamp": lambda v: struct.pack(
+        "<q", v if isinstance(v, int) else epoch(v, US)),
+    "timestamptz": lambda v: struct.pack(
+        "<q", v if isinstance(v, int) else epoch(v, US)),
 }
-
-
-def _micros(v) -> int:
-    if isinstance(v, int):
-        return v
-    import datetime
-    epoch = datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-    return int((v - epoch).total_seconds() * 1_000_000)
 
 
 # --------------------------------------------- partition transforms
@@ -542,39 +538,24 @@ def _spec_part_field(spec_fields: list[dict],
 
 def _file_bounds(parquet_path: str, ice_schema: dict
                  ) -> tuple[list, list]:
-    """Per-column lower/upper bounds from the parquet footer's
-    row-group statistics, encoded per the Iceberg single-value
-    serialization, as [{key: field-id, value: bytes}] logical maps.
-    Columns without stats (or of non-encodable types) are simply
-    omitted — the reader treats missing bounds conservatively."""
-    import pyarrow.parquet as pq
-
+    """Per-column lower/upper bounds from the parquet footer
+    (:func:`.stats.footer_bounds`), encoded per the Iceberg
+    single-value serialization, as [{key: field-id, value: bytes}]
+    logical maps.  Unbounded columns (or those of non-encodable
+    types) are simply omitted — the reader treats missing bounds
+    conservatively."""
     by_name = {f["name"]: f for f in ice_schema["fields"]
                if isinstance(f["type"], str)}
-    md = pq.ParquetFile(parquet_path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if (name not in by_name or st is None
-                    or not st.has_min_max):
-                continue
-            lo, hi = st.min, st.max
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+    _, cols = footer_bounds(parquet_path, by_name)
     lower, upper = [], []
-    for name, lo in mins.items():
+    for name, b in cols.items():
         enc = _BOUND_ENCODERS.get(by_name[name]["type"])
-        if enc is None:
+        if enc is None or b.lo is None:
             continue
         try:
-            lower.append({"key": by_name[name]["id"], "value": enc(lo)})
+            lower.append({"key": by_name[name]["id"], "value": enc(b.lo)})
             upper.append({"key": by_name[name]["id"],
-                          "value": enc(maxs[name])})
+                          "value": enc(b.hi)})
         except (struct.error, ValueError, TypeError):
             continue
     return lower, upper
@@ -822,10 +803,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
     ice_schema, part = _precheck_append(path, df.schema, partition_by,
                                         merge_schema)
     data_files = _stage_data_files(df, path, part, ice_schema)
-    for f in data_files:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    _bound_entries(data_files, ice_schema)
     _commit_staged(path, data_files, ice_schema, part,
                    max_commit_attempts,
                    df_schema=df.schema if merge_schema else None)
@@ -852,10 +830,7 @@ def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
         return
     ice_schema, part = _precheck_append(path, df.schema, partition_by)
     data_files = _stage_data_files(df, path, part, ice_schema)
-    for f in data_files:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    _bound_entries(data_files, ice_schema)
     table = IcebergTable(path)
     for _ in range(max_commit_attempts):
         md = table.metadata()
@@ -1896,8 +1871,8 @@ def compact_iceberg(spark: SparkSession, path: str,
 
     ``zorder_by`` turns the pass into a multi-dimensional CLUSTERING
     rewrite (rewrite_data_files sort-order with a Z-curve): the
-    shared quantile-binned Morton machinery (storage/delta.py
-    ``_zorder_cluster``) range-partitions the rewrite so each new
+    shared quantile-binned Morton machinery
+    (:func:`.stats.zorder_cluster`) range-partitions the rewrite so each new
     data file covers a narrow hyper-rectangle, and the per-file
     lower/upper bounds written into the manifest make the reader's
     ``where=`` file pruning effective on EVERY clustered column.
@@ -1936,8 +1911,6 @@ def compact_iceberg(spark: SparkSession, path: str,
     if zorder_by:
         import math
 
-        from .delta import _zorder_cluster, _zorder_proxy_sql
-
         type_of = {f.name: f.dataType
                    for f in _to_spark_schema(ice_schema).fields}
         bad = [c for c in zorder_by if c not in type_of]
@@ -1946,7 +1919,7 @@ def compact_iceberg(spark: SparkSession, path: str,
                 f"compact_iceberg zorder_by columns {bad} not in "
                 "the table schema")
         for c in zorder_by:
-            _zorder_proxy_sql(c, type_of[c])  # fail fast on types
+            zorder_proxy_sql(c, type_of[c])  # fail fast on types
         target = data_files
         if incremental:
             z = _last_zorder_snapshot(md, zorder_by)
@@ -1982,16 +1955,13 @@ def compact_iceberg(spark: SparkSession, path: str,
             total = sum(int(f.get("file_size_in_bytes") or 0)
                         for f in fs)
             nparts = max(1, math.ceil(total / target_file_bytes))
-            df = _zorder_cluster(df, zorder_by, type_of, nparts)
+            df = zorder_cluster(df, zorder_by, type_of, nparts)
             staged += _stage_data_files(df, path, part_info,
                                         ice_schema)
     else:
         df = table.read(spark)
         staged = _stage_data_files(df, path, part_info, ice_schema)
-    for f in staged:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    _bound_entries(staged, ice_schema)
     for _ in range(max_commit_attempts):
         cur_md = table.metadata()
         cur = table._snapshot(cur_md, None)

@@ -50,22 +50,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .stats import US, epoch, footer_bounds, may_match
+
 
 class CommitConflict(RuntimeError):
     """A concurrent commit added files overlapping this merge's keys."""
 
 
-_EPOCH = datetime.datetime(1970, 1, 1)
-
-
 def _canon(v: Any) -> Any:
-    """Canonicalize a stats value into a JSON-able, comparable form.
-    Timestamps become epoch microseconds (UTC) — never ``timestamp()``,
-    which would reinterpret naive values in the process-local zone."""
+    """Canonicalize a stats value into a JSON-able, comparable form:
+    timestamps as epoch microseconds (naive = UTC), dates as ordinal
+    days (:mod:`.stats` canonical forms)."""
     if isinstance(v, datetime.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return (v - _EPOCH) // datetime.timedelta(microseconds=1)
+        return epoch(v, US)
     if isinstance(v, datetime.date):
         return v.toordinal()
     if isinstance(v, bytes):
@@ -87,43 +84,19 @@ def _canon_col(df: DataFrame, col: str):
 
 
 def _file_stats(path: str, key: list[str]) -> tuple[int, dict[str, list[Any]]]:
-    """(num_rows, per-key-column min/max) from the parquet footer —
+    """(num_rows, per-key-column [min, max]) from the parquet footer —
     no data pages are read."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    out: dict[str, list[Any]] = {}
-    for col in key:
-        if col not in idx:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx[col]).statistics
-            if st is None or not st.has_min_max:
-                lo = hi = None
-                break
-            mn, mx = _canon(st.min), _canon(st.max)
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if lo is not None:
-            out[col] = [lo, hi]
-    return md.num_rows, out
+    rows, cols = footer_bounds(path, key)
+    return rows, {c: [_canon(cols[c].lo), _canon(cols[c].hi)]
+                  for c in key if c in cols and cols[c].lo is not None}
 
 
 def _overlaps(stats: dict[str, list[Any]],
               envelope: dict[str, list[Any]]) -> bool:
     """Conservative range-overlap test — missing stats count as overlap."""
-    for col, (blo, bhi) in envelope.items():
-        if col not in stats:
-            continue
-        flo, fhi = stats[col]
-        try:
-            if fhi < blo or bhi < flo:
-                return False
-        except TypeError:  # incomparable stat forms: stay conservative
-            continue
-    return True
+    return all(may_match(*stats[c], ">=", blo)
+               and may_match(*stats[c], "<=", bhi)
+               for c, (blo, bhi) in envelope.items() if c in stats)
 
 
 _BLOOM_BITS = 2048

@@ -600,8 +600,8 @@ class _StreamReader(DataSourceStreamReader):
                 st = int(st)
             except ValueError:
                 pass
-            from ..storage.delta import _to_epoch_ms
-            ms = _to_epoch_ms(st)
+            from ..storage.stats import as_of_ms
+            ms = as_of_ms(st)
             run, sv = 0, None
             for v in self.dt.versions():
                 run = max(run, self.dt._commit_ts_ms(v))

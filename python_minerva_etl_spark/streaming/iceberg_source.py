@@ -901,7 +901,7 @@ class _IceWriter(DataSourceArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from ..storage.iceberg_write import _file_bounds
+        from ..storage.iceberg_write import _bound_entries
 
         batches = list(iterator)
         if not batches:
@@ -923,9 +923,7 @@ class _IceWriter(DataSourceArrowWriter):
             }
             if pval is not None:
                 entry["partition"] = {self.part.name: pval}
-            lo, hi = _file_bounds(final, self.ice_schema)
-            entry["lower_bounds"] = lo or None
-            entry["upper_bounds"] = hi or None
+            _bound_entries([entry], self.ice_schema)
             return entry
 
         entries = []
