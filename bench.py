@@ -284,17 +284,14 @@ def main() -> None:
     # measured fastest across the headline set — narrower partition
     # counts help the small shuffles but hurt the explode-heavy dedup
     # plans more.
-    # Codegen-cache headroom (r10 verdict item 8, measured by
-    # scripts/probe_codegen_cache.py): the default 100-entry
-    # generated-class cache can't hold the 23-query headline set's
-    # stages, so a round-robin session re-JITs plans that already ran
-    # — a 9% steady-state tax (26.5 -> 24.3 s/sweep at 4096) that a
-    # real deployment (each plan resident on its own executors) never
-    # pays.  Benching with headroom measures the plans, not the
-    # harness's eviction pattern.
-    spark = get_spark(app_name="minerva-bench",
-                      extra_conf={
-                          "spark.sql.codegen.cache.maxEntries": "4096"})
+    # The session's 4096-entry generated-class cache holds the whole
+    # headline set's stages.  Spark's default of 100 does not, and a
+    # round-robin session then re-JITs plans that already ran: a 9%
+    # steady-state tax on this set (26.5 -> 24.3 s/sweep, PERF.md).  A
+    # scheduler session re-running the same materializations every
+    # period pays it too, so the default is the product's, not a
+    # bench-only override.
+    spark = get_spark(app_name="minerva-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
@@ -309,13 +306,11 @@ def main() -> None:
         probe_before = fs_probe()
 
     # Warmup + measure per query: warmups immediately followed by the
-    # measured passes.  Spark's generated-class cache holds only 100
-    # entries per JVM; 17 headline plans x several codegen stages each
-    # overflow it, so a full warmup PASS followed by a full measure pass
-    # re-JITs half the plans (measured: +2.3 s on dedup_simhash alone).
-    # Per-query warm measurement reflects steady-state executor
-    # throughput — on a real cluster each of these plans runs
-    # continuously, not round-robin with 16 strangers in one JVM.
+    # measured passes, so each median is that plan's steady state.
+    # (With Spark's default 100-entry generated-class cache, a full
+    # warmup pass followed by a full measure pass re-JITted half the
+    # plans: +2.3 s on dedup_simhash alone.  The session's 4096-entry
+    # cache removes that eviction in any order.)
     remeasured_noisy: list[dict] = []
     medians: dict[str, float] = {}
     spreads: dict[str, float] = {}

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..determinism import oracle_dsum
+from ..registry import stamp_digest, table_path
 from .base import DeclaredQuery, t
 
 # --- §2.2 projection / filter / json / dn / entity ---------------------
@@ -172,13 +173,14 @@ def _join_inner_bucketed(spark, sf_dir):
     whole customer-join family (join_left / join_semi / join_anti
     share the key pair).  Layout-only change: same oracle SQL as
     join_inner; join_inner itself stays in the bench unchanged."""
-    import hashlib
-
     from ..operators.bucketing import (derive_num_buckets,
                                        ensure_bucketed_table,
                                        read_bucketed)
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    # the source files' stamps name the layout, so a fixture rewritten
+    # in place gets a new one (ensure_bucketed_table builds once per name)
+    tag = stamp_digest(table_path(sf_dir, "orders"),
+                       table_path(sf_dir, "customer"))
     ord_t, cust_t = f"b_orders_cust_{tag}", f"b_customer_{tag}"
     nb = derive_num_buckets(os.path.join(sf_dir, "orders.parquet"))
 
@@ -301,16 +303,15 @@ def _rollup_entity_bucketed(spark, sf_dir):
     100 TB.  Dims stay broadcast; only the 25-group final agg
     shuffles.  Layout-only change: same oracle as rollup_entity;
     the zero-Exchange plan is asserted in tests/test_plans.py."""
-    import hashlib
-
     from ..operators.bucketing import (derive_num_buckets,
                                        ensure_bucketed_table,
                                        read_bucketed)
 
-    # md5 (not hash(): per-process salted) so re-runs against the
-    # same fixture REUSE the layout within a session — the build-once
-    # contract (ensure_bucketed_table).
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    # the source files' stamps name the layout: re-runs against the
+    # same files REUSE it within a session (the build-once contract of
+    # ensure_bucketed_table), a fixture rewritten in place gets a new one
+    tag = stamp_digest(table_path(sf_dir, "lineitem"),
+                       table_path(sf_dir, "orders"))
     li_t, ord_t = f"b_lineitem_{tag}", f"b_orders_{tag}"
     # scale-adaptive count from the driving (larger) table; both
     # sides must share it for the zero-Exchange co-join

@@ -17,6 +17,7 @@ from ..operators.upsert import dedup_last_wins
 # aggregate, which is a full-column scan at 100 TB (r10 verdict,
 # "What's wrong" item 1).
 from ..plans.footer_stats import table_max, ts_midpoint_day
+from ..registry import stamp_digest, table_path
 from .base import DeclaredQuery, t
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
@@ -24,11 +25,11 @@ _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
 
 
 def _fixture_key(sf_dir: str, table: str = "events") -> str:
-    """Staleness key for marker-cached scratch fixtures: the source
-    parquet's (size, mtime_ns).  A regenerated fixture invalidates
-    the cache instead of silently serving stale derived data."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}:{st.st_mtime_ns}"
+    """Staleness key for marker-cached scratch fixtures: the digest of
+    the source parquet's file stamps (``registry.file_stamps``).  A
+    regenerated fixture invalidates the cache instead of silently
+    serving stale derived data."""
+    return stamp_digest(table_path(sf_dir, table))
 
 
 def _scratch_tag(sf_dir: str) -> int:

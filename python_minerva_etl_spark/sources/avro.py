@@ -865,9 +865,14 @@ def read_avro(spark: SparkSession, path: str,
                     p, int(start), int(end), canon, writer_schema,
                     plan, plan_gen, colnames, batch_bytes, keep)
 
+    import pyarrow as pa
+
     splits = plan_splits(files, split_bytes)
-    fdf = (spark.createDataFrame(splits,
-                                 "path string, start long, end long")
+    # an Arrow table becomes a driver-side LocalTableScan; a Python list
+    # would run a Python RDD job (one worker task per core) to build it
+    paths, starts, ends = zip(*splits)
+    fdf = (spark.createDataFrame(
+        pa.table({"path": paths, "start": starts, "end": ends}))
            .repartition(len(splits)))
     return fdf.mapInPandas(decode, spark_schema)
 

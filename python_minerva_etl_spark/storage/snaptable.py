@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..registry import read_parquet
 from .stats import US, epoch, footer_bounds, may_match
 
 
@@ -310,11 +311,17 @@ class SnapTable:
             if not entries:
                 # preserve schema even when every file prunes away
                 head = self.files(version)[0]
-                return (spark.read.option("mergeSchema", "true")
-                        .parquet(os.path.join(self.path, head["path"]))
-                        .limit(0))
-        paths = [os.path.join(self.path, e["path"]) for e in entries]
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+                return self._read_files(spark, [head["path"]]).limit(0)
+        return self._read_files(spark, [e["path"] for e in entries])
+
+    def _read_files(self, spark: SparkSession,
+                    rels: list[str]) -> DataFrame:
+        """Manifest data files (paths relative to the table root) as one
+        DataFrame, their schemas merged: a MERGE may have added
+        columns."""
+        return read_parquet(
+            spark, *[os.path.join(self.path, r) for r in rels],
+            merge_schema=True)
 
     def pruned_file_count(self, where: dict[str, tuple],
                           version: int | None = None) -> tuple[int, int]:
@@ -482,8 +489,7 @@ class SnapTable:
         carried = [e for e in entries if not _overlaps(e["stats"], envelope)]
 
         if touched:
-            stored = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, e["path"]) for e in touched])
+            stored = self._read_files(spark, [e["path"] for e in touched])
             combined = stored.withColumn("__src", F.lit(0)).unionByName(
                 batch.withColumn("__src", F.lit(1)),
                 allowMissingColumns=True)
@@ -572,8 +578,7 @@ class SnapTable:
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
         new: list[dict] = []
         if touched:
-            stored = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, e["path"]) for e in touched])
+            stored = self._read_files(spark, [e["path"] for e in touched])
             kept = stored.join(F.broadcast(kdf), key, "left_anti")
             new = self._write_data(kept, key)
         t_paths = {e["path"] for e in touched}
@@ -624,21 +629,18 @@ class SnapTable:
         removed = sorted(paths_from - paths_to)
         added = sorted(paths_to - paths_from)
 
-        def _read(rels):
-            return spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, r) for r in rels])
-
         if not removed and not added:
             empty = self.read(spark, to_version).limit(0)
             return empty.withColumn("_change_type", F.lit(""))
         if not removed:
-            return _read(added).withColumn("_change_type", F.lit("insert"))
+            return self._read_files(spark, added).withColumn(
+                "_change_type", F.lit("insert"))
         if not added:
-            return _read(removed).withColumn("_change_type",
-                                             F.lit("delete"))
+            return self._read_files(spark, removed).withColumn(
+                "_change_type", F.lit("delete"))
 
-        old = _read(removed).withColumn("__op", F.lit(1))
-        new = _read(added).withColumn("__on", F.lit(1))
+        old = self._read_files(spark, removed).withColumn("__op", F.lit(1))
+        new = self._read_files(spark, added).withColumn("__on", F.lit(1))
         cols = [c for c in self.read(spark, to_version).columns]
         val_cols = [c for c in cols if c not in key]
         cond = None
@@ -693,8 +695,7 @@ class SnapTable:
         if len(small) < 2:
             return None
         key = list(self._manifest(base).get("key") or ())
-        packed = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, e["path"]) for e in small])
+        packed = self._read_files(spark, [e["path"] for e in small])
         total = sum(e["bytes"] for e in small)
         n_out = max(1, -(-total // target_file_bytes))
         new = self._write_data(packed.repartition(n_out), key)

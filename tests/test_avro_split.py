@@ -120,6 +120,22 @@ def test_split_planning_and_parallelism(spark, tmp_path):
     assert df.rdd.getNumPartitions() == len(splits)
 
 
+def test_split_table_runs_no_python_rdd(spark, tmp_path):
+    """The (path, start, end) split table is a driver-side local scan,
+    not a Python RDD (whose tasks each pay a Python worker's start-up),
+    and the read still runs one task per split."""
+    d = str(tmp_path / "av")
+    _write_mixed(spark, d, n=4000, block_bytes=1 << 12)
+    splits = plan_splits([os.path.join(d, f) for f in os.listdir(d)
+                          if f.endswith(".avro")], 1 << 12)
+    df = read_avro(spark, d, split_bytes=1 << 12)
+    assert df.count() == 4000
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert df.rdd.getNumPartitions() == len(splits)
+
+
 def test_header_only_file_any_split(spark, tmp_path):
     d = tmp_path / "av"
     os.makedirs(d)
