@@ -233,6 +233,17 @@ def bpe_ish_count_np(np, cp, lens):
 # so tiny inputs keep their sub-second latency; any real corpus runs
 # the kernel.  Same result either way — this is an execution
 # strategy, not a semantic switch.
+#
+# The fixed cost, re-measured since the session's worker daemon starts
+# on a lean import path (session.py, pydaemon.py; PERF.md "The
+# Python-task floor, removed"), on a 200-document parquet input,
+# 4-core host, local[4], median of 5 calls after 2 warm ones:
+# text_counts_arrow (4 Python tasks) costs 0.15-0.17 s more wall time
+# and 0.72-0.79 CPU s more than the JVM expressions (0.36-0.40 s and
+# 1.34-1.61 CPU s with the old worker path); c4_rules_kernel (1 task)
+# is already cheaper than its fused JVM form there, 0.16 s / 0.41 CPU
+# s against 0.27 s / 0.62 CPU s.  16 MB still rests on the old figure;
+# moving it needs its own A/B and oracle pass (ROADMAP item 3).
 TEXT_KERNEL_MIN_INPUT_BYTES = 16 << 20
 
 
@@ -269,8 +280,10 @@ def text_counts_arrow(docs: DataFrame,
     Below ``min_bytes`` of input (default
     ``TEXT_KERNEL_MIN_INPUT_BYTES``, conf-overridable) the counts
     come from the equivalent JVM expressions instead — the kernel's
-    fixed Python-stage cost only pays for itself past the measured
-    crossover; results are identical on both paths (test-locked)."""
+    fixed Python-stage cost (re-measured at 0.15-0.17 s wall and
+    0.72-0.79 CPU s per job over 4 tasks; see the comment on the
+    constant) only pays for itself past the crossover; results are
+    identical on both paths (test-locked)."""
     import numpy as np  # noqa: F401 (executor-side)
 
     carry = list(carry_cols or [])
@@ -376,16 +389,11 @@ def c4_clean_page(page: str | None) -> str | None:
         r = line.rstrip(" ")
         if not r or r[-1] not in ".!?\"":
             continue
-        t = r.lstrip(" ")
-        # words = space-runs + 1 on the trimmed line; >= 5 words
-        runs = 0
-        prev_space = False
-        for ch in t:
-            is_space = ch == " "
-            if is_space and not prev_space:
-                runs += 1
-            prev_space = is_space
-        if runs < 4:
+        # words = space-runs + 1 on the trimmed line; >= 5 words.  The
+        # trimmed line neither starts nor ends with a space, so its
+        # non-empty pieces between U+0020s are exactly the words.
+        words = r.lstrip(" ").split(" ")
+        if len(words) - words.count("") < 5:
             continue
         if "javascript" in line.lower():
             continue
@@ -426,7 +434,11 @@ def c4_rules_kernel(pages: DataFrame, text_col: str = "page",
     decomposition measured the interpreted per-line filter at 0.69 s
     of the 1.73 s 100x row, on a 0.98 s page-assembly floor).  Only
     (carry, page) cross into Python and the page does NOT cross back
-    — clean_text and the counters/booleans come out instead."""
+    — clean_text and the counters/booleans come out instead.  Its
+    fixed Python-stage cost, re-measured on a 200-page input (1 task),
+    no longer shows: 0.16 s wall and 0.41 CPU s per call against 0.27
+    s and 0.62 CPU s for the fused JVM form (see the comment on
+    ``TEXT_KERNEL_MIN_INPUT_BYTES``)."""
     from .text import c4_line_stats_fused, c4_page_rules
 
     carry = list(carry_cols or [])

@@ -21,6 +21,16 @@ though tests run on local[32]):
   period would recompile (and re-JIT) plans that already ran.  4096
   also holds the 23-query bench headline set (PERF.md); the conf is
   static, so it is set here, before the session starts.
+- ``spark.python.daemon.module=python_minerva_etl_spark.pydaemon``: the
+  Python worker daemon drops from its import path the archives that hold
+  no Python or whose Python site-packages already holds byte-for-byte
+  (``pyspark.zip``, the py4j zip, the ``spark-core`` jar).  pyspark
+  calls ``importlib.invalidate_caches()`` on every task, and each
+  zipimporter re-reads its archive's directory on that call: about 0.2
+  CPU s per Python task before any user code ran.  Also static.
+- ``spark.executorEnv.PYTHONPATH`` gets this package's parent directory
+  appended (after any value passed in ``extra_conf``), so workers can
+  import the daemon module whatever directory the driver started in.
 """
 
 from __future__ import annotations
@@ -28,6 +38,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package, for the workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -67,10 +81,16 @@ def get_spark(app_name: str = "python_minerva_etl_spark",
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.python.daemon.module",
+                "python_minerva_etl_spark.pydaemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [conf.get("spark.executorEnv.PYTHONPATH"),
+                      _PACKAGE_PARENT]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -198,6 +198,17 @@ def test_c4_rules_kernel_matches_fused_jvm(spark):
         "NSFW page with five words here.",
         "unicode héllo wörld counts five wörds.",
         "sentence one. two? three! four.",
+        # only U+0020 separates words: a tab or a no-break space
+        # joins its neighbours into one word
+        "one\ttwo three four five six.", "tab\tjoins\tfour words here.",
+        "one\u00a0two three four five six.",
+        "no\u00a0break\u00a0space makes four words.",
+        "no\u00a0break space makes five words.",
+        "   leading run of spaces five words here.",
+        "trailing run of spaces five words here.    ",
+        "    both runs around five words here.     ",
+        "      .", "   .   ",
+        "four words  double space.", "exactly four  words here.",
     ]
     df = spark.createDataFrame([(i, p) for i, p in enumerate(pages)],
                                "doc_id long, page string")
