@@ -27,11 +27,13 @@ datetimes); the Column-side functions are what queries use.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .storage.stats import US, epoch
 
 # name -> (seconds, None) for fixed-duration, or (None, date_trunc unit)
 _GRANULARITIES: dict[str, tuple[int | None, str | None]] = {
@@ -46,6 +48,8 @@ _GRANULARITIES: dict[str, tuple[int | None, str | None]] = {
     "1w": (None, "week"),
     "1month": (None, "month"),
 }
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 SECONDS_ALIASES = {"900": "15m", "3600": "1h", "86400": "1d"}
 
@@ -122,8 +126,10 @@ class Granularity:
         if ts.tzinfo is None:
             ts = ts.replace(tzinfo=zone)
         if secs is not None:
-            epoch = ts.timestamp()
-            return datetime.fromtimestamp(epoch - (epoch % secs), tz=zone)
+            # exact integer µs: float seconds lose the µs past ~2200
+            us = epoch(ts, US)
+            return (_EPOCH + (us - us % (secs * 1_000_000)) * US
+                    ).astimezone(zone)
         local = ts.astimezone(zone)
         if unit == "day":
             return local.replace(hour=0, minute=0, second=0, microsecond=0)

@@ -1,0 +1,143 @@
+"""The commit protocol shared by SnapTable, Delta and Iceberg.
+
+Every write in the three table formats ends the same way: data files
+are staged, then one metadata file names them, published so that two
+racing writers can never both win the same version.  This module holds
+the four mechanisms behind that step.  Each format keeps its own
+metadata encoding, error type and conflict rules.
+
+1. **Publish** (:func:`publish_if_absent`): write a hidden temp file
+   beside the target, then ``os.link`` it into place.  ``link`` fails
+   with ``EEXIST`` when the name is taken, so POSIX gives an atomic
+   put-if-absent; an exists-check followed by a rename is not atomic
+   and lets the loser clobber the winner.  Overwriting writes
+   (checkpoints, hints, blobs) use :func:`replace_atomic`, so a
+   crashed writer leaves the old file or the new one, never half of
+   one.  Temp names start with ``.`` and end in ``.tmp``, so no
+   version listing picks up a temp a crash left behind.
+2. **Retry bound** (:func:`commit_attempts`): a writer that loses the
+   race re-reads the table and tries again, at most
+   :data:`COMMIT_ATTEMPTS` times.  Conflicts that make the staged work
+   stale are the caller's to raise at once; they are never retried.
+3. **Staging** (:func:`stage_parquet`): one Spark write into
+   ``<table>/_staging_<uuid>``, then each part is moved to a unique
+   final name the format chooses.
+4. **Hive path codec** (:func:`hive_segment`, :func:`hive_values`):
+   ``col=value`` directory names, null as
+   ``__HIVE_DEFAULT_PARTITION__``.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import uuid
+from typing import Callable, Iterator
+from urllib.parse import quote, unquote
+
+COMMIT_ATTEMPTS = 10
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _write_temp(final: str, data: bytes | str) -> str:
+    d, name = os.path.split(final)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(data.encode() if isinstance(data, str) else data)
+    return tmp
+
+
+def publish_if_absent(final: str, data: bytes | str) -> bool:
+    """Create ``final`` holding ``data`` unless it exists; False when
+    another writer took the name first (its file is left untouched)."""
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    tmp = _write_temp(final, data)
+    try:
+        os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def replace_atomic(path: str, data: bytes | str) -> None:
+    """Write ``path`` so readers see the old content or all of
+    ``data``, never a prefix."""
+    tmp = _write_temp(path, data)
+    try:
+        os.replace(tmp, path)
+    except OSError:
+        os.unlink(tmp)
+        raise
+
+
+def commit_attempts(where: str, error: type[Exception]) -> Iterator[int]:
+    """Loop over commit attempts; the loop body returns on success.
+
+    Raises ``error`` once :data:`COMMIT_ATTEMPTS` attempts have all
+    lost the race, i.e. the body fell through every time."""
+    yield from range(COMMIT_ATTEMPTS)
+    raise error(f"lost the commit race {COMMIT_ATTEMPTS} times at "
+                f"{where!r}")
+
+
+def hive_segment(col: str, value: str | None) -> str:
+    """One ``col=value`` directory name; every reserved byte of the
+    value is percent-encoded."""
+    return f"{col}=" + (_HIVE_NULL if value is None
+                        else quote(value, safe=""))
+
+
+def hive_values(rel_dir: str) -> dict[str, str | None] | None:
+    """``{col: value}`` decoded from a relative directory of
+    ``col=value`` segments (``"."`` or ``""`` is ``{}``), or None when
+    some segment is not ``col=value`` or repeats a column.  Decodes
+    Spark-written names and :func:`hive_segment` names alike."""
+    out: dict[str, str | None] = {}
+    if rel_dir in (".", ""):
+        return out
+    for seg in rel_dir.split("/"):
+        col, eq, raw = seg.partition("=")
+        if not eq or col in out:
+            return None
+        out[col] = None if raw == _HIVE_NULL else unquote(raw)
+    return out
+
+
+def stage_parquet(df, table_path: str, partition_by: list[str],
+                  place: Callable[[str, dict], str]
+                  ) -> list[tuple[str, dict]]:
+    """Write ``df`` as parquet in one Spark job (Hive-partitioned by
+    ``partition_by``) and move each part to ``place(rel_dir,
+    values)``: ``rel_dir`` is the part's Spark-written directory
+    relative to the staging root (Delta keeps Spark's directory names,
+    whose escaping differs from :func:`hive_segment`'s) and ``values``
+    its decoded partition values.  Every destination is chosen before
+    any part moves, so a ``place`` that refuses a value leaves nothing
+    behind.  Returns
+    ``(final_path, values)`` per part, in directory then name order;
+    the staging directory is removed on every path."""
+    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
+    try:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(staging)
+        parts = []
+        for dirpath, dirs, names in os.walk(staging):
+            dirs.sort()
+            rel_dir = os.path.relpath(dirpath, staging)
+            values = hive_values(rel_dir)
+            if values is None:
+                continue
+            parts += [(os.path.join(dirpath, n), place(rel_dir, values),
+                       values)
+                      for n in sorted(names) if n.endswith(".parquet")]
+        for src, final, _ in parts:
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            os.replace(src, final)
+        return [(final, values) for _, final, values in parts]
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)

@@ -22,9 +22,12 @@ for checkpoints), so this engine can:
   (partition columns reconstructed from ``partitionValues``) and
   multi-part checkpoints;
 - WRITE Delta tables other systems can read — append / overwrite
-  commits with correct add/remove actions, schemaString, atomic
-  rename commit files, and periodic parquet checkpoints (including
-  remove tombstones, as PROTOCOL.md requires) + ``_last_checkpoint``.
+  commits with correct add/remove actions, schemaString, and periodic
+  parquet checkpoints (including remove tombstones, as PROTOCOL.md
+  requires) + ``_last_checkpoint``.  Commit files are published
+  put-if-absent and checkpoints replaced whole; staging, retries and
+  the Hive path codec are shared with SnapTable and Iceberg
+  (:mod:`.commit`).
 
 Scope (documented, not hidden): reader supports protocol
 minReaderVersion 1 tables, minReaderVersion 2 tables in every
@@ -61,20 +64,21 @@ import builtins
 import json
 import os
 import re
-import shutil
 import time
 import uuid
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .commit import (commit_attempts, hive_values, publish_if_absent,
+                     replace_atomic, stage_parquet)
 from .stats import (as_of_ms, footer_bounds, may_match, zorder_cluster,
                     zorder_proxy_sql)
 
 _LOG = "_delta_log"
 _CHECKPOINT_EVERY = 10
-_COMMIT_RETRIES = 10
 
 # Table features (protocol reader v3 / writer v7) this engine
 # implements.  Reading a table whose readerFeatures exceed this set
@@ -842,23 +846,15 @@ class DeltaTable:
         conform by construction; a foreign table with flat file names
         and log-only partitionValues does not, and keeps the general
         path."""
-        from urllib.parse import unquote
-
+        want = [pkey[c] for c in part_cols]
         for f in files:
-            segs = f["path"].split("/")[:-1]
-            if len(segs) != len(part_cols):
+            vals = hive_values(f["path"].rpartition("/")[0])
+            if vals is None or list(vals) != want:
                 return False
             fpv = f.get("partitionValues") or {}
-            for c, seg in zip(part_cols, segs):
-                if "=" not in seg:
-                    return False
-                k, v = seg.split("=", 1)
-                if k != pkey[c]:
-                    return False
-                parsed = (None if v == "__HIVE_DEFAULT_PARTITION__"
-                          else unquote(v))
-                if parsed != fpv.get(pkey[c], fpv.get(c)):
-                    return False
+            if any(vals[pkey[c]] != fpv.get(pkey[c], fpv.get(c))
+                   for c in part_cols):
+                return False
         return True
 
     def _scan_hive(self, spark: SparkSession, files: list[dict],
@@ -1317,8 +1313,6 @@ class DeltaTable:
         ``_change_data/`` and returns ``cdc`` actions (PROTOCOL.md
         "Add CDC File": path, partitionValues, size,
         dataChange=false — no stats, the files never serve reads)."""
-        from urllib.parse import unquote
-
         if cm:
             # column-mapped table: the parquet files and Hive dirs
             # speak PHYSICAL names at EVERY nesting level (extra
@@ -1353,86 +1347,47 @@ class DeltaTable:
                     exprs.append(expr.alias(_physical_name(f)))
             df = df.select(*exprs)
             partition_by = [cm.get(c, c) for c in partition_by]
-        tmp = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
+        prefix = "cdc" if action == "cdc" else "part"
+
+        def place(rel_dir: str, _values: dict) -> str:
+            return os.path.join(
+                self.path, subdir, "" if rel_dir == "." else rel_dir,
+                f"{prefix}-{uuid.uuid4().hex}-c000.snappy.parquet")
+
         adds = []
         now = int(time.time() * 1000)
-        prefix = "cdc" if action == "cdc" else "part"
-        for dirpath, _, names in os.walk(tmp):
-            rel_dir = os.path.relpath(dirpath, tmp)
-            pvals: dict[str, str | None] = {}
-            ok = True
-            if rel_dir != ".":
-                for part in rel_dir.split(os.sep):
-                    if "=" not in part:
-                        ok = False
-                        break
-                    k, v = part.split("=", 1)
-                    pvals[k] = (None if v == "__HIVE_DEFAULT_PARTITION__"
-                                else unquote(v))
-            if not ok:
-                continue
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                base = f"{prefix}-{uuid.uuid4().hex}-c000.snappy.parquet"
-                final_rel = base if rel_dir == "." else \
-                    os.path.join(rel_dir, base)
-                if subdir:
-                    final_rel = os.path.join(subdir, final_rel)
-                final_abs = os.path.join(self.path, final_rel)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.replace(os.path.join(dirpath, name), final_abs)
-                entry = {
-                    "path": final_rel.replace(os.sep, "/"),
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(final_abs),
-                }
-                if action == "cdc":
-                    entry["dataChange"] = False
-                else:
-                    entry["modificationTime"] = now
-                    entry["dataChange"] = True
-                    stats = _file_stats(
-                        final_abs,
-                        [f for f in df.schema.fields
-                         if f.name not in partition_by])
-                    if stats:
-                        entry["stats"] = stats
-                adds.append({action: entry})
-        shutil.rmtree(tmp, ignore_errors=True)
+        for final_abs, pvals in stage_parquet(df, self.path, partition_by,
+                                              place):
+            entry = {
+                "path": os.path.relpath(final_abs, self.path),
+                "partitionValues": pvals,
+                "size": os.path.getsize(final_abs),
+            }
+            if action == "cdc":
+                entry["dataChange"] = False
+            else:
+                entry["modificationTime"] = now
+                entry["dataChange"] = True
+                stats = _file_stats(
+                    final_abs,
+                    [f for f in df.schema.fields
+                     if f.name not in partition_by])
+                if stats:
+                    entry["stats"] = stats
+            adds.append({action: entry})
         return adds
 
     def _commit(self, version: int, actions: list[dict]) -> None:
-        """Atomic commit: write to a temp file, rename into place.
-        An existing commit file means a concurrent writer won — raise
+        """Publish ``actions`` as commit ``version``
+        (:func:`.commit.publish_if_absent`).  An existing commit file
+        means a concurrent writer won — raise
         :class:`DeltaConcurrentCommit` (the Delta optimistic-
-        concurrency contract; ``write`` retries on it)."""
-        final = _commit_path(self.path, version)
-        tmp = final + f".{uuid.uuid4().hex}.tmp"
-        os.makedirs(_log_dir(self.path), exist_ok=True)
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
-        # Put-if-absent: os.link raises FileExistsError atomically if
-        # the commit file already exists, so two writers racing on the
-        # same version can never both "win" — the loser gets
-        # DeltaConcurrentCommit and ``write`` retries at version+1.
-        # (An exists-check followed by os.replace is NOT atomic: both
-        # racers can pass the check and the second replace silently
-        # clobbers the first writer's committed actions.)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
+        concurrency contract; the write loops retry on it)."""
+        if not publish_if_absent(
+                _commit_path(self.path, version),
+                "\n".join(json.dumps(a) for a in actions) + "\n"):
             raise DeltaConcurrentCommit(
                 f"concurrent Delta commit at version {version}")
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
         if version % _CHECKPOINT_EVERY == 0 and version > 0:
             self._write_checkpoint(version)
 
@@ -1516,8 +1471,7 @@ class DeltaTable:
         def key(f):
             return (f["path"], dv_unique_id(f.get("deletionVector")))
 
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             self._check_writable(cur, "restore")
             now = int(time.time() * 1000)
@@ -1559,12 +1513,9 @@ class DeltaTable:
             if len(actions) == 1:
                 return cur["version"]  # already at the target state
             new_version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(new_version, actions)
                 return new_version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
 
     def txn_version(self, app_id: str) -> int:
         """Latest ``txn`` (setTransaction) version recorded for
@@ -1652,8 +1603,7 @@ class DeltaTable:
         """Retry-loop commit of already-staged add actions — the tail
         of :meth:`write`, shared with the registered data source's
         writer (whose executors stage the files themselves)."""
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             version = self._next_version()
             if txn is not None and version > 0 \
                     and self.txn_version(txn[0]) >= txn[1]:
@@ -1721,12 +1671,9 @@ class DeltaTable:
                     "appId": txn[0], "version": int(txn[1]),
                     "lastUpdated": int(time.time() * 1000)}})
             actions.extend(adds)
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e  # re-derive actions against new snapshot
-        raise last_err  # type: ignore[misc]
 
     @staticmethod
     def _check_writable(snap: dict, operation: str) -> None:
@@ -1959,8 +1906,7 @@ class DeltaTable:
         :class:`DeltaConcurrentCommit` if a racer touches any
         affected file between the scan and the commit."""
         table_path = os.path.abspath(self.path)
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             by_path = {f["path"]: f for f in cur["files"]}
             now = int(time.time() * 1000)
@@ -2006,12 +1952,9 @@ class DeltaTable:
                 actions.append({"add": add})
             actions += extra_actions
             version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e  # re-derive against the new snapshot
-        raise last_err  # type: ignore[misc]
 
     def delete(self, spark: SparkSession, where) -> int | None:
         """Merge-on-read DELETE: rows matching ``where`` (a Column or
@@ -2414,8 +2357,7 @@ class DeltaTable:
                 "without validating existing rows — use "
                 "add_constraint(spark, name, expr), which scans the "
                 "table first")
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             self._check_writable(cur, "set_properties")
             need_w = builtins.set()
@@ -2432,12 +2374,9 @@ class DeltaTable:
                 "operationParameters": {},
                 "engineInfo": "python-minerva-etl-spark"}}] + up
             version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
 
     def add_constraint(self, spark: SparkSession, name: str,
                        expr: str) -> int:
@@ -2454,8 +2393,7 @@ class DeltaTable:
             raise ValueError(
                 f"constraint name {name!r} must be alphanumeric/_")
         key = f"delta.constraints.{name.lower()}"
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             self._check_writable(cur, "add_constraint")
             conf = cur["metaData"].get("configuration") or {}
@@ -2477,20 +2415,16 @@ class DeltaTable:
                 "operationParameters": {"name": name, "expr": expr},
                 "engineInfo": "python-minerva-etl-spark"}}] + up
             version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
 
     def drop_constraint(self, name: str) -> int | None:
         """ALTER TABLE DROP CONSTRAINT: removes
         ``delta.constraints.<name>`` with a metaData commit (None
         when the constraint does not exist — a drop is idempotent)."""
         key = f"delta.constraints.{name.lower()}"
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             self._check_writable(cur, "drop_constraint")
             conf = dict(cur["metaData"].get("configuration") or {})
@@ -2506,12 +2440,9 @@ class DeltaTable:
                 "engineInfo": "python-minerva-etl-spark"}},
                 {"metaData": meta}]
             version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
 
     def _add_versions(self) -> dict[str, int]:
         """path → latest commit version carrying an ``add`` for it,
@@ -2716,8 +2647,7 @@ class DeltaTable:
                 a["add"]["dataChange"] = False
                 new_adds.append(a)
             rewritten.extend(f["path"] for f in fs)
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
+        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             by_path = {f["path"]: f for f in cur["files"]}
             now = int(time.time() * 1000)
@@ -2740,12 +2670,9 @@ class DeltaTable:
                 actions.append({"remove": rm})
             actions.extend(new_adds)
             version = self._next_version()
-            try:
+            with suppress(DeltaConcurrentCommit):
                 self._commit(version, actions)
                 return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
 
     def vacuum(self, retention_hours: float = 168,
                now_ms: int | None = None,
@@ -2821,7 +2748,9 @@ class DeltaTable:
         (ours and others') skip the JSON tail.  Includes the surviving
         ``remove`` tombstones, as PROTOCOL.md requires — clients
         replaying from this checkpoint need them for VACUUM and
-        incremental consumption."""
+        incremental consumption.  Both files are replaced whole
+        (:func:`.commit.replace_atomic`): readers trust the newest
+        checkpoint, so a torn one would fail every later read."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -2916,13 +2845,14 @@ class DeltaTable:
         for app_id, v in sorted(snap["txns"].items()):
             rows.append(dict(base, txn={"appId": app_id,
                                         "version": int(v)}))
-        tbl = pa.Table.from_pylist(rows, schema=cp_schema)
-        cp = os.path.join(_log_dir(self.path),
-                          f"{version:020d}.checkpoint.parquet")
-        pq.write_table(tbl, cp)
-        with open(os.path.join(_log_dir(self.path),
-                               "_last_checkpoint"), "w") as fh:
-            json.dump({"version": version, "size": len(rows)}, fh)
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist(rows, schema=cp_schema), buf)
+        log = _log_dir(self.path)
+        replace_atomic(
+            os.path.join(log, f"{version:020d}.checkpoint.parquet"),
+            buf.getvalue().to_pybytes())
+        replace_atomic(os.path.join(log, "_last_checkpoint"),
+                       json.dumps({"version": version, "size": len(rows)}))
 
 
 def maybe_optimize_delta(spark: SparkSession, path: str,

@@ -70,6 +70,8 @@ import zlib
 
 import numpy as np
 
+from .commit import replace_atomic
+
 # ------------------------------------------------------------- Z85
 
 _Z85_ALPHABET = ("0123456789abcdefghijklmnopqrstuvwxyz"
@@ -362,10 +364,7 @@ def dv_write(table_path: str, positions,
     blob = (bytes([_FORMAT_VERSION])
             + struct.pack(">i", len(data)) + data
             + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
-        fh.write(blob)
-    os.replace(tmp, path)
+    replace_atomic(path, blob)
     return {"storageType": "u",
             "pathOrInlineDv": z85_encode(u.bytes),
             "offset": 1,

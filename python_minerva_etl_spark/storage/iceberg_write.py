@@ -3,9 +3,10 @@
 Mirrors the Delta writer's conformance discipline
 (``storage/delta.py``): data files are staged by a distributed Spark
 parquet write and renamed into ``data/``, metadata is committed
-CAS-style (``os.link`` put-if-absent on the next ``v<N>.metadata.json``
-— two racing writers can never both win a version), and every byte of
-Avro written here follows the published specs:
+CAS-style (put-if-absent on the next ``v<N>.metadata.json`` — two
+racing writers can never both win a version; the protocol is
+:mod:`.commit`), and every byte of Avro written here follows the
+published specs:
 
 - Avro 1.11 object container files (header map, sync markers,
   zigzag-varint longs) for manifests and manifest lists;
@@ -32,14 +33,16 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import struct
 import time
 import uuid
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .commit import (commit_attempts, publish_if_absent, replace_atomic,
+                     stage_parquet)
 from .iceberg import IcebergTable, _localize, _to_spark_schema
 from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
                     zorder_proxy_sql)
@@ -645,56 +648,37 @@ def _stage_data_files(df: DataFrame, table_path: str,
     under a temp name for ``partitionBy`` — Spark's Hive layout
     drops the partitioning column from the files, but Iceberg data
     files must carry every schema column."""
-    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    if part is None:
-        df.write.mode("overwrite").parquet(staging)
-        part_dirs = [(staging, None)]
-    else:
-        src_type = df.schema[part.source].dataType
-        (df.withColumn("__part", part.expr(src_type))
-         .write.mode("overwrite").partitionBy("__part")
-         .parquet(staging))
-        part_dirs = []
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith("__part="):
-                continue
-            raw = name[len("__part="):]
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ValueError(
-                    f"iceberg append: null value in partition source "
-                    f"column {part.source!r}")
-            from urllib.parse import unquote
-            val = part.parse_dir_value(unquote(raw))
-            part_dirs.append((os.path.join(staging, name), val))
-    data_dir = os.path.join(table_path, "data")
     import pyarrow.parquet as pq
+
+    data_dir = os.path.join(table_path, "data")
+
+    def value(values: dict):
+        if values["__part"] is None:
+            raise ValueError(
+                f"iceberg append: null value in partition source "
+                f"column {part.source!r}")
+        return part.parse_dir_value(values["__part"])
+
+    def place(_rel_dir: str, values: dict) -> str:
+        sub = [] if part is None else [f"{part.name}={value(values)}"]
+        return os.path.join(data_dir, *sub, f"{uuid.uuid4().hex}.parquet")
+
+    if part is not None:
+        df = df.withColumn("__part",
+                           part.expr(df.schema[part.source].dataType))
     out = []
-    for src_dir, pval in part_dirs:
-        if pval is None:
-            dst_dir = data_dir
-        else:
-            dst_dir = os.path.join(
-                data_dir, f"{part.name}={pval}")
-        os.makedirs(dst_dir, exist_ok=True)
-        for name in sorted(os.listdir(src_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            final = os.path.join(dst_dir,
-                                 f"{uuid.uuid4().hex}.parquet")
-            os.replace(os.path.join(src_dir, name), final)
-            entry = {
-                "content": 0,
-                "file_path": final,
-                "file_format": "PARQUET",
-                "record_count":
-                    pq.ParquetFile(final).metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(final),
-            }
-            if pval is not None:
-                entry["partition"] = {part.name: pval}
-            out.append(entry)
-    shutil.rmtree(staging, ignore_errors=True)
+    for final, values in stage_parquet(
+            df, table_path, [] if part is None else ["__part"], place):
+        entry = {
+            "content": 0,
+            "file_path": final,
+            "file_format": "PARQUET",
+            "record_count": pq.ParquetFile(final).metadata.num_rows,
+            "file_size_in_bytes": os.path.getsize(final),
+        }
+        if part is not None:
+            entry["partition"] = {part.name: value(values)}
+        out.append(entry)
     return out
 
 
@@ -765,7 +749,6 @@ def _evolve_schema(ice_schema: dict, df_schema: T.StructType) -> dict:
 
 
 def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
-                  max_commit_attempts: int = 5,
                   partition_by: str | None = None,
                   merge_schema: bool = False) -> None:
     """Append ``df`` to the Iceberg table at ``path``, creating the
@@ -789,9 +772,9 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
     default-partition dir).
 
     Commit protocol: stage data files once, then CAS the metadata —
-    read the current version, write ``v<N+1>.metadata.json`` via
-    ``os.link`` put-if-absent, and on :class:`IcebergConcurrentCommit`
-    re-read and retry with the already-staged files (the Iceberg
+    read the current version, publish ``v<N+1>.metadata.json``
+    put-if-absent, and on :class:`IcebergConcurrentCommit` re-read and
+    retry with the already-staged files (:mod:`.commit`; the Iceberg
     optimistic-concurrency contract; data files are immutable and
     uniquely named, so a retry never rewrites them).
 
@@ -805,12 +788,10 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
     data_files = _stage_data_files(df, path, part, ice_schema)
     _bound_entries(data_files, ice_schema)
     _commit_staged(path, data_files, ice_schema, part,
-                   max_commit_attempts,
                    df_schema=df.schema if merge_schema else None)
 
 
 def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
-                      max_commit_attempts: int = 5,
                       partition_by: str | None = None) -> None:
     """TRUNCATE-and-replace: commit ONE ``overwrite`` snapshot whose
     manifest list holds ONLY the new data manifest — every previously
@@ -825,25 +806,19 @@ def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
     if not (os.path.isdir(mdir)
             and any(n.endswith(".metadata.json")
                     for n in os.listdir(mdir))):
-        write_iceberg(spark, df, path, max_commit_attempts,
-                      partition_by)
+        write_iceberg(spark, df, path, partition_by=partition_by)
         return
     ice_schema, part = _precheck_append(path, df.schema, partition_by)
     data_files = _stage_data_files(df, path, part, ice_schema)
     _bound_entries(data_files, ice_schema)
     table = IcebergTable(path)
-    for _ in range(max_commit_attempts):
+    for _ in commit_attempts(path, IcebergConcurrentCommit):
         md = table.metadata()
         base_version = _version_of(table._metadata_path())
-        try:
+        with suppress(IcebergConcurrentCommit):
             _commit_append(table, md, data_files, base_version,
                            part, carry=False, operation="overwrite")
             return
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg overwrite: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
 
 
 def _precheck_append(path: str, df_schema: T.StructType,
@@ -905,7 +880,6 @@ def _precheck_append(path: str, df_schema: T.StructType,
 
 def _commit_staged(path: str, data_files: list[dict],
                    ice_schema: dict, part: "_PartField | None",
-                   max_commit_attempts: int = 5,
                    df_schema: T.StructType | None = None,
                    extra_summary: dict | None = None) -> None:
     """The CAS retry half of :func:`write_iceberg`, given
@@ -916,7 +890,7 @@ def _commit_staged(path: str, data_files: list[dict],
     would drop their columns."""
     table = IcebergTable(path)
     mdir = os.path.join(path, "metadata")
-    for _ in range(max_commit_attempts):
+    for _ in commit_attempts(path, IcebergConcurrentCommit):
         schema_patch = None
         if any(n.endswith(".metadata.json") for n in os.listdir(mdir)):
             md = table.metadata()
@@ -953,16 +927,11 @@ def _commit_staged(path: str, data_files: list[dict],
                 "snapshots": [],
                 "current-snapshot-id": -1,
             }
-        try:
+        with suppress(IcebergConcurrentCommit):
             _commit_append(table, md, data_files, base_version,
                            part, schema_patch=schema_patch,
                            extra_summary=extra_summary)
             return
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg append: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
 
 
 def _last_column_id(ice_schema: dict) -> int:
@@ -1118,8 +1087,8 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
                   base_version: int,
                   cleanup: tuple[str, ...] = ()) -> None:
     """Commit ``new_md`` as ``v<base_version+1>.metadata.json`` via
-    ``os.link`` put-if-absent (two racers can never both win the
-    version) and refresh ``version-hint.text``.  On a lost race the
+    :func:`.commit.publish_if_absent` (two racers can never both win
+    the version) and refresh ``version-hint.text``.  On a lost race the
     freshly-written ``cleanup`` files are removed and
     :class:`IcebergConcurrentCommit` raises.  The CAS target is
     ALWAYS base_version + 1: deriving it from the directory at commit
@@ -1127,13 +1096,9 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
     version that silently drops a racer's snapshot."""
     mdir = os.path.join(table.path, "metadata")
     next_v = base_version + 1
-    final = os.path.join(mdir, f"v{next_v}.metadata.json")
-    tmp = final + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    try:
-        os.link(tmp, final)  # atomic create-if-absent
-    except FileExistsError:
+    if not publish_if_absent(
+            os.path.join(mdir, f"v{next_v}.metadata.json"),
+            json.dumps(new_md)):
         for p in cleanup:
             try:
                 os.remove(p)
@@ -1141,13 +1106,7 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
                 pass
         raise IcebergConcurrentCommit(
             f"concurrent Iceberg commit at version {next_v}")
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-    with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
-        fh.write(str(next_v))
+    replace_atomic(os.path.join(mdir, "version-hint.text"), str(next_v))
 
 
 # ------------------------------------------- row-level DML (MoR)
@@ -1257,25 +1216,13 @@ def _stage_position_deletes(spark: SparkSession, path: str,
     return ``(manifest delete entries, total deleted positions)``.
     Empty parts are dropped; an empty hit set returns ``([], 0)``
     without leaving any file behind."""
-    staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
-    (hits.sortWithinPartitions("file_path", "pos")
-     .write.mode("overwrite").parquet(staging))
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
     import pyarrow.parquet as pq
+
     del_entries: list[dict] = []
     n_deleted = 0
     referenced: set[str] = set()
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        nrows = pq.ParquetFile(
-            os.path.join(staging, name)).metadata.num_rows
-        if nrows == 0:
-            continue
-        final = os.path.join(data_dir,
-                             f"del-{uuid.uuid4().hex}.parquet")
-        os.replace(os.path.join(staging, name), final)
+    for final, nrows in _stage_deletes(
+            hits.sortWithinPartitions("file_path", "pos"), path, "del"):
         # the distinct data files this delete file addresses (one
         # dictionary-encoded column read per staged part, driver-side
         # but bounded by the DML's own output) — _retry_row_dml
@@ -1300,8 +1247,25 @@ def _stage_position_deletes(spark: SparkSession, path: str,
                               "value": max(refs).encode("utf-8")}],
         })
         n_deleted += nrows
-    shutil.rmtree(staging, ignore_errors=True)
     return del_entries, n_deleted, referenced
+
+
+def _stage_deletes(df: DataFrame, path: str,
+                   prefix: str) -> list[tuple[str, int]]:
+    """Stage ``df`` as ``data/<prefix>-<uuid>.parquet`` delete files;
+    ``(path, row count)`` per file, zero-row files removed."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for final, _ in stage_parquet(
+            df, path, [], lambda _r, _v: os.path.join(
+                path, "data", f"{prefix}-{uuid.uuid4().hex}.parquet")):
+        nrows = pq.ParquetFile(final).metadata.num_rows
+        if nrows:
+            out.append((final, nrows))
+        else:
+            os.remove(final)
+    return out
 
 
 def _part_info(md: dict, ice_schema: dict) -> "_PartField | None":
@@ -1446,8 +1410,7 @@ def _commit_row_dml(table: IcebergTable, md: dict,
 def _retry_row_dml(table: IcebergTable, data_entries: list[dict],
                    del_entries: list[dict],
                    part_info: "_PartField | None",
-                   operation: str, max_commit_attempts: int,
-                   verb: str,
+                   operation: str, verb: str,
                    referenced_paths: "set[str] | None" = None) -> int:
     """The optimistic-concurrency tail every DML verb shares: re-read
     metadata, CAS at base_version+1, retry on a lost race with the
@@ -1463,7 +1426,7 @@ def _retry_row_dml(table: IcebergTable, data_entries: list[dict],
     committing the stale deletes would silently resurrect the
     deleted/updated rows (the compaction itself checks snapshot-id
     the same way)."""
-    for _ in range(max_commit_attempts):
+    for _ in commit_attempts(table.path, IcebergConcurrentCommit):
         md = table.metadata()
         if referenced_paths:
             cur_files, _ = table._data_files(table._snapshot(md, None))
@@ -1477,20 +1440,14 @@ def _retry_row_dml(table: IcebergTable, data_entries: list[dict],
                     f"the staged deletes are stale; rerun the DML "
                     f"against the new snapshot")
         base_version = _version_of(table._metadata_path())
-        try:
+        with suppress(IcebergConcurrentCommit):
             return _commit_row_dml(table, md, data_entries,
                                    del_entries, part_info,
                                    base_version, operation)
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg {verb}: lost the commit race "
-        f"{max_commit_attempts} times at {table.path!r}")
 
 
 def delete_iceberg(spark: SparkSession, path: str,
                    where: list[tuple],
-                   max_commit_attempts: int = 5,
                    equality: bool = False) -> int:
     """Merge-on-read DELETE: write position-delete files for every
     live row matching ``where`` (the same ``(column, op, literal)``
@@ -1534,8 +1491,7 @@ def delete_iceberg(spark: SparkSession, path: str,
             [tuple(lit for _c, _op, lit in where)],
             T.StructType([T.StructField(c, by_name[c])
                           for c, _op, _lit in where]))
-        equality_delete_iceberg(spark, path, keys,
-                                max_commit_attempts=max_commit_attempts)
+        equality_delete_iceberg(spark, path, keys)
         return 1
     live, files = _live_rows(spark, table, md, list(where))
     if live is None:
@@ -1544,15 +1500,13 @@ def delete_iceberg(spark: SparkSession, path: str,
         spark, path, _position_hits(spark, live, files))
     if not del_entries:
         return 0
-    _retry_row_dml(table, [], del_entries, None, "delete",
-                   max_commit_attempts, "delete",
+    _retry_row_dml(table, [], del_entries, None, "delete", "delete",
                    referenced_paths=refd)
     return n_deleted
 
 
 def equality_delete_iceberg(spark: SparkSession, path: str,
-                            keys: DataFrame,
-                            max_commit_attempts: int = 5) -> int:
+                            keys: DataFrame) -> int:
     """BLIND equality delete (Iceberg spec "Equality Delete Files"):
     every table row whose values match ANY row of ``keys`` on all of
     ``keys``' columns (null-safe: a null key value means IS NULL) is
@@ -1591,22 +1545,8 @@ def equality_delete_iceberg(spark: SparkSession, path: str,
 
     # stage like position deletes: one parquet part per partition,
     # empties dropped, entries carry content=2 + the field ids
-    staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
-    cast.write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    import pyarrow.parquet as pq
     del_entries: list[dict] = []
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        nrows = pq.ParquetFile(
-            os.path.join(staging, name)).metadata.num_rows
-        if nrows == 0:
-            continue
-        final = os.path.join(data_dir,
-                             f"eqdel-{uuid.uuid4().hex}.parquet")
-        os.replace(os.path.join(staging, name), final)
+    for final, nrows in _stage_deletes(cast, path, "eqdel"):
         # key-column bounds let planners skip data files whose own
         # bounds cannot overlap any deleted key
         lo, hi = _file_bounds(final, ice_schema)
@@ -1620,16 +1560,14 @@ def equality_delete_iceberg(spark: SparkSession, path: str,
             "upper_bounds": hi or None,
             "equality_ids": list(eq_ids),
         })
-    shutil.rmtree(staging, ignore_errors=True)
     if not del_entries:
         raise ValueError("iceberg equality delete: empty key set")
     return _retry_row_dml(table, [], del_entries, None, "delete",
-                          max_commit_attempts, "equality-delete")
+                          "equality-delete")
 
 
 def update_iceberg(spark: SparkSession, path: str, set: dict,
-                   where: list[tuple] | None = None,
-                   max_commit_attempts: int = 5) -> int:
+                   where: list[tuple] | None = None) -> int:
     """Merge-on-read UPDATE ... SET: rows matching ``where`` are
     masked out of their files via position deletes and the rewritten
     rows (the ``set`` expressions — {column: Column or SQL string},
@@ -1681,7 +1619,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
     finally:
         matched.unpersist()
     _retry_row_dml(table, data_entries, del_entries, part_info,
-                   "overwrite", max_commit_attempts, "update",
+                   "overwrite", "update",
                    referenced_paths=refd)
     return n
 
@@ -1689,8 +1627,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
 def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
                   on, when_matched_update: dict | None = None,
                   when_matched_delete=None,
-                  when_not_matched_insert=True,
-                  max_commit_attempts: int = 5) -> int | None:
+                  when_not_matched_insert=True) -> int | None:
     """MERGE INTO the Iceberg table USING ``source`` ON ``on`` (a SQL
     string or Column over the aliases ``t`` = target, ``s`` = source
     — qualify ambiguous names), with the same clause semantics as the
@@ -1844,8 +1781,7 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
         return None
     operation = "append" if not del_entries else "overwrite"
     return _retry_row_dml(table, data_entries, del_entries,
-                          part_info, operation,
-                          max_commit_attempts, "merge",
+                          part_info, operation, "merge",
                           referenced_paths=refd)
 
 
@@ -1853,7 +1789,6 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
 
 
 def compact_iceberg(spark: SparkSession, path: str,
-                    max_commit_attempts: int = 5,
                     zorder_by: list[str] | None = None,
                     target_file_bytes: int = 256 << 20,
                     incremental: bool = False) -> int | None:
@@ -1962,7 +1897,7 @@ def compact_iceberg(spark: SparkSession, path: str,
         df = table.read(spark)
         staged = _stage_data_files(df, path, part_info, ice_schema)
     _bound_entries(staged, ice_schema)
-    for _ in range(max_commit_attempts):
+    for _ in commit_attempts(path, IcebergConcurrentCommit):
         cur_md = table.metadata()
         cur = table._snapshot(cur_md, None)
         if cur.get("snapshot-id") != snap.get("snapshot-id"):
@@ -1970,7 +1905,7 @@ def compact_iceberg(spark: SparkSession, path: str,
                 "iceberg compact: the table advanced since the "
                 "compaction scanned it — rerun compact_iceberg")
         base_version = _version_of(table._metadata_path())
-        try:
+        with suppress(IcebergConcurrentCommit):
             if rewritten is not None:
                 _commit_zorder_incremental(table, cur_md, staged,
                                            base_version, rewritten,
@@ -1984,11 +1919,6 @@ def compact_iceberg(spark: SparkSession, path: str,
                         if zorder_by else None))
             return table._snapshot(table.metadata(),
                                    None).get("snapshot-id")
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg compact: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
 
 
 def _last_zorder_snapshot(md: dict, zorder_by: list[str]) -> dict | None:
@@ -2170,8 +2100,7 @@ def compaction_stats(path: str) -> dict:
 
 def maybe_compact_iceberg(spark: SparkSession, path: str,
                           max_delete_files: int = 8,
-                          max_deleted_ratio: float = 0.10,
-                          max_commit_attempts: int = 5
+                          max_deleted_ratio: float = 0.10
                           ) -> int | None:
     """Threshold-policy compaction for merge-on-read tables (the
     cadence hook the CDC-upsert story needs: every equality-delete
@@ -2193,8 +2122,7 @@ def maybe_compact_iceberg(spark: SparkSession, path: str,
     if st["delete_files"] <= max_delete_files \
             and st["deleted_ratio"] <= max_deleted_ratio:
         return None
-    return compact_iceberg(spark, path,
-                           max_commit_attempts=max_commit_attempts)
+    return compact_iceberg(spark, path)
 
 
 def maybe_zorder_iceberg(spark: SparkSession, path: str,

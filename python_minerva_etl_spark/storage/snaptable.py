@@ -15,11 +15,10 @@ dependency-free:
   (each manifest is a FULL snapshot: the list of data files that make
   up that version, with per-file min/max stats of the merge keys read
   from the parquet footers via pyarrow).
-* **Atomic commit** — the manifest is staged to a temp name and
-  published with ``os.link`` (fails with ``EEXIST`` if a concurrent
-  writer took the version number — POSIX gives test-and-set for free).
-  Readers see either the old snapshot or the new one, never a partial
-  write; a crashed writer leaves only an unreferenced data dir that
+* **Atomic commit** — each manifest is published put-if-absent under
+  the next version number (the protocol in :mod:`.commit`).  Readers
+  see either the old snapshot or the new one, never a partial write;
+  a crashed writer leaves only an unreferenced data dir that
   ``vacuum()`` removes.
 * **MERGE** — last-writer-wins on a key, incoming batch outranks
   stored rows (the reference's DO UPDATE), ``seq_col`` breaks ties
@@ -30,8 +29,9 @@ dependency-free:
 * **Conflict detection** — a merge that loses the commit race re-reads
   the manifests it missed; if none of the newly-added files overlaps
   the batch envelope the merge result is still valid and the commit is
-  retried on top, otherwise :class:`CommitConflict` is raised for the
-  caller to re-run (Delta's write-conflict semantics).
+  retried on top (at most :data:`.commit.COMMIT_ATTEMPTS` times),
+  otherwise :class:`CommitConflict` is raised for the caller to re-run
+  (Delta's write-conflict semantics).
 * **Time travel** — ``read(spark, version=N)`` reads any retained
   snapshot; ``history()`` lists them.
 """
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import read_parquet
+from .commit import commit_attempts, publish_if_absent
 from .stats import US, epoch, footer_bounds, may_match
 
 
@@ -82,6 +83,17 @@ def _canon_col(df: DataFrame, col: str):
         # datetime.date.toordinal(): 1970-01-01 is day 719163
         return F.datediff(F.col(col), F.lit("1970-01-01")) + F.lit(719163)
     return F.col(col)
+
+
+def _key_envelope(df: DataFrame, key: list[str]) -> dict[str, list[Any]]:
+    """Per-key-column canonical [min, max] of ``df`` (one aggregate
+    job); columns that are all NULL are left out."""
+    row = df.select(
+        *[F.min(_canon_col(df, c)).alias(f"lo_{c}") for c in key],
+        *[F.max(_canon_col(df, c)).alias(f"hi_{c}") for c in key],
+    ).collect()[0]
+    return {c: [_canon(row[f"lo_{c}"]), _canon(row[f"hi_{c}"])]
+            for c in key if row[f"lo_{c}"] is not None}
 
 
 def _file_stats(path: str, key: list[str]) -> tuple[int, dict[str, list[Any]]]:
@@ -401,17 +413,9 @@ class SnapTable:
     def _publish(self, manifest: dict, version: int) -> bool:
         """Atomically publish ``manifest`` as ``version``; False if a
         concurrent writer took that version number first."""
-        os.makedirs(self._mdir, exist_ok=True)
-        tmp = os.path.join(self._mdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, os.path.join(self._mdir, f"v{version:08d}.json"))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return publish_if_absent(
+            os.path.join(self._mdir, f"v{version:08d}.json"),
+            json.dumps(manifest))
 
     def txns(self, version: int | None = None) -> dict[str, int]:
         """Writer-app -> last committed batch id, carried forward in
@@ -446,7 +450,7 @@ class SnapTable:
         if self._txn_seen(txn, self.latest_version()):
             return self.latest_version()
         new = self._write_data(df, list(key))
-        while True:
+        for _ in commit_attempts(self.path, CommitConflict):
             v = (self.latest_version() or 0) + 1
             if self._txn_seen(txn, v - 1 if v > 1 else None):
                 return v - 1
@@ -455,8 +459,7 @@ class SnapTable:
                         "n_files": len(files) + len(new)}
             if key:
                 manifest["key"] = list(key)
-            ok = self._publish(self._with_txn(manifest, txn, v - 1), v)
-            if ok:
+            if self._publish(self._with_txn(manifest, txn, v - 1), v):
                 return v
 
     def merge(self, spark: SparkSession, batch: DataFrame, key: list[str],
@@ -476,17 +479,10 @@ class SnapTable:
             resolved = argmax_resolve(batch, key, [seq_col])
             return self.append(spark, resolved, key, txn=txn)
 
-        env_row = batch.select(
-            *[F.min(_canon_col(batch, c)).alias(f"lo_{c}") for c in key],
-            *[F.max(_canon_col(batch, c)).alias(f"hi_{c}") for c in key],
-        ).collect()[0]
-        envelope = {c: [_canon(env_row[f"lo_{c}"]), _canon(env_row[f"hi_{c}"])]
-                    for c in key if env_row[f"lo_{c}"] is not None}
-
+        envelope = _key_envelope(batch, key)
         base = self.latest_version()
         entries = self.files(base)
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
-        carried = [e for e in entries if not _overlaps(e["stats"], envelope)]
 
         if touched:
             stored = self._read_files(spark, [e["path"] for e in touched])
@@ -499,28 +495,8 @@ class SnapTable:
         resolved = argmax_resolve(combined, key,
                                   ["__src", seq_col]).drop("__src")
         new = self._write_data(resolved, key)
-
-        del carried  # recomputed from the current snapshot each attempt
-        t_paths = {e["path"] for e in touched}
-        base_paths = {e["path"] for e in entries}
-        while True:
-            v = (self.latest_version() or 0) + 1
-            if self._txn_seen(txn, v - 1 if v > 1 else None):
-                return v - 1
-            cur = self.files(v - 1) if v > 1 else []
-            if v - 1 != base:  # lost the race: check the commits we missed
-                for e in cur:
-                    if (e["path"] not in base_paths
-                            and _overlaps(e["stats"], envelope)):
-                        raise CommitConflict(
-                            f"concurrent commit touched merge key range: "
-                            f"{e['path']}")
-            files = [e for e in cur if e["path"] not in t_paths] + new
-            if self._publish(self._with_txn(
-                    {"version": v, "op": "merge", "files": files,
-                     "n_files": len(files), "key": list(key)},
-                    txn, v - 1), v):
-                return v
+        return self._commit_rewrite("merge", key, envelope, base, entries,
+                                    touched, new, txn)
 
     def apply_changes(self, spark: SparkSession, changes: DataFrame,
                       key: list[str], seq_col: str,
@@ -568,12 +544,7 @@ class SnapTable:
         if base is None:
             raise FileNotFoundError(f"snaptable {self.path}: no snapshot")
         kdf = keys.select(*key).distinct()
-        env_row = kdf.select(
-            *[F.min(_canon_col(kdf, c)).alias(f"lo_{c}") for c in key],
-            *[F.max(_canon_col(kdf, c)).alias(f"hi_{c}") for c in key],
-        ).collect()[0]
-        envelope = {c: [_canon(env_row[f"lo_{c}"]), _canon(env_row[f"hi_{c}"])]
-                    for c in key if env_row[f"lo_{c}"] is not None}
+        envelope = _key_envelope(kdf, key)
         entries = self.files(base)
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
         new: list[dict] = []
@@ -581,9 +552,22 @@ class SnapTable:
             stored = self._read_files(spark, [e["path"] for e in touched])
             kept = stored.join(F.broadcast(kdf), key, "left_anti")
             new = self._write_data(kept, key)
+        return self._commit_rewrite("delete", key, envelope, base, entries,
+                                    touched, new, txn)
+
+    def _commit_rewrite(self, op: str, key: list[str], envelope: dict,
+                        base: int, entries: list[dict],
+                        touched: list[dict], new: list[dict],
+                        txn: tuple[str, int] | None) -> int:
+        """Commit a MERGE/DELETE that read ``touched`` (files of
+        version ``base`` overlapping the key ``envelope``) and wrote
+        ``new``.  A lost race is retried on top of the newer snapshot
+        unless a commit it missed added files inside the envelope:
+        then the rewrite is stale and :class:`CommitConflict` raises
+        for the caller to re-run."""
         t_paths = {e["path"] for e in touched}
         base_paths = {e["path"] for e in entries}
-        while True:
+        for _ in commit_attempts(self.path, CommitConflict):
             v = (self.latest_version() or 0) + 1
             if self._txn_seen(txn, v - 1 if v > 1 else None):
                 return v - 1
@@ -593,11 +577,11 @@ class SnapTable:
                     if (e["path"] not in base_paths
                             and _overlaps(e["stats"], envelope)):
                         raise CommitConflict(
-                            f"concurrent commit touched delete key range: "
+                            f"concurrent commit touched {op} key range: "
                             f"{e['path']}")
             files = [e for e in cur if e["path"] not in t_paths] + new
             if self._publish(self._with_txn(
-                    {"version": v, "op": "delete", "files": files,
+                    {"version": v, "op": op, "files": files,
                      "n_files": len(files), "key": list(key)},
                     txn, v - 1), v):
                 return v
@@ -700,7 +684,7 @@ class SnapTable:
         n_out = max(1, -(-total // target_file_bytes))
         new = self._write_data(packed.repartition(n_out), key)
         s_paths = {e["path"] for e in small}
-        while True:
+        for _ in commit_attempts(self.path, CommitConflict):
             v = (self.latest_version() or 0) + 1
             cur = self.files(v - 1) if v > 1 else []
             if any(e["path"] not in {x["path"] for x in entries}
@@ -767,7 +751,7 @@ class SnapTable:
         written; concurrent-writer safety via the same atomic
         publish."""
         old = self._manifest(to_version)  # raises on unknown version
-        while True:
+        for _ in commit_attempts(self.path, CommitConflict):
             latest = self.latest_version() or 0
             if to_version == latest:
                 return latest  # restoring to the tip is a no-op

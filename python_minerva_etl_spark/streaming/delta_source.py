@@ -783,11 +783,11 @@ def _write_task(batches, table_path: str, schema: T.StructType,
     Returns the add actions (with footer stats) for the driver's
     single log commit."""
     import uuid as _uuid
-    from urllib.parse import quote
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..storage.commit import hive_segment
     from ..storage.delta import _file_stats
 
     batches = list(batches)
@@ -800,13 +800,8 @@ def _write_task(batches, table_path: str, schema: T.StructType,
 
     def emit(sub: "pa.Table", pvals: dict) -> dict:
         base = f"part-{_uuid.uuid4().hex}-c000.snappy.parquet"
-        segs = []
-        for c in part_cols:
-            raw = pvals[c]
-            segs.append(f"{c}=" + (
-                "__HIVE_DEFAULT_PARTITION__" if raw is None
-                else quote(raw, safe="")))
-        rel = "/".join(segs + [base])
+        rel = "/".join([hive_segment(c, pvals[c]) for c in part_cols]
+                       + [base])
         abs_path = os.path.join(table_path, rel)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
         pq.write_table(sub.select(data_cols), abs_path,

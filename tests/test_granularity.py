@@ -123,3 +123,18 @@ def test_localtz_bucketing_handles_dst_transition(spark):
     assert got == {1: "2024-03-30 00:00:00",
                    2: "2024-03-31 00:00:00",
                    3: "2024-04-01 00:00:00"}
+
+
+@pytest.mark.parametrize("year", [2024, 3000, 9999])
+@pytest.mark.parametrize("zone", [UTC, AMS], ids=["UTC", "AMS"])
+@pytest.mark.parametrize("name, minute", [
+    ("1m", 59), ("5m", 55), ("15m", 45), ("30m", 30), ("1h", 0)])
+def test_truncate_last_microsecond_stays_in_bucket(year, zone, name,
+                                                   minute):
+    """Sub-day buckets floor exact microseconds: the last µs of a
+    bucket never rounds up into the next one, however far from 1970
+    (float epoch seconds carry no µs past about year 2200)."""
+    ts = datetime(year, 6, 1, 12, 59, 59, 999999, tzinfo=zone)
+    got = Granularity(name, tz=zone.key).truncate(ts)
+    assert got == datetime(year, 6, 1, 12, minute, tzinfo=zone)
+    assert got.tzinfo == zone

@@ -385,7 +385,7 @@ def test_retry_dml_refuses_when_compaction_rewrote_target_files(
     assert compact_iceberg(spark, p) is not None
     with pytest.raises(IcebergConcurrentCommit, match="rerun the DML"):
         _retry_row_dml(table, [], del_entries, None, "delete",
-                       5, "delete", referenced_paths=refd)
+                       "delete", referenced_paths=refd)
     # nothing was committed: all 11 rows still live
     assert read_iceberg(spark, p).count() == 11
 
