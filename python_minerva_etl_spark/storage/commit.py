@@ -25,6 +25,12 @@ metadata encoding, error type and conflict rules.
 4. **Hive path codec** (:func:`hive_segment`, :func:`hive_values`):
    ``col=value`` directory names, null as
    ``__HIVE_DEFAULT_PARTITION__``.
+5. **Arrow part writer** (:func:`write_parts`): the task side of the
+   registered ``minerva_delta`` and ``minerva_iceberg`` sinks.  One
+   snappy parquet file per distinct key, at a final name the format
+   chooses, with no min/max for a string column holding a value over
+   4 KB (pyarrow would record its max as ``''``).  Staged files that
+   never commit are removed by :func:`remove_files`.
 """
 
 from __future__ import annotations
@@ -36,6 +42,11 @@ from typing import Callable, Iterator
 from urllib.parse import quote, unquote
 
 COMMIT_ATTEMPTS = 10
+
+# pyarrow 16.1 records a 4,096-byte string max exactly and a longer
+# one as '' (unless every value in the row group is that long)
+_STATS_MAX_BYTES = 4096
+_BYTE_TYPES = ("string", "binary", "large_string", "large_binary")
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -141,3 +152,57 @@ def stage_parquet(df, table_path: str, partition_by: list[str],
         return [(final, values) for _, final, values in parts]
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def write_parts(batches, keys: Callable, columns: list[str],
+                place: Callable[[tuple], str]
+                ) -> list[tuple[str, tuple, int]]:
+    """Write one task's Arrow ``batches`` as one snappy parquet file
+    of ``columns`` per distinct key, at ``place(key)``; returns
+    ``(path, key, rows)`` per file.  ``keys(table)`` gives the pandas
+    Series whose value tuple is the key, None for null; no Series
+    means one file.  Groups keep first-appearance order.
+    A string or binary column with a value over 4,096 bytes gets no
+    statistics (nor do nested columns of that file), like Spark's
+    parquet-mr writer: pyarrow would record its max as ``''``."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    batches = list(batches)
+    if not batches:
+        return []
+    tbl = pa.Table.from_batches(batches)
+    frame = pd.DataFrame(dict(enumerate(keys(tbl))))
+    tbl = tbl.select(columns)
+    groups = (frame.groupby(list(frame.columns), dropna=False,
+                            sort=False).indices.items()
+              if len(frame.columns) else [((), None)])
+    out = []
+    for key, idx in groups:
+        key = tuple(None if pd.isna(v) else v
+                    for v in (key if isinstance(key, tuple) else (key,)))
+        sub = tbl if idx is None else tbl.take(idx)
+        long = {f.name for f in sub.schema
+                if str(f.type) in _BYTE_TYPES
+                and (pc.max(pc.binary_length(sub[f.name])).as_py()
+                     or 0) > _STATS_MAX_BYTES}
+        path = place(key)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(sub, path, compression="snappy",
+                       write_statistics=[c for c in columns
+                                         if c not in long]
+                       if long else True)
+        out.append((path, key, sub.num_rows))
+    return out
+
+
+def remove_files(paths) -> None:
+    """Delete staged files that will never be committed; a file
+    already gone is fine."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass

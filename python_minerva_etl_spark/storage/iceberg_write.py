@@ -41,8 +41,8 @@ from contextlib import suppress
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .commit import (commit_attempts, publish_if_absent, replace_atomic,
-                     stage_parquet)
+from .commit import (commit_attempts, hive_segment, publish_if_absent,
+                     replace_atomic, stage_parquet)
 from .iceberg import IcebergTable, _localize, _to_spark_schema
 from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
                     zorder_proxy_sql)
@@ -639,7 +639,8 @@ def _stage_data_files(df: DataFrame, table_path: str,
                       part: "_PartField | None" = None,
                       ice_schema: dict | None = None) -> list[dict]:
     """Distributed parquet write into a staging dir, then rename each
-    part file to ``data/[<field>=<val>/]<uuid>.parquet``.  Returns
+    part file to ``data/[<field>=<val>/]<uuid>.parquet`` (the
+    value percent-encoded by :func:`.commit.hive_segment`).  Returns
     manifest ``data_file`` dicts (path, size, row count from the
     footer, and the typed partition value when partitioned).
 
@@ -660,7 +661,8 @@ def _stage_data_files(df: DataFrame, table_path: str,
         return part.parse_dir_value(values["__part"])
 
     def place(_rel_dir: str, values: dict) -> str:
-        sub = [] if part is None else [f"{part.name}={value(values)}"]
+        sub = [] if part is None else [hive_segment(
+            part.name, str(value(values)))]
         return os.path.join(data_dir, *sub, f"{uuid.uuid4().hex}.parquet")
 
     if part is not None:

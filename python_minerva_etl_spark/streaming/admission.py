@@ -1,4 +1,9 @@
-"""Checkpoint-scoped persisted admission watermark.
+"""Admission control for the three registered stream readers
+(``minerva_avro``, ``minerva_delta``, ``minerva_iceberg``): one cap
+option parser (:func:`cap_option`), one admission loop
+(:func:`admit`), and the checkpoint-scoped persisted admission
+watermark (:func:`admission_state`).  Each source keeps its own
+offset shape and its own rule for priming the watermark.
 
 The Python DataSource streaming API exposes no ``ReadLimit`` hook
 and calls ``latestOffset`` before revealing any start offset, so a
@@ -47,6 +52,8 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+
+from .source_api import _flag, _opt
 
 _STATE_NAME = "admission-watermark.json"
 
@@ -114,59 +121,84 @@ class PersistedWatermark:
         self._last_saved = value
 
 
-def attach_state(options_get, source: str, source_path: str,
-                 has_cap: bool):
-    """Build the source's PersistedWatermark from its options, or
-    None when ``admissionStateDir`` is not set.  Requires a cap:
-    a state dir without any rate limit is a misconfiguration (there
-    is no watermark to persist) and is refused rather than ignored.
-    ``options_get(name) -> str | None`` is the source's option
-    accessor (case-insensitive in the DataSource API).
-    """
-    sd = options_get("admissionStateDir")
+def cap_option(options: dict, source: str, name: str) -> int | None:
+    """The positive-integer rate-limit option ``name``, or None when
+    it is not set."""
+    raw = _opt(options, name)
+    if raw is None:
+        return None
+    cap = int(raw)
+    if cap < 1:
+        raise ValueError(f"{source}: {name} must be a positive "
+                         f"integer, got {raw!r}")
+    return cap
+
+
+def admit(units, caps) -> int:
+    """How many leading ``units`` one micro-batch takes: units in
+    order until adding the next would exceed some cap — but always at
+    least one, so a unit bigger than a cap still drains alone (the
+    cap can bound, not wedge).  ``caps`` is a list of ``(cost, cap)``
+    pairs, ``cost(unit) -> int``; a cap of None is off and its cost
+    is never computed, and when every cap is off all units are
+    taken."""
+    caps = [(cost, cap) for cost, cap in caps if cap is not None]
+    totals = [0] * len(caps)
+    taken = 0
+    for unit in units:
+        costs = [cost(unit) for cost, _ in caps]
+        if taken and any(t + c > cap for t, c, (_, cap)
+                         in zip(totals, costs, caps)):
+            break
+        totals = [t + c for t, c in zip(totals, costs)]
+        taken += 1
+    return taken
+
+
+def admission_state(options: dict, source: str, source_path: str,
+                    capped: bool, floor):
+    """``(state, watermark)`` for a rate-limited stream reader:
+    ``state`` is the PersistedWatermark from ``admissionStateDir``
+    (None when unset), ``watermark`` the initial admission watermark
+    (None = unknown, today's uncapped first batch).
+
+    A state dir requires a cap: without any rate limit there is no
+    watermark to persist, so the misconfiguration is refused rather
+    than ignored.
+
+    ``option("assumeFreshStart", "true")`` closes the cold-backlog
+    hole of a BRAND-NEW query: with the required ``admissionStateDir``
+    and NO state file, the watermark primes to ``floor`` (the
+    source's epoch), so even the very first ``latestOffset`` of the
+    query's first run caps — a 100 TB initial snapshot/backlog drains
+    in bounded batches from batch zero instead of planning as one
+    batch.  The two-key interlock makes it safe: every rate-limited
+    run persists at its first ``latestOffset``, so a state file
+    EXISTS for any query that ever ran — its absence plus the user's
+    explicit fresh-start assertion is the only combination that
+    primes low.  A reloaded watermark always wins (restart detected,
+    assertion ignored).  The residual misuse — deleting the state
+    dir while keeping the checkpoint AND passing assumeFreshStart —
+    is the same class of error as deleting half a checkpoint: the
+    state dir's lifecycle is bound to the checkpoint's."""
+    sd = _opt(options, "admissionStateDir")
+    fresh = _flag(options, "assumeFreshStart")
     if sd is None:
-        if str(options_get("assumeFreshStart") or
-               "false").lower() == "true":
+        if fresh:
             raise ValueError(
                 "assumeFreshStart requires admissionStateDir — the "
                 "state file is how a restart is told apart from a "
                 "fresh start; without it a restarted query would "
                 "cap from the epoch, regress Spark's offset log, "
                 "and double-read after a crash")
-        return None
-    if not has_cap:
+        return None, None
+    if not capped:
         raise ValueError(
             "admissionStateDir is set but no rate limit is — pass "
             "maxFilesPerTrigger / maxBytesPerTrigger (or the "
             "source's equivalent) alongside it")
-    return PersistedWatermark(str(sd), source, source_path)
-
-
-def fresh_start_floor(options_get, state, loaded, floor):
-    """The initial admission watermark for a BRAND-NEW query, closing
-    the cold-backlog hole: with ``option("assumeFreshStart", "true")``
-    (plus the required ``admissionStateDir``) and NO state file, the
-    watermark primes to ``floor`` (the source's epoch), so even the
-    very first ``latestOffset`` of the query's first run caps — a
-    100 TB initial snapshot/backlog drains in bounded batches from
-    batch zero instead of planning as one batch.
-
-    The two-key interlock makes it safe: every rate-limited run
-    persists at its first ``latestOffset``, so a state file EXISTS
-    for any query that ever ran — its absence plus the user's
-    explicit fresh-start assertion is the only combination that
-    primes low.  A reloaded watermark always wins (restart detected,
-    assertion ignored).  The residual misuse — deleting the state
-    dir while keeping the checkpoint AND passing assumeFreshStart —
-    is documented as the same class of error as deleting half a
-    checkpoint: the state dir's lifecycle is bound to the
-    checkpoint's.  Returns ``loaded`` when present, else ``floor``
-    when the assertion is set, else None (today's uncapped first
-    batch)."""
+    state = PersistedWatermark(str(sd), source, source_path)
+    loaded = state.load()
     if loaded is not None:
-        return loaded
-    if state is not None and str(
-            options_get("assumeFreshStart") or "false"
-            ).lower() == "true":
-        return floor
-    return None
+        return state, loaded
+    return state, floor if fresh else None

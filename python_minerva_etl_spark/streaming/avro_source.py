@@ -27,6 +27,10 @@ splits like the batch path.  The STREAMING sink commits each
 micro-batch atomically: files land under a ``part-<batchId>-…``
 prefix and a ``.batch-<batchId>.committed`` ledger marker, created
 last, makes them visible to readers.
+
+Shared with the other registered sources: :mod:`.source_api`
+(options, path check, registration) and :mod:`.admission`
+(admission control).
 """
 
 from __future__ import annotations
@@ -43,10 +47,9 @@ from pyspark.sql.datasource import (DataSource,
                                     InputPartition,
                                     WriterCommitMessage)
 
-
-def _opt(options: dict, name: str, default=None):
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from ..storage.commit import remove_files
+from .admission import admission_state, admit, cap_option
+from .source_api import _flag, _opt, register, require_path
 
 
 class _SplitPartition(InputPartition):
@@ -84,9 +87,7 @@ class _AvroPlanMixin:
     def _plan(self, options: dict):
         from ..sources.avro import plan_read
 
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_avro requires a path")
+        self.path = require_path(options, "minerva_avro")
         self.split_bytes = int(_opt(options, "split_bytes",
                                     128 << 20))
         self.batch_bytes = int(_opt(options, "batch_bytes",
@@ -172,43 +173,24 @@ class _AvroStreamReader(DataSourceStreamReader, _AvroPlanMixin):
     additionally primes the epoch watermark when NO state file
     exists, so a brand-new query's cold backlog drains capped from
     its very first offset — the state file is the restart detector,
-    making the assertion safe (admission.fresh_start_floor).
+    making the assertion safe (admission.admission_state).
     ``Trigger.AvailableNow`` latches a single target up front and
     is therefore uncapped end-to-end; use a processing-time trigger
     when admission control matters."""
 
     def __init__(self, options: dict):
         self._plan(options)
-        mft = _opt(options, "maxFilesPerTrigger")
-        self.max_files = int(mft) if mft is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError(
-                "minerva_avro: maxFilesPerTrigger must be a "
-                f"positive integer, got {mft!r}")
-        mbt = _opt(options, "maxBytesPerTrigger")
-        self.max_bytes = int(mbt) if mbt is not None else None
-        if self.max_bytes is not None and self.max_bytes < 1:
-            raise ValueError(
-                "minerva_avro: maxBytesPerTrigger must be a "
-                f"positive integer, got {mbt!r}")
+        self.max_files = cap_option(options, "minerva_avro",
+                                    "maxFilesPerTrigger")
+        self.max_bytes = cap_option(options, "minerva_avro",
+                                    "maxBytesPerTrigger")
         # driver-side rate-limit watermark (the highest end name
-        # this reader has returned or observed); None = unknown.
-        # option("admissionStateDir", dir) persists it across
-        # restarts so even the FIRST batch of a restarted query is
-        # capped (without it, the restart backlog plans as one
-        # uncapped batch — the documented API limitation).
-        # option("assumeFreshStart", "true") additionally primes the
-        # epoch watermark ("") on a brand-new query (no state file),
-        # capping even the first run's cold backlog — see
-        # admission.fresh_start_floor for the safety interlock.
-        from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
-        self._wm_state = attach_state(
-            opt, "minerva_avro", self.path,
-            self.max_files is not None or self.max_bytes is not None)
-        loaded = self._wm_state.load() if self._wm_state else None
-        self._hw_seen: str | None = fresh_start_floor(
-            opt, self._wm_state, loaded, "")
+        # this reader has returned or observed); None = unknown, and
+        # the epoch is "" under assumeFreshStart
+        self._wm_state, self._hw_seen = admission_state(
+            options, "minerva_avro", self.path,
+            self.max_files is not None or self.max_bytes is not None,
+            "")
 
     def _prime(self, *hws) -> None:
         known = [h for h in hws if h]
@@ -247,32 +229,9 @@ class _AvroStreamReader(DataSourceStreamReader, _AvroPlanMixin):
         if capped and self._hw_seen is not None:
             beyond = [(n, f) for n, f in zip(names, files)
                       if n > self._hw_seen]
-            # take files in name order until a cap would be
-            # exceeded — but always at least one (a single file
-            # bigger than maxBytesPerTrigger must still drain)
-            end, taken, size = self._hw_seen, 0, 0
-            for n, f in beyond:
-                # stat only when a byte cap needs it, and tolerate a
-                # file removed between the listing and the stat
-                # (retention race): count it as 0 bytes here and let
-                # partitions()' cross-check raise the deliberate
-                # removed-under-running-stream diagnostic if it was
-                # inside the planned range.
-                fsz = 0
-                if self.max_bytes is not None:
-                    try:
-                        fsz = os.path.getsize(f)
-                    except OSError:
-                        fsz = 0
-                if taken >= 1 and (
-                        (self.max_files is not None
-                         and taken >= self.max_files)
-                        or (self.max_bytes is not None
-                            and size + fsz > self.max_bytes)):
-                    break
-                taken += 1
-                size += fsz
-                end = n
+            taken = admit(beyond, [(lambda u: 1, self.max_files),
+                                   (_size, self.max_bytes)])
+            end = beyond[taken - 1][0] if taken else self._hw_seen
         self._prime(end)
         if self._wm_state is not None:
             # persist at latestOffset so the state file stays at or
@@ -326,6 +285,18 @@ class _AvroStreamReader(DataSourceStreamReader, _AvroPlanMixin):
             self._wm_state.save(self._hw_seen)
 
 
+def _size(unit: tuple[str, str]) -> int:
+    """A listed file's admission cost in bytes.  A file removed
+    between the listing and the stat (retention race) costs 0 here;
+    partitions()' cross-check raises the deliberate
+    removed-under-running-stream diagnostic if it was inside the
+    planned range."""
+    try:
+        return os.path.getsize(unit[1])
+    except OSError:
+        return 0
+
+
 class _AvroCommit(WriterCommitMessage):
     def __init__(self, tmp: str | None, rows: int):
         self.tmp = tmp
@@ -353,12 +324,9 @@ class _AvroWriter(DataSourceArrowWriter):
                 "minerva_avro writer is append-only "
                 "(mode('append')); a drop directory is never "
                 "rewritten in place")
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_avro requires a path")
+        self.path = require_path(options, "minerva_avro")
         self.codec = _opt(options, "codec", "deflate")
-        self.force_required = str(_opt(
-            options, "force_required", "false")).lower() == "true"
+        self.force_required = _flag(options, "force_required")
         self.block_bytes = int(_opt(options, "block_bytes",
                                     4 << 20))
         # fail fast on the driver: unsupported column types raise at
@@ -456,12 +424,7 @@ class _AvroWriter(DataSourceArrowWriter):
         self._finalize(messages, self._next_seq())
 
     def abort(self, messages):
-        for m in messages:
-            if m and m.tmp:
-                try:
-                    os.remove(m.tmp)
-                except OSError:
-                    pass
+        remove_files(m.tmp for m in messages if m and m.tmp)
 
 
 class _AvroStreamWriter(DataSourceStreamArrowWriter):
@@ -527,10 +490,8 @@ class MinervaAvroDataSource(DataSource):
     def schema(self):
         from ..sources.avro import plan_read
 
-        path = _opt(dict(self.options), "path")
-        if not path:
-            raise ValueError("minerva_avro requires a path")
-        return plan_read(path)[2]
+        return plan_read(require_path(dict(self.options),
+                                      "minerva_avro"))[2]
 
     def reader(self, schema) -> DataSourceReader:
         return _AvroBatchReader(dict(self.options))
@@ -548,4 +509,4 @@ class MinervaAvroDataSource(DataSource):
 
 def register_avro_source(spark: SparkSession) -> None:
     """Register ``minerva_avro`` for this session (idempotent)."""
-    spark.dataSource.register(MinervaAvroDataSource)
+    register(spark, MinervaAvroDataSource)

@@ -27,6 +27,12 @@ types refuse loudly — ``read_delta`` remains the full-fidelity
 batch path.  Data files
 must carry every non-partition column (true for Spark-written
 tables).
+
+The plumbing all three registered sources share lives elsewhere:
+option lookup, the path check, filter translation and registration
+in :mod:`.source_api`, admission control in :mod:`.admission`, and
+the sinks' task-side parquet write in
+:func:`storage.commit.write_parts`.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -45,14 +52,11 @@ from pyspark.sql.datasource import (DataSource,
                                     InputPartition,
                                     WriterCommitMessage)
 
+from ..storage.commit import hive_segment, remove_files, write_parts
 from ..storage.delta import DeltaTable, _commit_path
-
-def _opt(options: dict, name: str, default=None):
-    """Spark normalizes reader option keys to lowercase before they
-    reach a Python data source — look keys up case-insensitively so
-    `.option("startingVersion", …)` works as documented."""
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from .admission import admission_state, admit, cap_option
+from .source_api import (_flag, _opt, empty_when_pruned,
+                         preds_from_filters, register, require_path)
 
 
 class _FilePartition(InputPartition):
@@ -305,10 +309,7 @@ def _check_supported(dt: DeltaTable, snap: dict):
 
 class _BatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_delta requires a path "
-                             "(.load(path) or .option('path', …))")
+        self.path = require_path(options, "minerva_delta")
         dt = DeltaTable(self.path)
         vao = _opt(options, "versionAsOf")
         tao = _opt(options, "timestampAsOf")
@@ -339,9 +340,7 @@ class _BatchReader(DataSourceReader):
         stats (min/max), exactly like ``DeltaTable.read(where=…)``.
         EVERY filter is handed back to Spark for post-scan
         evaluation — pushdown here is pruning, never filtering."""
-        from .iceberg_source import _preds_from_filters
-
-        self.preds = _preds_from_filters(
+        self.preds = preds_from_filters(
             filters, {f.name for f in self.schema_.fields})
         return filters
 
@@ -360,6 +359,7 @@ class _BatchReader(DataSourceReader):
                                f.get("deletionVector"), cm=self.cm)
                 for f in files]
 
+    @empty_when_pruned
     def read(self, partition):
         return _read_partition(partition, self.schema_,
                                self.part_cols)
@@ -388,9 +388,7 @@ class _CdfBatchReader(DataSourceReader):
     as do schema changes inside the range."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_delta requires a path")
+        self.path = require_path(options, "minerva_delta")
         dt = DeltaTable(self.path)
         avail = dt.versions()
         if not avail:
@@ -430,8 +428,6 @@ class _CdfBatchReader(DataSourceReader):
                T.StructField("_commit_timestamp", T.TimestampType())])
 
     def partitions(self):
-        from ..storage.delta import _CM_PHYS
-
         cm_ct = None
         if self.cm:
             cm_ct = (self.cm[0],
@@ -526,6 +522,7 @@ class _CdfBatchReader(DataSourceReader):
                         "delete", v, ts))
         return out
 
+    @empty_when_pruned
     def read(self, partition: _CdfPartition):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -575,9 +572,7 @@ class _StreamReader(DataSourceStreamReader):
     means 'everything through commit N has been emitted'."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_delta requires a path")
+        self.path = require_path(options, "minerva_delta")
         self.dt = DeltaTable(self.path)
         snap = self.dt._replay()
         self.cm = _check_supported(self.dt, snap)
@@ -614,42 +609,21 @@ class _StreamReader(DataSourceStreamReader):
                     "after the latest commit — nothing to stream "
                     "from there")
         self.starting = int(sv) if sv is not None else None
-        self.ignore_changes = str(_opt(
-            options, "ignoreChanges", "false")).lower() == "true"
-        self.ignore_deletes = str(_opt(
-            options, "ignoreDeletes", "false")).lower() == "true"
+        self.ignore_changes = _flag(options, "ignoreChanges")
+        self.ignore_deletes = _flag(options, "ignoreDeletes")
         # ADMISSION CONTROL (upstream delta-spark's option name,
         # commit-boundary granularity: our offsets are whole
         # versions, so a batch takes consecutive commits while their
-        # cumulative dataChange-add file count stays <= K — always
-        # at least one commit).  The Python DataSource API calls
-        # latestOffset before revealing any start offset, so the
-        # FIRST batch of a (re)started query is uncapped (same
-        # measured limitation, same reasoning as the minerva_avro
-        # source: a deliberately low first offset would regress
-        # Spark's offset log and double-read after a crash) UNLESS
-        # option("admissionStateDir", dir) persists the watermark
-        # across restarts (saved at latestOffset time so the reload
-        # is at or ahead of Spark's offset log — see
-        # streaming/admission.py for the full argument).
-        mft = _opt(options, "maxFilesPerTrigger")
-        self.max_files = int(mft) if mft is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError(
-                "minerva_delta: maxFilesPerTrigger must be a "
-                f"positive integer, got {mft!r}")
-        # option("assumeFreshStart", "true") additionally primes the
-        # epoch watermark (startingVersion - 1, else -1) on a
-        # brand-new query (no state file), capping even the first
-        # run's cold snapshot — admission.fresh_start_floor.
-        from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
-        self._wm_state = attach_state(
-            opt, "minerva_delta", self.path,
-            self.max_files is not None)
-        loaded = fresh_start_floor(
-            opt, self._wm_state,
-            self._wm_state.load() if self._wm_state else None,
+        # cumulative dataChange-add file count stays <= K).  The
+        # first-batch limitation and admissionStateDir /
+        # assumeFreshStart are as for minerva_avro (see
+        # _AvroStreamReader and streaming/admission.py); the epoch
+        # is startingVersion - 1, else -1.
+        self.max_files = cap_option(options, "minerva_delta",
+                                    "maxFilesPerTrigger")
+        self._wm_state, loaded = admission_state(
+            options, "minerva_delta", self.path,
+            self.max_files is not None,
             (self.starting - 1) if self.starting is not None else -1)
         # rate-limit watermark (last version this reader returned)
         self._v_seen: int | None = (
@@ -685,16 +659,10 @@ class _StreamReader(DataSourceStreamReader):
         vs = self.dt.versions()
         latest = vs[-1] if vs else -1
         if self.max_files is not None and self._v_seen is not None:
-            end, total = self._v_seen, 0
-            for v in vs:
-                if v <= self._v_seen:
-                    continue
-                n = self._commit_add_count(v)
-                if end > self._v_seen and total + n > self.max_files:
-                    break
-                total += n
-                end = v
-            latest = max(end, self._v_seen)
+            beyond = [v for v in vs if v > self._v_seen]
+            taken = admit(beyond, [(self._commit_add_count,
+                                    self.max_files)])
+            latest = beyond[taken - 1] if taken else self._v_seen
         self._prime(latest)
         if self._wm_state is not None:
             # persist at latestOffset so the state file stays at or
@@ -775,76 +743,50 @@ class _DeltaCommitMessage(WriterCommitMessage):
 def _write_task(batches, table_path: str, schema: T.StructType,
                 part_cols: list[str]) -> _DeltaCommitMessage:
     """Executor side of the writer: the task's Arrow batches become
-    parquet files directly at their final unique names (uncommitted
-    files are invisible to readers and vacuumable after an abort —
-    the same staging discipline as :meth:`DeltaTable.
-    _stage_data_files`), Hive-partitioned with the partition columns
-    stripped from the files, one file per partition value per task.
-    Returns the add actions (with footer stats) for the driver's
-    single log commit."""
-    import uuid as _uuid
+    parquet files directly at their final unique names
+    (:func:`storage.commit.write_parts`; uncommitted files are
+    invisible to readers and vacuumable after an abort),
+    Hive-partitioned with the partition columns stripped from the
+    files.  Returns the add actions (with footer stats) for the
+    driver's single log commit."""
+    import time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..storage.commit import hive_segment
     from ..storage.delta import _file_stats
 
-    batches = list(batches)
-    if not batches:
-        return _DeltaCommitMessage([])
-    tbl = pa.Table.from_batches(batches)
     dtypes = {f.name: f.dataType for f in schema.fields}
-    data_cols = [f.name for f in schema.fields
-                 if f.name not in part_cols]
+    data_fields = [f for f in schema.fields if f.name not in part_cols]
 
-    def emit(sub: "pa.Table", pvals: dict) -> dict:
-        base = f"part-{_uuid.uuid4().hex}-c000.snappy.parquet"
-        rel = "/".join([hive_segment(c, pvals[c]) for c in part_cols]
-                       + [base])
-        abs_path = os.path.join(table_path, rel)
-        os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        pq.write_table(sub.select(data_cols), abs_path,
-                       compression="snappy")
-        add = {"path": rel, "partitionValues": pvals,
-               "size": os.path.getsize(abs_path),
-               "modificationTime": int(__import__("time").time()
-                                       * 1000),
-               "dataChange": True}
-        stats = _file_stats(abs_path, [f for f in schema.fields
-                                       if f.name not in part_cols])
-        if stats:
-            add["stats"] = stats
-        return add
+    def pvals(key: tuple) -> dict:
+        return {c: _pval_str(v, dtypes[c])
+                for c, v in zip(part_cols, key)}
+
+    def place(key: tuple) -> str:
+        return os.path.join(
+            table_path, *[hive_segment(c, v)
+                          for c, v in pvals(key).items()],
+            f"part-{uuid.uuid4().hex}-c000.snappy.parquet")
 
     adds = []
-    if not part_cols:
-        adds.append(emit(tbl, {}))
-    else:
-        import pandas as pd
-
-        pdf = pd.DataFrame({c: tbl.column(c).to_pandas()
-                            for c in part_cols})
-        pdf["_row"] = range(len(pdf))
-        for kvals, grp in pdf.groupby(part_cols, dropna=False,
-                                      sort=False):
-            if not isinstance(kvals, tuple):
-                kvals = (kvals,)
-            pvals = {c: _pval_str(
-                None if (v is None or v != v) else v, dtypes[c])
-                for c, v in zip(part_cols, kvals)}
-            sub = tbl.take(pa.array(grp["_row"].to_numpy()))
-            adds.append(emit(sub, pvals))
+    for path, key, _rows in write_parts(
+            batches,
+            lambda t: [t.column(c).to_pandas() for c in part_cols],
+            [f.name for f in data_fields], place):
+        add = {"path": os.path.relpath(path, table_path),
+               "partitionValues": pvals(key),
+               "size": os.path.getsize(path),
+               "modificationTime": int(time.time() * 1000),
+               "dataChange": True}
+        stats = _file_stats(path, data_fields)
+        if stats:
+            add["stats"] = stats
+        adds.append(add)
     return _DeltaCommitMessage(adds)
 
 
 def _abort_cleanup(table_path: str, messages) -> None:
-    for m in messages:
-        for add in getattr(m, "adds", None) or []:
-            try:
-                os.remove(os.path.join(table_path, add["path"]))
-            except OSError:
-                pass
+    remove_files(os.path.join(table_path, add["path"])
+                 for m in messages
+                 for add in getattr(m, "adds", None) or [])
 
 
 class _DeltaWriter(DataSourceArrowWriter):
@@ -854,14 +796,11 @@ class _DeltaWriter(DataSourceArrowWriter):
 
     def __init__(self, options: dict, schema: T.StructType,
                  overwrite: bool):
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_delta requires a path")
+        self.path = require_path(options, "minerva_delta")
         self.table_path = os.path.abspath(self.path)
         self.schema_ = schema
         self.mode = "overwrite" if overwrite else "append"
-        self.merge_schema = str(_opt(
-            options, "mergeSchema", "false")).lower() == "true"
+        self.merge_schema = _flag(options, "mergeSchema")
         pb = _opt(options, "partitionBy")
         part_cols = ([c.strip() for c in pb.split(",") if c.strip()]
                      if pb else [])
@@ -943,13 +882,10 @@ class MinervaDeltaDataSource(DataSource):
         return "minerva_delta"
 
     def _cdf(self) -> bool:
-        return str(_opt(dict(self.options), "readChangeFeed",
-                        "false")).lower() == "true"
+        return _flag(dict(self.options), "readChangeFeed")
 
     def schema(self):
-        path = _opt(dict(self.options), "path")
-        if not path:
-            raise ValueError("minerva_delta requires a path")
+        path = require_path(dict(self.options), "minerva_delta")
         if self._cdf():
             return _CdfBatchReader(dict(self.options)).cdf_schema()
         return DeltaTable(path).schema()
@@ -971,13 +907,6 @@ class MinervaDeltaDataSource(DataSource):
 
 
 def register_delta_source(spark: SparkSession) -> None:
-    """Register ``minerva_delta`` for this session (idempotent).
-    Also enables Python data source filter pushdown — a reader that
-    implements ``pushFilters`` HARD-FAILS when the conf is off, so
-    registration owns turning it on (runtime conf, session-scoped)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled",
-                       "true")
-    except Exception:
-        pass  # static conf in exotic deployments; reads still work
-    spark.dataSource.register(MinervaDeltaDataSource)
+    """Register ``minerva_delta`` for this session (idempotent, with
+    filter pushdown on — :func:`.source_api.register`)."""
+    register(spark, MinervaDeltaDataSource)

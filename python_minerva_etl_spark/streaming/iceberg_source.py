@@ -32,12 +32,18 @@ POSITION deletes executor-side (each file's deleted row ordinals
 mask its pyarrow read — positions are 0-based per file, exactly the
 spec's addressing) and sequence-ordered EQUALITY deletes (each task
 anti-joins its own rows against the small delete parquet).
+
+Shared with the other registered sources: :mod:`.source_api`
+(options, path check, filter translation, registration),
+:mod:`.admission` (admission control) and
+:func:`storage.commit.write_parts` (the sink's task-side write).
 """
 
 from __future__ import annotations
 
 import os
 import re as _re
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -49,13 +55,11 @@ from pyspark.sql.datasource import (DataSource,
                                     InputPartition,
                                     WriterCommitMessage)
 
+from ..storage.commit import hive_segment, remove_files, write_parts
 from ..storage.iceberg import IcebergTable, _localize, _to_spark_schema
-
-
-def _opt(options: dict, name: str, default=None):
-    """Reader option keys reach Python data sources lowercased."""
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from .admission import admission_state, admit, cap_option
+from .source_api import (_flag, _opt, empty_when_pruned,
+                         preds_from_filters, register, require_path)
 
 
 class _IceFilePartition(InputPartition):
@@ -300,30 +304,6 @@ def _parquet_paths(files: list[dict]) -> list[str]:
     return out
 
 
-def _preds_from_filters(filters, names: set) -> list[tuple]:
-    """Spark Filter objects → the engine's ``(col, op, lit)``
-    predicate shape, keeping only single-column comparison filters
-    over known top-level columns.  Used for SCAN PLANNING only — the
-    caller always hands every filter back to Spark (`pushFilters`
-    returns "filters that still need to be evaluated"), so pruning
-    can never change results, only skip provably-excluded files."""
-    from pyspark.sql.datasource import (EqualTo, GreaterThan,
-                                        GreaterThanOrEqual, LessThan,
-                                        LessThanOrEqual)
-
-    ops = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
-           LessThan: "<", LessThanOrEqual: "<="}
-    preds = []
-    for f in filters:
-        op = ops.get(type(f))
-        if op is None or len(f.attribute) != 1:
-            continue
-        col = f.attribute[0]
-        if col in names:
-            preds.append((col, op, f.value))
-    return preds
-
-
 def _walk_chain(md: dict, start_id: int, end_id: int,
                 ctx: str = "stream"):
     """(snaps, ordered, chain oldest-exclusive..end) along the parent
@@ -412,13 +392,54 @@ def _delete_may_touch(f: dict, d: dict, types_by_id: dict) -> bool:
     return True  # unknown content: never drop silently
 
 
-def _new_delete_touches(f: dict, new_entries: list[dict],
-                        types_by_id: dict) -> bool:
-    """Changelog delete-epoch pruning (r8 verdict #3): can ANY of
-    the snapshot's newly-added delete files kill rows of parent
-    data file ``f``?"""
-    return any(_delete_may_touch(f, d, types_by_id)
-               for d in new_entries)
+def _delete_pairs(dels: list[dict], ice_schema: dict, ctx: str = ""):
+    """Position and equality delete files as ``(value, manifest
+    entry)`` pairs: a position delete's value is its local path, an
+    equality delete's ``(local path, sequence number, key columns)``
+    as :func:`_eq_dead_mask` takes it."""
+    by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
+    pos, eq = [], []
+    for d in dels:
+        if d.get("content") == 1:
+            pos.append((_localize(d["file_path"]), d))
+        elif d.get("content") == 2:
+            cols = tuple(by_id.get(i) for i in
+                         (d.get("equality_ids") or ()))
+            if not cols or any(c is None for c in cols):
+                raise ValueError(
+                    f"minerva_iceberg{ctx}: equality delete "
+                    "references unknown field ids")
+            if d.get("_seq") is None:
+                raise ValueError(
+                    f"minerva_iceberg{ctx}: equality delete "
+                    "without a sequence number")
+            eq.append(((_localize(d["file_path"]), int(d["_seq"]),
+                        cols), d))
+    return pos, eq
+
+
+def _touching(f: dict, pairs, types_by_id: dict) -> tuple:
+    """The values of the delete ``pairs`` whose manifest bounds can
+    touch data file ``f`` — a task opens only those delete parquets,
+    so its work is O(touching deletes), not O(all deletes) on a
+    long-lived upsert table."""
+    return tuple(v for v, d in pairs
+                 if _delete_may_touch(f, d, types_by_id))
+
+
+def _types_by_id(ice_schema: dict) -> dict:
+    return {fld["id"]: fld["type"] for fld in ice_schema["fields"]
+            if isinstance(fld["type"], str)}
+
+
+def _file_partition(path: str, f: dict, pos, eq,
+                    types_by_id: dict) -> _IceFilePartition:
+    """Data file ``f`` read at ``path`` under the ``pos``/``eq``
+    delete pairs that can touch it."""
+    return _IceFilePartition(
+        path, f["file_path"], _touching(f, pos, types_by_id),
+        file_seq=int(f["_seq"]) if f.get("_seq") is not None else None,
+        eq_deletes=_touching(f, eq, types_by_id))
 
 
 def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
@@ -427,30 +448,7 @@ def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
                                 skip_deletes: bool):
     """Chain (oldest→newest) → changelog input partitions — shared
     by the streaming source and the batch changelog view."""
-    by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-
-    def eq_state(dels):
-        eq = []
-        for d in dels:
-            if d.get("content") != 2:
-                continue
-            cols = tuple(by_id.get(i) for i in
-                         (d.get("equality_ids") or ()))
-            if not cols or any(c is None for c in cols):
-                raise ValueError(
-                    "minerva_iceberg changelog: equality delete "
-                    "references unknown field ids")
-            if d.get("_seq") is None:
-                raise ValueError(
-                    "minerva_iceberg changelog: equality delete "
-                    "without a sequence number")
-            eq.append((_localize(d["file_path"]),
-                       int(d["_seq"]), cols))
-        return tuple(eq)
-
-    types_by_id = {fld["id"]: fld["type"]
-                   for fld in ice_schema["fields"]
-                   if isinstance(fld["type"], str)}
+    types_by_id = _types_by_id(ice_schema)
     parts: list[_IceChangePartition] = []
     for s in reversed(chain):
         sid = s["snapshot-id"]
@@ -490,46 +488,24 @@ def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
         files_p, dels_p = tbl._data_files(parent, (), md)
         _, dels_s = tbl._data_files(s, (), md)
         seen = {d["file_path"] for d in dels_p}
-        new = [d for d in dels_s if d["file_path"] not in seen]
-        new_pos = tuple(_localize(d["file_path"]) for d in new
-                        if d.get("content") == 1)
-        new_eq = eq_state(new)
+        new_pos, new_eq = _delete_pairs(
+            [d for d in dels_s if d["file_path"] not in seen],
+            ice_schema, " changelog")
         if not new_pos and not new_eq:
             continue
-        # per-file attach pruning for BOTH delete-state sets: a
-        # pre-image task only opens the parent/new delete parquets
-        # whose manifest bounds can touch its file
-        parent_pos_d = [d for d in dels_p if d.get("content") == 1]
-        parent_eq_pairs = list(zip(
-            eq_state(dels_p),
-            [d for d in dels_p if d.get("content") == 2]))
-        new_pos_pairs = [(_localize(d["file_path"]), d)
-                         for d in new if d.get("content") == 1]
-        new_eq_pairs = list(zip(
-            new_eq, [d for d in new if d.get("content") == 2]))
-        paths = _parquet_paths(files_p)
-        for p, f in zip(paths, files_p):
-            fseq = (int(f["_seq"])
-                    if f.get("_seq") is not None else None)
-            if not _new_delete_touches(f, new, types_by_id):
+        # a pre-image task opens only the parent and new delete
+        # parquets whose manifest bounds can touch its file
+        pos_p, eq_p = _delete_pairs(dels_p, ice_schema, " changelog")
+        for p, f in zip(_parquet_paths(files_p), files_p):
+            np_ = _touching(f, new_pos, types_by_id)
+            ne = _touching(f, new_eq, types_by_id)
+            if not np_ and not ne:
                 continue  # manifest bounds prove no new delete
                 # reaches this file — planned partitions stay
                 # proportional to TOUCHED files, not table size
             parts.append(_IceChangePartition(
-                _IceFilePartition(
-                    p, f["file_path"],
-                    tuple(_localize(d["file_path"])
-                          for d in parent_pos_d
-                          if _delete_may_touch(f, d, types_by_id)),
-                    file_seq=fseq,
-                    eq_deletes=tuple(
-                        t for t, d in parent_eq_pairs
-                        if _delete_may_touch(f, d, types_by_id))),
-                "delete", sid, ordinal,
-                tuple(lp for lp, d in new_pos_pairs
-                      if _delete_may_touch(f, d, types_by_id)),
-                tuple(t for t, d in new_eq_pairs
-                      if _delete_may_touch(f, d, types_by_id))))
+                _file_partition(p, f, pos_p, eq_p, types_by_id),
+                "delete", sid, ordinal, np_, ne))
     return parts
 
 
@@ -541,10 +517,7 @@ class _IceChangelogBatchReader(DataSourceReader):
     the same pre-image semantics as the streaming changelog."""
 
     def __init__(self, options: dict):
-        path = _opt(options, "path")
-        if not path:
-            raise ValueError("minerva_iceberg requires a path")
-        self.tbl = IcebergTable(path)
+        self.tbl = IcebergTable(require_path(options, "minerva_iceberg"))
         self.md = self.tbl.metadata()
         self.ice_schema = self.tbl._current_schema(self.md)
         self.base_schema = _to_spark_schema(self.ice_schema)
@@ -567,6 +540,7 @@ class _IceChangelogBatchReader(DataSourceReader):
             self.tbl, self.ice_schema, self.md, snaps, ordered,
             chain, skip_deletes=False)
 
+    @empty_when_pruned
     def read(self, partition):
         return _read_change_partition(partition, self.base_schema,
                                       self.schema_)
@@ -574,10 +548,7 @@ class _IceChangelogBatchReader(DataSourceReader):
 
 class _IceBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        path = _opt(options, "path")
-        if not path:
-            raise ValueError("minerva_iceberg requires a path")
-        self.tbl = IcebergTable(path)
+        self.tbl = IcebergTable(require_path(options, "minerva_iceberg"))
         self.md = self.tbl.metadata()
         self.ice_schema = self.tbl._current_schema(self.md)
         self.schema_ = _to_spark_schema(self.ice_schema)
@@ -602,7 +573,7 @@ class _IceBatchReader(DataSourceReader):
         :meth:`IcebergTable.read`.  EVERY filter is handed back to
         Spark for post-scan evaluation — pushdown here is pruning,
         never filtering, so a missed bound can only cost time."""
-        self.preds = _preds_from_filters(
+        self.preds = preds_from_filters(
             filters, {f.name for f in self.schema_.fields})
         return filters
 
@@ -612,32 +583,17 @@ class _IceBatchReader(DataSourceReader):
         files, deletes = self.tbl._data_files(
             self.tbl._snapshot(self.md, self.sid), self.preds,
             self.md)
-        eq_deletes = ()
-        if any(d.get("content") == 2 for d in deletes):
-            # sequence-ordered equality deletes, applied EXECUTOR-side
-            # per file (each task anti-joins its own rows against the
-            # small delete parquet) — refuse only when the ordering is
-            # undefined, mirroring read_iceberg
-            if any(f.get("_seq") is None for f in files):
-                raise NotImplementedError(
-                    "minerva_iceberg: equality deletes present but a "
-                    "data file carries no sequence number — ordering "
-                    "is undefined; use read_iceberg()")
-            by_id = {f["id"]: f["name"]
-                     for f in self.ice_schema["fields"]}
-            eq = []
-            for d in deletes:
-                if d.get("content") != 2:
-                    continue
-                cols = tuple(by_id.get(i) for i in
-                             (d.get("equality_ids") or ()))
-                if not cols or any(c is None for c in cols):
-                    raise ValueError(
-                        "minerva_iceberg: equality delete references "
-                        "unknown field ids")
-                eq.append((_localize(d["file_path"]),
-                           int(d["_seq"]), cols))
-            eq_deletes = tuple(eq)
+        # sequence-ordered equality deletes are applied EXECUTOR-side
+        # per file (each task anti-joins its own rows against the
+        # small delete parquet) — refuse only when the ordering is
+        # undefined, mirroring read_iceberg
+        if (any(d.get("content") == 2 for d in deletes)
+                and any(f.get("_seq") is None for f in files)):
+            raise NotImplementedError(
+                "minerva_iceberg: equality deletes present but a "
+                "data file carries no sequence number — ordering "
+                "is undefined; use read_iceberg()")
+        pos, eq = _delete_pairs(deletes, self.ice_schema)
         if self.preds:
             field_id = {f["name"]: f["id"]
                         for f in self.ice_schema["fields"]}
@@ -647,31 +603,11 @@ class _IceBatchReader(DataSourceReader):
             files = [f for f in files
                      if _file_may_match(f, self.preds, field_id,
                                         field_type)]
-        # per-file delete-state attach pruning: a task only opens
-        # the delete parquets whose manifest bounds say they can
-        # touch ITS file — on a long-lived upsert table the delete
-        # list grows with commit count, and attaching all of it to
-        # every file made each task's work O(deletes), not
-        # O(touching deletes)
-        types_by_id = {fld["id"]: fld["type"]
-                       for fld in self.ice_schema["fields"]
-                       if isinstance(fld["type"], str)}
-        pos_dels = [d for d in deletes if d.get("content") == 1]
-        eq_pairs = list(zip(eq_deletes,
-                            [d for d in deletes
-                             if d.get("content") == 2]))
-        paths = _parquet_paths(files)
-        return [_IceFilePartition(
-                    p, f["file_path"],
-                    tuple(_localize(d["file_path"]) for d in pos_dels
-                          if _delete_may_touch(f, d, types_by_id)),
-                    file_seq=(int(f["_seq"])
-                              if f.get("_seq") is not None else None),
-                    eq_deletes=tuple(
-                        t for t, d in eq_pairs
-                        if _delete_may_touch(f, d, types_by_id)))
-                for p, f in zip(paths, files)]
+        types_by_id = _types_by_id(self.ice_schema)
+        return [_file_partition(p, f, pos, eq, types_by_id)
+                for p, f in zip(_parquet_paths(files), files)]
 
+    @empty_when_pruned
     def read(self, partition):
         return _read_ice_partition(partition, self.schema_)
 
@@ -680,61 +616,39 @@ class _IceStreamReader(DataSourceStreamReader):
     """Offsets are snapshot ids: {"snapshot": id or -1}."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_iceberg requires a path")
+        self.path = require_path(options, "minerva_iceberg")
         self.tbl = IcebergTable(self.path)
         md = self.tbl.metadata()
         self.ice_schema = self.tbl._current_schema(md)
         self.schema_ = _to_spark_schema(self.ice_schema)
         frm = _opt(options, "fromSnapshotId")
         self.from_snapshot = int(frm) if frm is not None else None
-        self.changelog = str(_opt(
-            options, "changelog", "false")).lower() == "true"
+        self.changelog = _flag(options, "changelog")
         self.out_schema = (_changelog_schema(self.schema_)
                            if self.changelog else self.schema_)
         # upstream Spark-Iceberg option names; our delete default is
         # true for the APPEND stream (documented divergence:
         # retraction-only snapshots emit nothing there anyway) and
         # false for the CHANGELOG stream (deletes are its point)
-        self.skip_deletes = str(_opt(
+        self.skip_deletes = _flag(
             options, "streaming-skip-delete-snapshots",
-            "false" if self.changelog else "true")).lower() == "true"
-        self.skip_overwrites = str(_opt(
-            options, "streaming-skip-overwrite-snapshots",
-            "false")).lower() == "true"
+            "false" if self.changelog else "true")
+        self.skip_overwrites = _flag(
+            options, "streaming-skip-overwrite-snapshots")
         # ADMISSION CONTROL (upstream Spark-Iceberg's option name,
         # snapshot-boundary granularity: a batch takes consecutive
         # snapshots along the parent chain while their cumulative
-        # summary file count stays <= K — always at least one).
-        # The Python DataSource API calls latestOffset before
-        # revealing any start offset, so the FIRST batch of a
-        # (re)started query is uncapped (same measured limitation
-        # and reasoning as the minerva_avro source: an artificially
-        # low first offset would regress Spark's offset log and
-        # double-read after a crash) UNLESS
-        # option("admissionStateDir", dir) persists the watermark
-        # across restarts (saved at latestOffset time so the reload
-        # is at or ahead of Spark's offset log — see
-        # streaming/admission.py for the full argument).
-        mfb = _opt(options, "streaming-max-files-per-micro-batch")
-        self.max_files = int(mfb) if mfb is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError(
-                "minerva_iceberg: streaming-max-files-per-micro-"
-                f"batch must be a positive integer, got {mfb!r}")
-        # option("assumeFreshStart", "true") additionally primes the
-        # epoch watermark (fromSnapshotId, else -1 = whole history)
-        # on a brand-new query (no state file), capping even the
-        # first run's cold history — admission.fresh_start_floor.
-        from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
-        self._wm_state = attach_state(
-            opt, "minerva_iceberg",
-            self.path, self.max_files is not None)
-        loaded = fresh_start_floor(
-            opt, self._wm_state,
-            self._wm_state.load() if self._wm_state else None,
+        # summary file count stays <= K).  The first-batch
+        # limitation and admissionStateDir / assumeFreshStart are as
+        # for minerva_avro (see _AvroStreamReader and
+        # streaming/admission.py); the epoch is fromSnapshotId, else
+        # -1 = the whole history.
+        self.max_files = cap_option(
+            options, "minerva_iceberg",
+            "streaming-max-files-per-micro-batch")
+        self._wm_state, loaded = admission_state(
+            options, "minerva_iceberg", self.path,
+            self.max_files is not None,
             self.from_snapshot if self.from_snapshot is not None
             else -1)
         # rate-limit watermark (last snapshot id this reader
@@ -776,14 +690,11 @@ class _IceStreamReader(DataSourceStreamReader):
                 and self._snap_seen is not None
                 and cur != -1 and cur != self._snap_seen):
             _, _, chain = _walk_chain(md, self._snap_seen, cur)
-            end, total = None, 0
-            for s in reversed(chain):  # oldest first
-                n = self._snap_file_count(s)
-                if end is not None and total + n > self.max_files:
-                    break
-                total += n
-                end = s["snapshot-id"]
-            cur = end if end is not None else self._snap_seen
+            chain.reverse()  # oldest first
+            taken = admit(chain, [(self._snap_file_count,
+                                   self.max_files)])
+            cur = (chain[taken - 1]["snapshot-id"] if taken
+                   else self._snap_seen)
         self._snap_seen = cur if cur != -1 else self._snap_seen
         if self._wm_state is not None:
             # persist at latestOffset so the state file stays at or
@@ -874,9 +785,7 @@ class _IceWriter(DataSourceArrowWriter):
                 "minerva_iceberg writer is append-only "
                 "(mode('append')); overwrite would need a REPLACE "
                 "snapshot")
-        self.path = _opt(options, "path")
-        if not self.path:
-            raise ValueError("minerva_iceberg requires a path")
+        self.path = require_path(options, "minerva_iceberg")
         self.schema_ = schema
         pb = _opt(options, "partitionBy")
         self.partition_by = pb.strip() if pb else None
@@ -896,56 +805,43 @@ class _IceWriter(DataSourceArrowWriter):
             self.path, schema, self.partition_by)
 
     def write(self, iterator):
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from ..storage.iceberg_write import _bound_entries
 
-        batches = list(iterator)
-        if not batches:
-            return _IceCommitMessage([])
-        tbl = pa.Table.from_batches(batches)
+        part = self.part
         data_dir = os.path.join(self.path, "data")
 
-        def emit(sub: "pa.Table", pval) -> dict:
-            dst = (data_dir if pval is None else os.path.join(
-                data_dir, f"{self.part.name}={pval}"))
-            os.makedirs(dst, exist_ok=True)
-            final = os.path.join(dst, f"{_uuid.uuid4().hex}.parquet")
-            pq.write_table(sub, final, compression="snappy")
-            entry = {
-                "content": 0, "file_path": final,
-                "file_format": "PARQUET",
-                "record_count": sub.num_rows,
-                "file_size_in_bytes": os.path.getsize(final),
-            }
-            if pval is not None:
-                entry["partition"] = {self.part.name: pval}
-            _bound_entries([entry], self.ice_schema)
-            return entry
-
-        entries = []
-        if self.part is None:
-            entries.append(emit(tbl, None))
-        else:
-            col = tbl.column(self.part.source)
+        def keys(tbl) -> list:
+            if part is None:
+                return []
+            col = tbl.column(part.source)
             if col.null_count:
                 raise ValueError(
                     f"iceberg append: null value in partition "
-                    f"column {self.part.source!r}")
-            import pandas as pd
+                    f"column {part.source!r}")
+            return [part.values_arrow(col)]
 
-            keys = pd.Series(self.part.values_arrow(col))
-            for val, idx in keys.groupby(keys, sort=False).groups \
-                    .items():
-                pval = (int(val)
-                        if self.part.result_type in ("int", "long",
-                                                     "date")
-                        else str(val))
-                sub = tbl.take(pa.array(idx.to_numpy()))
-                entries.append(emit(sub, pval))
+        def pval(key: tuple):
+            return (int(key[0]) if part.result_type in ("int", "long",
+                                                         "date")
+                    else str(key[0]))
+
+        def place(key: tuple) -> str:
+            sub = [] if part is None else [hive_segment(
+                part.name, str(pval(key)))]
+            return os.path.join(data_dir, *sub,
+                                f"{uuid.uuid4().hex}.parquet")
+
+        entries = []
+        for final, key, rows in write_parts(
+                iterator, keys, [f.name for f in self.schema_.fields],
+                place):
+            entry = {"content": 0, "file_path": final,
+                     "file_format": "PARQUET", "record_count": rows,
+                     "file_size_in_bytes": os.path.getsize(final)}
+            if part is not None:
+                entry["partition"] = {part.name: pval(key)}
+            entries.append(entry)
+        _bound_entries(entries, self.ice_schema)
         return _IceCommitMessage(entries)
 
     def commit(self, messages):
@@ -956,12 +852,8 @@ class _IceWriter(DataSourceArrowWriter):
                        self.part)
 
     def abort(self, messages):
-        for m in messages:
-            for e in getattr(m, "entries", None) or []:
-                try:
-                    os.remove(e["file_path"])
-                except OSError:
-                    pass
+        remove_files(e["file_path"] for m in messages
+                     for e in getattr(m, "entries", None) or [])
 
 
 class _IceStreamWriter(DataSourceStreamArrowWriter):
@@ -1013,14 +905,10 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int):
         from ..storage.iceberg_write import _commit_staged
 
-        entries = [e for m in messages if m for e in m.entries]
         if int(batchId) <= self._max_committed():
-            for e in entries:  # replay: already committed
-                try:
-                    os.remove(e["file_path"])
-                except OSError:
-                    pass
+            self._batch.abort(messages)  # replay: already committed
             return
+        entries = [e for m in messages if m for e in m.entries]
         _commit_staged(
             self._batch.path, entries, self._batch.ice_schema,
             self._batch.part,
@@ -1040,18 +928,15 @@ class MinervaIcebergDataSource(DataSource):
         return "minerva_iceberg"
 
     def schema(self):
-        path = _opt(dict(self.options), "path")
-        if not path:
-            raise ValueError("minerva_iceberg requires a path")
-        base = IcebergTable(path).schema()
-        if str(_opt(dict(self.options), "changelog",
-                    "false")).lower() == "true":
+        opts = dict(self.options)
+        base = IcebergTable(require_path(opts, "minerva_iceberg")).schema()
+        if _flag(opts, "changelog"):
             return _changelog_schema(base)
         return base
 
     def reader(self, schema) -> DataSourceReader:
         opts = dict(self.options)
-        if str(_opt(opts, "changelog", "false")).lower() == "true":
+        if _flag(opts, "changelog"):
             return _IceChangelogBatchReader(opts)
         return _IceBatchReader(opts)
 
@@ -1067,13 +952,6 @@ class MinervaIcebergDataSource(DataSource):
 
 
 def register_iceberg_source(spark: SparkSession) -> None:
-    """Register ``minerva_iceberg`` for this session (idempotent).
-    Also enables Python data source filter pushdown — a reader that
-    implements ``pushFilters`` HARD-FAILS when the conf is off, so
-    registration owns turning it on (runtime conf, session-scoped)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled",
-                       "true")
-    except Exception:
-        pass  # static conf in exotic deployments; reads still work
-    spark.dataSource.register(MinervaIcebergDataSource)
+    """Register ``minerva_iceberg`` for this session (idempotent, with
+    filter pushdown on — :func:`.source_api.register`)."""
+    register(spark, MinervaIcebergDataSource)

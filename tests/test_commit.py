@@ -180,3 +180,35 @@ def test_commit_mechanisms_live_only_in_commit_module():
                       & {"quote", "unquote"}):
                     offenders.append(f"{where} urllib.parse quoting")
     assert not offenders, offenders
+
+
+def test_source_plumbing_lives_once():
+    """Within storage/ and streaming/, parquet is written only by the
+    commit module (plus the Delta log checkpoint, which goes to a
+    buffer); the registered sources share one option reader and one
+    registration that enables filter pushdown."""
+    root = os.path.dirname(pkg.__file__)
+    writers, opts, confs = [], [], []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root)
+            with open(path) as fh:
+                src = fh.read()
+            confs += [rel] * src.count(
+                "spark.sql.python.filterPushdown.enabled")
+            for node in ast.walk(ast.parse(src, path)):
+                if isinstance(node, ast.FunctionDef) and node.name == "_opt":
+                    opts.append(rel)
+                elif (isinstance(node, ast.Call)
+                      and rel.split(os.sep)[0] in ("storage", "streaming")
+                      and getattr(node.func, "attr",
+                                  getattr(node.func, "id", None))
+                      == "write_table"):
+                    writers.append(rel)
+    assert sorted(writers) == [os.path.join("storage", "commit.py"),
+                               os.path.join("storage", "delta.py")], writers
+    assert len(opts) == 1, opts
+    assert len(confs) == 1, confs

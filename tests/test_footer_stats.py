@@ -208,6 +208,13 @@ _FOOTER_CASES = {
         (4, {}), _delta_json(4, {}, {}, {"s": 0}),
         ([], []), {"s": None},
         [("s", "=", _LONG, True, True), ("s", "=", "b", True, True)]),
+    # regression: pyarrow records the max of a group whose long string
+    # is not alone as '' — no bound, or the file loses 'b'
+    "long_string_max": (
+        {"s": ["a", "b", _LONG]}, None,
+        (3, {}), _delta_json(3, {}, {}, {"s": 0}),
+        ([], []), {"s": None},
+        [("s", "=", "b", True, True)]),
     # regression: Iceberg timestamp bounds are exact integer micros
     "epoch_edge": (
         {"ts": [_D(2004, 7, 5), _EDGE],
