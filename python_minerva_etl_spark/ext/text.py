@@ -525,20 +525,6 @@ def pii_counts(text_col: str = "text") -> tuple[Column, Column]:
             .cast("bigint"))
 
 
-def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set (used by the declared queries and
-    by pipeline consumers)."""
-    return docs.select(
-        "*",
-        token_count_ws(text_col).alias("n_tokens_ws"),
-        token_count_bpe_ish(text_col).alias("n_tokens_bpe"),
-        punct_count(text_col).alias("n_punct"),
-        quality_score(text_col).alias("quality"),
-        normalized_fingerprint(text_col).alias("fingerprint"),
-        *langid_scores(text_col),
-    ).withColumn("lang_pred", langid_pred())
-
-
 def corpus_filter_funnel(docs: DataFrame, min_tokens: int = 24,
                          min_quality: float = 0.55, lang: str = "en",
                          text_col: str = "text") -> DataFrame:
@@ -826,7 +812,9 @@ _C4_TERMINAL = (".", "!", "?", '"')
 
 # placeholder blocklist — the paper uses the public "List of Dirty,
 # Naughty, Obscene or Otherwise Bad Words"; swap in the full list at
-# deployment (the operator is the mechanism, not the lexicon)
+# deployment (the operator is the mechanism, not the lexicon).  Both
+# C4 implementations, c4_page_rules and ext/text_arrow.c4_rules_kernel,
+# read this and _C4_TERMINAL when they are called.
 C4_BLOCKLIST: tuple[str, ...] = ("nsfw", "xxx")
 
 
@@ -861,52 +849,9 @@ def c4_line_stats(text_col: str = "text") -> list[Column]:
     ]
 
 
-def c4_line_stats_fused(df: DataFrame,
-                        text_col: str = "text") -> DataFrame:
-    """:func:`c4_line_stats` with the line filter evaluated ONCE.
-
-    The column-list form evaluates the ``filter(...)`` HOF three
-    times per document (kept_lines, the kept_chars fold, clean_text)
-    — HOFs are CodegenFallback, so the enclosing Project is fully
-    interpreted and there is no subexpression elimination (r12 plan
-    dumps show three copies of the filter).  Here ``clean_text`` is
-    materialized in its own projection (CollapseProject does not
-    inline a non-cheap alias referenced more than once) and the
-    counters are derived arithmetically, exactly:
-
-    - kept lines are never empty (the terminal-punctuation rule
-      needs a non-space char) and never contain a newline (lines
-      come from splitting on newline), so
-      ``kept_lines = regexp_count(clean, newline) + 1`` when clean
-      is non-empty, else 0;
-    - the join adds ``kept_lines - 1`` separators, so
-      ``kept_chars = length(clean) - max(kept_lines - 1, 0)``;
-    - ``n_lines = regexp_count(page, newline) + 1`` (split always
-      yields runs+1 pieces, also for the empty page).
-
-    Appends the same four columns with the same types as
-    :func:`c4_line_stats`; results are identical (locked by
-    tests/test_text_pipeline.py)."""
-    lines = f"split({text_col}, '\\n')"
-    kept = f"filter({lines}, l -> {_c4_keep_line_sql('l')})"
-    d = df.withColumn("clean_text",
-                      F.expr(f"array_join({kept}, '\\n')"))
-    kl = F.when(F.col("clean_text") == "", F.lit(0)).otherwise(
-        F.regexp_count(F.col("clean_text"), F.lit("\n")) + 1
-    ).cast("bigint")
-    return d.select(
-        *df.columns,
-        (F.regexp_count(F.col(text_col), F.lit("\n")) + 1)
-        .cast("bigint").alias("n_lines"),
-        kl.alias("kept_lines"),
-        (F.length("clean_text").cast("bigint")
-         - F.greatest(kl - 1, F.lit(0))).alias("kept_chars"),
-        "clean_text")
-
-
 def c4_page_rules(text_col: str = "text",
                   clean_col: str | None = None,
-                  blocklist: tuple[str, ...] = C4_BLOCKLIST
+                  blocklist: tuple[str, ...] | None = None
                   ) -> list[Column]:
     """C4 page-level booleans: >= 3 sentences on the RETAINED text
     (terminal-punct occurrences as the sentence proxy), no
@@ -914,7 +859,11 @@ def c4_page_rules(text_col: str = "text",
     each an independent column so a funnel report can attribute
     drops per rule.  ``clean_col`` names a pre-computed
     :func:`c4_line_stats` ``clean_text`` column (the paper counts
-    sentences after line filtering); defaults to recomputing it."""
+    sentences after line filtering); defaults to recomputing it.
+    ``blocklist`` defaults to :data:`C4_BLOCKLIST` as it stands when
+    this is called."""
+    if blocklist is None:
+        blocklist = C4_BLOCKLIST
     clean = clean_col or (
         f"array_join(filter(split({text_col}, '\\n'), "
         f"l -> {_c4_keep_line_sql('l')}), '\\n')")

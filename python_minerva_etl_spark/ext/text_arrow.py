@@ -224,34 +224,22 @@ def bpe_ish_count_np(np, cp, lens):
                            np.minimum(starts, ind.size))
 
 
-# Crossover for the text-counts kernel, overridable per session via
-# spark.minerva.text.kernelMinInputBytes.  Measured on the 100x
-# fixture (150 MB): the JVM BPE-ish regexp costs ~28 ms/MB of text,
-# the kernel ~8 ms/MB plus a ~0.3-0.4 s fixed Python-stage cost per
-# job — the curves cross near 16 MB.  Below the threshold the same
-# counts come from the (bit-identical, test-locked) JVM expressions,
-# so tiny inputs keep their sub-second latency; any real corpus runs
-# the kernel.  Same result either way — this is an execution
-# strategy, not a semantic switch.
-#
-# The fixed cost, re-measured since the session's worker daemon starts
-# on a lean import path (session.py, pydaemon.py; PERF.md "The
-# Python-task floor, removed"), on a 200-document parquet input,
-# 4-core host, local[4], median of 5 calls after 2 warm ones:
-# text_counts_arrow (4 Python tasks) costs 0.15-0.17 s more wall time
-# and 0.72-0.79 CPU s more than the JVM expressions (0.36-0.40 s and
-# 1.34-1.61 CPU s with the old worker path); c4_rules_kernel (1 task)
-# is already cheaper than its fused JVM form there, 0.16 s / 0.41 CPU
-# s against 0.27 s / 0.62 CPU s.  16 MB still rests on the old figure;
-# moving it needs its own A/B and oracle pass (ROADMAP item 3).
+# Crossover for the text-counts kernel, in bytes of input as
+# ``_estimated_input_bytes`` reads them.  Measured on the 100x fixture
+# (150 MB): the JVM BPE-ish regexp costs ~28 ms/MB of text, the kernel
+# ~8 ms/MB plus a fixed Python-stage cost per job, so the curves cross
+# near 16 MB.  Each side wins on one side of it: on a 0.59 MB input
+# the JVM expressions cost 0.47 CPU s against the kernel's 0.60, on a
+# 20.4 MB one 3.14 CPU s against 2.45 (4-core host, local[4], median
+# of 7 warm calls).  Both sides return the same counts (test-locked),
+# so this is an execution strategy, not a semantic switch.
 TEXT_KERNEL_MIN_INPUT_BYTES = 16 << 20
 
 
 def text_counts_arrow(docs: DataFrame,
                       text_col: str = "text",
                       carry_cols: list[str] | None = None,
-                      passthrough: list | None = None,
-                      min_bytes: int | None = None) -> DataFrame:
+                      passthrough: list | None = None) -> DataFrame:
     """Per-document (n_tokens_ws, n_tokens_bpe, n_punct, n_chars) as
     ONE vectorized ``mapInPandas`` kernel — the JVM expressions are
     exact but regex-engine bound: ``regexp_count`` of the BPE-ish
@@ -277,41 +265,30 @@ def text_counts_arrow(docs: DataFrame,
     scan-side BEFORE the kernel and carried through unchanged —
     e.g. a stopword count that stays a JVM regexp.
 
-    Below ``min_bytes`` of input (default
-    ``TEXT_KERNEL_MIN_INPUT_BYTES``, conf-overridable) the counts
-    come from the equivalent JVM expressions instead — the kernel's
-    fixed Python-stage cost (re-measured at 0.15-0.17 s wall and
-    0.72-0.79 CPU s per job over 4 tasks; see the comment on the
-    constant) only pays for itself past the crossover; results are
-    identical on both paths (test-locked)."""
+    When the input's file size is known and below
+    ``TEXT_KERNEL_MIN_INPUT_BYTES``, the counts come from the
+    ext/text.py expressions instead, which cost less there (see the
+    comment on the constant); results are identical on both sides
+    (test-locked)."""
     import numpy as np  # noqa: F401 (executor-side)
 
+    from .text import punct_count, token_count_bpe_ish, token_count_ws
+
     carry = list(carry_cols or [])
-    pt = list(passthrough or [])
-    pt_names = []
     sel = [F.col(c) for c in carry]
-    for c in pt:
-        col = F.col(c) if isinstance(c, str) else c
-        sel.append(col)
+    for c in passthrough or []:
+        sel.append(F.col(c) if isinstance(c, str) else c)
     pruned0 = docs.select(*sel, F.col(text_col).alias("__text"))
     pt_names = [c for c in pruned0.columns
                 if c not in carry and c != "__text"]
 
-    if min_bytes is None:
-        min_bytes = _bytes_conf(docs.sparkSession,
-                                "spark.minerva.text.kernelMinInputBytes",
-                                TEXT_KERNEL_MIN_INPUT_BYTES)
     size = _estimated_input_bytes(docs)
-    if size is not None and size < min_bytes:
-        BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+    if size is not None and size < TEXT_KERNEL_MIN_INPUT_BYTES:
         return pruned0.select(
             *carry, *pt_names,
-            F.size(F.split(F.lower("__text"), " ")).cast("bigint")
-            .alias("n_tokens_ws"),
-            F.regexp_count("__text", F.lit(BPE)).cast("bigint")
-            .alias("n_tokens_bpe"),
-            F.regexp_count("__text", F.lit(r"[.,!?;:]")).cast("bigint")
-            .alias("n_punct"),
+            token_count_ws("__text").alias("n_tokens_ws"),
+            token_count_bpe_ish("__text").alias("n_tokens_bpe"),
+            punct_count("__text").alias("n_punct"),
             F.length("__text").cast("bigint").alias("n_chars"))
     pruned = _spread_for_cpu(pruned0)
 
@@ -371,13 +348,14 @@ def text_counts_arrow(docs: DataFrame,
 # ------------------------------------------------------ C4 line filter
 
 
-def c4_clean_page(page: str | None) -> str | None:
+def c4_clean_page(page: str | None,
+                  terminal: tuple[str, ...]) -> str | None:
     """The C4 line filter for one page, exactly as the JVM expression
     chain computes it (ext/text._c4_keep_line_sql + array_join):
-    split on newline; keep lines whose space-rtrimmed text ends in a
-    terminal mark ('.', '!', '?', '"'), whose space-trimmed text has
-    >= 5 words (space-run count >= 4), and whose lowercase does not
-    contain 'javascript'; join the kept lines with newline.  Spark's
+    split on newline; keep lines whose space-rtrimmed text ends in one
+    of the ``terminal`` marks, whose space-trimmed text has >= 5 words
+    (space-run count >= 4), and whose lowercase does not contain
+    'javascript'; join the kept lines with newline.  Spark's
     trim/rtrim strip the SPACE character only (not tabs), lower() on
     the needle's pure-ASCII alphabet matches str.lower, and all
     comparisons are code-point based on both engines.  Locked
@@ -387,7 +365,7 @@ def c4_clean_page(page: str | None) -> str | None:
     kept = []
     for line in page.split("\n"):
         r = line.rstrip(" ")
-        if not r or r[-1] not in ".!?\"":
+        if not r or r[-1] not in terminal:
             continue
         # words = space-runs + 1 on the trimmed line; >= 5 words.  The
         # trimmed line neither starts nor ends with a space, so its
@@ -401,18 +379,20 @@ def c4_clean_page(page: str | None) -> str | None:
     return "\n".join(kept)
 
 
-def c4_page_row(page: str | None) -> tuple:
+def c4_page_row(page: str | None, terminal: tuple[str, ...],
+                blocklist: tuple[str, ...]) -> tuple:
     """One C4 page -> (n_lines, kept_lines, kept_chars, sentences_ok,
     lorem_ok, brace_ok, blocklist_ok, clean_text), the exact integer/
-    boolean semantics of the fused JVM expressions (every operation
-    is a code-point-exact ASCII test; the needles are pure ASCII, so
-    Python str.lower agrees with Spark lower() wherever a needle
-    could match).  Kept lines are non-empty and newline-free, so the
-    counters derive arithmetically exactly as in c4_line_stats_fused.
-    """
+    boolean semantics of ext/text.c4_line_stats + c4_page_rules (every
+    operation is a code-point-exact ASCII test; the needles are pure
+    ASCII, so Python str.lower agrees with Spark lower() wherever a
+    needle could match).  Kept lines are non-empty and newline-free,
+    so ``kept_lines`` is the newline count of the clean text plus one
+    (0 when it is empty) and ``kept_chars`` its length less the
+    ``kept_lines - 1`` joiners."""
     if page is None:
         return (None,) * 7 + (None,)
-    clean = c4_clean_page(page)
+    clean = c4_clean_page(page, terminal)
     kept_lines = 0 if clean == "" else clean.count("\n") + 1
     lo = page.lower()
     return (page.count("\n") + 1,
@@ -421,44 +401,34 @@ def c4_page_row(page: str | None) -> tuple:
             sum(clean.count(c) for c in ".!?") >= 3,
             "lorem ipsum" not in lo,
             "{" not in page,
-            not ("nsfw" in lo or "xxx" in lo),
+            not any(w in lo for w in blocklist),
             clean)
 
 
 def c4_rules_kernel(pages: DataFrame, text_col: str = "page",
-                    carry_cols: list[str] | None = None,
-                    min_bytes: int | None = None) -> DataFrame:
-    """The C4 line filter + page rules as ONE Python pass past the
-    text-kernel crossover — below it the fused JVM form runs
-    unchanged (identical results on both paths, test-locked; the r13
-    decomposition measured the interpreted per-line filter at 0.69 s
-    of the 1.73 s 100x row, on a 0.98 s page-assembly floor).  Only
-    (carry, page) cross into Python and the page does NOT cross back
-    — clean_text and the counters/booleans come out instead.  Its
-    fixed Python-stage cost, re-measured on a 200-page input (1 task),
-    no longer shows: 0.16 s wall and 0.41 CPU s per call against 0.27
-    s and 0.62 CPU s for the fused JVM form (see the comment on
-    ``TEXT_KERNEL_MIN_INPUT_BYTES``)."""
-    from .text import c4_line_stats_fused, c4_page_rules
+                    carry_cols: list[str] | None = None) -> DataFrame:
+    """The C4 line filter + page rules as ONE Python pass (the JVM
+    form interprets the per-line predicate inside a HOF lambda; at
+    sf0.1 it measured 0.56 s / 0.86 CPU s per call against 0.34 s /
+    0.51 CPU s here, at 20.4 MB 1.14 s / 2.82 CPU s against 0.70 s /
+    1.54 CPU s).  Only (carry, page) cross into Python and the page
+    does NOT cross back — clean_text and the counters/booleans come
+    out instead, equal to ext/text.c4_line_stats + c4_page_rules
+    (test-locked).  The terminal marks and the blocklist are read from
+    ext/text.py when this is called and shipped with the kernel, so
+    both implementations apply the same lexicon."""
+    from . import text as T
 
     carry = list(carry_cols or [])
-    if min_bytes is None:
-        min_bytes = _bytes_conf(pages.sparkSession,
-                                "spark.minerva.text.kernelMinInputBytes",
-                                TEXT_KERNEL_MIN_INPUT_BYTES)
-    size = _estimated_input_bytes(pages)
+    terminal, blocklist = T._C4_TERMINAL, T.C4_BLOCKLIST
     out_cols = ["n_lines", "kept_lines", "kept_chars", "sentences_ok",
                 "lorem_ok", "brace_ok", "blocklist_ok", "clean_text"]
-    if size is not None and size < min_bytes:
-        d = c4_line_stats_fused(pages, text_col)
-        return d.select(*carry, "n_lines", "kept_lines", "kept_chars",
-                        *c4_page_rules(text_col, clean_col="clean_text"),
-                        "clean_text")
 
     def compute(batches: Iterator) -> Iterator:
         import pandas as pd
         for pdf in batches:
-            rows = [c4_page_row(p) for p in pdf[text_col]]
+            rows = [c4_page_row(p, terminal, blocklist)
+                    for p in pdf[text_col]]
             out = pdf[carry].copy()
             for i, c in enumerate(out_cols):
                 vals = [r[i] for r in rows]
@@ -593,7 +563,9 @@ def dsir_select_arrow(docs: DataFrame, k: int,
                       carry_cols: list[str] | None = None) -> DataFrame:
     """``ext.text.dsir_select`` (target_where form) with both corpus
     passes through Arrow kernels; only ``[*carry_cols, text]`` cross
-    the Python boundary.  Output: ``(*carry_cols, n_bigrams,
+    the Python boundary.  ``id_col`` is always among the carried
+    columns (it breaks importance ties), put first when
+    ``carry_cols`` omits it.  Output: ``(*carry, n_bigrams,
     imp_mass, importance, rank)`` — the importance division and the
     TopK stay in Spark, so the doubles and the ordering are the same
     expressions as the JVM path."""

@@ -2114,23 +2114,17 @@ def _text_c4_rules(spark, sf_dir):
     line filter (terminal punctuation, >= 5 words, no 'javascript')
     with exact retained-line/char counters plus the page-level
     booleans (>= 3 sentences on the RETAINED text, no lorem ipsum,
-    no curly brace, no blocklist hit) and the cleaned page itself —
-    all scan-local expressions (ext/text.py c4_line_stats_fused /
-    c4_page_rules), one pass over the pages, hash-exact down to the
-    rebuilt clean_text string.  Pages are synthesized
-    deterministically from the fixture corpus (``_C4_ENRICH``).
-
-    r13: the line filter is evaluated ONCE per page
-    (c4_line_stats_fused — the column form ran the interpreted HOF
-    three times), the page assembly uses ``sort_array`` (native
+    no curly brace, no blocklist hit) and the cleaned page itself,
+    hash-exact down to the rebuilt clean_text string.  Pages are
+    synthesized deterministically from the fixture corpus
+    (``_C4_ENRICH``); the page assembly uses ``sort_array`` (native
     struct ordering; ``array_sort``'s default comparator is an
     interpreted lambda per comparison) + lambda-free struct-field
-    extraction, and the line word count is a regexp_count.  Past the
-    text-kernel crossover the filter + page rules run as ONE Python
-    pass (ext/text_arrow.c4_rules_kernel — the per-line predicate is
-    interpreted inside the HOF lambda and was the remaining 0.69 s
-    of the 1.73 s 100x row); below it the fused JVM form runs, and
-    both paths are result-identical (test-locked).  Same oracle."""
+    extraction.  The filter and the page rules run as ONE Python pass
+    (ext/text_arrow.c4_rules_kernel), which equals the column-form
+    reference ext/text.py c4_line_stats + c4_page_rules (test-locked)
+    and costs less at every measured size: the column form interprets
+    the per-line predicate inside a HOF lambda.  Same oracle."""
     from ..ext.text_arrow import c4_rules_kernel
 
     docs = t(spark, sf_dir, "documents")

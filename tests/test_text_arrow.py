@@ -118,7 +118,7 @@ def test_bigram_buckets_edge_shapes(spark):
         assert mine == list(want), t
 
 
-def test_text_counts_arrow_matches_jvm_exprs(spark):
+def test_text_counts_arrow_matches_jvm_exprs(spark, monkeypatch):
     """r13: the vectorized per-doc counts (ws tokens, BPE-ish tokens,
     punct, chars) must equal the JVM expressions on every edge shape:
     unicode (incl. a surrogate-pair emoji — Java Pattern and Python
@@ -126,6 +126,7 @@ def test_text_counts_arrow_matches_jvm_exprs(spark):
     of spaces, empties, NULL text, digits glued to letters."""
     from pyspark.sql import functions as F
 
+    from python_minerva_etl_spark.ext import text_arrow
     from python_minerva_etl_spark.ext.text_arrow import text_counts_arrow
 
     texts = [None, "", " ", "  ", "a", "ab12cd", "1a2b3",
@@ -161,28 +162,39 @@ def test_text_counts_arrow_matches_jvm_exprs(spark):
         F.size(F.split(F.lower("text"), " ")).cast("bigint").alias("a"),
         F.regexp_count("text", F.lit(BPE)).cast("bigint").alias("b"),
         stopword_hits("en").alias("s")).collect()}
+    # force the kernel past the crossover
+    monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 0)
     got2 = {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r["__stop"])
             for r in text_counts_arrow(
                 docs, carry_cols=["doc_id"],
-                passthrough=[stopword_hits("en").alias("__stop")],
-                min_bytes=0)  # force the kernel past the crossover
+                passthrough=[stopword_hits("en").alias("__stop")])
             .collect()}
     assert got2 == jvm2
     # below the crossover the JVM-expression path returns the same
     # schema and values
+    monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 1 << 40)
     low = {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r["__stop"])
            for r in text_counts_arrow(
                docs, carry_cols=["doc_id"],
-               passthrough=[stopword_hits("en").alias("__stop")],
-               min_bytes=1 << 40).collect()}
+               passthrough=[stopword_hits("en").alias("__stop")])
+           .collect()}
     assert low == jvm2
 
 
+def _c4_reference(df, carry):
+    """The column-form C4 reference: ext/text c4_line_stats +
+    c4_page_rules, in c4_rules_kernel's column order."""
+    from python_minerva_etl_spark.ext.text import (c4_line_stats,
+                                                   c4_page_rules)
+
+    return df.select(*carry, "page", *c4_line_stats("page")).select(
+        *carry, "n_lines", "kept_lines", "kept_chars",
+        *c4_page_rules("page", clean_col="clean_text"), "clean_text")
+
+
 def test_c4_rules_kernel_matches_fused_jvm(spark):
-    """r13: the C4 kernel path (past the crossover) must reproduce
-    the fused JVM form on every edge shape — down to the rebuilt
-    clean_text string — and the below-crossover path IS the fused
-    JVM form."""
+    """r13: the C4 kernel must reproduce the column-form JVM reference
+    on every edge shape — down to the rebuilt clean_text string."""
     from python_minerva_etl_spark.ext.text_arrow import c4_rules_kernel
 
     pages = [
@@ -215,13 +227,11 @@ def test_c4_rules_kernel_matches_fused_jvm(spark):
     cols = ["doc_id", "n_lines", "kept_lines", "kept_chars",
             "sentences_ok", "lorem_ok", "brace_ok", "blocklist_ok",
             "clean_text"]
-    jvm = {r.doc_id: tuple(r)[1:] for r in c4_rules_kernel(
-        df, "page", carry_cols=["doc_id"],
-        min_bytes=1 << 40).select(*cols).collect()}
+    ref = {r.doc_id: tuple(r)[1:] for r in _c4_reference(
+        df, ["doc_id"]).select(*cols).collect()}
     knl = {r.doc_id: tuple(r)[1:] for r in c4_rules_kernel(
-        df, "page", carry_cols=["doc_id"],
-        min_bytes=0).select(*cols).collect()}
-    assert knl == jvm
+        df, "page", carry_cols=["doc_id"]).select(*cols).collect()}
+    assert knl == ref
 
     # and on real fixture pages (the declared query's own assembly)
     from python_minerva_etl_spark.queries.ext_text import _C4_ENRICH
@@ -238,13 +248,50 @@ def test_c4_rules_kernel_matches_fused_jvm(spark):
     cols2 = ["source", "b", "n_lines", "kept_lines", "kept_chars",
              "sentences_ok", "lorem_ok", "brace_ok", "blocklist_ok",
              "clean_text"]
-    jvm2 = sorted(tuple(r) for r in c4_rules_kernel(
-        pg, "page", carry_cols=["source", "b"],
-        min_bytes=1 << 40).select(*cols2).collect())
+    ref2 = sorted(tuple(r) for r in _c4_reference(
+        pg, ["source", "b"]).select(*cols2).collect())
     knl2 = sorted(tuple(r) for r in c4_rules_kernel(
-        pg, "page", carry_cols=["source", "b"],
-        min_bytes=0).select(*cols2).collect())
-    assert knl2 == jvm2
+        pg, "page", carry_cols=["source", "b"]).select(*cols2).collect())
+    assert knl2 == ref2
+
+
+def test_c4_kernel_reads_the_shared_lexicon(spark, monkeypatch):
+    """The kernel applies ext/text's C4_BLOCKLIST as it stands when
+    the kernel is built, as the column-form reference does, so a
+    deployment lexicon reaches the path that runs."""
+    from python_minerva_etl_spark.ext import text
+    from python_minerva_etl_spark.ext.text_arrow import c4_rules_kernel
+
+    monkeypatch.setattr(text, "C4_BLOCKLIST", (*text.C4_BLOCKLIST, "lorem"))
+    df = spark.createDataFrame(
+        [(0, "Lorem dolor sit amet five words here."),
+         (1, "nothing on the list at all in this line."),
+         (2, "an xxx page with five words here.")],
+        "doc_id long, page string")
+    knl_df = c4_rules_kernel(df, "page", carry_cols=["doc_id"])
+    ref_df = _c4_reference(df, ["doc_id"])
+    assert knl_df.dtypes == ref_df.dtypes
+    knl = sorted(knl_df.collect(), key=lambda r: r.doc_id)
+    assert [r.blocklist_ok for r in knl] == [False, True, False]
+    assert knl == sorted(ref_df.collect(), key=lambda r: r.doc_id)
+
+
+@pytest.mark.parametrize("name", ["text_token_stats", "text_quality_score"])
+def test_text_counts_kernel_side_matches_oracle(spark, monkeypatch, name):
+    """The kernel side of the text-counts crossover is oracle-exact on
+    the declared queries, not only the side the sf0.01 fixture takes."""
+    from python_minerva_etl_spark.ext import text_arrow
+    from python_minerva_etl_spark.queries.catalog import all_queries
+
+    from .compare import diff_frames, run_oracle
+    from .conftest import SF_CORRECT
+
+    monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 0)
+    q = all_queries()[name]
+    df = q.spark(spark, SF_CORRECT)
+    assert "MapInPandas" in df._jdf.queryExecution().logical().toString()
+    problems = diff_frames(df.toPandas(), run_oracle(q.oracle, SF_CORRECT))
+    assert not problems, problems
 
 
 def test_gopher_quintuple_on_fixture_corpus(spark):
@@ -271,3 +318,60 @@ def test_gopher_quintuple_on_fixture_corpus(spark):
     assert len(texts) == 120
     for doc_id, text in texts.items():
         assert gopher_quintuple(text) == jvm[doc_id], doc_id
+
+
+def test_text_entry_points_have_no_override_or_second_copy():
+    """The text-kernel crossover is a constant no conf or parameter
+    overrides, the C4 rules have no fast JVM form beside the kernel,
+    and the JVM-side counts reuse ext/text's expressions: the BPE-ish
+    regex is written once under ext/ (docstrings aside), as
+    BPE_ISH_PATTERN."""
+    import ast
+    import os
+
+    import python_minerva_etl_spark as pkg
+    from python_minerva_etl_spark.ext.text import BPE_ISH_PATTERN
+
+    root = os.path.dirname(pkg.__file__)
+    offenders, bpe, home = [], [], []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root)
+            with open(path) as fh:
+                src = fh.read()
+            if "spark.minerva.text." in src:
+                offenders.append(f"{rel}: spark.minerva.text. conf")
+            tree = ast.parse(src, path)
+            docstrings = {
+                id(node.body[0].value) for node in ast.walk(tree)
+                if isinstance(node, (ast.Module, ast.ClassDef,
+                                     ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.body and isinstance(node.body[0], ast.Expr)
+                and isinstance(node.body[0].value, ast.Constant)}
+            for node in ast.walk(tree):
+                where = f"{rel}:{getattr(node, 'lineno', 0)}"
+                if (isinstance(node, ast.Assign)
+                        and rel == os.path.join("ext", "text.py")
+                        and [getattr(t, "id", None) for t in node.targets]
+                        == ["BPE_ISH_PATTERN"]):
+                    home.append(where)
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    if node.name == "c4_line_stats_fused":
+                        offenders.append(f"{where} c4_line_stats_fused")
+                    args = node.args
+                    if (rel == os.path.join("ext", "text_arrow.py")
+                            and "min_bytes" in {
+                                a.arg for a in (args.posonlyargs + args.args
+                                                + args.kwonlyargs)}):
+                        offenders.append(f"{where} {node.name}(min_bytes)")
+                elif (rel.split(os.sep)[0] == "ext"
+                      and isinstance(node, ast.Constant)
+                      and isinstance(node.value, str)
+                      and BPE_ISH_PATTERN in node.value
+                      and id(node) not in docstrings):
+                    bpe.append(where)
+    assert not offenders, offenders
+    assert len(home) == 1 and bpe == home, (bpe, home)

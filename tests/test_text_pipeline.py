@@ -471,39 +471,6 @@ def test_c4_rules_line_and_page_semantics(spark):
     assert not r3.blocklist_ok and r3.lorem_ok and r3.brace_ok
 
 
-def test_c4_fused_matches_column_form(spark):
-    """r13: c4_line_stats_fused (single filter evaluation, derived
-    counters) must agree with the c4_line_stats column form on every
-    edge shape: empty page, nothing kept, everything kept, trailing
-    spaces before the terminal mark, empty lines, multi-space word
-    gaps, exactly-4 vs exactly-5 words, quote terminals."""
-    from python_minerva_etl_spark.ext.text import (c4_line_stats,
-                                                   c4_line_stats_fused)
-
-    pages = [
-        "",
-        "nothing to keep here",
-        "one two three four five.\nsix seven eight nine ten!",
-        "ends with spaces after mark.   \nanother good one here ok?",
-        "\n\n\n",
-        "gap  between   words is still five.",      # multi-space gaps
-        "just four words here.",                    # 4 words: drop
-        'quote "terminal works with five words."',
-        "mentions javascript with five words here.",
-        "MENTIONS JAVASCRIPT WITH FIVE WORDS HERE.",
-        "one two three four five.\nshort.\nsix seven eight nine ten?",
-    ]
-    df = spark.createDataFrame([(i, p) for i, p in enumerate(pages)],
-                               "doc_id long, text string")
-    cols = ["doc_id", "n_lines", "kept_lines", "kept_chars",
-            "clean_text"]
-    col_form = {r.doc_id: tuple(r)[1:] for r in df.select(
-        "doc_id", "text", *c4_line_stats()).select(*cols).collect()}
-    fused = {r.doc_id: tuple(r)[1:]
-             for r in c4_line_stats_fused(df).select(*cols).collect()}
-    assert fused == col_form
-
-
 def test_stopword_hits_regex_matches_token_form(spark):
     """r13: stopword_hits is one regexp_count pass; it must agree
     with the split+filter token form on every boundary shape —
