@@ -1,5 +1,5 @@
-"""Arrow/Python kernels for the per-document text statistics whose
-JVM form is a chain of higher-order-function folds.
+"""Arrow/Python kernels for per-document text statistics whose JVM
+form is slow: a chain of higher-order-function folds, or a regex scan.
 
 Why this module exists (optimization guide §4.1/§4.2): Spark's
 array higher-order functions (``aggregate``, ``transform``,
@@ -15,13 +15,18 @@ integer arithmetic in a tight Python loop over hash tables (Counter),
 of it spreads documents over every core — the shuffle moves only the
 pruned (lang, text) columns.
 
+The per-document counts of ``text_counts_arrow`` (tokens, BPE-ish
+pieces, punctuation, characters, stopwords) replace Java regex scans
+instead: one ``mapInArrow`` pass reads each batch's UTF-8 bytes and
+offsets in place and sums byte classes per document with numpy.
+
 Exactness contract: every number these kernels emit is an INTEGER
-computed by the same rules as the ext/text.py fold expressions
+computed by the same rules as the ext/text.py expressions
 (token = split on single space; gram joined by one space; winner tie
 breaks to the lexicographically smallest gram — valid UTF-8 compares
 identically as Python code points and UTF8String bytes; coverage
 unions token positions, chars counted once).  Agreement with the JVM
-fold helpers is locked per-document by tests/test_text_arrow.py, and
+expressions is locked per-document by tests/test_text_arrow.py, and
 the declared query result is oracle-checked as before.
 """
 
@@ -105,8 +110,10 @@ def _input_files_and_bytes(df: DataFrame):
     """(n_files, total_bytes) of the file sources backing the plan,
     or None when it is not local-file-backed (in-memory test frames)
     or sizes can't be read.  Avoids ``df.rdd`` (driver-side
-    plan-to-RDD conversion per call; unavailable on Spark Connect)."""
-    from urllib.parse import urlparse
+    plan-to-RDD conversion per call; unavailable on Spark Connect).
+    ``inputFiles`` gives URIs, so a path's space or ``%`` arrives
+    percent-encoded."""
+    from urllib.parse import unquote, urlparse
     try:
         files = df.inputFiles()
     except Exception:
@@ -119,7 +126,7 @@ def _input_files_and_bytes(df: DataFrame):
         if p.scheme not in ("", "file"):
             return None
         try:
-            total += os.path.getsize(p.path)
+            total += os.path.getsize(unquote(p.path))
         except OSError:
             return None
     return len(files), total
@@ -195,154 +202,194 @@ def gopher_ngram_doc_stats(docs: DataFrame,
 # ------------------------------------------------- per-doc text counts
 
 
-def bpe_ish_count_np(np, cp, lens):
-    """Vectorized BPE-ish token count over a batch laid out as one
-    code-point array ``cp`` (documents joined by single spaces) with
-    per-document code-point ``lens``.  Exactly
-    ``regexp_count(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')``:
-    the pattern's matches tile every non-whitespace position, so the
-    count is (letter-run starts) + (digit-run starts) + (chars that
-    are neither alnum nor ``\\s``).  Java's Pattern is code-point
-    based (surrogate pairs match as ONE ``[^...]``), and so is this —
-    one UTF-32 code point per element; the ASCII classes are the
-    pattern's own, ``\\s`` = [ \\t\\n\\x0B\\f\\r].  The space joiner
-    is whitespace: it breaks runs at document boundaries and adds no
-    match, so per-document sums via ``reduceat`` are exact.  Locked
-    per-document against the JVM regexp by tests/test_text_arrow.py.
-    """
-    let = ((cp >= 65) & (cp <= 90)) | ((cp >= 97) & (cp <= 122))
-    dig = (cp >= 48) & (cp <= 57)
-    ws = (cp == 32) | ((cp >= 9) & (cp <= 13))
-    other = ~(let | dig | ws)
-    ind = ((let & ~np.concatenate(([False], let[:-1])))
-           | (dig & ~np.concatenate(([False], dig[:-1])))
-           | other).astype(np.int64)
-    starts = np.concatenate(([0], (lens + 1).cumsum()[:-1]))
-    if not cp.size:
-        return np.zeros(len(lens), dtype=np.int64)
-    return np.add.reduceat(np.concatenate((ind, [0])),
-                           np.minimum(starts, ind.size))
+def _stopword_needles(lang: str) -> list[bytes]:
+    """``LANG_PROFILES[lang]`` as UTF-8 needles for the kernel's byte
+    compare, which folds ASCII case only.  That equals Spark's
+    ``lower`` on every token that can equal a word made of ASCII
+    lowercase letters other than ``k`` and of uncased characters:
+    only U+212A lowers into ASCII (to ``k``), and U+0130 lowers to
+    ``i`` plus U+0307, so U+0307 is refused as well.  Any other word
+    raises ``ValueError`` here, when the kernel is built.  A word
+    listed twice counts once, as in the regex alternation."""
+    from .text import LANG_PROFILES
+
+    words = LANG_PROFILES[lang]
+    for w in words:
+        if not w or not all(
+                ("a" <= c <= "z" and c != "k")
+                or (c > "\x7f" and c != "\u0307"
+                    and c.lower() == c.upper() == c)
+                for c in w):
+            raise ValueError(
+                f"stopword {w!r} of {lang!r}: the text-counts kernel "
+                "counts only words of ASCII lowercase letters other than "
+                "'k' and uncased characters")
+    return [w.encode("utf-8") for w in dict.fromkeys(words)]
+
+
+def text_counts_batch(texts, needles: list[bytes] | None = None) -> dict:
+    r"""The per-document counts of one Arrow string array, read from
+    its offsets and UTF-8 data buffer in place: int64 arrays
+    ``n_tokens_ws``, ``n_tokens_bpe``, ``n_punct``, ``n_chars`` and,
+    given ``needles``, ``n_stop``; NULL where the text is NULL.  Each
+    is a count over the document's bytes ``[offset[i], offset[i+1])``:
+
+    - ``n_tokens_ws``  = size(split(lower(text), ' ')) = #spaces + 1;
+    - ``n_tokens_bpe`` = regexp_count(text, BPE_ISH_PATTERN).  The
+      matches tile the non-whitespace code points, so the count is
+      every code point that is not an ASCII letter, digit or Java
+      ``\s`` ([ \t\n\x0B\f\r]), plus every letter or digit whose
+      previous code point (in the same document) is not of its class.
+      A code point is counted at its lead byte, so a supplementary
+      character is one, as in Java's code-point-based Pattern;
+    - ``n_punct``      = regexp_count(text, '[.,!?;:]');
+    - ``n_chars``      = length(text) (code points);
+    - ``n_stop``       = ``stopword_hits``: the tokens between single
+      spaces whose ASCII-case-folded bytes equal a needle (see
+      :func:`_stopword_needles` for when that equals ``lower``)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(texts)
+    width = 8 if pa.types.is_large_string(texts.type) else 4
+    _, obuf, dbuf = texts.buffers()
+    offs = np.zeros(n + 1, dtype=np.int64)
+    if n:
+        offs[:] = np.frombuffer(obuf, dtype=f"<i{width}", count=n + 1,
+                                offset=texts.offset * width)
+    b = (np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None
+         else np.zeros(0, dtype=np.uint8))[offs[0]:offs[-1]]
+    offs -= offs[0]
+    starts, ends = offs[:-1], offs[1:]
+    # reduceat returns a[i] for an empty segment: sum non-empty only
+    nonempty = np.flatnonzero(ends > starts)
+
+    def per_doc(mask):
+        # int32 sums bools 3x faster than int64, and a Spark string
+        # holds fewer than 2^31 bytes
+        out = np.zeros(n, dtype=np.int64)
+        if nonempty.size:
+            out[nonempty] = np.add.reduceat(mask, starts[nonempty],
+                                            dtype=np.int32)
+        return out
+
+    # uint8 arithmetic wraps, so ``b - lo < span`` tests lo <= b < lo+span
+    letter = ((b | 0x20) - np.uint8(97)) < 26
+    digit = (b - np.uint8(48)) < 10
+    space = b == 32
+    other = ~(letter | digit | space | ((b - np.uint8(9)) < 5)
+              | ((b & 0xC0) == 0x80))
+    run = letter.view(np.uint8) + (digit.view(np.uint8) << 1)
+    prev = np.empty_like(run)
+    prev[1:] = run[:-1]
+    prev[starts[nonempty]] = 0  # a document starts a new run
+    punct = (((b - np.uint8(58)) < 2) | (b == 46) | (b == 44)  # :; . ,
+             | (b == 33) | (b == 63))  # ! ?
+    counts = {"n_tokens_ws": per_doc(space) + 1,
+              "n_tokens_bpe": per_doc(other | ((run != 0) & (run != prev))),
+              "n_punct": per_doc(punct),
+              "n_chars": pc.utf8_length(texts).fill_null(0)
+              .to_numpy().astype(np.int64)}
+    if needles is not None:
+        # documents and single spaces bound the tokens in order, so
+        # merging the two sorted runs pairs each start with its end
+        sp = np.flatnonzero(space)
+        tok_start = np.sort(np.concatenate((starts, sp + 1)), kind="stable")
+        tok_len = np.sort(np.concatenate((ends, sp)), kind="stable") \
+            - tok_start
+        hits = []
+        for length in {len(w) for w in needles}:
+            same_len = tok_start[tok_len == length]
+            for w in needles:
+                if len(w) != length:
+                    continue
+                cand = same_len
+                for j, byte in enumerate(w):
+                    x = b[cand + j]
+                    # x | 0x20 is a lowercase letter only at that
+                    # letter and at its uppercase
+                    cand = cand[(x | 0x20 if 97 <= byte <= 122 else x)
+                                == byte]
+                hits.append(cand)
+        counts["n_stop"] = np.bincount(
+            np.searchsorted(offs, np.concatenate(hits), side="right") - 1,
+            minlength=n).astype(np.int64)
+    mask = texts.is_null().to_numpy(zero_copy_only=False)
+    return {k: pa.array(v, type=pa.int64(), mask=mask)
+            for k, v in counts.items()}
 
 
 # Crossover for the text-counts kernel, in bytes of input as
-# ``_estimated_input_bytes`` reads them.  Measured on the 100x fixture
-# (150 MB): the JVM BPE-ish regexp costs ~28 ms/MB of text, the kernel
-# ~8 ms/MB plus a fixed Python-stage cost per job, so the curves cross
-# near 16 MB.  Each side wins on one side of it: on a 0.59 MB input
-# the JVM expressions cost 0.47 CPU s against the kernel's 0.60, on a
-# 20.4 MB one 3.14 CPU s against 2.45 (4-core host, local[4], median
-# of 7 warm calls).  Both sides return the same counts (test-locked),
-# so this is an execution strategy, not a semantic switch.
+# ``_estimated_input_bytes`` reads them.  Set where the pandas kernel's
+# curve crossed the JVM regexps' on the 100x fixture (150 MB): ~8
+# against ~28 ms/MB, plus a fixed Python-stage cost per job.  Measured
+# again for the Arrow-bytes kernel (``text_quality_score``, 4-core
+# host, local[4], median of 7 interleaved noop-forced calls in each
+# of two warm sessions, CPU of the process tree): at
+# 0.59 MB the JVM expressions cost 0.87-0.91 CPU s / 0.54 s wall
+# against the kernel's 0.89-1.01 CPU s / 0.41 s; at 20.4 MB
+# 4.07-4.17 CPU s / 3.5 s against 2.04-2.21 CPU s / 0.8 s.  So the
+# kernel now about ties on CPU at 0.59 MB and the curves cross well
+# below 16 MB; moving the value is its own change.  Both sides return
+# the same counts (test-locked), so this is an execution strategy,
+# not a semantic switch.
 TEXT_KERNEL_MIN_INPUT_BYTES = 16 << 20
-
 
 def text_counts_arrow(docs: DataFrame,
                       text_col: str = "text",
                       carry_cols: list[str] | None = None,
-                      passthrough: list | None = None) -> DataFrame:
-    """Per-document (n_tokens_ws, n_tokens_bpe, n_punct, n_chars) as
-    ONE vectorized ``mapInPandas`` kernel — the JVM expressions are
-    exact but regex-engine bound: ``regexp_count`` of the BPE-ish
-    alternation alone measured 4.25 s of text_quality_score's 5.4 s
-    at the 100x fixture (the scan is the cost — a marker-replace
-    rewrite that avoids match materialization measured no better).
-    The kernel classifies UTF-32 code points with numpy masks over
-    the whole Arrow batch (documents joined by one space, per-doc
-    sums via ``reduceat``) — 3.4x on the same fixture, bit-exact
-    per document (tests/test_text_arrow.py):
+                      stopword_lang: str | None = None) -> DataFrame:
+    """Per-document ``(*carry_cols, n_tokens_ws, n_tokens_bpe, n_punct,
+    n_chars)``, plus ``n_stop`` = ``stopword_hits(stopword_lang)`` when
+    a language is given; every count is a bigint, NULL for NULL text.
 
-    - ``n_tokens_ws``  = size(split(lower(text), ' ')) = #spaces + 1
-      (split keeps empty pieces; lower() never changes a space);
-    - ``n_tokens_bpe`` = the BPE-ish regexp_count (see
-      :func:`bpe_ish_count_np`);
-    - ``n_punct``      = regexp_count(text, '[.,!?;:]') = #chars in
-      the class (single-char matches cannot overlap);
-    - ``n_chars``      = length(text) (code points — Spark length()
-      on STRING counts code points, not bytes or UTF-16 units).
+    Two sides, the same counts (test-locked):
 
-    NULL text yields NULL in every count, like the JVM expressions.
-    ``passthrough`` columns (pyspark Columns or names) are computed
-    scan-side BEFORE the kernel and carried through unchanged —
-    e.g. a stopword count that stays a JVM regexp.
+    - at or above ``TEXT_KERNEL_MIN_INPUT_BYTES`` of input (or when
+      the size is unknown), one ``mapInArrow`` pass after
+      :func:`_spread_for_cpu`: :func:`text_counts_batch` reads each
+      batch's UTF-8 bytes in place, so no regex engine runs, and only
+      ``(carry, text)`` cross into Python;
+    - below it, the ext/text.py expressions, which cost less there
+      (see the comment on the constant).
 
-    When the input's file size is known and below
-    ``TEXT_KERNEL_MIN_INPUT_BYTES``, the counts come from the
-    ext/text.py expressions instead, which cost less there (see the
-    comment on the constant); results are identical on both sides
-    (test-locked)."""
-    import numpy as np  # noqa: F401 (executor-side)
-
-    from .text import punct_count, token_count_bpe_ish, token_count_ws
+    ``LANG_PROFILES`` is read when this is called, on both sides."""
+    from .text import (punct_count, stopword_hits, token_count_bpe_ish,
+                       token_count_ws)
 
     carry = list(carry_cols or [])
-    sel = [F.col(c) for c in carry]
-    for c in passthrough or []:
-        sel.append(F.col(c) if isinstance(c, str) else c)
-    pruned0 = docs.select(*sel, F.col(text_col).alias("__text"))
-    pt_names = [c for c in pruned0.columns
-                if c not in carry and c != "__text"]
+    pruned = docs.select(*carry, F.col(text_col).alias("__text"))
+    counts = ["n_tokens_ws", "n_tokens_bpe", "n_punct", "n_chars"]
+    if stopword_lang is not None:
+        counts.append("n_stop")
 
     size = _estimated_input_bytes(docs)
     if size is not None and size < TEXT_KERNEL_MIN_INPUT_BYTES:
-        return pruned0.select(
-            *carry, *pt_names,
-            token_count_ws("__text").alias("n_tokens_ws"),
-            token_count_bpe_ish("__text").alias("n_tokens_bpe"),
-            punct_count("__text").alias("n_punct"),
-            F.length("__text").cast("bigint").alias("n_chars"))
-    pruned = _spread_for_cpu(pruned0)
+        jvm = [token_count_ws("__text").alias("n_tokens_ws"),
+               token_count_bpe_ish("__text").alias("n_tokens_bpe"),
+               punct_count("__text").alias("n_punct"),
+               F.length("__text").cast("bigint").alias("n_chars")]
+        if stopword_lang is not None:
+            jvm.append(stopword_hits(stopword_lang, "__text")
+                       .alias("n_stop"))
+        return pruned.select(*carry, *jvm)
 
-    PUNCT = (46, 44, 33, 63, 59, 58)  # . , ! ? ; :
+    needles = (None if stopword_lang is None
+               else _stopword_needles(stopword_lang))
 
     def compute(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-        for pdf in batches:
-            texts = pdf["__text"]
-            isnull = texts.isna().to_numpy()
-            tl = [("" if n else t) for t, n in zip(texts, isnull)]
-            lens = np.fromiter((len(t) for t in tl), dtype=np.int64,
-                               count=len(tl))
-            cp = np.frombuffer(" ".join(tl).encode("utf-32-le"),
-                               dtype=np.uint32)
-            starts = np.concatenate(([0], (lens + 1).cumsum()[:-1]))
+        import pyarrow as pa
+        for batch in batches:
+            got = text_counts_batch(batch.column("__text"), needles)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in carry]
+                + [got[c] for c in counts], names=carry + counts)
 
-            def seg_count(mask):
-                if not cp.size:
-                    return np.zeros(len(tl), dtype=np.int64)
-                m = mask.astype(np.int64)
-                # the reduceat segment for doc i spans its chars PLUS
-                # the joiner space after it; zero the joiners so a
-                # space-counting mask never sees them
-                m[starts[1:] - 1] = 0
-                return np.add.reduceat(
-                    np.concatenate((m, [0])),
-                    np.minimum(starts, m.size))
-
-            n_ws = seg_count(cp == 32) + 1
-            punct_mask = np.isin(cp, PUNCT)
-            n_punct = seg_count(punct_mask)
-            n_bpe = bpe_ish_count_np(np, cp, lens)
-            out = pdf[carry + pt_names].copy()
-
-            def col(vals):
-                return pd.array(
-                    [None if n else int(v)
-                     for v, n in zip(vals, isnull)], dtype="Int64")
-            out["n_tokens_ws"] = col(n_ws)
-            out["n_tokens_bpe"] = col(n_bpe)
-            out["n_punct"] = col(n_punct)
-            out["n_chars"] = col(lens)
-            yield out
-
-    prefix = ", ".join(
-        f"{c} {pruned0.schema[c].dataType.simpleString()}"
-        for c in carry + pt_names)
-    prefix = prefix + ", " if prefix else ""
-    return pruned.mapInPandas(
-        compute,
-        f"{prefix}n_tokens_ws long, n_tokens_bpe long, "
-        "n_punct long, n_chars long")
+    schema = ", ".join(
+        [f"{c} {pruned.schema[c].dataType.simpleString()}"
+         for c in carry] + [f"{c} long" for c in counts])
+    return _spread_for_cpu(pruned).mapInArrow(compute, schema)
 
 
 # ------------------------------------------------------ C4 line filter

@@ -427,21 +427,19 @@ def _text_quality_score(spark, sf_dir):
     """EXT-TEXT quality scoring: length/punctuation/stopword features
     combined into a pretraining-filter score (C4/Gopher-style rules).
 
-    r13: the three per-document counts come from the vectorized
-    Arrow kernel (ext/text_arrow.text_counts_arrow — the BPE-ish
-    ``regexp_count`` alone was ~80% of this query's 100x cost);
-    the stopword count stays a JVM regexp computed scan-side and
-    passed through the kernel, and the quality formula is the SAME
-    double expression over the same exact integers — IEEE-identical,
-    same oracle."""
+    The per-document counts, the English stopword count among them,
+    come from ext/text_arrow.text_counts_arrow: one Arrow pass over
+    the text above its size crossover, the ext/text.py expressions
+    below it (the BPE-ish and stopword ``regexp_count`` scans were
+    most of this query's cost at scale).  The quality formula is the
+    SAME double expression over the same exact integers —
+    IEEE-identical, same oracle."""
     from ..ext.text_arrow import text_counts_arrow
 
     docs = t(spark, sf_dir, "documents")
-    d = text_counts_arrow(
-        docs, carry_cols=["doc_id"],
-        passthrough=[X.stopword_hits("en").alias("__stop")])
+    d = text_counts_arrow(docs, carry_cols=["doc_id"], stopword_lang="en")
     n_tok = F.col("n_tokens_ws").cast("double")
-    stop_ratio = F.col("__stop").cast("double") / n_tok
+    stop_ratio = F.col("n_stop").cast("double") / n_tok
     punct_ratio = F.col("n_punct").cast("double") / \
         F.col("n_chars").cast("double")
     len_score = F.least(n_tok / F.lit(32.0), F.lit(1.0))

@@ -120,65 +120,150 @@ def test_bigram_buckets_edge_shapes(spark):
 
 def test_text_counts_arrow_matches_jvm_exprs(spark, monkeypatch):
     """r13: the vectorized per-doc counts (ws tokens, BPE-ish tokens,
-    punct, chars) must equal the JVM expressions on every edge shape:
-    unicode (incl. a surrogate-pair emoji — Java Pattern and Python
-    both match it as ONE code point), tabs/newlines (Java \\s), runs
-    of spaces, empties, NULL text, digits glued to letters."""
+    punct, chars, English stopwords) must equal the JVM expressions on
+    every edge shape: unicode (incl. a surrogate-pair emoji — Java
+    Pattern matches it as ONE code point), tabs/newlines (Java \\s),
+    runs of spaces, empties, NULL text, digits glued to letters, and
+    the stopword token edges — case, punctuation glued on, a tab (not
+    a separator), lead/trail/double spaces, non-ASCII letters that
+    lower into or out of ASCII (U+0130, U+212A).  Also in batches of
+    3 rows and as large_string, the other Arrow layouts the kernel
+    may be handed."""
     from pyspark.sql import functions as F
 
     from python_minerva_etl_spark.ext import text_arrow
+    from python_minerva_etl_spark.ext.text import stopword_hits
     from python_minerva_etl_spark.ext.text_arrow import text_counts_arrow
 
     texts = [None, "", " ", "  ", "a", "ab12cd", "1a2b3",
              "héllo wörld", "的是 不了", "emoji \U0001F600 here",
              "tab\tsep\nnewline\x0b\f\r", "a.b,c!d?e;f:g", "...",
-             "a  b   c", " lead trail ", "a1 2b", "-x- @# 12ab!"]
+             "a  b   c", " lead trail ", "a1 2b", "-x- @# 12ab!",
+             "The", "THE", "of the", "the.", "the\tcat", " the", "the ",
+             "the  of  a", "  a ", "thé", "İs", "\u0130S is", "\u212Aa",
+             "VALUE value Value valued", "is a", "And anD", "toto to"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id long, text string")
     BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-    jvm = {r.doc_id: (r.a, r.b, r.c, r.d) for r in df.select(
-        "doc_id",
-        F.size(F.split(F.lower("text"), " ")).cast("bigint").alias("a"),
-        F.regexp_count("text", F.lit(BPE)).cast("bigint").alias("b"),
-        F.regexp_count("text", F.lit(r"[.,!?;:]")).cast("bigint")
-        .alias("c"),
-        F.length("text").cast("bigint").alias("d")).collect()}
+
+    def jvm_counts(frame):
+        return {r.doc_id: (r.a, r.b, r.c, r.d, r.s) for r in frame.select(
+            "doc_id",
+            F.size(F.split(F.lower("text"), " ")).cast("bigint").alias("a"),
+            F.regexp_count("text", F.lit(BPE)).cast("bigint").alias("b"),
+            F.regexp_count("text", F.lit(r"[.,!?;:]")).cast("bigint")
+            .alias("c"),
+            F.length("text").cast("bigint").alias("d"),
+            stopword_hits("en").alias("s")).collect()}
+
+    def got_counts(frame):
+        return {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r.n_punct,
+                           r.n_chars, r.n_stop)
+                for r in text_counts_arrow(
+                    frame, carry_cols=["doc_id"], stopword_lang="en")
+                .collect()}
+
     # post-3.0 size(NULL) is NULL on the non-legacy default
     jvm = {k: tuple(None if x == -1 else x for x in v)
-           for k, v in jvm.items()}
-    got = {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r.n_punct,
-                      r.n_chars)
-           for r in text_counts_arrow(
-               df, carry_cols=["doc_id"]).collect()}
-    assert got == jvm
+           for k, v in jvm_counts(df).items()}
+    # an in-memory frame has no file size, so this is the kernel side
+    assert got_counts(df) == jvm
+    for key, value in (("spark.sql.execution.arrow.maxRecordsPerBatch",
+                        "3"),
+                       ("spark.sql.execution.arrow.useLargeVarTypes",
+                        "true")):
+        spark.conf.set(key, value)
+        try:
+            assert got_counts(df) == jvm, key
+        finally:
+            spark.conf.unset(key)
 
-    # fixture sample, plus passthrough column survives unchanged
-    from python_minerva_etl_spark.ext.text import stopword_hits
+    # fixture sample, on both sides of the crossover
     from python_minerva_etl_spark.registry import load_table
     docs = load_table(spark, "/root/testdata/sf0.01", "documents") \
         .limit(150)
-    jvm2 = {r.doc_id: (r.a, r.b, r.s) for r in docs.select(
-        "doc_id",
-        F.size(F.split(F.lower("text"), " ")).cast("bigint").alias("a"),
-        F.regexp_count("text", F.lit(BPE)).cast("bigint").alias("b"),
-        stopword_hits("en").alias("s")).collect()}
-    # force the kernel past the crossover
+    jvm2 = jvm_counts(docs)
+    for bound in (0, 1 << 40):
+        monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES",
+                            bound)
+        assert got_counts(docs) == jvm2, bound
+
+
+def test_text_counts_batch_reads_sliced_and_large_arrays():
+    """The kernel reads a batch's offsets and data buffer in place, so
+    a sliced array (nonzero ``offset``, first offset past 0) and a
+    large_string one must count exactly as the whole array does."""
+    import pyarrow as pa
+
+    from python_minerva_etl_spark.ext.text_arrow import (
+        _stopword_needles, text_counts_batch)
+
+    texts = ["the cat", None, "", "Of THE a", "x", "a  the", None, "in"]
+    whole = pa.array(texts, pa.string())
+    needles = _stopword_needles("en")
+    want = {k: v.to_pylist()
+            for k, v in text_counts_batch(whole, needles).items()}
+    assert want["n_stop"] == [1, None, 0, 3, 0, 2, None, 1]
+    for arr in (whole.slice(3), whole.slice(1, 5), whole.slice(7),
+                whole.slice(0, 0), whole.cast(pa.large_string()).slice(2)):
+        lo = arr.offset
+        for k, v in text_counts_batch(arr, needles).items():
+            assert v.type == pa.int64()
+            assert v.to_pylist() == want[k][lo:lo + len(arr)], k
+    nulls = text_counts_batch(pa.array([None, None], pa.string()), needles)
+    assert all(v.to_pylist() == [None, None] for v in nulls.values())
+
+
+def test_text_counts_reads_the_shared_lexicon(spark, monkeypatch, tmp_path):
+    """Both sides of the text-counts crossover apply ext/text's
+    LANG_PROFILES as it stands when the counts are built, so a
+    deployment word list reaches the path that runs; a word the
+    kernel's ASCII case fold cannot count exactly is refused."""
+    from python_minerva_etl_spark.ext import text, text_arrow
+    from python_minerva_etl_spark.ext.text_arrow import text_counts_arrow
+
+    # a word listed twice counts once, as in the regex alternation
+    monkeypatch.setitem(text.LANG_PROFILES, "en",
+                        (*text.LANG_PROFILES["en"], "cat", "the"))
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(0, "the cat and the Cat"), (1, "no match here"), (2, "cats")],
+        "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    for bound in (0, 1 << 40):
+        monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES",
+                            bound)
+        got = {r.doc_id: r.n_stop for r in text_counts_arrow(
+            docs, carry_cols=["doc_id"], stopword_lang="en").collect()}
+        assert got == {0: 5, 1: 0, 2: 0}, bound
+
     monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 0)
-    got2 = {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r["__stop"])
-            for r in text_counts_arrow(
-                docs, carry_cols=["doc_id"],
-                passthrough=[stopword_hits("en").alias("__stop")])
-            .collect()}
-    assert got2 == jvm2
-    # below the crossover the JVM-expression path returns the same
-    # schema and values
-    monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 1 << 40)
-    low = {r.doc_id: (r.n_tokens_ws, r.n_tokens_bpe, r["__stop"])
-           for r in text_counts_arrow(
-               docs, carry_cols=["doc_id"],
-               passthrough=[stopword_hits("en").alias("__stop")])
-           .collect()}
-    assert low == jvm2
+    for word in ("kit", "é", "i\u0307", ""):
+        monkeypatch.setitem(text.LANG_PROFILES, "en", ("the", word))
+        with pytest.raises(ValueError, match="stopword"):
+            text_counts_arrow(docs, stopword_lang="en")
+
+
+def test_size_estimate_reads_escaped_paths(spark, tmp_path):
+    """inputFiles() gives percent-encoded URIs: a directory named with
+    a space and a ``%`` must still be sized, so a tiny input there
+    takes the JVM side of the crossover (no Python node)."""
+    import os
+
+    from python_minerva_etl_spark.ext.text_arrow import (
+        _estimated_input_bytes, text_counts_arrow)
+
+    path = tmp_path / "a b%c"
+    spark.createDataFrame([(0, "the cat")], "doc_id long, text string") \
+        .write.parquet(str(path))
+    docs = spark.read.parquet(str(path))
+    want = sum(os.path.getsize(path / f) for f in os.listdir(path)
+               if f.endswith(".parquet"))
+    assert want > 0
+    assert _estimated_input_bytes(docs) == want
+    plan = text_counts_arrow(docs, carry_cols=["doc_id"]) \
+        ._jdf.queryExecution().logical().toString()
+    assert "MapIn" not in plan and "Python" not in plan, plan
 
 
 def _c4_reference(df, carry):
@@ -289,7 +374,7 @@ def test_text_counts_kernel_side_matches_oracle(spark, monkeypatch, name):
     monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 0)
     q = all_queries()[name]
     df = q.spark(spark, SF_CORRECT)
-    assert "MapInPandas" in df._jdf.queryExecution().logical().toString()
+    assert "MapInArrow" in df._jdf.queryExecution().logical().toString()
     problems = diff_frames(df.toPandas(), run_oracle(q.oracle, SF_CORRECT))
     assert not problems, problems
 
