@@ -133,38 +133,33 @@ def _input_files_and_bytes(df: DataFrame):
 
 
 def _estimated_input_bytes(df: DataFrame) -> int | None:
+    """The input size the text-kernel crossover compares, or None."""
     fb = _input_files_and_bytes(df)
     return None if fb is None else fb[1]
 
 
-def _estimated_scan_splits(df: DataFrame) -> int | None:
-    """Estimated scan-task count from the file-source metadata:
-    ``max(n_files, ceil(total_bytes / maxPartitionBytes))``."""
-    fb = _input_files_and_bytes(df)
-    if fb is None:
-        return None
-    n_files, total = fb
-    max_bytes = _bytes_conf(df.sparkSession,
-                            "spark.sql.files.maxPartitionBytes",
-                            128 << 20)
-    return max(n_files, -(-total // max(max_bytes, 1)))
-
-
-def _spread_for_cpu(df: DataFrame) -> DataFrame:
+def _spread_for_cpu(df: DataFrame, listing) -> DataFrame:
     """Round-robin repartition IF the scan under-parallelizes the
     session (the sf fixtures are single-row-group files — one task no
     matter how many cores).  Scale-adaptive, not a constant: when the
     input already carries >= defaultParallelism splits (any real
     100 TB table), this is a no-op — no extra Exchange, the kernel
     runs scan-local.  When it does fire, the shuffle moves only the
-    columns already pruned by the caller.  The split count comes from
-    file-source metadata (no ``df.rdd`` plan conversion); non-file
-    plans fall back to the RDD partition count."""
+    columns already pruned by the caller.  ``listing`` is the
+    caller's :func:`_input_files_and_bytes` of ``df``'s input, so an
+    entry point lists its input once; the split estimate is
+    ``max(n_files, ceil(total_bytes / maxPartitionBytes))``, with no
+    ``df.rdd`` plan conversion.  Non-file plans (``listing`` None)
+    fall back to the RDD partition count."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_splits(df)
-    if est is None:
+    if listing is None:
         est = df.rdd.getNumPartitions()
+    else:
+        n_files, total = listing
+        max_bytes = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes",
+                                128 << 20)
+        est = max(n_files, -(-total // max(max_bytes, 1)))
     if est < target:
         return df.repartition(target)
     return df
@@ -180,7 +175,8 @@ def gopher_ngram_doc_stats(docs: DataFrame,
     import pandas as pd  # noqa: F401 (executor-side)
 
     pruned = _spread_for_cpu(docs.select(F.col(lang_col).alias("lang"),
-                                         F.col(text_col).alias("text")))
+                                         F.col(text_col).alias("text")),
+                             _input_files_and_bytes(docs))
 
     def compute(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -321,7 +317,7 @@ def text_counts_batch(texts, needles: list[bytes] | None = None) -> dict:
 
 
 # Crossover for the text-counts kernel, in bytes of input as
-# ``_estimated_input_bytes`` reads them.  Set where the pandas kernel's
+# ``_input_files_and_bytes`` reads them.  Set where the pandas kernel's
 # curve crossed the JVM regexps' on the 100x fixture (150 MB): ~8
 # against ~28 ms/MB, plus a fixed Python-stage cost per job.  Measured
 # again for the Arrow-bytes kernel (``text_quality_score``, 4-core
@@ -364,8 +360,8 @@ def text_counts_arrow(docs: DataFrame,
     if stopword_lang is not None:
         counts.append("n_stop")
 
-    size = _estimated_input_bytes(docs)
-    if size is not None and size < TEXT_KERNEL_MIN_INPUT_BYTES:
+    listing = _input_files_and_bytes(docs)
+    if listing is not None and listing[1] < TEXT_KERNEL_MIN_INPUT_BYTES:
         jvm = [token_count_ws("__text").alias("n_tokens_ws"),
                token_count_bpe_ish("__text").alias("n_tokens_bpe"),
                punct_count("__text").alias("n_punct"),
@@ -389,7 +385,7 @@ def text_counts_arrow(docs: DataFrame,
     schema = ", ".join(
         [f"{c} {pruned.schema[c].dataType.simpleString()}"
          for c in carry] + [f"{c} long" for c in counts])
-    return _spread_for_cpu(pruned).mapInArrow(compute, schema)
+    return _spread_for_cpu(pruned, listing).mapInArrow(compute, schema)
 
 
 # ------------------------------------------------------ C4 line filter
@@ -528,6 +524,13 @@ def dsir_bucket_counts_arrow(raw: DataFrame, n_buckets: int,
     interpreted md5-in-``transform`` lambda first).  Returns
     ``(bucket, cr, ct)`` aggregated — plug into the same floor-ratio
     select as the JVM path for bit-identical weights."""
+    return _dsir_bucket_counts(raw, n_buckets, text_col, target_where,
+                               _input_files_and_bytes(raw))
+
+
+def _dsir_bucket_counts(raw: DataFrame, n_buckets: int, text_col: str,
+                        target_where: str | None, listing) -> DataFrame:
+    """:func:`dsir_bucket_counts_arrow` given ``raw``'s input listing."""
     import numpy as np  # noqa: F401 (executor-side)
 
     cols = [F.col(text_col).alias("__text")]
@@ -535,7 +538,7 @@ def dsir_bucket_counts_arrow(raw: DataFrame, n_buckets: int,
     # the kernel so its semantics stay engine-defined
     cols.append(F.expr(target_where).alias("__t") if target_where
                 else F.lit(False).alias("__t"))
-    pruned = _spread_for_cpu(raw.select(*cols))
+    pruned = _spread_for_cpu(raw.select(*cols), listing)
 
     def compute(batches: Iterator) -> Iterator:
         import numpy as np
@@ -621,11 +624,12 @@ def dsir_select_arrow(docs: DataFrame, k: int,
         carry = [id_col, *carry]
     # one weights job: kernel histograms -> <=n_buckets-row aggregate
     # -> driver floor-ratio (bit-identical to the Spark expression)
-    counts = dsir_bucket_counts_arrow(docs, n_buckets, text_col,
-                                      target_where).collect()
+    listing = _input_files_and_bytes(docs)
+    counts = _dsir_bucket_counts(docs, n_buckets, text_col, target_where,
+                                 listing).collect()
     warr = _floor_ratio_weights(counts, n_buckets, 1_000_000)
 
-    pruned = _spread_for_cpu(docs.select(*carry, text_col))
+    pruned = _spread_for_cpu(docs.select(*carry, text_col), listing)
 
     def compute(batches: Iterator) -> Iterator:
         import pandas as pd

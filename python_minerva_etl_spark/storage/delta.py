@@ -61,6 +61,7 @@ where Delta/Iceberg neighbors are the norm.
 from __future__ import annotations
 
 import builtins
+import functools
 import json
 import os
 import re
@@ -74,6 +75,7 @@ from pyspark.sql import types as T
 
 from .commit import (commit_attempts, hive_values, publish_if_absent,
                      replace_atomic, stage_parquet)
+from .dml import is_true, plan_merge, set_projection, table_projection
 from .stats import (as_of_ms, footer_bounds, may_match, zorder_cluster,
                     zorder_proxy_sql)
 
@@ -1798,12 +1800,12 @@ class DeltaTable:
         df = vdf
         viol = None
         for _, expr in cons:
-            c = ~F.expr(expr).eqNullSafe(F.lit(True))
+            c = ~is_true(F.expr(expr))
             viol = c if viol is None else viol | c
         if not df.filter(viol).limit(1).count():
             return
         for label, expr in cons:  # name the offender in the error
-            if df.filter(~F.expr(expr).eqNullSafe(F.lit(True))) \
+            if df.filter(~is_true(F.expr(expr))) \
                     .limit(1).count():
                 raise ValueError(
                     f"Delta {what}: rows violate {label} "
@@ -1817,17 +1819,20 @@ class DeltaTable:
                    ).lower() == "true"
 
     def _write_dvs(self, spark: SparkSession, matches: DataFrame,
-                   old_json: dict[str, str]) -> list:
+                   snap: dict) -> list:
         """Write one deletion-vector ``.bin`` per touched file,
         executor-side: ``matches`` carries the (``_dl_path``,
         ``_dl_pos``) pairs to mask; each file's group unions the new
-        positions with the file's existing DV (``old_json``, keyed by
-        absolute path — a DV REPLACES its predecessor, so it must
-        carry every deleted row).  Returns one collected row per
-        touched file (bounded metadata: path + descriptor json)."""
+        positions with the file's existing DV in ``snap`` (a DV
+        REPLACES its predecessor, so it must carry every deleted
+        row).  Returns one collected row per touched file (bounded
+        metadata: path + descriptor json)."""
         import numpy as np
 
         table_path = os.path.abspath(self.path)
+        old_json = {os.path.join(table_path, f["path"]):
+                    json.dumps(f["deletionVector"])
+                    for f in snap["files"] if f.get("deletionVector")}
 
         def write_group(pdf):
             import pandas as pd
@@ -1896,7 +1901,7 @@ class DeltaTable:
         return actions
 
     def _commit_row_dml(self, operation: str, touched: list,
-                        old_dv: dict, extra_actions: list[dict],
+                        snap: dict, extra_actions: list[dict],
                         cdf: bool) -> int:
         """Commit a row-level DML (DELETE / UPDATE / MERGE): per
         touched file ``remove(path, old DV)`` + ``add(path, new
@@ -1904,8 +1909,10 @@ class DeltaTable:
         plus ``extra_actions`` (new data files / cdc files),
         upgrading the protocol on first feature use.  Raises
         :class:`DeltaConcurrentCommit` if a racer touches any
-        affected file between the scan and the commit."""
+        affected file between the scan of ``snap`` and the commit."""
         table_path = os.path.abspath(self.path)
+        old_dv = {f["path"]: f.get("deletionVector")
+                  for f in snap["files"]}
         for _ in commit_attempts(self.path, DeltaConcurrentCommit):
             cur = self._replay()
             by_path = {f["path"]: f for f in cur["files"]}
@@ -1981,18 +1988,13 @@ class DeltaTable:
         snap = self._replay()
         self._check_writable(snap, "delete")
         cond = F.expr(where) if isinstance(where, str) else where
-        table_path = os.path.abspath(self.path)
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
-        old_json = {os.path.join(table_path, rel): json.dumps(dv)
-                    for rel, dv in old_dv.items() if dv}
         cdf = self._cdf_enabled(snap)
         matched = (self.read(spark, snap["version"], _with_pos=True)
                    .filter(cond))
         if cdf:
             matched = matched.persist()
         try:
-            touched = self._write_dvs(spark, matched, old_json)
+            touched = self._write_dvs(spark, matched, snap)
             if not touched:
                 return None
             cdc_actions: list[dict] = []
@@ -2005,7 +2007,7 @@ class DeltaTable:
                     pre, part_cols, subdir="_change_data",
                     action="cdc", cm=self._cm_mapping(snap))
             return self._commit_row_dml(
-                "DELETE", touched, old_dv, cdc_actions, cdf)
+                "DELETE", touched, snap, cdc_actions, cdf)
         finally:
             if cdf:
                 matched.unpersist()
@@ -2030,34 +2032,20 @@ class DeltaTable:
         meta = snap["metaData"]
         schema = T.StructType.fromJson(
             json.loads(meta["schemaString"]))
-        names = [f.name for f in schema.fields]
-        unknown = sorted(builtins.set(set) - builtins.set(names))
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET references unknown columns {unknown}")
-        exprs = {c: (F.expr(e) if isinstance(e, str) else e)
-                 for c, e in set.items()}
+        projection = set_projection(schema, set, "UPDATE SET")
         part_cols = meta.get("partitionColumns") or []
         cond = (F.lit(True) if where is None
                 else F.expr(where) if isinstance(where, str)
                 else where)
-        table_path = os.path.abspath(self.path)
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
-        old_json = {os.path.join(table_path, rel): json.dumps(dv)
-                    for rel, dv in old_dv.items() if dv}
         cdf = self._cdf_enabled(snap)
         matched = (self.read(spark, snap["version"], _with_pos=True)
                    .filter(cond).persist())
         try:
-            touched = self._write_dvs(spark, matched, old_json)
+            updated = matched.select(*projection)
+            self._enforce_constraints(snap, updated, "UPDATE")
+            touched = self._write_dvs(spark, matched, snap)
             if not touched:
                 return None
-            updated = matched.select(
-                *[(exprs[f.name].cast(f.dataType) if f.name in exprs
-                   else F.col(f"`{f.name}`")).alias(f.name)
-                  for f in schema.fields])
-            self._enforce_constraints(snap, updated, "UPDATE")
             cm = self._cm_mapping(snap)
             extra = self._stage_data_files(updated, part_cols, cm=cm)
             if cdf:
@@ -2070,7 +2058,7 @@ class DeltaTable:
                     pre.unionByName(post), part_cols,
                     subdir="_change_data", action="cdc", cm=cm)
             return self._commit_row_dml(
-                "UPDATE", touched, old_dv, extra, cdf)
+                "UPDATE", touched, snap, extra, cdf)
         finally:
             matched.unpersist()
 
@@ -2096,37 +2084,24 @@ class DeltaTable:
         meta = snap["metaData"]
         schema = T.StructType.fromJson(
             json.loads(meta["schemaString"]))
-        names = [f.name for f in schema.fields]
-        missing = [n for n in names if n not in df.columns]
-        if missing:
-            raise ValueError(
-                f"replaceWhere: dataframe lacks table columns "
-                f"{missing}")
-        new_rows = df.select(
-            *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
-              for f in schema.fields])
+        new_rows = table_projection(df, schema, "replaceWhere: dataframe")
         # NULL predicate results count as violations (delta-spark's
         # replaceWhere contract): plain ~cond drops NULL rows from the
         # check, letting them land OUTSIDE the replaced region.
-        if new_rows.filter(~cond.eqNullSafe(F.lit(True))) \
+        if new_rows.filter(~is_true(cond)) \
                 .limit(1).count():
             raise ValueError(
                 "replaceWhere: incoming rows violate the predicate "
                 "— they fall outside the region being replaced")
         self._enforce_constraints(snap, new_rows, "replaceWhere")
         part_cols = meta.get("partitionColumns") or []
-        table_path = os.path.abspath(self.path)
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
-        old_json = {os.path.join(table_path, rel): json.dumps(dv)
-                    for rel, dv in old_dv.items() if dv}
         cdf = self._cdf_enabled(snap)
         matched = (self.read(spark, snap["version"], _with_pos=True)
                    .filter(cond))
         if cdf:
             matched = matched.persist()
         try:
-            touched = self._write_dvs(spark, matched, old_json)
+            touched = self._write_dvs(spark, matched, snap)
             cm = self._cm_mapping(snap)
             extra = []
             if not new_rows.isEmpty():
@@ -2147,7 +2122,7 @@ class DeltaTable:
             if not touched and not extra:
                 return None
             return self._commit_row_dml(
-                "WRITE", touched, old_dv, extra, cdf)
+                "WRITE", touched, snap, extra, cdf)
         finally:
             if cdf:
                 matched.unpersist()
@@ -2156,190 +2131,55 @@ class DeltaTable:
               when_matched_update: dict | None = None,
               when_matched_delete=None,
               when_not_matched_insert=True) -> int | None:
-        """MERGE INTO this table USING ``source`` ON ``on`` (a SQL
-        string or Column over the aliases ``t`` = target, ``s`` =
-        source — qualify ambiguous names).
-
-        Clauses:
-        - ``when_matched_update``: {target column: expression over
-          t/s} rewrites every matched target row (merge-on-read: DV
-          mask + new data files, like :meth:`update`).
-        - ``when_matched_delete``: a condition over t/s (or True for
-          unconditional) — matched rows satisfying it are DV-masked;
-          with an update clause present, the delete condition wins
-          and the update applies to the REMAINING matched rows.
-        - ``when_not_matched_insert``: True inserts source rows
-          as-is (the source must carry every table column), a dict
-          maps {target column: expression over s} with unlisted
-          columns null, False/None disables inserts.
-
-        Multiple source rows matching one target row make the
-        matched clauses ambiguous and raise (the Delta semantic) —
-        detected with one aggregation over the match pairs, not
-        trusted to luck.  Returns the committed version, or None
-        when the merge is a no-op."""
+        """MERGE INTO this table USING ``source`` ON ``on``, with the
+        clauses :func:`storage.dml.plan_merge` defines (``t`` =
+        target, ``s`` = source).  Merge-on-read like :meth:`update`:
+        matched rows are DV-masked and the updated and inserted rows
+        land in new data files.  On ``delta.enableChangeDataFeed``
+        tables the commit carries update pre/post images, delete and
+        insert change rows under ``_change_data/``.  Returns the
+        committed version, or None when the merge is a no-op."""
         snap = self._replay()
         have_matched = (when_matched_update is not None
                         or when_matched_delete is not None)
-        if when_matched_delete is True \
-                and when_matched_update is not None:
-            raise ValueError(
-                "unconditional WHEN MATCHED DELETE together with an "
-                "update clause leaves no rows to update — give the "
-                "delete a condition")
-        self._check_writable(
-            snap, "merge" if have_matched else "append")
+        self._check_writable(snap, "merge" if have_matched else "append")
         meta = snap["metaData"]
         schema = T.StructType.fromJson(
             json.loads(meta["schemaString"]))
-        names = [f.name for f in schema.fields]
         part_cols = meta.get("partitionColumns") or []
         cdf = self._cdf_enabled(snap)
-        table_path = os.path.abspath(self.path)
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
-        old_json = {os.path.join(table_path, rel): json.dumps(dv)
-                    for rel, dv in old_dv.items() if dv}
-        cond = F.expr(on) if isinstance(on, str) else on
-        tgt = self.read(spark, snap["version"],
-                        _with_pos=True).alias("t")
-        src = source.alias("s")
-
-        def t_image(df):
-            return df.select(*[F.col(f"t.`{f.name}`").alias(f.name)
-                               for f in schema.fields])
-
-        touched: list = []
-        updated = deleted = None
-        matched = None
-        try:
-            if have_matched:
-                matched = tgt.join(src, cond, "inner").persist()
-                dup = (matched
-                       .groupBy(F.col("t.`_dl_path`"),
-                                F.col("t.`_dl_pos`"))
-                       .count().filter(F.col("count") > 1)
-                       .limit(1).count())
-                if dup:
-                    raise ValueError(
-                        "MERGE: multiple source rows match the same "
-                        "target row — the matched clauses are "
-                        "ambiguous (dedupe the source on the join "
-                        "key)")
-                if when_matched_delete is None:
-                    dcond = F.lit(False)
-                elif when_matched_delete is True:
-                    dcond = F.lit(True)
-                elif isinstance(when_matched_delete, str):
-                    dcond = F.expr(when_matched_delete)
-                else:
-                    dcond = when_matched_delete
-                # SQL MERGE clause semantics: a NULL delete condition
-                # is NOT a delete — eqNullSafe(True) so the delete set
-                # and the update set PARTITION the matched rows
-                # (plain filter(dcond)/filter(~dcond) would both drop
-                # NULL-condition rows, losing them entirely).
-                dcond = dcond.eqNullSafe(F.lit(True))
-                affected = (matched if when_matched_update is not None
-                            else matched.filter(dcond))
-                touched = self._write_dvs(
-                    spark,
-                    affected.select(
-                        F.col("t.`_dl_path`").alias("_dl_path"),
-                        F.col("t.`_dl_pos`").alias("_dl_pos")),
-                    old_json)
-                if when_matched_delete is not None:
-                    deleted = matched.filter(dcond)
-                if when_matched_update is not None:
-                    upd_rows = (matched.filter(~dcond)
-                                if when_matched_delete is not None
-                                else matched)
-                    uex = {c: (F.expr(e) if isinstance(e, str)
-                               else e)
-                           for c, e in when_matched_update.items()}
-                    unknown = sorted(builtins.set(uex)
-                                     - builtins.set(names))
-                    if unknown:
-                        raise ValueError(
-                            f"MERGE update references unknown "
-                            f"columns {unknown}")
-                    updated = upd_rows.select(
-                        *[(uex[f.name].cast(f.dataType)
-                           if f.name in uex
-                           else F.col(f"t.`{f.name}`"))
-                          .alias(f.name) for f in schema.fields])
-            inserted = None
-            if when_not_matched_insert:
-                not_m = src.join(tgt, cond, "left_anti")
-                if when_not_matched_insert is True:
-                    missing = [n for n in names
-                               if n not in source.columns]
-                    if missing:
-                        raise ValueError(
-                            f"MERGE insert: source lacks table "
-                            f"columns {missing} (pass a mapping "
-                            "dict to fill them)")
-                    inserted = not_m.select(
-                        *[F.col(f"`{f.name}`").cast(f.dataType)
-                          .alias(f.name) for f in schema.fields])
-                else:
-                    iex = {c: (F.expr(e) if isinstance(e, str)
-                               else e)
-                           for c, e in when_not_matched_insert
-                           .items()}
-                    unknown = sorted(builtins.set(iex)
-                                     - builtins.set(names))
-                    if unknown:
-                        raise ValueError(
-                            f"MERGE insert references unknown "
-                            f"columns {unknown}")
-                    inserted = not_m.select(
-                        *[(iex[f.name] if f.name in iex
-                           else F.lit(None)).cast(f.dataType)
-                          .alias(f.name) for f in schema.fields])
-            new_rows = None
-            for piece in (updated, inserted):
-                if piece is None:
-                    continue
-                new_rows = piece if new_rows is None \
-                    else new_rows.unionByName(piece)
-            extra: list[dict] = []
-            cm = self._cm_mapping(snap)
-            if new_rows is not None and not new_rows.isEmpty():
+        tgt = self.read(spark, snap["version"], _with_pos=True)
+        with plan_merge(tgt, source, on, schema, ("_dl_path", "_dl_pos"),
+                        when_matched_update, when_matched_delete,
+                        when_not_matched_insert) as plan:
+            new_rows = plan.new_rows
+            if new_rows is not None and new_rows.isEmpty():
+                new_rows = None
+            if new_rows is not None:
                 self._enforce_constraints(snap, new_rows, "MERGE")
-                extra = self._stage_data_files(new_rows, part_cols,
-                                               cm=cm)
+            touched = ([] if plan.positions is None
+                       else self._write_dvs(spark, plan.positions, snap))
+            cm = self._cm_mapping(snap)
+            extra = ([] if new_rows is None
+                     else self._stage_data_files(new_rows, part_cols,
+                                                 cm=cm))
             if not touched and not extra:
                 return None  # nothing matched, nothing to insert
             if cdf:
-                cdc_df = None
-                pieces = []
-                if updated is not None:
-                    upd_rows = (matched.filter(~dcond)
-                                if when_matched_delete is not None
-                                else matched)
-                    pieces.append(t_image(upd_rows).withColumn(
-                        "_change_type", F.lit("update_preimage")))
-                    pieces.append(updated.withColumn(
-                        "_change_type", F.lit("update_postimage")))
-                if deleted is not None:
-                    pieces.append(t_image(deleted).withColumn(
-                        "_change_type", F.lit("delete")))
-                if inserted is not None:
-                    pieces.append(inserted.withColumn(
-                        "_change_type", F.lit("insert")))
-                for piece in pieces:
-                    cdc_df = piece if cdc_df is None \
-                        else cdc_df.unionByName(piece)
-                if cdc_df is not None and not cdc_df.isEmpty():
+                changes = [
+                    df.withColumn("_change_type", F.lit(kind))
+                    for df, kind in ((plan.preimage, "update_preimage"),
+                                     (plan.updated, "update_postimage"),
+                                     (plan.deleted, "delete"),
+                                     (plan.inserted, "insert"))
+                    if df is not None]
+                cdc_df = functools.reduce(DataFrame.unionByName, changes)
+                if not cdc_df.isEmpty():
                     extra += self._stage_data_files(
                         cdc_df, part_cols, subdir="_change_data",
                         action="cdc", cm=cm)
             return self._commit_row_dml(
-                "MERGE", touched, old_dv, extra, cdf)
-        finally:
-            if matched is not None:
-                matched.unpersist()
+                "MERGE", touched, snap, extra, cdf)
 
     def set_properties(self, props: dict) -> int:
         """ALTER TABLE SET TBLPROPERTIES: merge ``props`` into the
@@ -2400,8 +2240,7 @@ class DeltaTable:
             if conf.get(key) == expr:
                 return cur["version"]
             existing = self.read(spark, cur["version"])
-            bad = existing.filter(
-                ~F.expr(expr).eqNullSafe(F.lit(True))).limit(1)
+            bad = existing.filter(~is_true(F.expr(expr))).limit(1)
             if bad.count():
                 raise ValueError(
                     f"add_constraint {name!r}: existing rows violate "

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from .commit import (commit_attempts, hive_segment, publish_if_absent,
                      replace_atomic, stage_parquet)
+from .dml import plan_merge, set_projection
 from .iceberg import IcebergTable, _localize, _to_spark_schema
 from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
                     zorder_proxy_sql)
@@ -1573,32 +1574,21 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
     """Merge-on-read UPDATE ... SET: rows matching ``where`` are
     masked out of their files via position deletes and the rewritten
     rows (the ``set`` expressions — {column: Column or SQL string},
-    evaluated against the OLD row) land in NEW data files, committed
-    together as ONE ``overwrite`` snapshot — no full file is
-    rewritten and unmatched rows are never copied, mirroring the
-    Delta twin (:meth:`storage.delta.DeltaTable.update`).  Updating
+    evaluated against the OLD row, see
+    :func:`storage.dml.set_projection`) land in NEW data files,
+    committed together as ONE ``overwrite`` snapshot — no full file is
+    rewritten and unmatched rows are never copied.  Updating
     the partition column moves rows to their new Hive directory and
     the new files keep manifest partition summaries + column bounds,
     so the reader's two-level pruning works on updated tables.
 
     Returns the number of updated rows (0 = nothing matched, no
     commit)."""
-    import builtins
-
-    from pyspark.sql import functions as F
-
     table = IcebergTable(path)
     md = table.metadata()
     ice_schema = table._current_schema(md)
-    schema = _to_spark_schema(ice_schema)
-    names = [f.name for f in schema.fields]
-    unknown = sorted(builtins.set(set) - builtins.set(names))
-    if unknown:
-        raise ValueError(
-            f"iceberg update: SET references unknown columns "
-            f"{unknown}")
-    exprs = {c: (F.expr(e) if isinstance(e, str) else e)
-             for c, e in set.items()}
+    projection = set_projection(_to_spark_schema(ice_schema), set,
+                                "iceberg update: SET")
     preds = list(where or [])
     _validate_preds(ice_schema, preds)
     live, files = _live_rows(spark, table, md, preds)
@@ -1607,14 +1597,11 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
     part_info = _part_info(md, ice_schema)
     matched = live.persist()
     try:
+        updated = matched.select(*projection)
         del_entries, n, refd = _stage_position_deletes(
             spark, path, _position_hits(spark, matched, files))
         if not del_entries:
             return 0
-        updated = matched.select(
-            *[(exprs[f.name].cast(f.dataType) if f.name in exprs
-               else F.col(f"`{f.name}`")).alias(f.name)
-              for f in schema.fields])
         data_entries = _stage_data_files(updated, path, part_info,
                                          ice_schema)
         _bound_entries(data_entries, ice_schema)
@@ -1630,155 +1617,39 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
                   on, when_matched_update: dict | None = None,
                   when_matched_delete=None,
                   when_not_matched_insert=True) -> int | None:
-    """MERGE INTO the Iceberg table USING ``source`` ON ``on`` (a SQL
-    string or Column over the aliases ``t`` = target, ``s`` = source
-    — qualify ambiguous names), with the same clause semantics as the
-    Delta twin (:meth:`storage.delta.DeltaTable.merge`):
-
-    - ``when_matched_update``: {target column: expression over t/s}
-      rewrites every matched target row (merge-on-read: position
-      deletes + new data files).
-    - ``when_matched_delete``: a condition over t/s (or True for
-      unconditional) — matched rows satisfying it are
-      position-deleted; with an update clause present the delete
-      condition wins and the update applies to the REMAINING matched
-      rows.
-    - ``when_not_matched_insert``: True inserts source rows as-is
-      (the source must carry every table column), a dict maps
-      {target column: expression over s} with unlisted columns null,
-      False/None disables inserts.
-
-    Multiple source rows matching one target row make the matched
-    clauses ambiguous and raise (detected with one aggregation over
-    the match pairs).  An insert-only merge commits as an ``append``
+    """MERGE INTO the Iceberg table USING ``source`` ON ``on``, with
+    the clauses :func:`storage.dml.plan_merge` defines (``t`` =
+    target, ``s`` = source).  Merge-on-read: matched rows are
+    position-deleted and the updated and inserted rows land in new
+    data files.  An insert-only merge commits as an ``append``
     snapshot (incremental append scans keep working); any matched
     clause commits as ``overwrite``.  Returns the committed snapshot
     id, or None when the merge is a no-op."""
-    import builtins
-
-    from pyspark.sql import functions as F
-
-    if when_matched_delete is True and when_matched_update is not None:
-        raise ValueError(
-            "unconditional WHEN MATCHED DELETE together with an "
-            "update clause leaves no rows to update — give the "
-            "delete a condition")
     table = IcebergTable(path)
     md = table.metadata()
     ice_schema = table._current_schema(md)
     schema = _to_spark_schema(ice_schema)
-    names = [f.name for f in schema.fields]
     part_info = _part_info(md, ice_schema)
-    cond = F.expr(on) if isinstance(on, str) else on
     live, files = _live_rows(spark, table, md, [])
     if live is None:
         full = T.StructType(list(schema.fields) + [
             T.StructField("_ice_path", T.StringType()),
             T.StructField("_ice_pos", T.LongType())])
         live = spark.createDataFrame([], full)
-    tgt = live.alias("t")
-    src = source.alias("s")
-    have_matched = (when_matched_update is not None
-                    or when_matched_delete is not None)
-
-    matched = None
-    updated = None
     del_entries: list[dict] = []
     refd: set[str] = set()
-    try:
-        if have_matched:
-            matched = tgt.join(src, cond, "inner").persist()
-            dup = (matched
-                   .groupBy(F.col("t.`_ice_path`"),
-                            F.col("t.`_ice_pos`"))
-                   .count().filter(F.col("count") > 1)
-                   .limit(1).count())
-            if dup:
-                raise ValueError(
-                    "MERGE: multiple source rows match the same "
-                    "target row — the matched clauses are ambiguous "
-                    "(dedupe the source on the join key)")
-            if when_matched_delete is None:
-                dcond = F.lit(False)
-            elif when_matched_delete is True:
-                dcond = F.lit(True)
-            elif isinstance(when_matched_delete, str):
-                dcond = F.expr(when_matched_delete)
-            else:
-                dcond = when_matched_delete
-            # SQL MERGE clause semantics: NULL delete condition is
-            # NOT a delete — eqNullSafe(True) so delete-set and
-            # update-set partition the matched rows (same fix as the
-            # Delta twin: plain filter(dcond)/filter(~dcond) both
-            # drop NULL rows, silently losing them).
-            dcond = dcond.eqNullSafe(F.lit(True))
-            affected = (matched if when_matched_update is not None
-                        else matched.filter(dcond))
+    data_entries: list[dict] = []
+    with plan_merge(live, source, on, schema, ("_ice_path", "_ice_pos"),
+                    when_matched_update, when_matched_delete,
+                    when_not_matched_insert) as plan:
+        if plan.positions is not None:
             del_entries, _, refd = _stage_position_deletes(
-                spark, path,
-                _position_hits(
-                    spark,
-                    affected.select(
-                        F.col("t.`_ice_path`").alias("_ice_path"),
-                        F.col("t.`_ice_pos`").alias("_ice_pos")),
-                    files))
-            if when_matched_update is not None:
-                upd_rows = (matched.filter(~dcond)
-                            if when_matched_delete is not None
-                            else matched)
-                uex = {c: (F.expr(e) if isinstance(e, str) else e)
-                       for c, e in when_matched_update.items()}
-                unknown = sorted(builtins.set(uex)
-                                 - builtins.set(names))
-                if unknown:
-                    raise ValueError(
-                        f"MERGE update references unknown columns "
-                        f"{unknown}")
-                updated = upd_rows.select(
-                    *[(uex[f.name].cast(f.dataType) if f.name in uex
-                       else F.col(f"t.`{f.name}`")).alias(f.name)
-                      for f in schema.fields])
-        inserted = None
-        if when_not_matched_insert:
-            not_m = src.join(tgt, cond, "left_anti")
-            if when_not_matched_insert is True:
-                missing = [n for n in names
-                           if n not in source.columns]
-                if missing:
-                    raise ValueError(
-                        f"MERGE insert: source lacks table columns "
-                        f"{missing} (pass a mapping dict to fill "
-                        "them)")
-                inserted = not_m.select(
-                    *[F.col(f"`{f.name}`").cast(f.dataType)
-                      .alias(f.name) for f in schema.fields])
-            else:
-                iex = {c: (F.expr(e) if isinstance(e, str) else e)
-                       for c, e in when_not_matched_insert.items()}
-                unknown = sorted(builtins.set(iex)
-                                 - builtins.set(names))
-                if unknown:
-                    raise ValueError(
-                        f"MERGE insert references unknown columns "
-                        f"{unknown}")
-                inserted = not_m.select(
-                    *[(iex[f.name] if f.name in iex
-                       else F.lit(None)).cast(f.dataType)
-                      .alias(f.name) for f in schema.fields])
-        new_rows = None
-        for piece in (updated, inserted):
-            if piece is None:
-                continue
-            new_rows = piece if new_rows is None \
-                else new_rows.unionByName(piece)
-        data_entries: list[dict] = []
+                spark, path, _position_hits(spark, plan.positions, files))
+        new_rows = plan.new_rows
         if new_rows is not None and not new_rows.isEmpty():
             data_entries = _stage_data_files(
                 new_rows, path, part_info, ice_schema)
             _bound_entries(data_entries, ice_schema)
-    finally:
-        if matched is not None:
-            matched.unpersist()
     if not del_entries and not data_entries:
         return None
     operation = "append" if not del_entries else "overwrite"

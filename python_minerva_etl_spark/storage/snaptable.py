@@ -112,6 +112,10 @@ def _overlaps(stats: dict[str, list[Any]],
                for c, (blo, bhi) in envelope.items() if c in stats)
 
 
+# a rewrite's file-size target: the cap on records per file is this
+# over the published bytes per row (``_records_per_file_cap``)
+TARGET_FILE_BYTES = 128 << 20
+
 _BLOOM_BITS = 2048
 _BLOOM_K = 4
 _BLOOM_MAX_ROWS = 5_000_000  # skip bloom build on pathological files
@@ -358,15 +362,15 @@ class SnapTable:
 
     # ---------------- write ----------------
 
-    def _records_per_file_cap(self, spark: SparkSession) -> int | None:
+    def _records_per_file_cap(self) -> int | None:
         """r12 verdict item 9 (guide §6 output sizing): derive a
         ``maxRecordsPerFile`` cap from the PUBLISHED footer stats —
-        bytes/row over the latest manifest's entries against a target
-        file size (``spark.minerva.snaptable.targetFileBytes``,
-        default 128 MB) — so a skewed shuffle partition cannot write
-        one multi-GB file.  First write (no stats yet) and
-        empty-table edges return None (no cap).  The cap only SPLITS
-        oversized partitions; small-file coalescing stays AQE's job.
+        bytes/row over the latest manifest's entries against
+        :data:`TARGET_FILE_BYTES` — so a skewed shuffle partition
+        cannot write one multi-GB file.  First write (no stats yet)
+        and empty-table edges return None (no cap).  The cap only
+        SPLITS oversized partitions; small-file coalescing stays
+        AQE's job.
         """
         v = self.latest_version()
         if v is None:
@@ -376,21 +380,13 @@ class SnapTable:
         byts = sum(e["bytes"] for e in entries)
         if rows <= 0 or byts <= 0:
             return None
-        try:
-            target = int(spark.conf.get(
-                "spark.minerva.snaptable.targetFileBytes",
-                str(128 << 20)))
-        except Exception:
-            target = 128 << 20
-        if target <= 0:      # explicit off-switch
-            return None
-        return max(1, int(target * rows / byts))
+        return max(1, int(TARGET_FILE_BYTES * rows / byts))
 
     def _write_data(self, df: DataFrame, key: list[str]) -> list[dict]:
         cdir = f"c-{uuid.uuid4().hex[:12]}"
         full = os.path.join(self.path, "data", cdir)
         writer = df.write.mode("error")
-        cap = self._records_per_file_cap(df.sparkSession)
+        cap = self._records_per_file_cap()
         if cap:
             writer = writer.option("maxRecordsPerFile", cap)
         writer.parquet(full)

@@ -56,29 +56,29 @@ def test_merge_last_wins_parity(spark, tmp_path):
     assert _sorted_rows(tbl.read(spark)) == _sorted_rows(expect)
 
 
-def test_write_caps_records_per_file_from_stats(spark, tmp_path):
+def test_write_caps_records_per_file_from_stats(spark, tmp_path,
+                                                monkeypatch):
     """r13 (guide §6): once footer stats exist, a rewrite caps
-    maxRecordsPerFile at targetFileBytes/bytes-per-row, so a skewed
+    maxRecordsPerFile at TARGET_FILE_BYTES/bytes-per-row, so a skewed
     single partition cannot produce one unbounded file.  The first
     write (no stats yet) is uncapped; the result data is unchanged."""
+    from python_minerva_etl_spark.storage import snaptable
+
     tbl = SnapTable(str(tmp_path / "t"))
     rows = [(e, "a", e, float(e)) for e in range(400)]
     tbl.append(spark, _mk(spark, rows).coalesce(1), KEY)
     v1_files = len(tbl.files(tbl.latest_version()))
     assert v1_files == 1                     # uncapped first write
     bpr = sum(e["bytes"] for e in tbl.files(1)) / 400
-    spark.conf.set("spark.minerva.snaptable.targetFileBytes",
-                   str(int(bpr * 100)))      # ~100 rows per file
-    try:
-        more = [(1000 + e, "b", e, float(e)) for e in range(400)]
-        tbl.append(spark, _mk(spark, more).coalesce(1), KEY)
-        new = [f for f in tbl.files(tbl.latest_version())
-               if f not in tbl.files(1)]
-        assert len(new) >= 3                 # split despite 1 partition
-        assert sum(f["rows"] for f in new) == 400
-        assert tbl.read(spark).count() == 800
-    finally:
-        spark.conf.unset("spark.minerva.snaptable.targetFileBytes")
+    monkeypatch.setattr(snaptable, "TARGET_FILE_BYTES",
+                        int(bpr * 100))      # ~100 rows per file
+    more = [(1000 + e, "b", e, float(e)) for e in range(400)]
+    tbl.append(spark, _mk(spark, more).coalesce(1), KEY)
+    new = [f for f in tbl.files(tbl.latest_version())
+           if f not in tbl.files(1)]
+    assert len(new) >= 3                     # split despite 1 partition
+    assert sum(f["rows"] for f in new) == 400
+    assert tbl.read(spark).count() == 800
 
 
 def test_merge_batch_outranks_stored(spark, tmp_path):

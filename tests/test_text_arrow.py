@@ -266,6 +266,35 @@ def test_size_estimate_reads_escaped_paths(spark, tmp_path):
     assert "MapIn" not in plan and "Python" not in plan, plan
 
 
+def test_kernel_entry_points_list_their_input_once(spark, tmp_path,
+                                                   monkeypatch):
+    """On the kernel side, the crossover and the split estimate share
+    one ``inputFiles()`` listing: one per ``text_counts_arrow`` call
+    and one per ``dsir_select_arrow`` call."""
+    from python_minerva_etl_spark.ext import text_arrow
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([(0, "the cat sat"), (1, "a dog ran off")],
+                          "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    calls = []
+    listing = text_arrow._input_files_and_bytes
+
+    def counted(df):
+        calls.append(df)
+        return listing(df)
+
+    monkeypatch.setattr(text_arrow, "_input_files_and_bytes", counted)
+    monkeypatch.setattr(text_arrow, "TEXT_KERNEL_MIN_INPUT_BYTES", 0)
+    out = text_arrow.text_counts_arrow(docs, carry_cols=["doc_id"])
+    assert len(calls) == 1
+    assert out.count() == 2
+    del calls[:]
+    out = text_arrow.dsir_select_arrow(docs, 1, n_buckets=16)
+    assert len(calls) == 1
+    assert out.count() == 1
+
+
 def _c4_reference(df, carry):
     """The column-form C4 reference: ext/text c4_line_stats +
     c4_page_rules, in c4_rules_kernel's column order."""
@@ -406,8 +435,9 @@ def test_gopher_quintuple_on_fixture_corpus(spark):
 
 
 def test_text_entry_points_have_no_override_or_second_copy():
-    """The text-kernel crossover is a constant no conf or parameter
-    overrides, the C4 rules have no fast JVM form beside the kernel,
+    """No ``spark.minerva.*`` conf is read anywhere in the package, the
+    text-kernel crossover is a constant no parameter overrides, the C4
+    rules have no fast JVM form beside the kernel,
     and the JVM-side counts reuse ext/text's expressions: the BPE-ish
     regex is written once under ext/ (docstrings aside), as
     BPE_ISH_PATTERN."""
@@ -427,8 +457,8 @@ def test_text_entry_points_have_no_override_or_second_copy():
             rel = os.path.relpath(path, root)
             with open(path) as fh:
                 src = fh.read()
-            if "spark.minerva.text." in src:
-                offenders.append(f"{rel}: spark.minerva.text. conf")
+            if "spark.minerva." in src:
+                offenders.append(f"{rel}: spark.minerva. conf")
             tree = ast.parse(src, path)
             docstrings = {
                 id(node.body[0].value) for node in ast.walk(tree)
