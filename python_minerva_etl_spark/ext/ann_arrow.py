@@ -1,5 +1,6 @@
-"""Arrow-vectorized execution twins for the ANN family (EXT-SIM-TOPK,
-EXT-DEDUP-NEAR embedding path).
+"""Arrow-vectorized ANN kernels (EXT-SIM-TOPK, EXT-DEDUP-NEAR
+embedding path): the LSH top-k of ``sim_topk_lsh``, the LSH pair join
+of ``dedup_embedding_lsh`` and the PQ/ADC top-k of ``sim_topk_pq``.
 
 The r11 recall artifact recorded the DataFrame LSH/PQ paths LOSING to
 the exact Arrow baseline at every measured scale — the bucket/cell
@@ -7,35 +8,34 @@ the exact Arrow baseline at every measured scale — the bucket/cell
 within-bucket scoring ran as per-element JVM HOF folds
 (``aggregate(zip_with(...))``, ~10-100 ns per element-op) while the
 exact twin did one BLAS matmul per Arrow batch.  This module keeps the
-index structures (hyperplane buckets, IVF cells, PQ codebooks — the
-100 TB story) and routes ALL per-vector arithmetic through numpy
-inside ``mapInPandas`` kernels:
+index structures (hyperplane buckets, PQ codebooks) and routes ALL
+per-vector arithmetic through numpy inside ``mapInPandas`` kernels:
 
-- signatures / cell assignment / PQ encoding: one matmul per batch;
-- candidate scoring: blocked submatrix matmuls per (bucket|cell);
+- signatures / PQ encoding: one matmul per batch;
+- candidate scoring: blocked submatrix matmuls per bucket;
 - per-batch partial top-k inside the kernel (argpartition + exact
   tie-break), so the final Spark window ranks ``n_batches x m x k``
   rows instead of every scored pair.
 
-Index derivations stay bit-deterministic and IDENTICAL to the
-DataFrame twins in :mod:`.similarity` where possible:
+Index derivations are bit-deterministic:
 
 - LSH hyperplanes: the same ``xxhash64(seed, t, p, i) / 2^63``
-  coefficients, computed by one tiny JVM job (T x P x d doubles of
-  bounded metadata) — see :func:`hyperplane_matrix`.  Bucket codes can
-  differ from the HOF twin only where a projection is within float
-  reassociation error of zero (agreement asserted >= 99% in tests).
-- IVF seeds / PQ seeds: the same lowest-``xxhash64(id)`` corpus
-  sample; Lloyd refinement uses per-partition partial sums (bounded:
-  n_partitions x K rows collected — driver scalars, not corpus data).
+  coefficients as :func:`.similarity.lsh_bucketed_topk`, the JVM
+  reference the tests compare against, computed by one tiny JVM job
+  (T x P x d doubles of bounded metadata) — see
+  :func:`hyperplane_matrix`.  Bucket codes can differ from the
+  reference only where a projection is within float reassociation
+  error of zero (agreement asserted >= 99% in tests).
+- PQ seeds: the lowest-``xxhash64(id)`` corpus sample, the recipe of
+  the IVF centroids in :mod:`.similarity`; Lloyd refinement uses
+  per-partition partial sums (bounded: n_partitions x m x ksub rows
+  collected — driver scalars, not corpus data).
 
 Scale notes (100 TB): every kernel is a single corpus scan with no
 shuffle before the bounded top-k window; the query side is collected
 and closed over (queries << corpus, the same contract as
-``brute_force_topk_arrow``).  For a standing corpus the signatures /
-codes / cells would be persisted once (see ``build_ivf_index``) and
-the scan prunes on them; these functions recompute per call so the
-probe artifacts can price that build honestly.
+``brute_force_topk_arrow``).  A trained PQ quantizer can be passed
+back in (``codebooks``) to reuse it across query batches.
 """
 
 from __future__ import annotations
@@ -257,13 +257,12 @@ def cosine_pairs_lsh_arrow(corpus: DataFrame, threshold: float,
                            vec_col: str = "embedding",
                            seed: int = 42) -> DataFrame:
     """EXT embedding near-dup, Arrow-vectorized scale path: the same
-    sign-bucket candidate generation as ``similarity.cosine_pairs_lsh``
-    (self-join on (table, bucket) — the one unavoidable shuffle), but
-    signatures come from one matmul per batch and the candidate
-    verification is a rowwise-einsum kernel instead of a per-pair HOF
-    fold.  Output contract: (id_a < id_b, cosine >= threshold) on LSH
-    candidates — approximate by recall misses, precision 1.0 (every
-    candidate is exactly verified)."""
+    sign-bucket codes as ``similarity.lsh_bucketed_topk``, self-joined
+    on (table, bucket) — the one unavoidable shuffle; signatures come
+    from one matmul per batch and the candidate verification is a
+    rowwise-einsum kernel.  Output contract: (id_a < id_b, cosine >=
+    threshold) on LSH candidates — approximate by recall misses,
+    precision 1.0 (every candidate is exactly verified)."""
     spark = corpus.sparkSession
     head = corpus.select(vec_col).first()
     if head is None:
@@ -329,250 +328,12 @@ def cosine_pairs_lsh_arrow(corpus: DataFrame, threshold: float,
     return cand.mapInPandas(score_kern, out_schema)
 
 
-# ---------------------------------------------------------------- IVF
-
-def _partial_mean_rows(corpus: DataFrame, vec_col: str,
-                       assign_fn) -> list:
-    """One corpus scan emitting per-PARTITION per-cell (cell, n, sum)
-    partials; collected rows are bounded by n_partitions x K — driver
-    scalars (the codebook/centroid means), not corpus data."""
-    import pandas as pd
-    schema = "cell int, n long, s array<double>"
-
-    def kern(batches):
-        acc_n: dict[int, int] = {}
-        acc_s: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            X = _mat(pdf[vec_col])
-            cells = assign_fn(X)
-            for cell in np.unique(cells):
-                rows = cells == cell
-                c = int(cell)
-                acc_n[c] = acc_n.get(c, 0) + int(rows.sum())
-                s = X[rows].sum(axis=0)
-                acc_s[c] = acc_s[c] + s if c in acc_s else s
-        if acc_n:
-            yield pd.DataFrame({
-                "cell": list(acc_n),
-                "n": [acc_n[c] for c in acc_n],
-                "s": [acc_s[c] for c in acc_n]})
-
-    return corpus.select(vec_col).mapInPandas(kern, schema).collect()
-
-
-def _ivf_centroids_arrow(corpus: DataFrame, num_cells: int,
-                         lloyd_iters: int, id_col: str,
-                         vec_col: str) -> np.ndarray:
-    """Same deterministic recipe as ``similarity._ivf_centroids``
-    (seeds = lowest-xxhash64(id) sample) with the Lloyd refinement
-    done by numpy partial sums instead of a posexplode shuffle."""
-    seeds = (corpus.orderBy(F.xxhash64(F.col(id_col)))
-             .limit(num_cells).select(vec_col).collect())
-    if not seeds:
-        raise ValueError("ivf_arrow: empty corpus")
-    C = np.array([list(r[0]) for r in seeds], dtype=np.float64)
-
-    for _ in range(lloyd_iters):
-        Cn = np.linalg.norm(C, axis=1)
-        Cn[Cn == 0] = 1.0
-        Cmat = C.copy()
-
-        def assign(X, _C=Cmat, _Cn=Cn):
-            Xn = np.linalg.norm(X, axis=1)
-            Xn[Xn == 0] = 1.0
-            S = (X @ _C.T) / np.outer(Xn, _Cn)
-            # ties break to the larger cell id, like the struct-max
-            return (S.shape[1] - 1
-                    - np.argmax(S[:, ::-1], axis=1)).astype(np.int64)
-
-        rows = _partial_mean_rows(corpus, vec_col, assign)
-        n = np.zeros(len(C))
-        s = np.zeros_like(C)
-        for r in rows:
-            n[r.cell] += r.n
-            s[r.cell] += np.array(r.s)
-        nz = n > 0
-        C[nz] = s[nz] / n[nz, None]              # empty cell keeps seed
-    return C
-
-
-def ivf_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
-                   num_cells: int = 16, nprobe: int = 4,
-                   lloyd_iters: int = 1, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   centroids: np.ndarray | None = None) -> DataFrame:
-    """IVF top-k, Arrow-vectorized: nearest-centroid assignment and
-    within-cell scoring are batch matmuls; each query probes its
-    ``nprobe`` nearest cells (computed driver-side on the collected
-    query matrix).  Pass ``centroids`` to reuse a trained quantizer
-    across query batches (the build-once contract)."""
-    C = (centroids if centroids is not None
-         else _ivf_centroids_arrow(corpus, num_cells, lloyd_iters,
-                                   id_col, vec_col))
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
-    Cn = np.linalg.norm(C, axis=1)
-    Cn[Cn == 0] = 1.0
-    Qn = np.linalg.norm(Q, axis=1)
-    qS = (Q @ C.T) / np.outer(Qn, Cn)
-    nprobe = min(nprobe, C.shape[0])
-    probe_cells = np.argpartition(-qS, nprobe - 1, axis=1)[:, :nprobe]
-    lut: dict[int, list[int]] = {}
-    for qi in range(len(q_ids)):
-        for cell in probe_cells[qi]:
-            lut.setdefault(int(cell), []).append(qi)
-    lut_np = {c: np.array(v, dtype=np.int64) for c, v in lut.items()}
-
-    def kern(batches):
-        for pdf in batches:
-            X = _mat(pdf[vec_col])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            Xn = np.linalg.norm(X, axis=1)
-            Xn[Xn == 0] = 1.0
-            S = (X @ C.T) / np.outer(Xn, Cn)
-            cells = (S.shape[1] - 1
-                     - np.argmax(S[:, ::-1], axis=1)).astype(np.int64)
-            qs, cs, ss = [], [], []
-            for cell, rows in _corpus_groups(cells):
-                qidx = lut_np.get(cell)
-                if qidx is None:
-                    continue
-                Sc = (X[rows] @ Q[qidx].T
-                      / np.outer(Xn[rows], Qn[qidx]))
-                qs.append(np.repeat(qidx, len(rows)))
-                cs.append(np.tile(ids[rows], len(qidx)))
-                ss.append(Sc.T.ravel())
-            if not qs:
-                continue
-            qi = np.concatenate(qs)
-            ci = np.concatenate(cs)
-            sc = np.concatenate(ss)
-            keep = q_ids[qi] != ci
-            qi, ci, sc = _group_topk(qi[keep], ci[keep], sc[keep], k)
-            yield _emit(q_ids, qi, ci, sc)
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(kern, _PAIR_SCHEMA)
-    return _rank_topk(cand, k)
-
-
-def build_ivf_index_arrow(corpus: DataFrame, path: str,
-                          num_cells: int = 16, lloyd_iters: int = 1,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> None:
-    """Arrow twin of ``similarity.build_ivf_index`` (same on-disk
-    layout: ``<path>/centroids`` + hive-partitioned ``<path>/corpus``)
-    with training and assignment as numpy kernels — the builder that
-    stays tractable when the corpus is millions of vectors."""
-    import os
-
-    spark = corpus.sparkSession
-    C = _ivf_centroids_arrow(corpus, num_cells, lloyd_iters,
-                             id_col, vec_col)
-    cent_rows = [(i, [float(x) for x in C[i]],
-                  float(np.linalg.norm(C[i])) or 1.0)
-                 for i in range(C.shape[0])]
-    (spark.createDataFrame(cent_rows, "cell int, v array<double>, n double")
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "centroids")))
-
-    Cn = np.linalg.norm(C, axis=1)
-    Cn[Cn == 0] = 1.0
-    schema = ("corpus_id long, c_vec array<double>, c_norm double, "
-              "cell int")
-
-    def assign_kern(batches):
-        import pandas as pd
-        for pdf in batches:
-            X = _mat(pdf[vec_col])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            Xn = np.linalg.norm(X, axis=1)
-            safe = np.where(Xn == 0, 1.0, Xn)
-            S = (X @ C.T) / np.outer(safe, Cn)
-            cells = (S.shape[1] - 1
-                     - np.argmax(S[:, ::-1], axis=1)).astype(np.int32)
-            yield pd.DataFrame({"corpus_id": ids, "c_vec": list(X),
-                                "c_norm": Xn, "cell": cells})
-
-    # repartition on cell BEFORE partitionBy: otherwise every input
-    # task writes a file into every cell directory (tasks x cells tiny
-    # files — measured 10x slower at 2M x 250 cells); after the
-    # shuffle each cell is one task -> one well-sized file
-    (corpus.select(id_col, vec_col).mapInPandas(assign_kern, schema)
-     .repartition("cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(os.path.join(path, "corpus")))
-
-
-def ivf_topk_indexed_arrow(spark, queries: DataFrame, index_path: str,
-                           k: int, nprobe: int = 4,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """Query a persisted ``similarity.build_ivf_index`` index with
-    Arrow scoring: the probe set is computed driver-side on the
-    collected query matrix, pushed as a LITERAL partition filter (the
-    scan lists and reads ONLY the probed ``cell=`` directories —
-    physical nprobe/num_cells I/O, the 100 TB shape), and the
-    within-cell scoring is a blocked numpy matmul.  The one path in
-    the family that skips both the scoring flops AND the corpus scan.
-    """
-    import os
-
-    cent_rows = (spark.read.parquet(os.path.join(index_path, "centroids"))
-                 .orderBy("cell").collect())
-    C = np.array([[float(x) for x in r.v] for r in cent_rows])
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
-    Cn = np.linalg.norm(C, axis=1)
-    Cn[Cn == 0] = 1.0
-    Qn = np.linalg.norm(Q, axis=1)
-    qS = (Q @ C.T) / np.outer(Qn, Cn)
-    nprobe = min(nprobe, C.shape[0])
-    probe_cells = np.argpartition(-qS, nprobe - 1, axis=1)[:, :nprobe]
-    lut: dict[int, list[int]] = {}
-    for qi in range(len(q_ids)):
-        for cell in probe_cells[qi]:
-            lut.setdefault(int(cell), []).append(qi)
-    lut_np = {c: np.array(v, dtype=np.int64) for c, v in lut.items()}
-    probed = sorted(lut_np)
-
-    corpus = (spark.read.parquet(os.path.join(index_path, "corpus"))
-              .filter(F.col("cell").isin(probed)))
-
-    def kern(batches):
-        for pdf in batches:
-            X = _mat(pdf["c_vec"])
-            ids = pdf["corpus_id"].to_numpy(dtype=np.int64)
-            Xn = pdf["c_norm"].to_numpy(dtype=np.float64)
-            Xn[Xn == 0] = 1.0
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            qs, cs, ss = [], [], []
-            for cell, rows in _corpus_groups(cells):
-                qidx = lut_np.get(cell)
-                if qidx is None:
-                    continue
-                Sc = (X[rows] @ Q[qidx].T
-                      / np.outer(Xn[rows], Qn[qidx]))
-                qs.append(np.repeat(qidx, len(rows)))
-                cs.append(np.tile(ids[rows], len(qidx)))
-                ss.append(Sc.T.ravel())
-            if not qs:
-                continue
-            qi = np.concatenate(qs)
-            ci = np.concatenate(cs)
-            sc = np.concatenate(ss)
-            keep = q_ids[qi] != ci
-            qi, ci, sc = _group_topk(qi[keep], ci[keep], sc[keep], k)
-            yield _emit(q_ids, qi, ci, sc)
-
-    cand = (corpus.select("corpus_id", "c_vec", "c_norm", "cell")
-            .mapInPandas(kern, _PAIR_SCHEMA))
-    return _rank_topk(cand, k)
-
-
 # ----------------------------------------------------------------- PQ
 
 def _pq_encode_np(X: np.ndarray, CB: np.ndarray):
     """(b, d) -> codes (b, m) int64 0-based + recon sq-norm (b,).
     Per subspace: argmin ||sub - cw||^2 via the expanded form
-    (sq - 2 dot), the same comparison the SQL twin uses."""
+    (sq - 2 dot), which avoids materializing the difference."""
     m, ksub, dsub = CB.shape
     b = X.shape[0]
     codes = np.empty((b, m), dtype=np.int64)
@@ -590,9 +351,9 @@ def _pq_encode_np(X: np.ndarray, CB: np.ndarray):
 def _pq_codebooks_arrow(corpus: DataFrame, m: int, ksub: int,
                         iters: int, id_col: str,
                         vec_col: str) -> np.ndarray:
-    """Deterministic PQ training (same seeds as
-    ``similarity._pq_codebooks``: lowest-xxhash64(id) sample split
-    into sub-vectors) with Lloyd steps as numpy partial sums.
+    """Deterministic PQ training: the seeds are the ``ksub`` corpus
+    vectors with the smallest ``xxhash64(id)`` split into sub-vectors,
+    refined by ``iters`` Lloyd steps as numpy partial sums.
     Returns (m, ksub, dsub)."""
     seeds = (corpus.orderBy(F.xxhash64(F.col(id_col)))
              .limit(ksub).select(vec_col).collect())
@@ -643,8 +404,7 @@ def pq_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
                   m: int = 32, ksub: int = 16, train_iters: int = 2,
                   rerank: int | None = None,
                   id_col: str = "vec_id", vec_col: str = "embedding",
-                  codebooks: np.ndarray | None = None,
-                  adc_dtype=None) -> DataFrame:
+                  codebooks: np.ndarray | None = None) -> DataFrame:
     """PQ/ADC top-k (Jegou et al., TPAMI 2011), Arrow-vectorized:
     encoding is m small matmuls per batch, ADC scoring is a gathered
     LUT sum, and the optional exact re-rank of the per-query ADC
@@ -652,15 +412,9 @@ def pq_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
     (the raw batch is still in memory) — no second corpus pass.
     Pass ``codebooks`` to reuse a trained quantizer (build-once).
 
-    ``adc_dtype``: accumulator/LUT dtype for the ADC gather-sum.
-    The default float64 is BIT-PRESERVING and is what the declared
-    query uses.  ``numpy.float32`` halves the memory traffic of the
-    dominant gather loop (the ADC sum is bandwidth-bound — r12
-    cache-blocking evidence) at ~1e-7 relative score error; rankings
-    can differ at near-ties, so it is an opt-in for deployments that
-    re-rank anyway (``rerank``'s exact cosine is computed in float64
-    either way).  Codes are gathered through a uint8 view when
-    ``ksub <= 256`` — index dtype only, always bit-identical."""
+    The ADC gather-sum accumulates in float64, bit-identical to the
+    unblocked per-subspace loop.  Codes are gathered through a uint8
+    view when ``ksub <= 256`` — index dtype only."""
     CB = (codebooks if codebooks is not None
           else _pq_codebooks_arrow(corpus, m, ksub, train_iters,
                                    id_col, vec_col))
@@ -670,8 +424,6 @@ def pq_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
     # per-query LUT: (n_q, m_sub, ksub) dot(q_sub, codeword)
     LUT = np.stack([Q[:, s * dsub:(s + 1) * dsub] @ CB[s].T
                     for s in range(m_sub)], axis=1)
-    acc_dt = np.dtype(adc_dtype if adc_dtype is not None
-                      else np.float64)
     code_dt = np.uint8 if n_codes <= 256 else np.int64
     shortlist = max(rerank, k) if rerank is not None else k
 
@@ -697,13 +449,13 @@ def pq_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
             # the unblocked loop (asserted in tests/test_ann_arrow).
             bsz = X.shape[0]
             adc = np.empty((nq, bsz))
-            luts = [np.ascontiguousarray(LUT[:, s, :].astype(acc_dt))
+            luts = [np.ascontiguousarray(LUT[:, s, :])
                     for s in range(m_sub)]
             cod = codes.astype(code_dt)
-            chunk = max(1, (1 << 21) // (nq * acc_dt.itemsize))
+            chunk = max(1, (1 << 21) // (nq * adc.itemsize))
             for j0 in range(0, bsz, chunk):
                 j1 = min(j0 + chunk, bsz)
-                slab = np.zeros((nq, j1 - j0), dtype=acc_dt)
+                slab = np.zeros((nq, j1 - j0))
                 cj = cod[j0:j1]
                 for s in range(m_sub):
                     slab += luts[s][:, cj[:, s]]

@@ -1,7 +1,10 @@
 """Similarity search over embedding columns (EXT-SIM-TOPK).
 
-Exact brute-force cosine top-k as the oracle-checkable baseline, and
-an LSH-bucketed approximate variant as the 100 TB scale path.
+Exact brute-force cosine top-k as the oracle-checkable baseline (and
+its Arrow twin), the IVF index (``ivf_topk`` and its build-once
+persisted form), exact cosine pair joins, and the LSH-bucketed top-k
+that the Arrow LSH kernels in :mod:`.ann_arrow` are tested against.
+The LSH and PQ scale paths live in :mod:`.ann_arrow`.
 
 Determinism: the dot product is a *sequential left fold* in double
 (``aggregate(zip_with(...))``), verified bit-identical to DuckDB's
@@ -73,15 +76,12 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
 
 
 def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame,
-                      k: int | None,
+                      k: int,
                       num_planes: int = 16, num_tables: int = 4,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding",
                       seed: int = 42) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH (sign sketches).
-    ``k=None`` skips the per-query ranking and returns ALL scored
-    candidate pairs — the building block for threshold-style near-dup
-    (``cosine_pairs_lsh``).
 
     Each vector gets ``num_tables`` bucket codes (one per table,
     ``num_planes`` sign bits each) from deterministic pseudo-random
@@ -130,9 +130,6 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame,
                & (F.col("query_id") != F.col("corpus_id")))
         .select("query_id", "corpus_id", "q_vec", "c_vec").distinct()
     )
-    if k is None:
-        return cand.select("query_id", "corpus_id",
-                           cosine_col("q_vec", "c_vec").alias("cosine"))
     scored = cand.select("query_id", "corpus_id",
                          cosine_col("q_vec", "c_vec").alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(
@@ -408,28 +405,6 @@ def brute_force_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
             .filter(F.col("rank") <= k))
 
 
-def cosine_pairs_lsh(corpus: DataFrame, threshold: float,
-                     num_planes: int = 4, num_tables: int = 16,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     seed: int = 42) -> DataFrame:
-    """EXT embedding near-dup, scale path: the same sign-bucket LSH as
-    ``lsh_bucketed_topk`` generates candidate pairs (id_a < id_b, any
-    shared (table, bucket)), then the exact cosine threshold verifies
-    candidates only — never all pairs.  Same output contract as
-    ``cosine_pairs`` minus LSH recall misses (recall measured in
-    tests/test_similarity.py)."""
-    half = corpus.select(F.col(id_col).alias("id"),
-                         F.col(vec_col).alias("vec"))
-    joined = lsh_bucketed_topk(
-        half, half, k=None, num_planes=num_planes,
-        num_tables=num_tables, id_col="id", vec_col="vec", seed=seed)
-    return (joined.filter(F.col("query_id") < F.col("corpus_id"))
-            .select(F.col("query_id").alias("id_a"),
-                    F.col("corpus_id").alias("id_b"), "cosine")
-            .filter(F.col("cosine") >= threshold))
-
-
 def cosine_pairs(corpus: DataFrame, threshold: float,
                  id_col: str = "vec_id",
                  vec_col: str = "embedding") -> DataFrame:
@@ -438,7 +413,7 @@ def cosine_pairs(corpus: DataFrame, threshold: float,
     the specification the scale paths are tested against.  For the
     EXACT scale path use :func:`cosine_pairs_pivot` (identical
     output, pivot-blocked join); for approximate-recall use
-    ``cosine_pairs_lsh``."""
+    ``ann_arrow.cosine_pairs_lsh_arrow``."""
     a = corpus.select(F.col(id_col).alias("id_a"),
                       F.col(vec_col).alias("vec_a"))
     b = corpus.select(F.col(id_col).alias("id_b"),
@@ -564,169 +539,3 @@ def label_centroids(corpus: DataFrame, label_col: str = "label",
                     F.expr(f"transform(__cs, s -> CAST(s.c AS DOUBLE) "
                            f"/ (n * CAST({scale} AS DOUBLE)))")
                     .alias("centroid")))
-
-
-# ------------------------------------------------------------ product
-# quantization (PQ) — the third classic ANN structure next to LSH and
-# IVF: compress each vector into m sub-space codebook codes, score
-# queries against the COMPRESSED corpus via ADC lookup tables.
-
-def _pq_lit(cbs: list[list[list[float]]]) -> str:
-    """Nested literal: array over subspaces of array over codewords of
-    struct(v array<double>, sq double) — K × m × d/m doubles of plan
-    metadata, exactly like the IVF centroid literal."""
-    subs = []
-    for cb in cbs:
-        ents = []
-        for v in cb:
-            vals = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in v)
-            sq = sum(x * x for x in v)
-            ents.append(f"struct(array({vals}) AS v, "
-                        f"CAST('{sq!r}' AS DOUBLE) AS sq)")
-        subs.append("array(" + ", ".join(ents) + ")")
-    return "array(" + ", ".join(subs) + ")"
-
-
-def _pq_fold_dot(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, "
-            f"(x, y) -> CAST(x AS DOUBLE) * y), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-
-
-def pq_encode(corpus: DataFrame, cbs: list[list[list[float]]],
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """Encode each vector into its per-subspace nearest codewords.
-    Entirely scan-local (codebooks are plan literals): no shuffle, no
-    Python.  Returns (corpus_id, codes array<int> 1-based, recon_norm)
-    where recon_norm = |concat of chosen codewords| — exact, because
-    the squared norm of the reconstruction is the sum of the chosen
-    codewords' squared norms.
-
-    At 100 TB this is the compression pass: 64 float32 (256 B) become
-    m=8 4-bit codes (4 B) + one double — a ~30× smaller standing index
-    that every later query batch scans instead of the raw vectors."""
-    m, dsub = len(cbs), len(cbs[0][0])
-    lit = _pq_lit(cbs)
-    # per subspace s (0-based): argmin_k |sub - v_k|^2; comparing
-    # sq_k - 2*dot(sub, v_k) avoids materializing the difference
-    picks = (
-        f"transform(sequence(0, {m - 1}), s -> "
-        f"array_min(transform(element_at({lit}, s + 1), "
-        f"ct -> struct(ct.sq - 2.0d * "
-        f"{_pq_fold_dot(f'slice(__v, s * {dsub} + 1, {dsub})', 'ct.v')}"
-        f" AS d, ct.sq AS sq, "
-        f"array_position(element_at({lit}, s + 1), ct) AS code))))")
-    enc = (corpus.select(F.col(id_col).alias("corpus_id"),
-                         F.col(vec_col).alias("__v"))
-           .withColumn("__picks", F.expr(picks))
-           .select("corpus_id",
-                   F.expr("transform(__picks, p -> CAST(p.code AS INT))")
-                   .alias("codes"),
-                   F.sqrt(F.expr(
-                       "aggregate(__picks, CAST(0.0 AS DOUBLE), "
-                       "(acc, p) -> acc + p.sq)")).alias("recon_norm")))
-    return enc
-
-
-def _pq_codebooks(corpus: DataFrame, m: int, ksub: int, iters: int,
-                  id_col: str, vec_col: str) -> list[list[list[float]]]:
-    """Deterministic PQ training, mirroring the IVF recipe: seeds are
-    the ``ksub`` corpus vectors with the smallest ``xxhash64(id)``
-    split into sub-vectors, refined per subspace by ``iters`` Lloyd
-    steps (assignment scan-local; means one (s, code, j) hash-agg)."""
-    seeds = (corpus.orderBy(F.xxhash64(F.col(id_col)))
-             .limit(ksub).select(vec_col).collect())
-    if not seeds:
-        raise ValueError("pq: empty corpus")
-    d = len(seeds[0][0])
-    if d % m:
-        raise ValueError(f"pq: dim {d} not divisible by m={m}")
-    dsub = d // m
-    cbs = [[[float(x) for x in r[0][s * dsub:(s + 1) * dsub]]
-            for r in seeds] for s in range(m)]
-    for _ in range(iters):
-        enc = pq_encode(corpus, cbs, id_col, vec_col).join(
-            corpus.select(F.col(id_col).alias("corpus_id"),
-                          F.col(vec_col).alias("__v")), "corpus_id")
-        means = (enc.select(F.posexplode("codes").alias("s", "code"), "__v")
-                 .select("s", "code", F.posexplode(F.expr(
-                     f"slice(__v, s * {dsub} + 1, {dsub})")).alias("j", "x"))
-                 .groupBy("s", "code", "j")
-                 .agg(F.avg(F.col("x").cast("double")).alias("mu"))
-                 .collect())
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            upd.setdefault((r.s, r.code - 1), {})[r.j] = r.mu
-        cbs = [[([upd[(s, k)][j] for j in sorted(upd[(s, k)])]
-                 if (s, k) in upd else cbs[s][k])
-                for k in range(len(cbs[s]))] for s in range(m)]
-    return cbs
-
-
-def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
-            m: int = 32, ksub: int = 16, train_iters: int = 2,
-            rerank: int | None = None,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            codebooks: list[list[list[float]]] | None = None) -> DataFrame:
-    """Approximate top-k via product quantization with ADC
-    (asymmetric distance computation — Jégou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI 2011).
-
-    Each query builds its m × ksub lookup table SCAN-LOCALLY from the
-    codebook literal (no collect of the query side); scoring a corpus
-    vector is then m table lookups instead of a d-element fold:
-    score = dot(q, recon(codes)) / (|q| · |recon|) — the exact cosine
-    against the compressed representation.  ``rerank=r`` adds the
-    standard second stage: the ADC top-r shortlist per query is
-    re-scored with the EXACT cosine against the raw vectors (an
-    equi-join on corpus_id touching r × |queries| rows, never the
-    corpus) and the final top-k comes from that.  Deterministic
-    throughout; approximate by quantization error → rows-only check,
-    recall asserted in tests/test_similarity.py."""
-    cbs = codebooks if codebooks is not None else _pq_codebooks(
-        corpus, m, ksub, train_iters, id_col, vec_col)
-    dsub = len(cbs[0][0])
-    lit = _pq_lit(cbs)
-    lut = (f"transform({lit}, cb -> transform(cb, ct -> "
-           + _pq_fold_dot(
-               f"slice(__v, (array_position({lit}, cb) - 1) * {dsub} + 1, "
-               f"{dsub})", "ct.v")
-           + "))")
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("__v"),
-                        norm_col(vec_col).alias("q_norm"))
-         .withColumn("__lut", F.expr(lut))
-         .drop("__v"))
-    enc = pq_encode(corpus, cbs, id_col, vec_col)
-    adc = ("aggregate(sequence(1, size(codes)), CAST(0.0 AS DOUBLE), "
-           "(acc, s) -> acc + element_at(element_at(__lut, s), "
-           "element_at(codes, s)))")
-    scored = (F.broadcast(q).crossJoin(enc)
-              .filter(F.col("query_id") != F.col("corpus_id"))
-              .select("query_id", "q_norm", "corpus_id",
-                      (F.expr(adc) / (F.col("q_norm")
-                                      * F.col("recon_norm")))
-                      .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id"))
-    if rerank is None:
-        return (scored
-                .withColumn("rank", F.row_number().over(w).cast("bigint"))
-                .filter(F.col("rank") <= k).drop("q_norm"))
-    shortlist = (scored
-                 .withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= max(rerank, k))
-                 .drop("cosine", "rank"))
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("q_vec"))
-    cv = corpus.select(F.col(id_col).alias("corpus_id"),
-                       F.col(vec_col).alias("c_vec"),
-                       norm_col(vec_col).alias("c_norm"))
-    exact = (shortlist.join(cv, "corpus_id").join(F.broadcast(qv), "query_id")
-             .select("query_id", "corpus_id",
-                     (dot_col("q_vec", "c_vec")
-                      / (F.col("q_norm") * F.col("c_norm")))
-                     .alias("cosine")))
-    return (exact.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k))

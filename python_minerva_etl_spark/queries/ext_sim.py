@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 
 from ..ext import similarity as S
 from ..ext.similarity import (brute_force_topk, brute_force_topk_arrow,
-                              cosine_pairs, cosine_pairs_lsh,
-                              cosine_pairs_pivot, ivf_topk,
-                              label_centroids, lsh_bucketed_topk)
+                              cosine_pairs, cosine_pairs_pivot, ivf_topk,
+                              label_centroids)
 from .base import DeclaredQuery, t
 
 _COS = ("list_dot_product({a}, {b}) / "
@@ -103,10 +102,9 @@ def _sim_topk_pq(spark, sf_dir):
     compressed corpus (32 sub-spaces × 16 codewords ≈ 16× smaller than
     the raw vectors), exact re-rank of the ADC top-50 shortlist.  r12:
     training, encoding and ADC scoring routed through the Arrow kernel
-    (ext/ann_arrow.pq_topk_arrow — same lowest-xxhash64 seeds as the
-    HOF spec twin, numpy Lloyd refinement).  Deterministic but
-    approximate → rows-only check; recall recorded in
-    SCALE_r12_ann.json."""
+    (ext/ann_arrow.pq_topk_arrow — lowest-xxhash64 seeds, numpy Lloyd
+    refinement).  Deterministic but approximate → rows-only check;
+    recall recorded in SCALE_r12_ann.json."""
     from ..ext.ann_arrow import pq_topk_arrow
 
     emb = t(spark, sf_dir, "embeddings")

@@ -74,7 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commit import (commit_attempts, hive_values, publish_if_absent,
-                     replace_atomic, stage_parquet)
+                     remove_files, replace_atomic, stage_parquet)
 from .dml import is_true, plan_merge, set_projection, table_projection
 from .stats import (as_of_ms, footer_bounds, may_match, zorder_cluster,
                     zorder_proxy_sql)
@@ -1854,6 +1854,20 @@ class DeltaTable:
                                "_dl_path string, _dv string")
                 .collect())  # bounded: one row per touched file
 
+    def _remove_staged(self, touched: list, actions: list[dict]) -> None:
+        """Delete what a row DML staged before it failed: the ``.bin``
+        of each DV in ``touched`` (inline DVs have none) and the file
+        of each add/cdc action.  Called only before the commit
+        starts — a commit attempt may already reference them."""
+        from .delta_dv import _dv_file_path
+
+        dvs = [json.loads(row["_dv"]) for row in touched]
+        remove_files(
+            [_dv_file_path(self.path, dv["pathOrInlineDv"])
+             for dv in dvs if dv["storageType"] == "u"]
+            + [os.path.join(self.path, next(iter(a.values()))["path"])
+               for a in actions])
+
     @staticmethod
     def _upgrade_actions(cur: dict, need_r: set, need_w: set,
                          conf_updates: dict | None) -> list[dict]:
@@ -1993,11 +2007,11 @@ class DeltaTable:
                    .filter(cond))
         if cdf:
             matched = matched.persist()
+        touched, cdc_actions = [], []
         try:
             touched = self._write_dvs(spark, matched, snap)
             if not touched:
                 return None
-            cdc_actions: list[dict] = []
             if cdf:
                 part_cols = snap["metaData"].get(
                     "partitionColumns") or []
@@ -2006,11 +2020,14 @@ class DeltaTable:
                 cdc_actions = self._stage_data_files(
                     pre, part_cols, subdir="_change_data",
                     action="cdc", cm=self._cm_mapping(snap))
-            return self._commit_row_dml(
-                "DELETE", touched, snap, cdc_actions, cdf)
+        except BaseException:
+            self._remove_staged(touched, cdc_actions)
+            raise
         finally:
             if cdf:
                 matched.unpersist()
+        return self._commit_row_dml(
+            "DELETE", touched, snap, cdc_actions, cdf)
 
     def update(self, spark: SparkSession, set: dict,
                where=None) -> int | None:
@@ -2040,6 +2057,7 @@ class DeltaTable:
         cdf = self._cdf_enabled(snap)
         matched = (self.read(spark, snap["version"], _with_pos=True)
                    .filter(cond).persist())
+        touched, extra = [], []
         try:
             updated = matched.select(*projection)
             self._enforce_constraints(snap, updated, "UPDATE")
@@ -2057,10 +2075,12 @@ class DeltaTable:
                 extra += self._stage_data_files(
                     pre.unionByName(post), part_cols,
                     subdir="_change_data", action="cdc", cm=cm)
-            return self._commit_row_dml(
-                "UPDATE", touched, snap, extra, cdf)
+        except BaseException:
+            self._remove_staged(touched, extra)
+            raise
         finally:
             matched.unpersist()
+        return self._commit_row_dml("UPDATE", touched, snap, extra, cdf)
 
     def replace_where(self, spark: SparkSession, df: DataFrame,
                       where) -> int | None:
@@ -2100,10 +2120,10 @@ class DeltaTable:
                    .filter(cond))
         if cdf:
             matched = matched.persist()
+        touched, extra = [], []
         try:
             touched = self._write_dvs(spark, matched, snap)
             cm = self._cm_mapping(snap)
-            extra = []
             if not new_rows.isEmpty():
                 extra = self._stage_data_files(new_rows, part_cols,
                                                cm=cm)
@@ -2121,11 +2141,13 @@ class DeltaTable:
                         action="cdc", cm=cm)
             if not touched and not extra:
                 return None
-            return self._commit_row_dml(
-                "WRITE", touched, snap, extra, cdf)
+        except BaseException:
+            self._remove_staged(touched, extra)
+            raise
         finally:
             if cdf:
                 matched.unpersist()
+        return self._commit_row_dml("WRITE", touched, snap, extra, cdf)
 
     def merge(self, spark: SparkSession, source: DataFrame, on,
               when_matched_update: dict | None = None,
@@ -2149,37 +2171,43 @@ class DeltaTable:
         part_cols = meta.get("partitionColumns") or []
         cdf = self._cdf_enabled(snap)
         tgt = self.read(spark, snap["version"], _with_pos=True)
-        with plan_merge(tgt, source, on, schema, ("_dl_path", "_dl_pos"),
-                        when_matched_update, when_matched_delete,
-                        when_not_matched_insert) as plan:
-            new_rows = plan.new_rows
-            if new_rows is not None and new_rows.isEmpty():
-                new_rows = None
-            if new_rows is not None:
-                self._enforce_constraints(snap, new_rows, "MERGE")
-            touched = ([] if plan.positions is None
-                       else self._write_dvs(spark, plan.positions, snap))
-            cm = self._cm_mapping(snap)
-            extra = ([] if new_rows is None
-                     else self._stage_data_files(new_rows, part_cols,
-                                                 cm=cm))
-            if not touched and not extra:
-                return None  # nothing matched, nothing to insert
-            if cdf:
-                changes = [
-                    df.withColumn("_change_type", F.lit(kind))
-                    for df, kind in ((plan.preimage, "update_preimage"),
-                                     (plan.updated, "update_postimage"),
-                                     (plan.deleted, "delete"),
-                                     (plan.inserted, "insert"))
-                    if df is not None]
-                cdc_df = functools.reduce(DataFrame.unionByName, changes)
-                if not cdc_df.isEmpty():
-                    extra += self._stage_data_files(
-                        cdc_df, part_cols, subdir="_change_data",
-                        action="cdc", cm=cm)
-            return self._commit_row_dml(
-                "MERGE", touched, snap, extra, cdf)
+        touched, extra = [], []
+        try:
+            with plan_merge(tgt, source, on, schema,
+                            ("_dl_path", "_dl_pos"), when_matched_update,
+                            when_matched_delete,
+                            when_not_matched_insert) as plan:
+                new_rows = plan.new_rows
+                if new_rows is not None and new_rows.isEmpty():
+                    new_rows = None
+                if new_rows is not None:
+                    self._enforce_constraints(snap, new_rows, "MERGE")
+                touched = ([] if plan.positions is None
+                           else self._write_dvs(spark, plan.positions, snap))
+                cm = self._cm_mapping(snap)
+                extra = ([] if new_rows is None
+                         else self._stage_data_files(new_rows, part_cols,
+                                                     cm=cm))
+                if not touched and not extra:
+                    return None  # nothing matched, nothing to insert
+                if cdf:
+                    changes = [
+                        df.withColumn("_change_type", F.lit(kind))
+                        for df, kind in ((plan.preimage, "update_preimage"),
+                                         (plan.updated, "update_postimage"),
+                                         (plan.deleted, "delete"),
+                                         (plan.inserted, "insert"))
+                        if df is not None]
+                    cdc_df = functools.reduce(DataFrame.unionByName,
+                                              changes)
+                    if not cdc_df.isEmpty():
+                        extra += self._stage_data_files(
+                            cdc_df, part_cols, subdir="_change_data",
+                            action="cdc", cm=cm)
+        except BaseException:
+            self._remove_staged(touched, extra)
+            raise
+        return self._commit_row_dml("MERGE", touched, snap, extra, cdf)
 
     def set_properties(self, props: dict) -> int:
         """ALTER TABLE SET TBLPROPERTIES: merge ``props`` into the

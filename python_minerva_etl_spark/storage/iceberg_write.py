@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .commit import (commit_attempts, hive_segment, publish_if_absent,
-                     replace_atomic, stage_parquet)
+                     remove_files, replace_atomic, stage_parquet)
 from .dml import plan_merge, set_projection
 from .iceberg import IcebergTable, _localize, _to_spark_schema
 from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
@@ -1596,6 +1596,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
         return 0
     part_info = _part_info(md, ice_schema)
     matched = live.persist()
+    del_entries, data_entries = [], []
     try:
         updated = matched.select(*projection)
         del_entries, n, refd = _stage_position_deletes(
@@ -1605,6 +1606,10 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
         data_entries = _stage_data_files(updated, path, part_info,
                                          ice_schema)
         _bound_entries(data_entries, ice_schema)
+    except BaseException:
+        # nothing is committed yet: drop what was staged
+        remove_files(e["file_path"] for e in del_entries + data_entries)
+        raise
     finally:
         matched.unpersist()
     _retry_row_dml(table, data_entries, del_entries, part_info,
@@ -1639,17 +1644,24 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
     del_entries: list[dict] = []
     refd: set[str] = set()
     data_entries: list[dict] = []
-    with plan_merge(live, source, on, schema, ("_ice_path", "_ice_pos"),
-                    when_matched_update, when_matched_delete,
-                    when_not_matched_insert) as plan:
-        if plan.positions is not None:
-            del_entries, _, refd = _stage_position_deletes(
-                spark, path, _position_hits(spark, plan.positions, files))
-        new_rows = plan.new_rows
-        if new_rows is not None and not new_rows.isEmpty():
-            data_entries = _stage_data_files(
-                new_rows, path, part_info, ice_schema)
-            _bound_entries(data_entries, ice_schema)
+    try:
+        with plan_merge(live, source, on, schema,
+                        ("_ice_path", "_ice_pos"), when_matched_update,
+                        when_matched_delete,
+                        when_not_matched_insert) as plan:
+            if plan.positions is not None:
+                del_entries, _, refd = _stage_position_deletes(
+                    spark, path,
+                    _position_hits(spark, plan.positions, files))
+            new_rows = plan.new_rows
+            if new_rows is not None and not new_rows.isEmpty():
+                data_entries = _stage_data_files(
+                    new_rows, path, part_info, ice_schema)
+                _bound_entries(data_entries, ice_schema)
+    except BaseException:
+        # nothing is committed yet: drop what was staged
+        remove_files(e["file_path"] for e in del_entries + data_entries)
+        raise
     if not del_entries and not data_entries:
         return None
     operation = "append" if not del_entries else "overwrite"

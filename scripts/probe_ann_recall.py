@@ -165,11 +165,11 @@ def main() -> None:
 
     from benchgate import contention_gate
     from python_minerva_etl_spark.ext.ann_arrow import (
-        build_ivf_index_arrow, cosine_pairs_lsh_arrow, ivf_topk_arrow,
-        ivf_topk_indexed_arrow, lsh_topk_arrow, pq_topk_arrow,
-        _ivf_centroids_arrow, _pq_codebooks_arrow)
+        cosine_pairs_lsh_arrow, lsh_topk_arrow, pq_topk_arrow,
+        _pq_codebooks_arrow)
     from python_minerva_etl_spark.ext.similarity import (
-        brute_force_topk, brute_force_topk_arrow, cosine_pairs_pivot)
+        brute_force_topk, brute_force_topk_arrow, build_ivf_index,
+        cosine_pairs_pivot, ivf_topk, ivf_topk_indexed)
     from python_minerva_etl_spark.registry import load_table
     from python_minerva_etl_spark.session import get_spark
 
@@ -190,15 +190,9 @@ def main() -> None:
     }
 
     # ---- build-once indexes (priced separately, reused per m) ----
-    ivf_train_sec = pq_train_sec = ivf_index_build_sec = None
-    cents = cbs = idx_path = None
+    pq_train_sec = ivf_index_build_sec = None
+    cbs = idx_path = None
     if sweep:
-        t0 = time.perf_counter()
-        cents = _ivf_centroids_arrow(
-            emb, crossover_params["ivf"]["num_cells"],
-            crossover_params["ivf"]["lloyd_iters"], "vec_id",
-            "embedding")
-        ivf_train_sec = round(time.perf_counter() - t0, 2)
         t0 = time.perf_counter()
         cbs = _pq_codebooks_arrow(
             emb, crossover_params["pq"]["m"],
@@ -215,7 +209,7 @@ def main() -> None:
             "minerva_ivf_probe_"
             + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
         t0 = time.perf_counter()
-        build_ivf_index_arrow(
+        build_ivf_index(
             emb, idx_path,
             num_cells=crossover_params["ivf"]["num_cells"],
             lloyd_iters=crossover_params["ivf"]["lloyd_iters"])
@@ -244,15 +238,11 @@ def main() -> None:
         paths = {
             "lsh_arrow": lambda: lsh_topk_arrow(
                 queries, emb, k=K, **crossover_params["lsh"]),
-            "ivf_arrow_indexed": lambda: ivf_topk_arrow(
-                queries, emb, k=K,
-                nprobe=crossover_params["ivf"]["nprobe"],
-                centroids=np.array(cents)),
             "pq_arrow_indexed": lambda: pq_topk_arrow(
                 queries, emb, k=K,
                 rerank=crossover_params["pq"]["rerank"],
                 codebooks=cbs),
-            "ivf_indexed_pruned": lambda: ivf_topk_indexed_arrow(
+            "ivf_indexed_pruned": lambda: ivf_topk_indexed(
                 spark, queries, idx_path, k=K,
                 nprobe=crossover_params["ivf"]["nprobe"]),
         }
@@ -260,7 +250,7 @@ def main() -> None:
             # declared-catalog parameterizations, for r11 continuity
             paths["sim_topk_lsh_declared"] = lambda: lsh_topk_arrow(
                 queries, emb, k=K, num_planes=4, num_tables=16)
-            paths["sim_topk_ivf_declared"] = lambda: ivf_topk_arrow(
+            paths["sim_topk_ivf_declared"] = lambda: ivf_topk(
                 queries, emb, k=K, num_cells=8, nprobe=4,
                 lloyd_iters=1)
             paths["sim_topk_pq_declared"] = lambda: pq_topk_arrow(
@@ -402,13 +392,16 @@ def main() -> None:
             " table); pq_arrow re-encodes corpus codes per run (the"
             " unindexed API), ivf_indexed_pruned re-reads the"
             " persisted index per run (the real query shape)."
+            "  Both IVF rows run the JVM IVF the declared queries"
+            " use: ivf_indexed_pruned = build_ivf_index +"
+            " ivf_topk_indexed, sim_topk_ivf_declared = ivf_topk."
             "  recall_at_k is tie-robust (hit = approx cosine >="
             " exact k-th score - 1e-9, the ANN-benchmark standard"
             " - on replica fixtures exact ties order by last-ulp"
             " BLAS noise, so id-set overlap under-reads);"
             " recall_ids is the strict id-set overlap."),
         "gate": gate,
-        "index_train_sec": {"ivf": ivf_train_sec, "pq": pq_train_sec,
+        "index_train_sec": {"pq": pq_train_sec,
                             "ivf_persisted_index": ivf_index_build_sec},
         "params": crossover_params,
         "sweep": results,

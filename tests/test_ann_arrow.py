@@ -1,18 +1,17 @@
-"""Arrow-vectorized ANN twins (ext/ann_arrow.py): same index
-structures as the HOF DataFrame forms, numpy execution — assert the
-buckets agree with the SQL-expr derivation, recall holds, results are
-deterministic, and the per-batch partial top-k is partition-invariant.
+"""Arrow-vectorized ANN kernels (ext/ann_arrow.py): assert the LSH
+buckets agree with the SQL-expr derivation of the JVM reference, recall
+holds, results are deterministic, the per-batch partial top-k is
+partition-invariant, and each ANN family keeps one implementation.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from python_minerva_etl_spark.ext.ann_arrow import (
-    cosine_pairs_lsh_arrow, hyperplane_matrix, ivf_topk_arrow,
-    lsh_topk_arrow, pq_topk_arrow, _bucket_codes, _group_topk)
+    cosine_pairs_lsh_arrow, hyperplane_matrix, lsh_topk_arrow,
+    pq_topk_arrow, _bucket_codes, _group_topk)
 from python_minerva_etl_spark.ext.similarity import (
     brute_force_topk, cosine_pairs, lsh_bucketed_topk)
 from python_minerva_etl_spark.registry import load_table
@@ -114,53 +113,22 @@ def test_lsh_arrow_partition_invariant(spark):
     assert all(abs(x[2] - y[2]) < 1e-12 for x, y in zip(a, b))
 
 
-def test_ivf_arrow_recall_and_determinism(spark):
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact_top1 = {r.query_id: r.corpus_id
-                  for r in brute_force_topk(q, emb, k=1).collect()}
-    got = ivf_topk_arrow(q, emb, k=5, num_cells=8, nprobe=4,
-                         lloyd_iters=1)
-    sets = _topk_sets(got)
-    hits = sum(1 for qid, cid in exact_top1.items()
-               if cid in sets.get(qid, set()))
-    assert hits >= int(0.6 * len(exact_top1))
-    again = ivf_topk_arrow(q, emb, k=5, num_cells=8, nprobe=4,
-                           lloyd_iters=1)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, again.collect()))
-
-
 def test_pq_arrow_recall_and_rerank(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     exact = _topk_sets(brute_force_topk(q, emb, k=5))
-    got = _topk_sets(pq_topk_arrow(q, emb, k=5, rerank=50))
-    assert _recall(exact, got) >= 0.8
+    got = pq_topk_arrow(q, emb, k=5, rerank=50)
+    assert _recall(exact, _topk_sets(got)) >= 0.8
+    # two independent builds (codebooks retrained) agree row for row
+    again = pq_topk_arrow(q, emb, k=5, rerank=50)
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, again.collect()))
     # rerank=None path still ranks and returns k rows per query
     no_rr = pq_topk_arrow(q, emb, k=5)
     counts = {r.query_id: 0 for r in no_rr.collect()}
     for r in no_rr.collect():
         counts[r.query_id] += 1
     assert all(c == 5 for c in counts.values())
-
-
-def test_pq_adc_float32_option_close_and_default_unchanged(spark):
-    """r13: adc_dtype=float32 halves the gather-sum's memory traffic;
-    its scores must sit within float32 rounding of the default
-    float64 path, and the DEFAULT path must be byte-for-byte the old
-    behavior (the declared query's rows cannot move)."""
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    f64 = {(r.query_id, r.corpus_id): r.cosine
-           for r in pq_topk_arrow(q, emb, k=5).collect()}
-    f32 = {(r.query_id, r.corpus_id): r.cosine
-           for r in pq_topk_arrow(q, emb, k=5,
-                                  adc_dtype=np.float32).collect()}
-    # same candidates on this well-separated fixture, scores close
-    assert set(f64) == set(f32)
-    for key, v in f64.items():
-        assert abs(v - f32[key]) <= 1e-5 * max(1.0, abs(v)), key
 
 
 def test_pairs_lsh_arrow_precision_and_recall(spark):
@@ -198,35 +166,6 @@ def test_lsh_arrow_matches_hof_twin_topk(spark):
     assert inter / total >= 0.9, f"{inter}/{total}"
 
 
-def test_ivf_indexed_arrow_matches_and_prunes(spark, tmp_path):
-    """build_ivf_index_arrow + ivf_topk_indexed_arrow: results agree
-    with the direct arrow IVF on the same centroids, and the indexed
-    scan prunes to the probed cell directories (PartitionFilters in
-    the physical plan)."""
-    import re
-
-    from python_minerva_etl_spark.ext.ann_arrow import (
-        build_ivf_index_arrow, ivf_topk_indexed_arrow)
-
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    idx = str(tmp_path / "ivf_arrow")
-    build_ivf_index_arrow(emb, idx, num_cells=16, lloyd_iters=1)
-    indexed = ivf_topk_indexed_arrow(spark, q, idx, k=5, nprobe=3)
-    direct = ivf_topk_arrow(q, emb, k=5, num_cells=16, nprobe=3,
-                            lloyd_iters=1)
-    pa = {(r.query_id, r.rank): r.corpus_id for r in indexed.collect()}
-    pb = {(r.query_id, r.rank): r.corpus_id for r in direct.collect()}
-    assert pa == pb and len(pa) == 40
-
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[cell[^\]]*?"
-                  r"(?: IN \(([^)]*)\)| INSET ([0-9, ]+))", plan)
-    assert m, "probed-cell partition filter missing from the scan"
-    cells = (m.group(1) or m.group(2)).split(",")
-    assert len(cells) < 16, "no cells pruned"
-
-
 def test_blocked_adc_accumulation_bit_identical():
     """The cache-blocked ADC gather in pq_topk_arrow must reproduce
     the naive per-subspace accumulation bit-for-bit (same ascending-s
@@ -250,3 +189,60 @@ def test_blocked_adc_accumulation_bit_identical():
                 slab += luts[s][:, cj[:, s]]
             blocked[:, j0:j1] = slab
         assert np.array_equal(naive, blocked)
+
+
+def test_ann_families_have_one_implementation():
+    """Each ANN family keeps the one form its callers run: ext/similarity
+    has no JVM PQ or JVM LSH pair join, ext/ann_arrow has no IVF, no
+    function takes an ``adc_dtype`` knob, and the JVM LSH reference
+    always ranks (its ``k`` is never None)."""
+    import ast
+    import os
+
+    import python_minerva_etl_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    offenders, lsh = [], []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if not isinstance(node, (ast.FunctionDef,
+                                         ast.AsyncFunctionDef)):
+                    continue
+                where = f"{rel}:{node.lineno} {node.name}"
+                args = node.args
+                params = args.posonlyargs + args.args + args.kwonlyargs
+                if "adc_dtype" in {a.arg for a in params}:
+                    offenders.append(f"{where}(adc_dtype)")
+                if (rel == os.path.join("ext", "similarity.py")
+                        and node.name in {"pq_topk", "pq_encode",
+                                          "cosine_pairs_lsh"}):
+                    offenders.append(where)
+                if (rel == os.path.join("ext", "ann_arrow.py")
+                        and "ivf" in node.name):
+                    offenders.append(where)
+                if node.name == "lsh_bucketed_topk":
+                    lsh.append(where)
+                    pos = [a.arg for a in args.posonlyargs + args.args]
+                    defaults = dict(zip(pos[len(pos) - len(args.defaults):],
+                                        args.defaults))
+                    k = next(a for a in params if a.arg == "k")
+                    nones = [defaults.get("k"), k.annotation]
+                    nones += [x for c in ast.walk(node)
+                              if isinstance(c, ast.Compare)
+                              and "k" in {getattr(x, "id", None) for x in
+                                          (c.left, *c.comparators)}
+                              for x in (c.left, *c.comparators)]
+                    if any(x is not None and ("None" in ast.unparse(x)
+                                              or "Optional" in ast.unparse(x))
+                           for x in nones):
+                        offenders.append(f"{where}(k=None)")
+    assert not offenders, offenders
+    assert len(lsh) == 1, lsh
+

@@ -122,6 +122,47 @@ def test_update_refused_on_append_only_table(spark, tmp_path):
         dt.update(spark, {"value": "0.0"}, "id = 0")
 
 
+@pytest.mark.parametrize("verb", ["update", "merge", "replace_where"])
+def test_failed_dml_removes_its_staged_deletion_vectors(spark, tmp_path,
+                                                        verb):
+    """A DML that raises while writing its new rows (an ANSI cast
+    error, after the deletion vectors of the matched rows are written)
+    leaves the table directory as it was."""
+    p = str(tmp_path / "t")
+    write_delta(spark, spark.createDataFrame(
+        [(i, f"u{i % 3}", float(i)) for i in range(2000)],
+        "id long, user string, value double").coalesce(1), p)
+    dt = DeltaTable(p)
+    src = spark.createDataFrame(
+        [(i, f"x{i}", f"{-i}") for i in range(1000, 3000)],
+        "id long, user string, value string")
+
+    def tree():
+        return sorted(os.path.relpath(os.path.join(d, n), p)
+                      for d, _dirs, names in os.walk(p) for n in names)
+
+    before = tree()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            if verb == "update":
+                dt.update(spark, {"value": "user"}, "id % 2 = 0")
+            elif verb == "merge":
+                dt.merge(spark, src, "t.id = s.id",
+                         when_matched_update={"value": "s.value"},
+                         when_not_matched_insert={"id": "s.id",
+                                                  "value": "s.user"})
+            else:
+                dt.replace_where(spark, src.withColumn("value",
+                                                       F.col("user")),
+                                 "id >= 1000")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert tree() == before
+    assert dt.read(spark).count() == 2000
+
+
 # ------------------------------------------------------------- MERGE
 
 def test_merge_update_and_insert(spark, tmp_path):

@@ -238,6 +238,40 @@ def test_merge_noop_and_empty_table(spark, tmp_path):
     assert _rows(read_iceberg(spark, p)) == [(7, "back", 70)]
 
 
+def _tree(p):
+    return sorted(os.path.relpath(os.path.join(d, n), p)
+                  for d, _dirs, names in os.walk(p) for n in names)
+
+
+@pytest.mark.parametrize("verb", ["update", "merge"])
+def test_failed_dml_removes_its_staged_delete_files(spark, tmp_path, verb):
+    """A DML that raises while writing its new rows (an ANSI cast
+    error, after the position deletes of the matched rows are staged)
+    leaves the table directory as it was."""
+    p = str(tmp_path / "t")
+    write_iceberg(spark, spark.createDataFrame(
+        [(i, f"n{i}", i) for i in range(2000)],
+        "id long, name string, val long").coalesce(1), p)
+    before = _tree(p)
+    src = spark.createDataFrame([(i, f"x{i}", -i) for i in range(1000, 3000)],
+                                "id long, name string, val long")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            if verb == "update":
+                update_iceberg(spark, p, {"val": "name"}, [("id", ">=", 0)])
+            else:
+                merge_iceberg(spark, p, src, "t.id = s.id",
+                              when_matched_update={"val": "s.val"},
+                              when_not_matched_insert={"id": "s.id",
+                                                       "val": "s.name"})
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert _tree(p) == before
+    assert read_iceberg(spark, p).count() == 2000
+
+
 # -------------------------- no-resurrection under equality deletes
 
 

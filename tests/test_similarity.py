@@ -68,24 +68,6 @@ def test_ivf_recall_and_determinism(spark):
     assert a == b
 
 
-def test_embedding_lsh_pairs_recall(spark):
-    """cosine_pairs_lsh: every returned pair must be a true pair (the
-    threshold is verified exactly on candidates — precision 1.0) and
-    recall of the exact pair set stays useful on this corpus."""
-    from python_minerva_etl_spark.ext.similarity import (cosine_pairs,
-                                                         cosine_pairs_lsh)
-
-    emb = load_table(spark, SF, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in
-             cosine_pairs(emb, threshold=0.4).collect()}
-    approx = {(r.id_a, r.id_b) for r in
-              cosine_pairs_lsh(emb, threshold=0.4,
-                               num_planes=4, num_tables=16).collect()}
-    assert approx <= exact                     # precision 1.0
-    if exact:
-        assert len(approx) >= int(0.5 * len(exact))
-
-
 def test_ivf_small_corpus_clamps_cells(spark):
     """num_cells larger than the corpus must clamp, not IndexError."""
     from python_minerva_etl_spark.ext.similarity import ivf_topk
@@ -146,41 +128,6 @@ def test_ivf_index_build_query_matches_direct(spark, tmp_path):
     assert m, f"probed-cell partition filter missing from the scan"
     cells = (m.group(1) or m.group(2)).split(",")
     assert len(cells) < 16, "no cells pruned"
-
-
-def test_pq_adc_recall_and_determinism(spark):
-    """PQ/ADC with exact re-rank recovers the exact top-5 on the small
-    corpus (recall >= 0.8 asserted loosely; measured 1.0), codes
-    compress ~16x, and two independent builds agree bit-for-bit."""
-    from python_minerva_etl_spark.ext.similarity import (pq_encode,
-                                                         _pq_codebooks,
-                                                         pq_topk)
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(queries, emb, k=5)
-    want = {}
-    for r in exact.collect():
-        want.setdefault(r.query_id, set()).add(r.corpus_id)
-
-    got_rows = pq_topk(queries, emb, k=5, rerank=50).collect()
-    got = {}
-    for r in got_rows:
-        got.setdefault(r.query_id, set()).add(r.corpus_id)
-    recall = (sum(len(want[q] & got.get(q, set())) for q in want)
-              / sum(len(v) for v in want.values()))
-    assert recall >= 0.8
-
-    again = pq_topk(queries, emb, k=5, rerank=50).collect()
-    assert sorted(map(tuple, got_rows)) == sorted(map(tuple, again))
-
-    # encode contract: m codes, 1-based within ksub, recon_norm > 0
-    cbs = _pq_codebooks(emb, m=32, ksub=16, iters=1,
-                        id_col="vec_id", vec_col="embedding")
-    enc = pq_encode(emb, cbs).collect()
-    assert all(len(r.codes) == 32 for r in enc)
-    assert all(1 <= c <= 16 for r in enc for c in r.codes)
-    assert all(r.recon_norm > 0 for r in enc)
 
 
 def test_pivot_pairs_exact_and_blocked(spark):
