@@ -184,19 +184,20 @@ def _dedup_semantic_indexed(spark, sf_dir):
     clustering than the declared k-lowest-id form → rows-only check;
     fixed-centroid equivalence + recall vs the declared form are
     locked in tests/test_dedup.py."""
-    import hashlib
     import os
     import tempfile
 
     from ..ext.clusters import semantic_dedup_indexed
     from ..ext.similarity import build_ivf_index
+    from ..registry import stamp_digest, table_path
 
     emb = t(spark, sf_dir, "embeddings")
-    # md5 (not hash(): per-process salted) so re-runs against the same
-    # fixture REUSE the persisted index — the build-once contract
+    # named by the embeddings file's stamps: re-runs over the same file
+    # REUSE the persisted index (the build-once contract), and a
+    # replaced file gets a fresh one
     path = os.path.join(
         tempfile.gettempdir(),
-        f"minerva_ivf_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}")
+        f"minerva_ivf_{stamp_digest(table_path(sf_dir, 'embeddings'))}")
     if not os.path.exists(os.path.join(path, "centroids")):
         build_ivf_index(emb, path, num_cells=8, lloyd_iters=2)
     return semantic_dedup_indexed(spark, emb, path, tau=0.4)

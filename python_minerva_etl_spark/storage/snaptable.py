@@ -13,8 +13,9 @@ dependency-free:
 * **Layout** — ``<root>/data/c-<id>/part-*.parquet`` (immutable commit
   dirs written once by Spark) + ``<root>/_manifests/v<NNNNNNNN>.json``
   (each manifest is a FULL snapshot: the list of data files that make
-  up that version, with per-file min/max stats of the merge keys read
-  from the parquet footers via pyarrow).
+  up that version, each with its row count, the min/max of the merge
+  keys from its parquet footer and per-key blooms, read in one
+  driver-side pass over each file just written).
 * **Atomic commit** — each manifest is published put-if-absent under
   the next version number (the protocol in :mod:`.commit`).  Readers
   see either the old snapshot or the new one, never a partial write;
@@ -26,12 +27,14 @@ dependency-free:
   the batch's key envelope are read and rewritten; everything else is
   carried into the new manifest by reference.  A 100 TB table with a
   few hot partitions rewrites a few files, not the table.
-* **Conflict detection** — a merge that loses the commit race re-reads
-  the manifests it missed; if none of the newly-added files overlaps
-  the batch envelope the merge result is still valid and the commit is
-  retried on top (at most :data:`.commit.COMMIT_ATTEMPTS` times),
-  otherwise :class:`CommitConflict` is raised for the caller to re-run
-  (Delta's write-conflict semantics).
+* **Conflict detection** — append, MERGE, DELETE and OPTIMIZE commit
+  through one loop.  A write that loses the commit race checks the
+  files added by the commits it missed against its rule: none for an
+  append, key-envelope overlap for MERGE/DELETE, any file for
+  OPTIMIZE.  With no conflict the commit is retried on top (at most
+  :data:`.commit.COMMIT_ATTEMPTS` times), otherwise
+  :class:`CommitConflict` is raised for the caller to re-run (Delta's
+  write-conflict semantics).
 * **Time travel** — ``read(spark, version=N)`` reads any retained
   snapshot; ``history()`` lists them.
 """
@@ -39,6 +42,7 @@ dependency-free:
 from __future__ import annotations
 
 import datetime
+import decimal
 import glob
 import hashlib
 import json
@@ -48,7 +52,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import read_parquet
 from .commit import commit_attempts, publish_if_absent
@@ -56,7 +59,7 @@ from .stats import US, epoch, footer_bounds, may_match
 
 
 class CommitConflict(RuntimeError):
-    """A concurrent commit added files overlapping this merge's keys."""
+    """A concurrent commit added files that make this write stale."""
 
 
 def _canon(v: Any) -> Any:
@@ -98,10 +101,13 @@ def _key_envelope(df: DataFrame, key: list[str]) -> dict[str, list[Any]]:
 
 def _file_stats(path: str, key: list[str]) -> tuple[int, dict[str, list[Any]]]:
     """(num_rows, per-key-column [min, max]) from the parquet footer —
-    no data pages are read."""
+    no data pages are read.  Decimal bounds are left out (the column
+    counts as unbounded): JSON holds no exact decimal, and a float
+    bound could prune a file that holds the key."""
     rows, cols = footer_bounds(path, key)
     return rows, {c: [_canon(cols[c].lo), _canon(cols[c].hi)]
-                  for c in key if c in cols and cols[c].lo is not None}
+                  for c in key if c in cols and cols[c].lo is not None
+                  and not isinstance(cols[c].lo, decimal.Decimal)}
 
 
 def _overlaps(stats: dict[str, list[Any]],
@@ -129,8 +135,6 @@ def _bloom_key(value: Any) -> str:
     the one failure mode a bloom must never have.  Numerics therefore
     normalize through Decimal (2 == 2.0 == Decimal('2.00') -> 'n:2');
     everything else keys on its canonical string."""
-    import decimal
-
     v = _canon(value)
     if isinstance(v, bool):
         # fold bools into the numeric space: a stored True must match
@@ -147,106 +151,104 @@ def _bloom_key(value: Any) -> str:
     return f"s:{v}"
 
 
-def _bloom_positions(value: Any) -> list[int]:
-    h = hashlib.md5(_bloom_key(value).encode()).digest()
+def _key_positions(key: str) -> list[int]:
+    h = hashlib.md5(key.encode()).digest()
     return [int.from_bytes(h[i * 4:(i + 1) * 4], "little") % _BLOOM_BITS
             for i in range(_BLOOM_K)]
 
 
+def _bloom_positions(value: Any) -> list[int]:
+    return _key_positions(_bloom_key(value))
+
+
+def _bloom_keys(values, bound: int) -> set[str] | None:
+    """The :func:`_bloom_key` strings of ``values`` (an Arrow array of
+    distinct values), or None once there are more than ``bound``.
+    Each slice is as long as the keys still allowed, so a column with
+    no shared keys stops after ``bound + 1`` calls."""
+    keys: set[str] = set()
+    start = 0
+    while start < len(values) and len(keys) <= bound:
+        n = bound + 1 - len(keys)
+        keys.update(_bloom_key(v)
+                    for v in values.slice(start, n).to_pylist())
+        start += n
+    return keys if len(keys) <= bound else None
+
+
+def _one_key_per_value(t) -> bool:
+    """Whether distinct values of Arrow type ``t`` always get distinct
+    :func:`_bloom_key` strings, so that Arrow's distinct count is the
+    key count.  Floats (``-0.0`` and ``0.0``, NaN payloads), bytes
+    (undecodable bytes all read as U+FFFD) and timestamps finer than
+    1 µs can share keys, so their keys are counted."""
+    import pyarrow as pa
+
+    return (pa.types.is_integer(t) or pa.types.is_string(t)
+            or pa.types.is_large_string(t) or pa.types.is_decimal(t)
+            or pa.types.is_date32(t) or pa.types.is_boolean(t)
+            or (pa.types.is_timestamp(t) and t.unit != "ns"))
+
+
 def _file_bloom(path: str, key: list[str]) -> dict[str, str]:
     """Per-key-column bloom filter (2048 bits, 4 md5-derived probes)
-    over the file's values — read back ONCE at write time (sequential
-    local IO of the just-written columns), stored as hex in the
-    manifest.  Min/max stats prune RANGE queries; blooms prune POINT
-    lookups on keys whose values interleave across files (where every
-    range overlaps).  ~1% false-positive at 200 distinct values per
-    filter; false positives only cost a read, never correctness."""
-    import pyarrow.parquet as pq
+    over the file's values, stored as hex in the manifest.  Min/max
+    stats prune RANGE queries; blooms prune POINT lookups on keys
+    whose values interleave across files (where every range
+    overlaps).  ~1% false-positive at 200 distinct values per filter;
+    false positives only cost a read, never correctness.
 
+    Each column's distinct values are unioned in Arrow, row group by
+    row group.  A bloom past 4x its bit budget in distinct keys is
+    saturated (every probe passes): it is dropped as soon as its
+    column passes that count, so only kept blooms build and md5 their
+    keys.  Where values can share a key (:func:`_one_key_per_value`),
+    the count past the bound is of keys."""
+    import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
     cols = [c for c in key if c in pf.schema_arrow.names]
     if not cols or pf.metadata.num_rows > _BLOOM_MAX_ROWS:
         return {}
-    # Hash DISTINCT values only, accumulated row-group by row-group —
-    # never materialize a whole column, never md5 the same key twice.
-    # A bloom past ~4x its bit budget in distinct values is saturated
-    # (every probe passes) — drop it rather than store dead weight.
-    max_distinct = _BLOOM_BITS * 4
-    distinct: dict[str, set] = {c: set() for c in cols}
+    bound = _BLOOM_BITS * 4
+    distinct = dict.fromkeys(cols)
     for rg in range(pf.metadata.num_row_groups):
-        tbl = pf.read_row_group(rg, columns=cols)
+        tbl = pf.read_row_group(rg, columns=list(distinct))
         for c in list(distinct):
-            vals = pc.unique(pc.drop_null(tbl.column(c))).to_pylist()
-            distinct[c].update(_bloom_key(v) for v in vals)
-            if len(distinct[c]) > max_distinct:
+            u = pc.unique(tbl.column(c)).drop_null()
+            if distinct[c] is not None:
+                u = pc.unique(pa.concat_arrays([distinct[c], u]))
+            distinct[c] = u
+            if len(u) > bound and (_one_key_per_value(u.type)
+                                   or _bloom_keys(u, bound) is None):
                 del distinct[c]  # saturated: no pruning power left
     out: dict[str, str] = {}
-    for c, keys in distinct.items():
-        bits = 0
-        for k in keys:
-            h = hashlib.md5(k.encode()).digest()
-            for i in range(_BLOOM_K):
-                pos = int.from_bytes(h[i * 4:(i + 1) * 4],
-                                     "little") % _BLOOM_BITS
-                bits |= 1 << pos
-        out[c] = f"{bits:x}"
+    for c, vals in distinct.items():
+        keys = _bloom_keys(vals, bound)
+        if keys is not None:
+            bits = 0
+            for k in keys:
+                for pos in _key_positions(k):
+                    bits |= 1 << pos
+            out[c] = f"{bits:x}"
     return out
 
 
-def _file_meta_payload(path: str, key: list[str]) -> str:
-    """One file's manifest metadata (row count, footer min/max stats,
-    key-column bloom) as a JSON payload — runs INSIDE the executors'
-    Python workers via :func:`_collect_file_meta`."""
+def _file_entry(path: str, rel: str, key: list[str]) -> dict | None:
+    """The manifest entry of one written file — its size, row count,
+    footer min/max of the ``key`` columns and their blooms — or None
+    for a file with no rows."""
     rows, stats = _file_stats(path, key)
-    bloom = _file_bloom(path, key) if rows else {}
-    return json.dumps({"rows": rows, "stats": stats, "bloom": bloom})
-
-
-def _collect_file_meta(spark: SparkSession, paths: list[str],
-                       key: list[str]) -> dict[str, dict]:
-    """Per-file stats + bloom construction, computed in the EXECUTORS
-    (one task per written file, ``mapInPandas`` over the path list)
-    rather than a driver-side loop: the driver touches only the
-    returned metadata (a few hex strings per file), never the data
-    pages.  At sandbox scale this also parallelizes the per-file
-    reads across cores; on a cluster the md5 hashing of up to ~8k
-    distinct values per key column per file happens where the
-    compute is.  Manifests are byte-identical to the old driver loop
-    (same ``_file_stats``/``_file_bloom`` code runs, just remotely —
-    locked by tests/test_snaptable.py)."""
-    if not paths:
-        return {}
-    from pyspark.sql import types as T
-    key = list(key)
-
-    # Dispatch on commit size, not dogma: scheduling a Spark job
-    # (stage + shuffle + python-worker spinup) costs a fixed ~0.5 s;
-    # for a small commit the driver reads the footers + key columns
-    # in milliseconds, and that fixed job cost dominated the
-    # write-path bench rows (round-6 verdict item 4).  Large commits
-    # — where the per-file bloom hashing is real work — still run in
-    # the executors.  Both paths run the SAME _file_meta_payload, so
-    # manifests are byte-identical (locked by tests/test_snaptable.py).
-    total_bytes = sum(os.path.getsize(p) for p in paths)
-    if total_bytes < 64 * 1024 * 1024:
-        return {p: json.loads(_file_meta_payload(p, key))
-                for p in paths}
-
-    def compute(batches):
-        import pandas as pd
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(p, _file_meta_payload(p, key)) for p in pdf["path"]],
-                columns=["path", "payload"])
-
-    schema = T.StructType([T.StructField("path", T.StringType()),
-                           T.StructField("payload", T.StringType())])
-    fdf = (spark.createDataFrame([(p,) for p in paths], "path string")
-           .repartition(len(paths)))
-    return {r.path: json.loads(r.payload)
-            for r in fdf.mapInPandas(compute, schema).collect()}
+    if not rows:
+        return None
+    entry = {"path": rel, "bytes": os.path.getsize(path), "rows": rows,
+             "stats": stats}
+    bloom = _file_bloom(path, key)
+    if bloom:
+        entry["bloom"] = bloom
+    return entry
 
 
 def _bloom_may_contain(bloom_hex: str, value: Any) -> bool:
@@ -383,6 +385,12 @@ class SnapTable:
         return max(1, int(TARGET_FILE_BYTES * rows / byts))
 
     def _write_data(self, df: DataFrame, key: list[str]) -> list[dict]:
+        """Write ``df`` into a new commit directory and return the
+        manifest entries of its files, in file-name order.  One
+        driver-side pass per file (:func:`_file_entry`) reads the row
+        count and key min/max from the footer and builds the key
+        blooms from the key columns alone; files with no rows (empty
+        shuffle partitions) are deleted."""
         cdir = f"c-{uuid.uuid4().hex[:12]}"
         full = os.path.join(self.path, "data", cdir)
         writer = df.write.mode("error")
@@ -390,20 +398,14 @@ class SnapTable:
         if cap:
             writer = writer.option("maxRecordsPerFile", cap)
         writer.parquet(full)
-        paths = sorted(glob.glob(os.path.join(full, "*.parquet")))
-        meta = _collect_file_meta(df.sparkSession, paths, key)
         entries = []
-        for p in paths:
-            m = meta[p]
-            if m["rows"] == 0:  # empty shuffle partitions carry no data
+        for p in sorted(glob.glob(os.path.join(full, "*.parquet"))):
+            entry = _file_entry(
+                p, os.path.join("data", cdir, os.path.basename(p)), key)
+            if entry is None:
                 os.unlink(p)
-                continue
-            rel = os.path.join("data", cdir, os.path.basename(p))
-            entry = {"path": rel, "bytes": os.path.getsize(p),
-                     "rows": m["rows"], "stats": m["stats"]}
-            if m["bloom"]:
-                entry["bloom"] = m["bloom"]
-            entries.append(entry)
+            else:
+                entries.append(entry)
         return entries
 
     def _publish(self, manifest: dict, version: int) -> bool:
@@ -446,17 +448,7 @@ class SnapTable:
         if self._txn_seen(txn, self.latest_version()):
             return self.latest_version()
         new = self._write_data(df, list(key))
-        for _ in commit_attempts(self.path, CommitConflict):
-            v = (self.latest_version() or 0) + 1
-            if self._txn_seen(txn, v - 1 if v > 1 else None):
-                return v - 1
-            files = self.files(v - 1) if v > 1 else []
-            manifest = {"version": v, "op": "append", "files": files + new,
-                        "n_files": len(files) + len(new)}
-            if key:
-                manifest["key"] = list(key)
-            if self._publish(self._with_txn(manifest, txn, v - 1), v):
-                return v
+        return self._commit("append", key, new, txn=txn)
 
     def merge(self, spark: SparkSession, batch: DataFrame, key: list[str],
               seq_col: str, txn: tuple[str, int] | None = None) -> int:
@@ -476,8 +468,7 @@ class SnapTable:
             return self.append(spark, resolved, key, txn=txn)
 
         envelope = _key_envelope(batch, key)
-        base = self.latest_version()
-        entries = self.files(base)
+        entries = self.files()
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
 
         if touched:
@@ -491,8 +482,8 @@ class SnapTable:
         resolved = argmax_resolve(combined, key,
                                   ["__src", seq_col]).drop("__src")
         new = self._write_data(resolved, key)
-        return self._commit_rewrite("merge", key, envelope, base, entries,
-                                    touched, new, txn)
+        return self._commit("merge", key, new, txn, entries, touched,
+                            lambda e: _overlaps(e["stats"], envelope))
 
     def apply_changes(self, spark: SparkSession, changes: DataFrame,
                       key: list[str], seq_col: str,
@@ -536,50 +527,49 @@ class SnapTable:
         ``delete`` in :meth:`changes`."""
         if self._txn_seen(txn, self.latest_version()):
             return self.latest_version()
-        base = self.latest_version()
-        if base is None:
+        if self.latest_version() is None:
             raise FileNotFoundError(f"snaptable {self.path}: no snapshot")
         kdf = keys.select(*key).distinct()
         envelope = _key_envelope(kdf, key)
-        entries = self.files(base)
+        entries = self.files()
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
         new: list[dict] = []
         if touched:
             stored = self._read_files(spark, [e["path"] for e in touched])
             kept = stored.join(F.broadcast(kdf), key, "left_anti")
             new = self._write_data(kept, key)
-        return self._commit_rewrite("delete", key, envelope, base, entries,
-                                    touched, new, txn)
+        return self._commit("delete", key, new, txn, entries, touched,
+                            lambda e: _overlaps(e["stats"], envelope))
 
-    def _commit_rewrite(self, op: str, key: list[str], envelope: dict,
-                        base: int, entries: list[dict],
-                        touched: list[dict], new: list[dict],
-                        txn: tuple[str, int] | None) -> int:
-        """Commit a MERGE/DELETE that read ``touched`` (files of
-        version ``base`` overlapping the key ``envelope``) and wrote
-        ``new``.  A lost race is retried on top of the newer snapshot
-        unless a commit it missed added files inside the envelope:
-        then the rewrite is stale and :class:`CommitConflict` raises
-        for the caller to re-run."""
-        t_paths = {e["path"] for e in touched}
-        base_paths = {e["path"] for e in entries}
+    def _commit(self, op: str, key: list[str], new: list[dict],
+                txn: tuple[str, int] | None = None,
+                base: list[dict] = (), replaced: list[dict] = (),
+                conflicts=None) -> int:
+        """Publish the next version: the latest snapshot's files minus
+        ``replaced``, plus ``new`` (module docstring, *Conflict
+        detection*).  Returns early when the txn ledger holds ``txn``;
+        raises :class:`CommitConflict` on a file that is not in
+        ``base`` (the files the write read) for which ``conflicts``
+        holds."""
+        seen = {e["path"] for e in base}
+        gone = {e["path"] for e in replaced}
         for _ in commit_attempts(self.path, CommitConflict):
             v = (self.latest_version() or 0) + 1
             if self._txn_seen(txn, v - 1 if v > 1 else None):
                 return v - 1
             cur = self.files(v - 1) if v > 1 else []
-            if v - 1 != base:  # lost the race: check the commits we missed
+            if conflicts is not None:
                 for e in cur:
-                    if (e["path"] not in base_paths
-                            and _overlaps(e["stats"], envelope)):
+                    if e["path"] not in seen and conflicts(e):
                         raise CommitConflict(
-                            f"concurrent commit touched {op} key range: "
+                            f"concurrent commit conflicts with {op}: "
                             f"{e['path']}")
-            files = [e for e in cur if e["path"] not in t_paths] + new
-            if self._publish(self._with_txn(
-                    {"version": v, "op": op, "files": files,
-                     "n_files": len(files), "key": list(key)},
-                    txn, v - 1), v):
+            files = [e for e in cur if e["path"] not in gone] + new
+            manifest = {"version": v, "op": op, "files": files,
+                        "n_files": len(files)}
+            if key:
+                manifest["key"] = list(key)
+            if self._publish(self._with_txn(manifest, txn, v - 1), v):
                 return v
 
     # ---------------- change feed ----------------
@@ -679,22 +669,10 @@ class SnapTable:
         total = sum(e["bytes"] for e in small)
         n_out = max(1, -(-total // target_file_bytes))
         new = self._write_data(packed.repartition(n_out), key)
-        s_paths = {e["path"] for e in small}
-        for _ in commit_attempts(self.path, CommitConflict):
-            v = (self.latest_version() or 0) + 1
-            cur = self.files(v - 1) if v > 1 else []
-            if any(e["path"] not in {x["path"] for x in entries}
-                   for e in cur):
-                # a concurrent commit landed: packing a stale file set
-                # could resurrect replaced rows — bail, caller retries
-                raise CommitConflict("concurrent commit during optimize")
-            files = [e for e in cur if e["path"] not in s_paths] + new
-            manifest = {"version": v, "op": "optimize", "files": files,
-                        "n_files": len(files)}
-            if key:
-                manifest["key"] = key
-            if self._publish(self._with_txn(manifest, None, v - 1), v):
-                return v
+        # any commit since the read may have replaced rows of a packed
+        # file: packing the stale set could resurrect them
+        return self._commit("optimize", key, new, None, entries, small,
+                            lambda e: True)
 
     def sync_from(self, spark: SparkSession, upstream: "SnapTable",
                   key: list[str], seq_col: str) -> int:

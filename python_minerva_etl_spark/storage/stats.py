@@ -9,13 +9,15 @@ its own encoding of the result.
    null count and physical type, merged over the row groups of one
    parquet file.  The merge rule: a row group with zero values is
    skipped; any other row group without min/max leaves the column
-   unbounded.  A partial bound would prune a file that holds the
-   row.  A string (BYTE_ARRAY) max of ``''`` in a group with values
-   counts as no min/max too: pyarrow 16.1 drops the stats of a group
-   whose every value is over 4 KB, but when only some are, it records
-   the max as ``''``.  The engine's own sinks write no stats for such
-   a column (:func:`.commit.write_parts`); this rule covers parquet
-   files written elsewhere.
+   unbounded, as does one whose min/max pyarrow cannot convert (a
+   DECIMAL stored as INT32 or INT64).  A partial bound would prune a
+   file that holds the row.  A string (BYTE_ARRAY) max of ``''`` in
+   a group with values counts as no min/max too: pyarrow 16.1 drops
+   the stats of a group whose every value is over 4 KB, but when
+   only some are, it records the max as ``''``.  The engine's own
+   sinks write no stats for such a column
+   (:func:`.commit.write_parts`); this rule covers parquet files
+   written elsewhere.
 2. **Epoch conversion** (:func:`epoch`): exact integer counts since
    1970-01-01 from ``(dt - epoch) // unit`` — never through float
    seconds, which put about 1.3% of microsecond timestamps 1 µs low.
@@ -85,15 +87,18 @@ def footer_bounds(path: str, columns) -> tuple[int, dict[str, Bounds]]:
             st = cc.statistics
             if st is not None:
                 nulls = (nulls or 0) + (st.null_count or 0)
-            if (st is None or not st.has_min_max
-                    or (col.physical_type == "BYTE_ARRAY"
-                        and st.max in ("", b""))):
-                # pyarrow records the max of a group holding a string
-                # over 4 KB as '' — read as no bound
+            try:
+                if (st is None or not st.has_min_max
+                        or (col.physical_type == "BYTE_ARRAY"
+                            and st.max in ("", b""))):
+                    # pyarrow records the max of a group holding a
+                    # string over 4 KB as '' — read as no bound
+                    bounded = False
+                else:
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+            except NotImplementedError:  # pyarrow's, e.g. DECIMAL in INT64
                 bounded = False
-            else:
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
         if not bounded:
             lo = hi = None
         out[col.path] = Bounds(lo, hi, nulls, col.physical_type)

@@ -3,12 +3,16 @@ contracts (recall for LSH, candidate containment for SimHash)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from python_minerva_etl_spark.ext.dedup import (minhash_lsh_candidates,
                                                 near_dup_pairs_exact,
                                                 near_dup_pairs_lsh)
 from python_minerva_etl_spark.registry import load_table
+
+from .conftest import SF_CORRECT
 
 SF = "/root/testdata/sf0.001"
 
@@ -921,3 +925,34 @@ def test_incremental_dedup_skew_threshold_bounds_deep_clique(spark):
     plan = adaptive_acc._jdf.queryExecution().toString()
     assert "lead(" in plan          # chain path engaged (deep buckets)
     assert "Join" in plan           # exact path engaged (small buckets)
+
+
+def test_persisted_ivf_index_follows_replaced_embeddings(
+        spark, tmp_path, monkeypatch):
+    """The persisted IVF index of ``dedup_semantic_indexed`` is named
+    by the embeddings file's stamps: after the file is replaced, a
+    re-run builds a fresh index instead of reusing the stale one, and
+    returns what a build into an empty temp dir returns."""
+    import shutil
+    import tempfile
+
+    from python_minerva_etl_spark.queries.ext_sim import \
+        _dedup_semantic_indexed
+
+    def run(tmp):
+        os.makedirs(tmp, exist_ok=True)
+        monkeypatch.setattr(tempfile, "tempdir", tmp)
+        return sorted(tuple(r) for r in
+                      _dedup_semantic_indexed(spark, sf).collect())
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF, sf)
+    os.chmod(sf, 0o755)  # the fixture directory is read-only
+    first = run(str(tmp_path / "tmp"))
+    emb = os.path.join(sf, "embeddings.parquet")
+    os.remove(emb)
+    shutil.copyfile(os.path.join(SF_CORRECT, "embeddings.parquet"), emb)
+    second = run(str(tmp_path / "tmp"))
+    fresh = run(str(tmp_path / "empty"))
+    assert second == fresh
+    assert second != first

@@ -455,3 +455,38 @@ def test_overwrite_iceberg_truncate_and_replace(spark, tmp_path):
     overwrite_iceberg(spark, spark.createDataFrame(
         [(1, "a")], "id long, v string"), p2)
     assert _rows(read_iceberg(spark, p2)) == [(1, "a")]
+
+
+def test_decimal_columns_roundtrip_and_where(spark, tmp_path):
+    """DECIMAL columns of every parquet storage Spark picks (INT32,
+    INT64, fixed-length) write and read back; pyarrow cannot convert
+    the INT32/INT64 footer stats, so those columns get no bounds and
+    a ``where`` on them keeps every file, while bounds on the other
+    columns still prune."""
+    import decimal
+
+    p = str(tmp_path / "t")
+    for lo in (0, 100):
+        write_iceberg(spark, spark.range(lo, lo + 5).selectExpr(
+            "id",
+            "CAST(id + 0.25 AS DECIMAL(9,2)) AS d9",
+            "CAST(id + 0.5 AS DECIMAL(10,2)) AS d10",
+            "CAST(id + 0.125 AS DECIMAL(28,4)) AS d28").coalesce(1), p)
+    D = decimal.Decimal
+    assert len(_rows(read_iceberg(spark, p))) == 10
+    for col, lit in (("d9", D("100.25")), ("d10", D("100.50")),
+                     ("d28", D("100.1250"))):
+        got = _rows(read_iceberg(spark, p, where=[(col, ">=", lit)])
+                    .filter(f"{col} >= {lit}").select("id"))
+        assert got == [(i,) for i in range(100, 105)], col
+    t = IcebergTable(p)
+    md = t.metadata()
+    files, _ = t._data_files(t._snapshot(md, None), [], md)
+    from python_minerva_etl_spark.storage.iceberg import _file_may_match
+    sch = t._current_schema(md)
+    fid = {f["name"]: f["id"] for f in sch["fields"]}
+    fty = {f["name"]: f["type"] for f in sch["fields"]}
+    assert sum(_file_may_match(f, [("d10", ">=", D("100.50"))], fid, fty)
+               for f in files) == 2
+    assert sum(_file_may_match(f, [("id", ">=", 100)], fid, fty)
+               for f in files) == 1

@@ -763,29 +763,183 @@ def test_broken_plugin_warns_not_swallows(caplog):
     del P._REGISTRY["good_test_plugin"]
 
 
-def test_executor_file_meta_identical_to_driver_loop(spark, tmp_path):
-    """Round-5: stats+bloom construction moved into the executors
-    (mapInPandas over written files).  The resulting manifest entries
-    must be BYTE-identical to what the old driver-side loop produced
-    from the same files."""
-    import glob as _glob
-    import json as _json
+def _reference_entry(path: str, rel: str, key: list[str]) -> dict:
+    """A manifest entry computed the slow, obvious way: row count and
+    per-column min/max from the footer's row groups, and a bloom that
+    ORs the md5 probes of every non-null value, dropped past 8,192
+    distinct keys."""
+    import pyarrow.parquet as pq
 
     from python_minerva_etl_spark.storage.snaptable import (
-        SnapTable, _collect_file_meta, _file_bloom, _file_stats)
+        _bloom_key, _bloom_positions, _canon)
 
-    st = SnapTable(str(tmp_path / "t"))
-    df = spark.range(0, 5000).selectExpr(
-        "id AS k", "id AS seq", "CAST(id AS DOUBLE) / 7 AS v",
-        "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,id) AS ts")
-    st.append(spark, df.repartition(4), ["k", "ts"])
-    paths = sorted(_glob.glob(str(tmp_path / "t" / "data" / "*" /
-                                  "*.parquet")))
-    assert len(paths) >= 2
-    got = _collect_file_meta(spark, paths, ["k", "ts"])
-    for p in paths:
-        rows, stats = _file_stats(p, ["k", "ts"])
-        bloom = _file_bloom(p, ["k", "ts"]) if rows else {}
-        assert _json.dumps(got[p], sort_keys=True) == _json.dumps(
-            {"rows": rows, "stats": stats, "bloom": bloom},
-            sort_keys=True), p
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    stats, bloom = {}, {}
+    for c in key:
+        ci = pf.schema_arrow.names.index(c)
+        sts = [md.row_group(rg).column(ci).statistics
+               for rg in range(md.num_row_groups)]
+        if all(st is not None and st.has_min_max for st in sts):
+            stats[c] = [_canon(min(st.min for st in sts)),
+                        _canon(max(st.max for st in sts))]
+        vals = [v for v in pf.read(columns=[c]).column(c).to_pylist()
+                if v is not None]
+        if len({_bloom_key(v) for v in vals}) <= 8192:
+            bits = 0
+            for v in vals:
+                for pos in _bloom_positions(v):
+                    bits |= 1 << pos
+            bloom[c] = f"{bits:x}"
+    entry = {"path": rel, "bytes": os.path.getsize(path),
+             "rows": md.num_rows, "stats": stats}
+    if bloom:
+        entry["bloom"] = bloom
+    return entry
+
+
+_META_KEY = ["k8192", "k8193", "dbl", "ts", "nul"]
+_META_SQL = [
+    "id % 8192 AS k8192", "id AS k8193",
+    # 8,193 distinct doubles but 8,192 bloom keys: -0.0 and 0.0 share
+    # one, so this bloom is kept
+    "CASE id WHEN 0 THEN CAST('-0.0' AS DOUBLE) WHEN 1 THEN 0.0D "
+    "WHEN 2 THEN CAST('NaN' AS DOUBLE) ELSE id + 0.5D END AS dbl",
+    "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,id % 500) AS ts",
+    "CAST(NULL AS BIGINT) AS nul", "id AS v"]
+
+
+def test_manifest_entries_match_bruteforce_reference(spark, tmp_path):
+    """Every manifest entry a commit writes equals the brute-force
+    reference — the same keys in the same order: footer stats, and
+    blooms exactly at the 8,192-key bound (8,192 kept, 8,193 dropped,
+    ±0.0 folded), for a timestamp column and an all-NULL one."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from python_minerva_etl_spark.storage.snaptable import _file_entry
+
+    t = SnapTable(str(tmp_path / "t"))
+    df = spark.range(0, 8193).selectExpr(*_META_SQL)
+    t.append(spark, df.coalesce(1), _META_KEY)
+    t.append(spark, df.repartition(3, "v"), _META_KEY)
+    entries = t.files()
+    assert len(entries) == 4
+    for e in entries:
+        ref = _reference_entry(os.path.join(t.path, e["path"]),
+                               e["path"], _META_KEY)
+        assert json.dumps(e) == json.dumps(ref), e["path"]
+    one = entries[0]
+    # an all-NULL column has no bounds and an empty bloom
+    assert set(one["bloom"]) == {"k8192", "dbl", "ts", "nul"}
+    assert one["bloom"]["nul"] == "0"
+    assert set(one["stats"]) == {"k8192", "k8193", "dbl", "ts"}
+
+    # many row groups: distinct values union across them
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(df.toArrow(), path, row_group_size=1000)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 9
+    # -0.0 and 0.0 are two distinct values to Arrow
+    assert len(pc.unique(pq.read_table(path).column("dbl"))) == 8193
+    assert json.dumps(_file_entry(path, "rg.parquet", _META_KEY)) == \
+        json.dumps(_reference_entry(path, "rg.parquet", _META_KEY))
+
+
+def test_saturated_bloom_stops_hashing_at_bound(tmp_path, monkeypatch):
+    """Key columns with 20,000 distinct values get no bloom.  Building
+    the entry computes no bloom key for the int column, whose distinct
+    count is its key count, and at most 8,193 for the double column,
+    whose values could share keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_minerva_etl_spark.storage import snaptable
+
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table({
+        "k": pa.array(range(20_000), pa.int64()),
+        "f": pa.array([i / 3 for i in range(20_000)], pa.float64())}),
+        path, row_group_size=7_000)
+    calls = []
+    real = snaptable._bloom_key
+    monkeypatch.setattr(snaptable, "_bloom_key",
+                        lambda v: calls.append(v) or real(v))
+    entry = snaptable._file_entry(path, "wide.parquet", ["k", "f"])
+    assert "bloom" not in entry
+    assert entry["stats"]["k"] == [0, 19_999]
+    assert len(calls) == 8_193
+    assert all(isinstance(v, float) for v in calls)
+
+
+def _racing(make_racer, op):
+    """A ``_publish`` that runs ``make_racer`` once, just before the
+    first publish of an ``op`` commit."""
+    orig = SnapTable._publish
+    fired = []
+
+    def hook(self, manifest, version):
+        if not fired and manifest["op"] == op:
+            fired.append(version)
+            make_racer()
+        return orig(self, manifest, version)
+
+    return hook
+
+
+def test_commit_during_optimize_raises_conflict(spark, tmp_path,
+                                                monkeypatch):
+    """OPTIMIZE conflicts with any commit it missed: packing a stale
+    file set could resurrect rows that commit replaced."""
+    path = str(tmp_path / "t")
+    t = SnapTable(path)
+    for lo in (0, 100):
+        t.append(spark, spark.range(lo, lo + 10).selectExpr(
+            "id AS k", "id AS v").coalesce(1), ["k"])
+    monkeypatch.setattr(SnapTable, "_publish", _racing(
+        lambda: SnapTable(path).append(spark, spark.range(500, 501)
+                                       .selectExpr("id AS k", "id AS v"),
+                                       ["k"]), "optimize"))
+    with pytest.raises(CommitConflict):
+        t.optimize(spark)
+    assert [h["op"] for h in t.history()] == ["append"] * 3
+    assert t.read(spark).count() == 21
+
+
+def test_append_racing_append_lands_on_top(spark, tmp_path, monkeypatch):
+    """Appends have no conflict rule: an append that loses the version
+    race to another append commits on top of it, keeping both."""
+    path = str(tmp_path / "t")
+    t = SnapTable(path)
+    t.append(spark, _mk(spark, [(1, "a", 1, 1.0)]), KEY)
+    monkeypatch.setattr(SnapTable, "_publish", _racing(
+        lambda: SnapTable(path).append(
+            spark, _mk(spark, [(2, "b", 2, 2.0)]), KEY), "append"))
+    v = t.append(spark, _mk(spark, [(3, "c", 3, 3.0)]), KEY)
+    assert v == 3 and t.versions() == [1, 2, 3]
+    assert _sorted_rows(t.read(spark)) == [
+        (1, "a", 1, 1.0), (2, "b", 2, 2.0), (3, "c", 3, 3.0)]
+    assert t.files(3)[:len(t.files(2))] == t.files(2)
+
+
+@pytest.mark.parametrize("dtype", ["decimal(9,2)", "decimal(10,2)",
+                                   "decimal(28,4)"])
+def test_decimal_key_append_merge_read(spark, tmp_path, dtype):
+    """A DECIMAL merge key — INT32, INT64 or fixed-length storage —
+    commits, merges and reads back; its footer bounds count as
+    unbounded, so every file stays a MERGE candidate."""
+    import decimal
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "d string, seq long, v long") \
+            .selectExpr(f"CAST(d AS {dtype}) AS d", "seq", "v")
+
+    t = SnapTable(str(tmp_path / "t"))
+    t.append(spark, frame([("1.50", 1, 10), ("2.25", 1, 20)]), ["d"])
+    t.merge(spark, frame([("2.25", 2, 21), ("-3.10", 2, 30)]), ["d"],
+            "seq")
+    got = {r.d: r.v for r in t.read(spark).collect()}
+    D = decimal.Decimal
+    assert got == {D("1.50"): 10, D("2.25"): 21, D("-3.10"): 30}
+    assert all("d" not in e["stats"] for e in t.files())
+    kept, _ = t.pruned_file_count({"d": (D("2.25"), D("2.25"))})
+    assert kept >= 1
