@@ -10,13 +10,22 @@ Five dedup families, each with the exact/oracle-checkable form AND the
   the exact Jaccard verification pass).
 - SimHash: 64-bit fingerprints via token-hash bit voting; near-dups =
   fingerprints within Hamming distance k, found by pigeonhole band
-  join (deterministic, rows-only check — bit votes aren't ANSI-SQL).
+  join.  The xxhash64 fingerprint is the scale path (rows-only
+  check); the md5 fingerprint runs the same band code and is
+  oracle-verified, since DuckDB rebuilds md5 bit votes exactly.
 - n-gram Jaccard: character-shingle variant of near-dup.
 - embedding cosine: near-dup by vector similarity (exact pairwise
   small-n; LSH/IVF partition pruning at scale — see similarity.py).
 
 All hashing uses Spark built-ins (xxhash64/md5) — JVM-side, no Python
 UDFs anywhere in the hot path.
+
+The band-bucket candidate stage is written once: every SimHash, MinHash
+and incremental surface builds ``(doc, band, bucket, ...)`` rows
+(:func:`simhash_bands`, :func:`minhash_bands`) and feeds them either to
+the full ``(band, bucket)`` self-join (:func:`bucket_pairs`) or to the
+id-ordered ``lead()`` chain (:func:`bucket_chain`); each caller applies
+its own filter and dedup to the candidates.
 """
 
 from __future__ import annotations
@@ -227,6 +236,52 @@ def near_dup_pairs_exact(docs: DataFrame, threshold: float,
                       max_pairs_per_doc, F.desc("jaccard"))
 
 
+# ------------------------------------------------ band-bucket candidates
+
+def bucket_pairs(buckets: DataFrame, *cols: str) -> DataFrame:
+    """Full candidate stage over ``(doc, band, bucket, *cols)`` rows:
+    the ``(band, bucket)`` self-join, one row per doc pair with
+    ``doc_a < doc_b`` per band the pair shares.  Output: ``doc_a``,
+    ``doc_b``, ``band`` and each of ``cols`` as ``<col>_a`` /
+    ``<col>_b``.  Exact, and O(sum of bucket sizes²) — a deep clique
+    is quadratic here; :func:`bucket_chain` is the bounded form."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.bucket") == F.col("b.bucket"))
+                   & (F.col("a.doc") < F.col("b.doc")))
+            .select(F.col("a.doc").alias("doc_a"),
+                    F.col("b.doc").alias("doc_b"),
+                    F.col("a.band").alias("band"),
+                    *[F.col(f"a.{c}").alias(f"{c}_a") for c in cols],
+                    *[F.col(f"b.{c}").alias(f"{c}_b") for c in cols]))
+
+
+def bucket_chain(buckets: DataFrame, depth: int, *cols: str) -> DataFrame:
+    """Bounded candidate stage over ``(doc, band, bucket, *cols)``
+    rows: inside each ``(band, bucket)``, docs sort by id and each
+    pairs with its next ``depth`` successors via ``lead()`` windows
+    (the sorted-neighborhood method, Hernandez & Stolfo's
+    merge/purge) — no join, so candidates are O(n x depth x bands) on
+    ANY clique structure.  Same output columns as
+    :func:`bucket_pairs` (``doc_a < doc_b``), a subset of its rows."""
+    if depth < 1:
+        raise ValueError("neighborhood must be >= 1")
+    w = Window.partitionBy("band", "bucket").orderBy("doc")
+    nbrs = buckets.select(
+        "doc", *cols, "band",
+        F.array(*[F.struct(
+            F.lead("doc", s).over(w).alias("doc_b"),
+            *[F.lead(c, s).over(w).alias(f"{c}_b") for c in cols])
+            for s in range(1, depth + 1)]).alias("nbrs"))
+    return (nbrs.select(F.col("doc").alias("doc_a"),
+                        *[F.col(c).alias(f"{c}_a") for c in cols], "band",
+                        F.explode("nbrs").alias("nb"))
+            .filter(F.col("nb.doc_b").isNotNull())
+            .select("doc_a", "nb.doc_b", "band",
+                    *[f"{c}_a" for c in cols],
+                    *[f"nb.{c}_b" for c in cols]))
+
+
 # ---------------------------------------------------------------- MinHash+LSH
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 64,
@@ -246,6 +301,28 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64,
                       .alias("signature"))
 
 
+def minhash_bands(sig: DataFrame, num_hashes: int,
+                  bands: int) -> DataFrame:
+    """(doc, signature, band, bucket) from :func:`minhash_signatures`
+    output: band ``bi`` is the xxhash64 of its ``num_hashes // bands``
+    signature rows.  Derived on the fly (cheap, scan-local), so a
+    persisted signature store never goes stale against band-count
+    changes."""
+    rows_per_band = num_hashes // bands
+    return (sig.select(
+        "doc", "signature",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.xxhash64(F.concat_ws(
+                    ",", *[F.element_at("signature",
+                                        bi * rows_per_band + ri + 1)
+                           .cast("string")
+                           for ri in range(rows_per_band)])).alias("bucket"))
+            for bi in range(bands)])).alias("bb"))
+        .select("doc", "signature", "bb.band", "bb.bucket"))
+
+
 def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 64,
                            bands: int = 16, id_col: str = "doc_id",
                            text_col: str = "text") -> DataFrame:
@@ -254,27 +331,9 @@ def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 64,
     those agreeing on >=1 band — near-linear at 100 TB vs O(n²)
     pairwise.  Verify candidates with near_dup_pairs_exact on the
     candidate subset (two-phase: cheap recall, exact precision)."""
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, num_hashes, id_col, text_col)
-    banded = sig.select(
-        "doc",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("signature", bi * rows_per_band + ri + 1)
-                           .cast("string")
-                           for ri in range(rows_per_band)])).alias("bucket"))
-            for bi in range(bands)])).alias("bb"))
-    buckets = banded.select("doc", "bb.band", "bb.bucket")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    return (bucket_pairs(minhash_bands(sig, num_hashes, bands))
+            .select("doc_a", "doc_b").distinct())
 
 
 def minhash_lsh_neighbors(docs: DataFrame, num_hashes: int = 64,
@@ -286,36 +345,17 @@ def minhash_lsh_neighbors(docs: DataFrame, num_hashes: int = 64,
     counterpart of :func:`simhash_near_neighbors` (see its docstring
     for the clique-cost argument; same 100x evidence in
     SCALE_r11_100x.json).  Docs sort by id inside each bucket and
-    pair with their next ``neighborhood`` successors via ``lead()``
-    windows — no join — so candidates are O(n x W x bands) on ANY
-    clique structure.  Exact-duplicate cliques share one signature
-    (same bucket in every band), so the id-sorted chain connects them
-    for the components/keep-canonical consumers; loosely-connected
-    near-cliques trade recall, tunable via ``neighborhood``."""
-    if neighborhood < 1:
-        raise ValueError("neighborhood must be >= 1")
-    rows_per_band = num_hashes // bands
+    pair with their next ``neighborhood`` successors
+    (:func:`bucket_chain`) — no join — so candidates are
+    O(n x W x bands) on ANY clique structure.  Exact-duplicate
+    cliques share one signature (same bucket in every band), so the
+    id-sorted chain connects them for the components/keep-canonical
+    consumers; loosely-connected near-cliques trade recall, tunable
+    via ``neighborhood``."""
     sig = minhash_signatures(docs, num_hashes, id_col, text_col)
-    buckets = sig.select(
-        "doc",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("signature",
-                                        bi * rows_per_band + ri + 1)
-                           .cast("string")
-                           for ri in range(rows_per_band)])).alias("bucket"))
-            for bi in range(bands)])).alias("bb")
-    ).select("doc", "bb.band", "bb.bucket")
-    w = Window.partitionBy("band", "bucket").orderBy("doc")
-    nbrs = buckets.select(
-        "doc", F.array(*[F.lead("doc", s).over(w)
-                         for s in range(1, neighborhood + 1)]).alias("nbrs"))
-    return (nbrs.select(F.col("doc").alias("doc_a"),
-                        F.explode("nbrs").alias("doc_b"))
-            .filter(F.col("doc_b").isNotNull())
-            .distinct())
+    return (bucket_chain(minhash_bands(sig, num_hashes, bands),
+                         neighborhood)
+            .select("doc_a", "doc_b").distinct())
 
 
 def near_dup_pairs_lsh(docs: DataFrame, threshold: float,
@@ -445,6 +485,70 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     return agg.select("doc", F.expr(fp).alias("simhash"))
 
 
+def simhash_bands(fp: DataFrame, max_hamming: int) -> DataFrame:
+    """(doc, simhash, band, bucket) from a ``(doc, simhash)`` frame of
+    64-bit fingerprints: the pigeonhole split into ``max_hamming + 1``
+    bands of ``64 // bands`` bits, band ``bi`` starting at bit
+    ``bi * width``.  Any pair within Hamming distance k agrees exactly
+    on >= 1 band, so the band self-join (:func:`bucket_pairs`) finds
+    every pair with hamming <= k."""
+    bands = max_hamming + 1
+    width = 64 // bands
+    mask = (1 << width) - 1
+    return fp.select("doc", "simhash", F.expr(
+        f"explode(transform(sequence(0, {bands - 1}), bi -> "
+        f"struct(bi AS band, shiftright(simhash, bi * {width}) & {mask}"
+        f" AS bucket)))").alias("bp")
+    ).select("doc", "simhash", "bp.band", "bp.bucket")
+
+
+def _simhash_pairs(fp: DataFrame, max_hamming: int,
+                   max_pairs_per_doc: int | None) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every fingerprint pair of ``fp``
+    within ``max_hamming``, from the band self-join."""
+    width = 64 // (max_hamming + 1)
+    mask = (1 << width) - 1
+    joined = bucket_pairs(simhash_bands(fp, max_hamming), "simhash")
+    # a pair agreeing on several bands would hit once per band; emit it
+    # only from the FIRST agreeing band — a scan-local filter, so no
+    # dedup shuffle at all.  Written as a plain conjunction — "∀
+    # earlier band k < band: pieces differ" (vacuously true for band
+    # 0) — because a filter(sequence(...)) HOF is CodegenFallback and
+    # would run INTERPRETED once per candidate pair, tens of millions
+    # of evaluations at the 100x fixture; the conjunction is bands-1
+    # integer compares inside whole-stage codegen.
+    first_band_only = F.expr(" AND ".join(
+        f"(band <= {k} OR (shiftright(simhash_a, {k * width}) & {mask})"
+        f" != (shiftright(simhash_b, {k * width}) & {mask}))"
+        for k in range(max_hamming)) or "true")
+    hamming = F.bit_count(
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("bigint")
+    return _cap_pairs(
+        joined.filter(first_band_only)
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming),
+        max_pairs_per_doc, F.asc("hamming"))
+
+
+def _simhash_neighbors(fp: DataFrame, max_hamming: int,
+                       neighborhood: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) from the id-ordered band chains of
+    ``fp``, each pair once with its minimum hamming."""
+    hamming = F.bit_count(
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("bigint")
+    return (bucket_chain(simhash_bands(fp, max_hamming), neighborhood,
+                         "simhash")
+            .select("doc_a", "doc_b", hamming.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming)
+            # a pair adjacent in several bands surfaces once per
+            # band; the output is already candidate-bounded, so one
+            # small exchange dedups it exactly (the scan-local
+            # first-band trick would DROP a pair whose earlier
+            # agreeing band didn't have it within the neighborhood)
+            .groupBy("doc_a", "doc_b").agg(F.min("hamming")
+                                           .alias("hamming")))
+
+
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
                        id_col: str = "doc_id",
                        text_col: str = "text",
@@ -455,45 +559,9 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
     pigeonhole band trick: split 64 bits into k+1 bands; any pair
     within distance k agrees exactly on >=1 band → equi-join per band,
     then exact popcount filter.  Near-linear candidate generation."""
-    bands = max_hamming + 1
-    width = 64 // bands
-    mask = (1 << width) - 1
-    fp = simhash64(docs, id_col, text_col, parallelism=parallelism)
-    pieces = fp.select("doc", "simhash", F.expr(
-        f"explode(transform(sequence(0, {bands - 1}), bi -> "
-        f"struct(bi AS band, shiftright(simhash, bi * {width}) & {mask}"
-        f" AS piece)))").alias("bp")
-    ).select("doc", "simhash", "bp.band", "bp.piece")
-    a, b = pieces.alias("a"), pieces.alias("b")
-    joined = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.piece") == F.col("b.piece"))
-               & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"),
-                F.col("a.simhash").alias("fp_a"),
-                F.col("b.simhash").alias("fp_b"),
-                F.col("a.band").alias("band")))
-    # a pair agreeing on several bands would hit once per band; emit it
-    # only from the FIRST agreeing band — a scan-local filter, so no
-    # dedup shuffle at all (the old .distinct() was the plan's last
-    # exchange).  r13: unrolled to a plain conjunction — "∀ earlier
-    # band k < band: pieces differ" (vacuously true for band 0) —
-    # because the previous filter(sequence(...)) HOF is
-    # CodegenFallback and ran INTERPRETED once per candidate pair,
-    # which at the 100x fixture is tens of millions of evaluations
-    # on the join output.  Same boolean, bands-1 integer compares,
-    # whole-stage codegen.
-    first_band_only = F.expr(" AND ".join(
-        f"(band <= {k} OR (shiftright(fp_a, {k * width}) & {mask}) != "
-        f"(shiftright(fp_b, {k * width}) & {mask}))"
-        for k in range(bands - 1)) or "true")
-    hamming = F.bit_count(
-        F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("bigint")
-    return _cap_pairs(
-        joined.filter(first_band_only)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming),
-        max_pairs_per_doc, F.asc("hamming"))
+    return _simhash_pairs(
+        simhash64(docs, id_col, text_col, parallelism=parallelism),
+        max_hamming, max_pairs_per_doc)
 
 
 def simhash_near_neighbors(docs: DataFrame, max_hamming: int = 3,
@@ -512,10 +580,11 @@ def simhash_near_neighbors(docs: DataFrame, max_hamming: int = 3,
     ~160 s capped or not.  For the decision the pairs feed —
     keep/drop via connected components — the full clique edge set is
     redundant: any spanning structure yields the same components.
-    So within each (band, piece) bucket, docs are SORTED by id and
-    each doc pairs with its next ``neighborhood`` successors only —
-    ``lead()`` windows, no self-join anywhere — and candidates are
-    O(n x neighborhood x bands) on ANY clique structure.
+    So within each (band, bucket), docs are SORTED by id and each
+    doc pairs with its next ``neighborhood`` successors only
+    (:func:`bucket_chain`) — ``lead()`` windows, no self-join
+    anywhere — and candidates are O(n x neighborhood x bands) on ANY
+    clique structure.
 
     Connectivity: an exact-duplicate clique shares one fingerprint,
     so all members land in the same bucket in every band and the
@@ -532,40 +601,9 @@ def simhash_near_neighbors(docs: DataFrame, max_hamming: int = 3,
     a SUBSET of :func:`simhash_near_pairs` — precision 1 vs that
     surface, recall traded for the bound.
     """
-    if neighborhood < 1:
-        raise ValueError("neighborhood must be >= 1")
-    bands = max_hamming + 1
-    width = 64 // bands
-    mask = (1 << width) - 1
-    fp = simhash64(docs, id_col, text_col, parallelism=parallelism)
-    pieces = fp.select("doc", "simhash", F.expr(
-        f"explode(transform(sequence(0, {bands - 1}), bi -> "
-        f"struct(bi AS band, shiftright(simhash, bi * {width}) & {mask}"
-        f" AS piece)))").alias("bp")
-    ).select("doc", "simhash", "bp.band", "bp.piece")
-    w = Window.partitionBy("band", "piece").orderBy("doc")
-    nbrs = pieces.select(
-        "doc", "simhash",
-        F.array(*[F.struct(
-            F.lead("doc", s).over(w).alias("doc_b"),
-            F.lead("simhash", s).over(w).alias("fp_b"))
-            for s in range(1, neighborhood + 1)]).alias("nbrs"))
-    hamming = F.bit_count(
-        F.col("simhash").bitwiseXOR(F.col("nb.fp_b"))).cast("bigint")
-    return (nbrs.select("doc", "simhash",
-                        F.explode("nbrs").alias("nb"))
-            .filter(F.col("nb.doc_b").isNotNull())
-            .select(F.col("doc").alias("doc_a"),
-                    F.col("nb.doc_b").alias("doc_b"),
-                    hamming.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            # a pair adjacent in several bands surfaces once per
-            # band; the output is already candidate-bounded, so one
-            # small exchange dedups it exactly (the scan-local
-            # first-band trick would DROP a pair whose earlier
-            # agreeing band didn't have it within the neighborhood)
-            .groupBy("doc_a", "doc_b").agg(F.min("hamming")
-                                           .alias("hamming")))
+    return _simhash_neighbors(
+        simhash64(docs, id_col, text_col, parallelism=parallelism),
+        max_hamming, neighborhood)
 
 
 def simhash_md5(docs: DataFrame, id_col: str = "doc_id",
@@ -580,9 +618,10 @@ def simhash_md5(docs: DataFrame, id_col: str = "doc_id",
     one hash Spark and DuckDB compute identically, so a DuckDB query
     can rebuild these exact fingerprints and brute-force-check every
     emitted pair (`dedup_simhash_verified`).  The xxhash64 variant
-    (:func:`simhash64`) stays the scale path — one 64-bit column,
-    no hex parsing.  Halves keep every shift below bit 32, so no
-    engine's signed-overflow rules are in play."""
+    (:func:`simhash64`) stays the scale path — no hex parsing.
+    Halves keep every shift of the vote assembly below bit 32, so no
+    engine's signed-overflow rules are in play; the pair surfaces
+    combine them with :func:`_md5_fingerprint`."""
     toks = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc"),
         F.expr(f"explode(split(lower(`{text_col}`), ' '))")
@@ -610,101 +649,49 @@ def simhash_md5(docs: DataFrame, id_col: str = "doc_id",
                       F.expr(lo).alias("lo"))
 
 
+def _md5_fingerprint(docs: DataFrame, id_col: str,
+                     text_col: str) -> DataFrame:
+    """(doc, simhash): :func:`simhash_md5`'s halves as one 64-bit
+    fingerprint, ``shiftleft(hi, 32) | lo``, so bit b of the md5
+    SimHash is bit b of ``simhash`` and the xxhash band code runs on
+    it unchanged.  Bit 63 lands in the sign bit; a bit shift never
+    overflows, and the band masks and popcount treat it as any other
+    bit."""
+    return simhash_md5(docs, id_col, text_col).select(
+        "doc", F.expr("shiftleft(hi, 32) | lo").alias("simhash"))
+
+
 def simhash_md5_near_pairs(docs: DataFrame, max_hamming: int = 3,
                            id_col: str = "doc_id",
                            text_col: str = "text",
                            max_pairs_per_doc: int | None = None
                            ) -> DataFrame:
-    """Oracle-verifiable SimHash near-dup pairs: md5 fingerprints
-    (:func:`simhash_md5`), pigeonhole banding (4 x 16-bit bands —
-    recall is EXACTLY 1 for hamming <= 3, not probabilistic), exact
-    popcount filter.  Output (doc_a, doc_b, hamming) equals the
-    brute-force all-pairs set, which a DuckDB oracle recomputes
-    independently."""
+    """Oracle-verifiable SimHash near-dup pairs: the band self-join of
+    :func:`simhash_near_pairs` on the md5 fingerprints
+    (:func:`_md5_fingerprint`), 4 x 16-bit bands — recall is EXACTLY
+    1 for hamming <= 3, not probabilistic — and the exact popcount
+    filter.  Output (doc_a, doc_b, hamming) equals the brute-force
+    all-pairs set, which a DuckDB oracle recomputes independently."""
     if max_hamming != 3:
         raise ValueError("verified variant is fixed at 4x16 banding "
                          "(max_hamming=3)")
-    fp = simhash_md5(docs, id_col, text_col)
-    pieces = fp.select("doc", "hi", "lo", F.expr(
-        "explode(array("
-        "struct(0 AS band, lo & 65535 AS piece), "
-        "struct(1 AS band, shiftright(lo, 16) & 65535 AS piece), "
-        "struct(2 AS band, hi & 65535 AS piece), "
-        "struct(3 AS band, shiftright(hi, 16) & 65535 AS piece)))")
-        .alias("bp")
-    ).select("doc", "hi", "lo", "bp.band", "bp.piece")
-    a, b = pieces.alias("a"), pieces.alias("b")
-    joined = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.piece") == F.col("b.piece"))
-               & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"),
-                F.col("b.doc").alias("doc_b"),
-                F.col("a.hi").alias("hi_a"), F.col("a.lo").alias("lo_a"),
-                F.col("b.hi").alias("hi_b"), F.col("b.lo").alias("lo_b"),
-                F.col("a.band").alias("band")))
-    # emit each pair from its FIRST agreeing band only (scan-local —
-    # no dedup shuffle), mirroring simhash_near_pairs.  r13: unrolled
-    # conjunction instead of the interpreted filter(sequence(...))
-    # HOF (CodegenFallback, ran per candidate pair) — same boolean.
-    pieces_a = ("lo_a & 65535", "shiftright(lo_a, 16) & 65535",
-                "hi_a & 65535")
-    pieces_b = ("lo_b & 65535", "shiftright(lo_b, 16) & 65535",
-                "hi_b & 65535")
-    first_band_only = F.expr(" AND ".join(
-        f"(band <= {k} OR ({pa}) != ({pb}))"
-        for k, (pa, pb) in enumerate(zip(pieces_a, pieces_b))))
-    hamming = (F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-               + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-               ).cast("bigint")
-    return _cap_pairs(
-        joined.filter(first_band_only)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming),
-        max_pairs_per_doc, F.asc("hamming"))
+    return _simhash_pairs(_md5_fingerprint(docs, id_col, text_col), 3,
+                          max_pairs_per_doc)
 
 
 def simhash_md5_near_neighbors(docs: DataFrame, neighborhood: int = 4,
                                id_col: str = "doc_id",
                                text_col: str = "text") -> DataFrame:
-    """ORACLE-VERIFIABLE sorted-neighborhood SimHash: the candidate-
-    bounded chain logic of :func:`simhash_near_neighbors` on the md5
-    fingerprints of :func:`simhash_md5`, so a DuckDB oracle can
-    rebuild the fingerprints, the band pieces, the per-bucket
-    id-ordered chains (rank-difference join ≡ the lead() windows
-    here), and the popcount filter bit-for-bit.  Fixed 4 x 16-bit
-    banding (hamming <= 3).  Output (doc_a, doc_b, hamming), each
-    pair once with its min hamming across agreeing bands."""
-    if neighborhood < 1:
-        raise ValueError("neighborhood must be >= 1")
-    fp = simhash_md5(docs, id_col, text_col)
-    pieces = fp.select("doc", "hi", "lo", F.expr(
-        "explode(array("
-        "struct(0 AS band, lo & 65535 AS piece), "
-        "struct(1 AS band, shiftright(lo, 16) & 65535 AS piece), "
-        "struct(2 AS band, hi & 65535 AS piece), "
-        "struct(3 AS band, shiftright(hi, 16) & 65535 AS piece)))")
-        .alias("bp")
-    ).select("doc", "hi", "lo", "bp.band", "bp.piece")
-    w = Window.partitionBy("band", "piece").orderBy("doc")
-    nbrs = pieces.select(
-        "doc", "hi", "lo",
-        F.array(*[F.struct(
-            F.lead("doc", s).over(w).alias("doc_b"),
-            F.lead("hi", s).over(w).alias("hi_b"),
-            F.lead("lo", s).over(w).alias("lo_b"))
-            for s in range(1, neighborhood + 1)]).alias("nbrs"))
-    hamming = (F.bit_count(F.col("hi").bitwiseXOR(F.col("nb.hi_b")))
-               + F.bit_count(F.col("lo").bitwiseXOR(F.col("nb.lo_b")))
-               ).cast("bigint")
-    return (nbrs.select("doc", "hi", "lo", F.explode("nbrs").alias("nb"))
-            .filter(F.col("nb.doc_b").isNotNull())
-            .select(F.col("doc").alias("doc_a"),
-                    F.col("nb.doc_b").alias("doc_b"),
-                    hamming.alias("hamming"))
-            .filter(F.col("hamming") <= 3)
-            .groupBy("doc_a", "doc_b").agg(F.min("hamming")
-                                           .alias("hamming")))
+    """ORACLE-VERIFIABLE sorted-neighborhood SimHash: the chain of
+    :func:`simhash_near_neighbors` on the md5 fingerprints
+    (:func:`_md5_fingerprint`), so a DuckDB oracle can rebuild the
+    fingerprints, the band buckets, the per-bucket id-ordered chains
+    (rank-difference join ≡ the lead() windows here), and the
+    popcount filter bit-for-bit.  Fixed 4 x 16-bit banding
+    (hamming <= 3).  Output (doc_a, doc_b, hamming), each pair once
+    with its min hamming across agreeing bands."""
+    return _simhash_neighbors(_md5_fingerprint(docs, id_col, text_col), 3,
+                              neighborhood)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,

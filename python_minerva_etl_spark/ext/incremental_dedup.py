@@ -33,11 +33,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .dedup import minhash_signatures
+from .dedup import (bucket_chain, bucket_pairs, minhash_bands,
+                    minhash_signatures)
 
 #: state schema: (doc long, signature array<long>)
 STATE_COLS = ("doc", "signature")
+
+#: within-batch chain depth for buckets deeper than
+#: ``skew_bucket_threshold``: the depth at which the recorded keep-set
+#: recall curve (SCALE_r12_batch_neighborhood.json) reaches 1.0 on
+#: graded near-cliques in both id orders
+CHAIN_DEPTH = 16
 
 
 def signature_jaccard_est(sig_a, sig_b) -> F.Column:
@@ -45,25 +53,6 @@ def signature_jaccard_est(sig_a, sig_b) -> F.Column:
     agree = F.size(F.filter(
         F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
     return agree.cast("double") / F.size(sig_a).cast("double")
-
-
-def _bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, band, bucket, signature) — banding is derived from the
-    signature on the fly (cheap, scan-local), so state stores only the
-    signature and never goes stale against band-count changes."""
-    rows_per_band = num_hashes // bands
-    return (sig.select(
-        "doc", "signature",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("signature",
-                                        bi * rows_per_band + ri + 1)
-                           .cast("string")
-                           for ri in range(rows_per_band)])).alias("bucket"))
-            for bi in range(bands)])).alias("bb"))
-        .select("doc", "signature", "bb.band", "bb.bucket"))
 
 
 def compact_state(state: DataFrame,
@@ -95,46 +84,10 @@ def compact_state(state: DataFrame,
     return out
 
 
-def _bucket_self_join(b: DataFrame, threshold: float) -> DataFrame:
-    """Exact within-batch drops: full (band, bucket) self-join — a
-    lower-id batch mate in the same bucket wins.  O(sum bucket²)."""
-    return (b.alias("a")
-            .join(b.alias("b"),
-                  (F.col("a.band") == F.col("b.band"))
-                  & (F.col("a.bucket") == F.col("b.bucket"))
-                  & (F.col("a.doc") < F.col("b.doc")))
-            .filter(signature_jaccard_est(
-                F.col("a.signature"), F.col("b.signature")) >= threshold)
-            .select(F.col("b.doc").alias("doc")).distinct())
-
-
-def _bucket_chain(b: DataFrame, w_depth: int,
-                  threshold: float) -> DataFrame:
-    """Bounded within-batch drops: each doc checks only its ``w_depth``
-    id-order successors per (band, bucket) via lead() chains (the r11
-    sorted-neighborhood pattern, Hernandez & Stolfo).  O(n·W·bands) on
-    ANY clique structure; trades recall on sparsely-chained buckets
-    (recall curve: SCALE_r12 batch_neighborhood study)."""
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("band", "bucket").orderBy("doc")
-    nbrs = b.select(
-        "doc", "signature",
-        F.array(*[F.struct(
-            F.lead("doc", s).over(w).alias("doc_b"),
-            F.lead("signature", s).over(w).alias("sig_b"))
-            for s in range(1, w_depth + 1)]).alias("nbrs"))
-    return (nbrs.select("signature", F.explode("nbrs").alias("nb"))
-            .filter(F.col("nb.doc_b").isNotNull())
-            .filter(signature_jaccard_est(
-                F.col("signature"), F.col("nb.sig_b")) >= threshold)
-            .select(F.col("nb.doc_b").alias("doc")).distinct())
-
-
 def incremental_dedup(state: DataFrame | None, batch: DataFrame,
                       threshold: float = 0.8, num_hashes: int = 64,
                       bands: int = 16, id_col: str = "doc_id",
                       text_col: str = "text",
-                      batch_neighborhood: int | None = None,
                       skew_bucket_threshold: int | None = None
                       ) -> tuple[DataFrame, DataFrame]:
     """Dedup ``batch`` against accepted ``state`` (and itself).
@@ -144,38 +97,34 @@ def incremental_dedup(state: DataFrame | None, batch: DataFrame,
     ``state=None`` for the first batch.  Persist ``new_state``
     (parquet/SnapTable) between runs; the caller owns storage.
 
-    ``batch_neighborhood=W`` bounds the WITHIN-BATCH candidate join
-    with id-sorted lead() chains per band bucket (the r11
-    sorted-neighborhood pattern — see ``dedup.simhash_near_neighbors``)
-    instead of the full bucket self-join: a batch carrying a deep
-    duplicate clique costs O(n·W·bands), not O(clique²).  For
-    exact-dup cliques the keep set is unchanged (member k's chain
-    predecessor k−1 is a true match, so everyone but the canonical
-    still drops — test-locked); loosely-chained near-cliques trade
-    recall.  ``None`` (default) keeps the full join.  The
-    batch-vs-STATE join is unaffected — it is candidate-bounded by
-    the batch size already.
+    Within the batch, the default is the exact ``(band, bucket)``
+    self-join (:func:`~.dedup.bucket_pairs`): a lower-id batch mate in
+    the same bucket wins, at O(sum bucket²).
 
-    ``skew_bucket_threshold=S`` is the ADAPTIVE middle ground (the
+    ``skew_bucket_threshold=S`` is the ADAPTIVE bound (the
     AQE-skew-join idea applied to dedup): buckets with ≤ S batch
     members keep the exact self-join — so on a batch with no deep
     bucket the keep set is IDENTICAL to the default, test-locked —
     and only buckets deeper than S (where the self-join is
-    quadratic) switch to the W-chain (W = ``batch_neighborhood`` or
-    16, the depth the SCALE_r12 study records as keep-set-identical
-    on graded near-cliques in both id orders).  Routing is per
-    (band, bucket): a doc chained in one band is still exactly
-    joined in every un-skewed band, so recall is never below the
-    all-chain path.  Recommended for production ingest: worst-case
-    O(n·S + n·W·bands) instead of O(clique²), exactness preserved
-    everywhere the exact join is affordable.
+    quadratic) switch to id-ordered lead() chains of the fixed depth
+    ``CHAIN_DEPTH`` = 16 (:func:`~.dedup.bucket_chain`, the
+    sorted-neighborhood pattern).  On exact-dup cliques the chain
+    keeps the same set as the join (member k's chain predecessor k−1
+    is a true match, so everyone but the canonical still drops —
+    test-locked).  Routing is per (band, bucket): a doc chained in
+    one band is still exactly joined in every un-skewed band.
+    Recommended for production ingest: worst-case
+    O(n·S + n·16·bands) instead of O(clique²), exactness preserved
+    everywhere the exact join is affordable.  The batch-vs-STATE
+    join is unaffected — it is candidate-bounded by the batch size
+    already.
     """
     sig_new = minhash_signatures(batch, num_hashes, id_col, text_col)
-    new_b = _bands(sig_new, num_hashes, bands)
+    new_b = minhash_bands(sig_new, num_hashes, bands)
 
     dropped_vs_state = None
     if state is not None:
-        st_b = _bands(state.select(*STATE_COLS), num_hashes, bands)
+        st_b = minhash_bands(state.select(*STATE_COLS), num_hashes, bands)
         dropped_vs_state = (
             new_b.alias("n")
             .join(st_b.alias("s"),
@@ -185,29 +134,25 @@ def incremental_dedup(state: DataFrame | None, batch: DataFrame,
                 F.col("n.signature"), F.col("s.signature")) >= threshold)
             .select(F.col("n.doc").alias("doc")).distinct())
 
-    # within-batch: lower-id batch mate in the same bucket wins
-    if skew_bucket_threshold is not None:
+    if skew_bucket_threshold is None:
+        cands = bucket_pairs(new_b, "signature")
+    else:
         # adaptive: exact join where affordable, chain where quadratic.
         # The bucket-size window shuffles on (band, bucket) — the same
         # key both downstream paths partition by.
-        from pyspark.sql.window import Window
         sized = new_b.withColumn(
             "bsz", F.count("*").over(Window.partitionBy("band",
                                                         "bucket")))
-        small = sized.filter(
-            F.col("bsz") <= skew_bucket_threshold).drop("bsz")
-        big = sized.filter(
-            F.col("bsz") > skew_bucket_threshold).drop("bsz")
-        dropped_in_batch = (
-            _bucket_self_join(small, threshold)
-            .unionByName(_bucket_chain(
-                big, batch_neighborhood or 16, threshold))
-            .distinct())
-    elif batch_neighborhood is None:
-        dropped_in_batch = _bucket_self_join(new_b, threshold)
-    else:
-        dropped_in_batch = _bucket_chain(
-            new_b, batch_neighborhood, threshold)
+        deep = F.col("bsz") > skew_bucket_threshold
+        cands = bucket_pairs(sized.filter(~deep).drop("bsz"),
+                             "signature").unionByName(
+            bucket_chain(sized.filter(deep).drop("bsz"), CHAIN_DEPTH,
+                         "signature"))
+    # a candidate's later-id doc drops when the lower-id mate matches
+    dropped_in_batch = (
+        cands.filter(signature_jaccard_est(
+            F.col("signature_a"), F.col("signature_b")) >= threshold)
+        .select(F.col("doc_b").alias("doc")).distinct())
 
     dropped = dropped_in_batch if dropped_vs_state is None else \
         dropped_in_batch.unionByName(dropped_vs_state).distinct()

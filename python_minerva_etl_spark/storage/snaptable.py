@@ -729,8 +729,8 @@ class SnapTable:
             latest = self.latest_version() or 0
             if to_version == latest:
                 return latest  # restoring to the tip is a no-op
-            manifest = dict(old)
-            manifest["restored_from"] = to_version
+            manifest = {**old, "version": latest + 1, "op": "restore",
+                        "restored_from": to_version}
             if self._publish(manifest, latest + 1):
                 return latest + 1
 

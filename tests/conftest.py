@@ -86,7 +86,7 @@ SLOW_TESTS = {
     "test_oracle_diff.py::test_all_queries_run_at_smoke_scale",
     "test_oracle_diff.py::test_declared_query_matches_oracle[stream_join_parity]",
     "test_dedup.py::test_incremental_dedup_five_batches_equals_one_shot",
-    "test_dedup.py::test_incremental_dedup_batch_neighborhood_equivalent_on_cliques",
+    "test_dedup.py::test_incremental_dedup_chain_equivalent_on_cliques",
     "test_avro_source.py::test_max_files_per_trigger_offset_walk",
     "test_avro_source.py::test_max_bytes_per_trigger_offset_walk",
     "test_avro_source.py::test_stream_offsets_name_range_semantics",

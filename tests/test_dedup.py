@@ -551,11 +551,14 @@ def test_simhash_md5_pairs_equal_brute_force(spark):
     docs = spark.createDataFrame(
         [(1, base), (2, base + "extra"), (3, base.replace("fox", "cat")),
          (4, "solo"), (5, "completely different words entirely here"),
-         (6, base)],  # exact dup of 1 -> hamming 0
+         (6, base),  # exact dup of 1 -> hamming 0
+         (7, "completely different words entirely here")],  # dup of 5
         "doc_id long, text string")
     fp = {r.doc: (r.hi, r.lo) for r in simhash_md5(docs).collect()}
     assert all(0 <= h < (1 << 32) and 0 <= l < (1 << 32)
                for h, l in fp.values())
+    # a fingerprint with bit 63 set: the combined 64-bit form is negative
+    assert any(h >= 1 << 31 for h, _ in fp.values())
     want = sorted(
         (a, b, bin((fp[a][0] ^ fp[b][0])).count("1")
          + bin((fp[a][1] ^ fp[b][1])).count("1"))
@@ -565,7 +568,42 @@ def test_simhash_md5_pairs_equal_brute_force(spark):
     got = sorted(tuple(r) for r in
                  simhash_md5_near_pairs(docs).collect())
     assert got == want
-    assert (1, 6) in {(a, b) for a, b, _ in got}  # exact dup found
+    assert {(1, 6), (5, 7)} <= {(a, b) for a, b, _ in got}  # exact dups
+
+
+def test_simhash_md5_neighbors_equal_reference(spark):
+    """simhash_md5_near_neighbors against a pure-Python sorted
+    neighborhood: the md5 halves combined into one 64-bit fingerprint,
+    four 16-bit band pieces, each doc linked to its next 2 by id
+    within each (band, piece) bucket, pairs with hamming <= 3 kept
+    once with their minimum hamming."""
+    from python_minerva_etl_spark.ext.dedup import (
+        simhash_md5, simhash_md5_near_neighbors)
+
+    rows = _clique_corpus()
+    # one-word variants of a few groups: near-dups at hamming > 0
+    rows += [(100 + g, " ".join(["v"] + [f"g{g}w{i}" for i in range(1, 12)]))
+             for g in (2, 4, 9, 14)]
+    docs = _mk_docs(spark, rows)
+    fp = {r.doc: (r.hi << 32) | r.lo for r in simhash_md5(docs).collect()}
+    assert any(v >> 63 for v in fp.values())  # sign bit covered
+
+    want = {}
+    for band in range(4):
+        buckets = {}
+        for d in sorted(fp):
+            buckets.setdefault((fp[d] >> (16 * band)) & 0xFFFF,
+                               []).append(d)
+        for members in buckets.values():
+            for i, a in enumerate(members):
+                for b in members[i + 1:i + 3]:
+                    h = bin(fp[a] ^ fp[b]).count("1")
+                    if h <= 3:
+                        want[a, b] = min(h, want.get((a, b), h))
+    got = {(r.doc_a, r.doc_b): r.hamming for r in
+           simhash_md5_near_neighbors(docs, neighborhood=2).collect()}
+    assert got == want
+    assert len(got) > 20 and any(got.values())
 
 
 def test_minhash_verified_two_phase_equals_exact(spark):
@@ -846,10 +884,11 @@ def test_minhash_neighbors_bound_subset_connectivity(spark):
     assert comps(nbrs) == comps(exact)
 
 
-def test_incremental_dedup_batch_neighborhood_equivalent_on_cliques(spark):
-    """batch_neighborhood bounds the within-batch join; on exact-dup
-    cliques the keep set (and final state) matches the full-join
-    variant batch for batch."""
+def test_incremental_dedup_chain_equivalent_on_cliques(spark):
+    """The within-batch chain (every bucket with more than one member
+    chains at ``skew_bucket_threshold=1``): on exact-dup cliques the
+    keep set (and final state) matches the full-join variant batch
+    for batch."""
     from python_minerva_etl_spark.ext.incremental_dedup import (
         compact_state, incremental_dedup)
 
@@ -868,7 +907,7 @@ def test_incremental_dedup_batch_neighborhood_equivalent_on_cliques(spark):
     # comparison can't silently depend on iteration order
     full_got, full_state_n = run()
     assert len(full_got) == 20
-    bounded_got, bounded_state_n = run(batch_neighborhood=2)
+    bounded_got, bounded_state_n = run(skew_bucket_threshold=1)
     assert bounded_got == full_got
     assert bounded_state_n == full_state_n
 

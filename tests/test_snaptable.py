@@ -569,6 +569,8 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path):
         key=["k"], seq_col="seq")                       # v2
     v3 = t.restore(1)
     assert v3 == 3 and t.versions() == [1, 2, 3]
+    assert [h["version"] for h in t.history()] == [1, 2, 3]
+    assert t.history()[-1]["op"] == "restore"
     got = {(r.k, r.v) for r in t.read(spark).select("k", "v").collect()}
     assert got == {(1, 10.0), (2, 20.0)}
     # time travel still reaches the undone version
