@@ -1595,7 +1595,7 @@ def _source_avro_zstd_roundtrip(spark, sf_dir):
     """OP-SRC-PLUGIN zstandard roundtrip (r8 verdict #6): events as
     a ZSTANDARD Avro container (bare zstd frames per the Avro 1.11
     required-codec set, decompressed through the frame header's
-    content size — sources/avro.py:_zstd), read back through
+    content size — storage/avro_file.py:_zstd), read back through
     byte-range splits and re-aggregated against the parquet
     oracle."""
     from ..sources.avro import read_avro, write_avro

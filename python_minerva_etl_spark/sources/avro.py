@@ -1,7 +1,8 @@
 """Avro object-container files as a Spark source — no spark-avro jar.
 
-Built on the same from-scratch Avro decoder as the Iceberg interop
-(:func:`storage.iceberg.avro_read`, Avro 1.11 spec).  The read is
+Built on the same from-scratch Avro 1.11 container code as the
+Iceberg manifests (``storage/avro_file.py``: header, sync-delimited
+blocks, codecs, datum decode and encode).  The read is
 DISTRIBUTED and SPLITTABLE: the driver touches only the FIRST file's
 header (to derive the Spark schema); decoding runs as ``mapInPandas``
 tasks over BYTE-RANGE SPLITS aligned on the container's 16-byte sync
@@ -23,13 +24,16 @@ Schema scope (raise otherwise — never silently misread):
   ``date`` (int days → DateType), ``timestamp-micros`` /
   ``timestamp-millis`` (long → TimestampType, UTC).
 
-Two vectorized fast paths (parity-locked in
-``tests/test_avro_vector.py``): all-varint records decode fully in
-numpy (16x), and flat records mixing strings/bytes/float/double and
-``["null", X]`` unions — the dominant LLM-corpus shape — use a lean
-offsets-only structure scan + vectorized column extraction (4-5x on
-narrow rows, ~100 MB/s/worker on wide text; PERF.md).  Everything
-else (nesting, decimal, multi-branch unions) decodes sequentially.
+One vectorized block decoder (parity-locked in
+``tests/test_avro_vector.py``) covers flat records of scalars,
+strings/bytes, floats and ``["null", X]`` unions: a structure scan
+finds each field's payload starts, then one per-kind extraction
+decodes the kept columns.  The plan's shape picks the scan: when
+every field is a non-null varint kind, numpy finds the starts (the
+16x all-varint path); otherwise a lean Python offsets scan does
+(4-5x on narrow rows, ~100 MB/s/worker on wide text; PERF.md).
+Everything else (nesting, decimal, multi-branch unions) decodes
+sequentially.
 
 Registered as source plugin ``avro`` (``sources/plugins.py``).
 """
@@ -44,6 +48,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..storage.avro_file import (CODECS, _avro_encode, _Cursor, _decode,
+                                 _header_codec, _read_header,
+                                 _split_blocks, write_container)
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH_TS = datetime.datetime(1970, 1, 1)
@@ -138,175 +146,49 @@ def _convert(value, schema):
     return value
 
 
-# ------------------------------------------------- vectorized fast path
+# --------------------------------------------------- vectorized decode
 #
-# The sequential decoder reads one byte at a time in Python (~1 MB/s
-# per worker — PERF.md).  For the common analytics shape — a record
-# of NON-NULLABLE varint-encoded scalars (int, long, boolean, enum,
-# date, timestamp-millis/micros) — every byte of a block body belongs
-# to exactly one varint (boolean's single 0x00/0x01 byte is a valid
-# one-byte varint), so a whole block decodes with numpy:
+# The sequential decoder reads one byte at a time in Python (~2 MB/s
+# per worker — PERF.md).  Flat records of scalars, strings/bytes and
+# ``["null", X]`` unions — the analytics and LLM-corpus shapes —
+# decode a block at a time instead, structure first, values second:
 #
-#   1. varint boundaries = bytes with the high bit clear;
-#   2. per-varint magnitude = one np.add.reduceat over the 7-bit
-#      groups shifted into place;
-#   3. zigzag / boolean / logical-type reinterpretation per COLUMN
-#      after reshaping to (n_records, n_fields).
-#
-# Anything outside that shape (strings, bytes, floats, nullable
-# unions, nesting) falls back to the exact sequential decoder — the
-# fast path either applies to a file or it doesn't; it never guesses.
-
-_VARINT_ZIGZAG = {"int", "long"}
-
-
-def _vector_plan(schema: dict):
-    """Per-field decode plan if every field is vectorizable, else
-    None.  Plan entries: ("zigzag"|"boolean"|"enum"|"date"|
-    "ts-micros"|"ts-millis", extra)."""
-    plan = []
-    for f in schema["fields"]:
-        s = f["type"]
-        if isinstance(s, str):
-            if s in _VARINT_ZIGZAG:
-                plan.append(("zigzag", None))
-                continue
-            if s == "boolean":
-                plan.append(("boolean", None))
-                continue
-            return None
-        if isinstance(s, dict):
-            lt = s.get("logicalType")
-            base = s["type"]
-            if lt == "date" and base == "int":
-                plan.append(("date", None))
-                continue
-            if lt == "timestamp-micros" and base == "long":
-                plan.append(("ts-micros", None))
-                continue
-            if lt == "timestamp-millis" and base == "long":
-                plan.append(("ts-millis", None))
-                continue
-            if base == "enum":
-                plan.append(("enum", list(s["symbols"])))
-                continue
-            if base in _VARINT_ZIGZAG and lt is None:
-                plan.append(("zigzag", None))
-                continue
-        return None
-    return plan
-
-
-def _decode_block_vectorized(body: bytes, n_records: int, plan,
-                             keep=None):
-    """One block body -> list of per-field numpy/pandas columns.
-    ``keep`` (sorted field indices) prunes the CONVERSION stage —
-    every varint still decodes (the block is a packed varint
-    stream), but unwanted columns skip their zigzag/logical-type
-    conversion and materialization."""
-    import numpy as np
-
-    nfields = len(plan)
-    sel = range(nfields) if keep is None else keep
-    if n_records == 0:
-        return [np.empty(0, dtype=np.int64) for _ in sel]
-    b = np.frombuffer(body, dtype=np.uint8)
-    if len(b) == 0 or (b[-1] & 0x80):
-        raise ValueError("avro: truncated varint block")
-    ends = np.flatnonzero((b & 0x80) == 0)
-    if len(ends) != n_records * nfields:
-        raise ValueError(
-            f"avro: block claims {n_records} records x {nfields} "
-            f"fields but contains {len(ends)} varints")
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # level iteration: OR each varint's k-th continuation byte into
-    # place, shrinking to the still-continuing subset each level —
-    # O(total varint bytes) with per-VARINT vector ops, ~1.5x the
-    # per-BYTE group/cumsum/reduceat formulation it replaces (and
-    # far less peak memory: no O(B) int64 scratch).  Levels are
-    # bounded by the 10-byte max varint; the b[-1] continuation
-    # check above plus the ends-count check guarantee starts[idx]+k
-    # stays in bounds.
-    first = b[starts].astype(np.uint64)
-    u = first & np.uint64(0x7F)
-    idx = np.flatnonzero(first & np.uint64(0x80))
-    k = 1
-    while idx.size:
-        if k > 9:  # 10-byte max varint; more = malformed block
-            raise ValueError("avro: varint longer than 10 bytes")
-        byt = b[starts[idx] + k].astype(np.uint64)
-        u[idx] |= (byt & np.uint64(0x7F)) << np.uint64(7 * k)
-        idx = idx[(byt & np.uint64(0x80)) != 0]
-        k += 1
-    mat = u.reshape(n_records, nfields)
-    cols = []
-    for i in sel:
-        kind, extra = plan[i]
-        raw = mat[:, i]
-        if kind == "boolean":
-            cols.append(raw != 0)
-            continue
-        # zigzag (Avro spec: int/long/enum-index/date/timestamps are
-        # all written as zigzag varints; enum indexes are >= 0 so
-        # zigzag is a no-op-safe decode there too)
-        val = ((raw >> np.uint64(1)).astype(np.int64)
-               ^ -((raw & np.uint64(1)).astype(np.int64)))
-        if kind == "enum":
-            sym = np.asarray(extra, dtype=object)
-            cols.append(sym[val])
-        elif kind == "date":
-            # datetime64[D] -> datetime.date objects; unlike
-            # pd.to_datetime (ns-resolution) this never overflows
-            # inside the full Avro date range
-            cols.append(val.astype("datetime64[D]").astype(object))
-        elif kind == "ts-micros":
-            cols.append(val.astype("datetime64[us]"))
-        elif kind == "ts-millis":
-            cols.append(val.astype("datetime64[ms]")
-                        .astype("datetime64[us]"))
-        else:
-            cols.append(val)
-    return cols
-
-
-# -------------------------------------- general vectorized fast path
-#
-# The all-varint path above needs every byte to be part of a varint.
-# String-bearing schemas — the dominant shape for an LLM text corpus —
-# break that (a string is a zigzag length + raw UTF-8 whose bytes look
-# like arbitrary varint fragments), so they fell back to the ~2 MB/s
-# sequential decoder (round-6 verdict item 5).  This path splits
-# structure from values:
-#
-#   1. a LEAN structure scan walks the block once recording only
-#      field payload offsets (and string/bytes lengths) — O(1) per
-#      field: no value decode, no per-record dicts, no schema
+#   1. a structure scan records each field occurrence's payload
+#      START (-1 for null) and, for string/bytes, its length.  When
+#      every field is a non-null varint kind, every byte of the block
+#      belongs to exactly one varint (boolean's 0x00/0x01 byte is a
+#      one-byte varint), so numpy finds the starts: the bytes after
+#      those with the high bit clear, reshaped to (records, fields).
+#      Otherwise a lean Python scan walks the block once, O(1) per
+#      field — no value decode, no per-record dicts, no schema
 #      resolution, which is where the sequential decoder's time goes;
-#   2. columns are then extracted VECTORIZED at the known offsets —
-#      varints via one masked-shift gather per column, float/double
-#      via a view, strings as direct slices (one Python slice per
-#      value, the irreducible object cost).
+#   2. each KEPT column is then extracted vectorized at its starts:
+#      varints by per-level iteration, float/double via a view,
+#      strings as direct slices (one Python slice per value, the
+#      irreducible object cost).
 #
-# The scan validates as it goes (union branch bytes, non-negative
-# lengths, block tiling); any anomaly raises and the caller falls
-# back to the sequential decoder for that file — the fast path never
-# guesses.
+# Both scans validate as they go (union branch bytes, non-negative
+# lengths, block tiling, varint counts) and the extraction
+# range-checks enum indexes; any anomaly raises and the caller
+# re-decodes that block sequentially — the fast path never guesses.
 
 _GEN_SIMPLE = {"int": "zigzag", "long": "zigzag", "boolean": "boolean",
                "string": "string", "bytes": "bytes",
                "float": "float", "double": "double"}
 
-# blocks larger than this use the sequential decoder: the structure
-# pass keeps a few O(B) int64 arrays alive (~10x B bytes peak)
+_VARINT_KINDS = {"zigzag", "boolean", "enum", "date", "ts-micros",
+                 "ts-millis"}
+
+# blocks larger than this use the sequential decoder: the Python
+# structure scan keeps a few O(B) int lists alive (~10x B bytes peak)
 _GEN_MAX_BLOCK = 32 << 20
 
 
 def _gen_kind(s):
     """(kind, extra) for one non-null field schema, or None."""
     if isinstance(s, str):
-        return (s and _GEN_SIMPLE.get(s)) and (_GEN_SIMPLE[s], None)
+        kind = _GEN_SIMPLE.get(s)
+        return (kind, None) if kind else None
     if isinstance(s, dict):
         lt = s.get("logicalType")
         base = s["type"]
@@ -324,9 +206,10 @@ def _gen_kind(s):
 
 
 def _vector_plan_general(schema: dict):
-    """Per-field (kind, extra, null_branch) plan covering the
-    string-bearing shapes, or None.  ``null_branch`` is the union
-    index of "null" for ``["null", X]`` fields, else None."""
+    """Per-field (kind, extra, null_branch) plan for a flat record,
+    or None (nesting, decimal, multi-branch unions decode
+    sequentially).  ``null_branch`` is the union index of "null" for
+    ``["null", X]`` fields, else None."""
     plan = []
     for f in schema["fields"]:
         s = f["type"]
@@ -345,29 +228,37 @@ def _vector_plan_general(schema: dict):
     return plan
 
 
-def _decode_block_general(body: bytes, n_records: int, plan,
-                          keep=None):
-    """One block body -> list of per-field columns (numpy arrays, or
-    object lists for string/bytes/nullable).  ``keep`` (sorted field
-    indices) prunes the EXTRACTION stage — the structure scan still
-    walks every field (records are variable-width), but unwanted
-    columns never pay their value decode (for strings, the per-value
-    Python slices — the dominant cost on text corpora)."""
+def _all_varint(plan) -> bool:
+    """True when every field is a non-null varint kind: the plan
+    shape whose block structure numpy can scan."""
+    return all(kind in _VARINT_KINDS and nb is None
+               for kind, _extra, nb in plan)
+
+
+def _varint_starts(b, n_records: int, nfields: int):
+    """Field starts of an all-varint block, shape (nfields, n_records)."""
     import numpy as np
 
+    if len(b) == 0 or (b[-1] & 0x80):
+        raise ValueError("avro: truncated varint block")
+    ends = np.flatnonzero((b & 0x80) == 0)
+    if len(ends) != n_records * nfields:
+        raise ValueError(
+            f"avro: block claims {n_records} records x {nfields} "
+            f"fields but contains {len(ends)} varints")
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    return starts.reshape(n_records, nfields).T
+
+
+def _offsets_scan(body: bytes, n_records: int, plan):
+    """Python structure scan of a general block: per-field payload
+    starts (-1 = null) and string/bytes lengths."""
     nfields = len(plan)
-    sel = range(nfields) if keep is None else keep
-    if n_records == 0:
-        return [[] for _ in sel]
     B = len(body)
     if B > _GEN_MAX_BLOCK:
         raise ValueError("avro: block too large for vectorized scan")
-
-    # ---- pass 1: lean structure scan.  Python, but O(1) per field:
-    # it records each field occurrence's payload START (and byte
-    # length for string/bytes) and never decodes values, builds
-    # objects, or resolves schemas — that is where the sequential
-    # decoder spends its time.  starts[f][r] = -1 marks null.
     starts: list[list[int]] = [[] for _ in range(nfields)]
     lens: list[list[int]] = [[] for _ in range(nfields)]
     # precompiled per-field ops: (opcode, null_branch, append fns);
@@ -426,75 +317,105 @@ def _decode_block_general(body: bytes, n_records: int, plan,
             "avro: structure scan ran past block end") from None
     if pos != B:
         raise ValueError("avro: structure scan did not tile the block")
+    return starts, lens
 
-    # ---- pass 2: vectorized column extraction at known starts
+
+def _varints(b, starts):
+    """Raw (un-zigzagged) uint64 values of the varints beginning at
+    ``starts``.  Level iteration: OR each varint's k-th continuation
+    byte into place, shrinking to the still-continuing subset each
+    level — per-VARINT vector ops, no O(B) scratch.  Both structure
+    scans guarantee every varint ends inside the block, so
+    ``starts[idx] + k`` stays in bounds."""
+    import numpy as np
+
+    first = b[starts].astype(np.uint64)
+    u = first & np.uint64(0x7F)
+    idx = np.flatnonzero(first & np.uint64(0x80))
+    k = 1
+    while idx.size:
+        if k > 9:  # 10-byte max varint; more = malformed block
+            raise ValueError("avro: varint longer than 10 bytes")
+        byt = b[starts[idx] + k].astype(np.uint64)
+        u[idx] |= (byt & np.uint64(0x7F)) << np.uint64(7 * k)
+        idx = idx[(byt & np.uint64(0x80)) != 0]
+        k += 1
+    return u
+
+
+def _extract(body: bytes, b, pos, kind, extra, lens):
+    """One column's values at payload starts ``pos`` (no nulls)."""
+    import numpy as np
+
+    if kind in ("float", "double"):
+        w = 4 if kind == "float" else 8
+        arr = np.ascontiguousarray(
+            b[pos[:, None] + np.arange(w, dtype=np.int64)])
+        return arr.view("<f4" if w == 4 else "<f8").ravel()
+    if kind == "string":
+        return [body[i:i + n].decode("utf-8")
+                for i, n in zip(pos.tolist(), lens)]
+    if kind == "bytes":
+        return [body[i:i + n] for i, n in zip(pos.tolist(), lens)]
+    raw = _varints(b, pos)
+    if kind == "boolean":
+        # boolean is a raw 0x00/0x01 byte — nonzero == true
+        return raw != 0
+    # zigzag: int/long/enum-index/date/timestamps are all written as
+    # zigzag varints
+    val = ((raw >> np.uint64(1)).astype(np.int64)
+           ^ -((raw & np.uint64(1)).astype(np.int64)))
+    if kind == "enum":
+        if len(val) and (val.min() < 0 or val.max() >= len(extra)):
+            raise ValueError("avro: enum index out of range")
+        return np.asarray(extra, dtype=object)[val]
+    if kind == "date":
+        # datetime64[D] -> datetime.date objects; unlike
+        # pd.to_datetime (ns-resolution) this never overflows inside
+        # the full Avro date range
+        return val.astype("datetime64[D]").astype(object)
+    if kind == "ts-micros":
+        return val.astype("datetime64[us]")
+    if kind == "ts-millis":
+        return val.astype("datetime64[ms]").astype("datetime64[us]")
+    return val
+
+
+def _decode_block_general(body: bytes, n_records: int, plan,
+                          keep=None):
+    """One block body -> list of per-field columns (numpy arrays, or
+    object arrays/lists for string/bytes/nullable).  ``keep`` (sorted
+    field indices) prunes the EXTRACTION stage — the structure scan
+    still covers every field (records are variable-width), but
+    unwanted columns never pay their value decode (for strings, the
+    per-value Python slices — the dominant cost on text corpora)."""
+    import numpy as np
+
+    sel = range(len(plan)) if keep is None else keep
+    if n_records == 0:
+        return [[] for _ in sel]
     b = np.frombuffer(body, dtype=np.uint8)
-    shift7 = np.uint64(7) * np.arange(10, dtype=np.uint64)
-
-    def vdecode(pos_arr, maxlen):
-        """zigzag varint values starting at ``pos_arr``."""
-        gi = np.minimum(
-            pos_arr[:, None] + np.arange(maxlen, dtype=np.int64),
-            np.int64(max(B - 1, 0)))
-        byts = b[gi]
-        is_end = (byts & 0x80) == 0
-        if not is_end.any(axis=1).all():
-            raise ValueError("avro: varint longer than its type")
-        endoff = is_end.argmax(axis=1)
-        mask = np.arange(maxlen, dtype=np.int64) <= endoff[:, None]
-        u = ((byts.astype(np.uint64) & np.uint64(0x7F))
-             << shift7[:maxlen]) * mask
-        u = u.sum(axis=1, dtype=np.uint64)
-        return ((u >> np.uint64(1)).astype(np.int64)
-                ^ -((u & np.uint64(1)).astype(np.int64)))
-
-    def extract(pos_arr, kind, extra, ln_list):
-        if kind in ("float", "double"):
-            w = 4 if kind == "float" else 8
-            gi = pos_arr[:, None] + np.arange(w, dtype=np.int64)
-            arr = np.ascontiguousarray(b[gi])
-            return arr.view("<f4" if w == 4 else "<f8").ravel()
-        if kind in ("string", "bytes"):
-            s0 = pos_arr.tolist()
-            if kind == "string":
-                return [body[i:i + n].decode("utf-8")
-                        for i, n in zip(s0, ln_list)]
-            return [body[i:i + n] for i, n in zip(s0, ln_list)]
-        val = vdecode(pos_arr, 10)
-        if kind == "boolean":
-            # boolean is a raw 0x00/0x01 byte; the zigzag view of it
-            # is 0/-1 — nonzero == true either way
-            return val != 0
-        if kind == "enum":
-            sym = np.asarray(extra, dtype=object)
-            if len(val) and (val.min() < 0 or val.max() >= len(sym)):
-                raise ValueError("avro: enum index out of range")
-            return sym[val]
-        if kind == "date":
-            return val.astype("datetime64[D]").astype(object)
-        if kind == "ts-micros":
-            return val.astype("datetime64[us]")
-        if kind == "ts-millis":
-            return val.astype("datetime64[ms]").astype("datetime64[us]")
-        return val
-
+    if _all_varint(plan):
+        starts, lens = _varint_starts(b, n_records, len(plan)), None
+    else:
+        starts, lens = _offsets_scan(body, n_records, plan)
     cols = []
     for f in sel:
         kind, extra, nb = plan[f]
-        pos_arr = np.asarray(starts[f], dtype=np.int64)
+        pos = np.asarray(starts[f], dtype=np.int64)
         lnl = lens[f] if kind in ("string", "bytes") else None
         if nb is None:
-            cols.append(extract(pos_arr, kind, extra, lnl))
+            cols.append(_extract(body, b, pos, kind, extra, lnl))
             continue
-        valid = pos_arr >= 0
-        vlnl = None if lnl is None else \
-            [n for p, n in zip(starts[f], lnl) if p >= 0]
-        live = extract(pos_arr[valid], kind, extra, vlnl)
+        valid = pos >= 0
+        if lnl is not None:
+            lnl = [n for p, n in zip(starts[f], lnl) if p >= 0]
+        live = _extract(body, b, pos[valid], kind, extra, lnl)
         # Python objects + None (the shape the sequential decoder
         # yields) so Arrow casts from the declared Spark schema
         if not isinstance(live, list):
             live = live.tolist()
-        out = np.empty(len(pos_arr), dtype=object)
+        out = np.empty(len(pos), dtype=object)
         out[~valid] = None
         out[valid] = live
         cols.append(out)
@@ -549,169 +470,11 @@ def _list_files(path: str) -> list[str]:
 
 # -------------------------------------------------- split machinery
 #
-# Avro object-container files are splittable by design: every block
-# is delimited by the file's random 16-byte sync marker (Avro 1.11
-# "Object Container Files").  A byte range [start, end) of a file
-# OWNS exactly the blocks whose preceding sync marker begins at an
-# offset p with start <= p < end, the header's own trailing sync
-# standing in for the first block's delimiter — so every block
-# belongs to exactly one range and a file decodes across N tasks
-# with no coordination.  Range scans locate the first owned sync by
-# pattern search (the spec's sanctioned strategy; a coincidental
-# 16-byte match in block data has probability 2^-128 per offset and
-# would fail loudly at the next trailing-sync check, never decode
-# garbage).  Blocks are STREAMED — a task holds one compressed block
-# plus at most ``batch_bytes`` of decoded output, never the file.
-
-def _read_header(fh) -> tuple[dict, bytes, int]:
-    """(metadata, sync_marker, header_end_offset) from an open file,
-    reading only the header bytes (doubling probe, not the file)."""
-    from ..storage.iceberg import _AVRO_MAGIC, _Cursor, _decode
-
-    size = 1 << 16
-    while True:
-        fh.seek(0)
-        buf = fh.read(size)
-        cur = _Cursor(buf)
-        try:
-            if cur.read(4) != _AVRO_MAGIC:
-                raise ValueError("not an Avro object-container file")
-            meta = _decode(cur, {"type": "map", "values": "bytes"}, {})
-            sync = cur.read(16)
-            return meta, sync, cur.pos
-        except ValueError as exc:
-            if "truncated" in str(exc) and len(buf) == size:
-                size *= 2  # header longer than the probe; widen
-                continue
-            raise
-
-
-def _find_sync(fh, sync: bytes, start: int, limit: int):
-    """First offset p in [start, limit) where the 16-byte ``sync``
-    pattern begins, scanning forward in 1 MiB chunks with a 15-byte
-    overlap so straddling matches are found.  None if absent."""
-    chunk_size = 1 << 20
-    fh.seek(start)
-    buf = b""
-    base = start  # absolute offset of buf[0]
-    while base < limit:
-        chunk = fh.read(chunk_size)
-        if not chunk:
-            return None
-        buf += chunk
-        i = buf.find(sync)
-        if i != -1:
-            p = base + i
-            return p if p < limit else None
-        keep = min(15, len(buf))
-        base += len(buf) - keep
-        buf = buf[-keep:]
-    return None
-
-
-def _read_varint_stream(fh) -> int:
-    """Zigzag varint from a (buffered) file object."""
-    shift = acc = 0
-    while True:
-        b = fh.read(1)
-        if not b:
-            raise ValueError("avro: truncated input")
-        v = b[0]
-        acc |= (v & 0x7F) << shift
-        if not v & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
-def _zstd_frame_size(body: bytes):
-    """Frame_Content_Size of a zstd frame (RFC 8878 §3.1.1.1), or
-    None when the header omits it.  Parsed so pyarrow's zstd
-    decompressor (which requires the exact output size) can run
-    without the optional ``zstandard`` package; every whole-buffer
-    zstd writer (fastavro via zstandard.compress, Java avro, pyarrow)
-    records the size because it is known at compress time."""
-    if len(body) < 6 or body[:4] != b"\x28\xb5\x2f\xfd":
-        return None  # not a (single, non-skippable) zstd frame
-    fhd = body[4]
-    fcs_flag = fhd >> 6
-    single = (fhd >> 5) & 1
-    pos = 5 + (0 if single else 1)          # window descriptor
-    pos += (0, 1, 2, 4)[fhd & 3]            # dictionary id
-    if fcs_flag == 0:
-        return body[pos] if single else None
-    if fcs_flag == 1:
-        return int.from_bytes(body[pos:pos + 2], "little") + 256
-    if fcs_flag == 2:
-        return int.from_bytes(body[pos:pos + 4], "little")
-    return int.from_bytes(body[pos:pos + 8], "little")
-
-
-def _zstd(body: bytes) -> bytes:
-    """Decompress one Avro-zstandard block (a bare zstd frame, no
-    checksum suffix — Avro 1.11 "Required Codecs... zstandard")."""
-    import pyarrow as pa
-
-    size = _zstd_frame_size(body)
-    if size is None:
-        raise ValueError(
-            "avro: zstandard block's frame header carries no "
-            "content size — streaming-compressed frames are not "
-            "supported (re-encode with whole-block compression)")
-    out = pa.Codec("zstd").decompress(body, size)
-    return out.to_pybytes() if hasattr(out, "to_pybytes") \
-        else bytes(out)
-
-
-def _split_blocks(fh, sync: bytes, codec: str, start: int, end: int,
-                  header_end: int, file_size: int):
-    """Yield ``(count, decompressed_bytes)`` for the blocks OWNED by
-    byte range [start, end) under the preceding-sync ownership rule.
-    Streams: reads each block's two varints, its body, and its
-    trailing sync — never the whole file."""
-    from ..storage.iceberg import _snappy
-
-    hsync = header_end - 16  # the first block's "preceding sync"
-    if hsync >= end:
-        return  # range lies entirely inside the header
-    if start <= hsync:
-        pos = header_end
-    else:
-        p = _find_sync(fh, sync, start, end)
-        if p is None:
-            return  # no block starts in this range
-        pos = p + 16
-    if pos >= file_size:
-        return  # range's sync is the file's final one — no block
-    fh.seek(pos)
-    while True:
-        n = _read_varint_stream(fh)
-        size = _read_varint_stream(fh)
-        body = fh.read(size)
-        if len(body) != size:
-            raise ValueError("avro: truncated block")
-        if fh.read(16) != sync:
-            raise ValueError("avro: sync marker mismatch")
-        if codec == "deflate":
-            import zlib
-            body = zlib.decompress(body, -15)
-        elif codec == "snappy":
-            body = _snappy(body)
-        elif codec == "zstandard":
-            body = _zstd(body)
-        elif codec == "bzip2":
-            import bz2
-            body = bz2.decompress(body)
-        elif codec == "xz":
-            import lzma
-            body = lzma.decompress(body, format=lzma.FORMAT_XZ)
-        elif codec != "null":
-            raise ValueError(f"avro: unsupported codec {codec!r}")
-        yield n, body
-        pos = fh.tell()
-        if pos >= file_size or pos - 16 >= end:
-            return  # EOF, or the next block's sync is past our range
-
+# Byte-range input partitions: a range owns the blocks whose
+# preceding sync marker starts inside it (``storage/avro_file.py``,
+# ``_split_blocks``), so every block decodes in exactly one task and
+# a task holds one compressed block plus at most ``batch_bytes`` of
+# decoded output, never the file.
 
 def plan_splits(files: list[str],
                 split_bytes: int) -> list[tuple[str, int, int]]:
@@ -734,9 +497,9 @@ def plan_splits(files: list[str],
 def plan_read(path: str):
     """Driver-side read planning shared by :func:`read_avro` and the
     registered ``minerva_avro`` data source: list files, read ONE
-    header, derive the Spark schema and the vectorized decode plans.
-    Returns (files, writer_schema, spark_schema, canon, plan,
-    plan_gen, colnames)."""
+    header, derive the Spark schema and the vectorized decode plan
+    (None: decode sequentially).  Returns (files, writer_schema,
+    spark_schema, canon, plan, colnames)."""
     import json as _json
 
     files = _list_files(path)
@@ -748,30 +511,24 @@ def plan_read(path: str):
         raise ValueError("avro: top-level schema must be a record")
     spark_schema = _record_type(writer_schema)
     canon = _json.dumps(writer_schema, sort_keys=True)
-    plan = _vector_plan(writer_schema)
-    plan_gen = None if plan is not None \
-        else _vector_plan_general(writer_schema)
+    plan = _vector_plan_general(writer_schema)
     colnames = [f["name"] for f in writer_schema["fields"]]
-    return (files, writer_schema, spark_schema, canon, plan,
-            plan_gen, colnames)
+    return files, writer_schema, spark_schema, canon, plan, colnames
 
 
 def split_frames(p: str, start: int, end: int, canon: str,
-                 writer_schema: dict, plan, plan_gen,
-                 colnames: list[str], batch_bytes: int,
-                 keep=None):
+                 writer_schema: dict, plan, colnames: list[str],
+                 batch_bytes: int, keep=None):
     """Decode one byte-range split of one file into pandas frames
     (~``batch_bytes`` of decoded block data each) — the executor
     body shared by :func:`read_avro`'s mapInPandas and the
     registered ``minerva_avro`` data source.  Refuses files whose
     writer schema differs from ``canon`` (mixed-schema directories
-    fail loudly).  Per-block dispatch: vectorized fast paths with an
-    exact sequential fallback for malformed-looking blocks."""
+    fail loudly).  Blocks decode vectorized when ``plan`` is set,
+    with an exact sequential fallback for malformed-looking blocks."""
     import json as _json
 
     import pandas as pd
-
-    from ..storage.iceberg import _Cursor, _decode
 
     fields = writer_schema["fields"]
     out_fields = fields if keep is None else [fields[i] for i in keep]
@@ -788,14 +545,10 @@ def split_frames(p: str, start: int, end: int, canon: str,
         return pd.DataFrame(rows, columns=out_names)
 
     def block_df(body, n):
-        if plan is not None:
-            fn, nplan = _decode_block_vectorized, plan
-        elif plan_gen is not None:
-            fn, nplan = _decode_block_general, plan_gen
-        else:
+        if plan is None:
             return seq_block(body, n)
         try:
-            cols = fn(body, n, nplan, keep)
+            cols = _decode_block_general(body, n, plan, keep)
         except ValueError:
             return seq_block(body, n)
         return pd.DataFrame(dict(zip(out_names, cols)))
@@ -810,10 +563,9 @@ def split_frames(p: str, start: int, end: int, canon: str,
                 f"avro: {os.path.basename(p)!r} writer schema "
                 "differs from the directory's first file — "
                 "mixed-schema reads are refused")
-        codec = m.get("avro.codec", b"null").decode("utf-8")
         pending, pending_bytes = [], 0
-        for n, body in _split_blocks(fh, sync, codec, start, end,
-                                     header_end, file_size):
+        for n, body in _split_blocks(fh, sync, _header_codec(m), start,
+                                     end, header_end, file_size):
             if not n:
                 continue
             pending.append(block_df(body, n))
@@ -844,7 +596,7 @@ def read_avro(spark: SparkSession, path: str,
     variable-width), but pruned columns skip value extraction — for
     strings the per-value Python slices, the dominant cost — and
     never cross the Arrow boundary."""
-    (files, writer_schema, spark_schema, canon, plan, plan_gen,
+    (files, writer_schema, spark_schema, canon, plan,
      colnames) = plan_read(path)
     keep = None
     if columns is not None:
@@ -863,7 +615,7 @@ def read_avro(spark: SparkSession, path: str,
                                      pdf["end"]):
                 yield from split_frames(
                     p, int(start), int(end), canon, writer_schema,
-                    plan, plan_gen, colnames, batch_bytes, keep)
+                    plan, colnames, batch_bytes, keep)
 
     import pyarrow as pa
 
@@ -908,10 +660,6 @@ def _avro_schema_of(spark_schema, force_required: bool) -> dict:
     return {"type": "record", "name": "row", "fields": fields}
 
 
-_WRITE_CODECS = ("null", "deflate", "snappy", "zstandard",
-                 "bzip2", "xz")
-
-
 def write_avro(df: DataFrame, path: str,
                force_required: bool = False,
                codec: str = "null",
@@ -935,10 +683,10 @@ def write_avro(df: DataFrame, path: str,
     set."""
     import uuid as _uuid
 
-    if codec not in _WRITE_CODECS:
+    if codec not in CODECS:
         raise ValueError(
             f"avro sink: unsupported codec {codec!r} "
-            f"({'/'.join(_WRITE_CODECS)})")
+            f"({'/'.join(CODECS)})")
 
     schema = _avro_schema_of(df.schema, force_required)
     os.makedirs(path, exist_ok=True)
@@ -970,84 +718,40 @@ def encode_container(pdfs, schema: dict, codec: str = "null",
     ~``block_bytes`` (default 4 MiB): keeps every block inside the
     vectorized reader's size cap and bounds per-block decode memory,
     like production writers' sync-interval defaults."""
-    import json as _json
-    import uuid as _uuid
-
-    from ..storage.iceberg_write import _avro_encode, _zigzag
-
-    canon = _json.dumps(schema).encode()
     fields = [(f["name"], f["type"]) for f in schema["fields"]]
-    sync = _uuid.uuid4().bytes
-    out = bytearray(b"Obj\x01")
-    out += _avro_encode(
-        {"avro.schema": canon, "avro.codec": codec.encode()},
-        {"type": "map", "values": "bytes"})
-    out += sync
     n_total = 0
 
-    def flush(n, body):
+    def blocks():
         nonlocal n_total
-        body = bytes(body)
-        if codec == "deflate":
-            import zlib as _zlib
-            co = _zlib.compressobj(6, _zlib.DEFLATED, -15)
-            body = co.compress(body) + co.flush()
-        elif codec == "snappy":
-            import zlib as _zlib
+        body = bytearray()
+        n_block = 0
+        for pdf in pdfs:
+            n = len(pdf)
+            if not n:
+                continue
+            cols = [pdf[name] for name, _ in fields]
+            for i in range(n):
+                for (name, ftype), col in zip(fields, cols):
+                    v = col.iloc[i]
+                    if v is not None and v == v:  # NaN -> null
+                        v = v.item() if hasattr(v, "item") else v
+                    else:
+                        v = None
+                    if v is None and not isinstance(ftype, list):
+                        raise ValueError(
+                            f"avro sink: null in required column "
+                            f"{name!r} (written with "
+                            "force_required=True)")
+                    body += _avro_encode(v, ftype)
+                n_block += 1
+                if len(body) >= block_bytes:
+                    n_total += n_block
+                    yield n_block, bytes(body)
+                    body = bytearray()
+                    n_block = 0
+        if n_block:
+            n_total += n_block
+            yield n_block, bytes(body)
 
-            import pyarrow as pa
-            crc = _zlib.crc32(body) & 0xFFFFFFFF
-            comp = pa.Codec("snappy").compress(body)
-            comp = comp.to_pybytes() if hasattr(comp, "to_pybytes") \
-                else bytes(comp)
-            body = comp + crc.to_bytes(4, "big")
-        elif codec == "zstandard":
-            import pyarrow as pa
-            comp = pa.Codec("zstd").compress(body)
-            comp = comp.to_pybytes() if hasattr(comp, "to_pybytes") \
-                else bytes(comp)
-            if _zstd_frame_size(comp) != len(body):
-                raise ValueError(
-                    "avro sink: zstd frame lost its content size")
-            body = comp
-        elif codec == "bzip2":
-            import bz2 as _bz2
-            body = _bz2.compress(body)
-        elif codec == "xz":
-            import lzma as _lzma
-            body = _lzma.compress(body, format=_lzma.FORMAT_XZ)
-        elif codec != "null":
-            raise ValueError(f"avro sink: unsupported codec {codec!r}")
-        out.extend(_zigzag(n) + _zigzag(len(body)) + body + sync)
-        n_total += n
-
-    body = bytearray()
-    n_block = 0
-    for pdf in pdfs:
-        n = len(pdf)
-        if not n:
-            continue
-        cols = [pdf[name] for name, _ in fields]
-        for i in range(n):
-            for (name, ftype), col in zip(fields, cols):
-                v = col.iloc[i]
-                if v is not None and v == v:  # NaN -> null
-                    v = v.item() if hasattr(v, "item") else v
-                else:
-                    v = None
-                if v is None and not isinstance(ftype, list):
-                    raise ValueError(
-                        f"avro sink: null in required column "
-                        f"{name!r} (written with "
-                        "force_required=True)")
-                body += _avro_encode(v, ftype)
-            n_block += 1
-            if len(body) >= block_bytes:
-                flush(n_block, body)
-                body = bytearray()
-                n_block = 0
-    if n_block:
-        flush(n_block, body)
-    if not n_total:
-        return None, 0
-    return bytes(out), n_total
+    blob = write_container(schema, blocks(), codec)
+    return (blob, n_total) if n_total else (None, 0)

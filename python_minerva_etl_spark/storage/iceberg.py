@@ -1,44 +1,42 @@
-"""Apache Iceberg read interop without the Iceberg runtime jar.
+"""Apache Iceberg reads without the Iceberg runtime jar.
 
-Delta's transaction-log twin (``storage/delta.py``) landed in round
-4; at 100 TB the OTHER half of the lakehouse ecosystem is Iceberg,
-so this module implements the read path of the published Iceberg
-table spec (https://iceberg.apache.org/spec/), stdlib + pyarrow
-only:
+Implements the read side of the published Iceberg table spec
+(https://iceberg.apache.org/spec/), stdlib + pyarrow only; the write
+side (append, row-level DELETE/UPDATE/MERGE, compaction) is
+``iceberg_write.py``:
 
 - **table metadata**: ``metadata/v<N>.metadata.json`` (resolved via
   ``version-hint.text`` or a directory scan), format-version 1 and
-  2 — current snapshot or ``snapshot_id`` time travel;
-- **manifest list + manifests**: Apache Avro object-container files
-  (magic ``Obj\\x01``, header metadata map, sync-delimited blocks),
-  decoded by a from-scratch generic Avro reader driven by the
-  embedded writer schema (:func:`avro_read`) — zigzag varints,
-  blocked arrays/maps, unions, nested records, null/deflate codecs
-  (snappy via pyarrow when available);
+  2 — the current snapshot, or time travel by ``snapshot_id``, a
+  named ref (tag/branch) or a timestamp;
+- **manifest list + manifests**: Avro object-container files, read
+  with :func:`.avro_file.avro_read` — any Avro 1.11 codec (null,
+  deflate, snappy, zstandard, bzip2, xz);
 - **schema**: Iceberg JSON schema converted to a Spark
   ``StructType`` (primitives, decimal, struct/list/map);
-- **scan**: the live data-file set (``status != DELETED`` entries,
-  existing + added) read with the converted schema — parquet and ORC
-  data files, grouped by format and unioned;
-  optional ``where`` predicates prune FILES against the manifests'
-  per-column ``lower_bounds``/``upper_bounds`` before any parquet
-  footer is touched (the spec's scan-planning contract — at 100 TB a
-  selective query must not open every data file), then re-apply as
-  DataFrame filters so correctness never depends on the pruning.
+- **scan**: the live data files (``status != DELETED`` entries) read
+  with the converted schema — parquet and ORC, grouped by format
+  and unioned.  ``where`` predicates first skip whole manifests by
+  their partition summaries, then files by their per-column
+  ``lower_bounds``/``upper_bounds``, and are re-applied as DataFrame
+  filters so correctness never depends on the pruning;
+- **merge-on-read deletes**: v2 position-delete and equality-delete
+  files are applied at scan time (:meth:`IcebergTable._apply_deletes`;
+  equality deletes only to data files with a smaller sequence
+  number);
+- **incremental append scan** between two snapshots
+  (:meth:`IcebergTable.incremental`).
 
-Honest refusals (raise, never misread):
+Refusals (raise, never misread):
 
-- v2 **delete files** (position/equality): a snapshot with live
-  delete files cannot be answered correctly by a plain file scan;
-- Avro data files (legal per spec, rare in practice);
+- Avro data files and non-parquet delete files (legal per spec,
+  rare in practice);
 - renamed columns: Iceberg resolves columns by field id, this reader
-  by name — every scanned file's parquet footer must contain every
-  top-level schema name, else the read raises instead of returning
-  silent nulls;
-- unknown Avro codecs.
-
-Write path: out of scope this round (Delta is the interop write
-target); SnapTable.export_delta covers publishing.
+  by name — a scanned file whose footer lacks a REQUIRED schema
+  column raises (a missing optional column, the add-column case,
+  reads as nulls);
+- malformed Avro: unknown codecs, sync mismatches, out-of-range enum
+  or union indexes.
 
 Reference parity: the reference system (hendrikx-itc/
 python-minerva-etl) stores everything in PostgreSQL and has no lake
@@ -52,182 +50,12 @@ import json
 import os
 import re
 import struct
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .avro_file import avro_read
 from .stats import DAY, US, as_of_ms, epoch, may_match
-
-_AVRO_MAGIC = b"Obj\x01"
-
-
-# ------------------------------------------------------------------ avro
-
-class _Cursor:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, n: int) -> bytes:
-        b = self.buf[self.pos:self.pos + n]
-        if len(b) != n:
-            raise ValueError("avro: truncated input")
-        self.pos += n
-        return b
-
-    def read_long(self) -> int:
-        """Zigzag varint (Avro spec 'Binary encoding / primitives')."""
-        shift = acc = 0
-        while True:
-            (b,) = self.read(1)
-            acc |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        return (acc >> 1) ^ -(acc & 1)
-
-
-def _resolve_named(schema, names):
-    if isinstance(schema, str) and schema in names:
-        return names[schema]
-    return schema
-
-
-def _decode(cur: _Cursor, schema, names: dict):
-    """Decode one datum per the writer schema (Avro 1.11 binary
-    encoding).  ``names`` carries previously defined named types so
-    references decode correctly."""
-    schema = _resolve_named(schema, names)
-    if isinstance(schema, list):  # union: branch index then value
-        idx = cur.read_long()
-        return _decode(cur, schema[idx], names)
-    if isinstance(schema, str):
-        t = schema
-        if t == "null":
-            return None
-        if t == "boolean":
-            return cur.read(1) != b"\x00"
-        if t in ("int", "long"):
-            return cur.read_long()
-        if t == "float":
-            return struct.unpack("<f", cur.read(4))[0]
-        if t == "double":
-            return struct.unpack("<d", cur.read(8))[0]
-        if t == "bytes":
-            return cur.read(cur.read_long())
-        if t == "string":
-            return cur.read(cur.read_long()).decode("utf-8")
-        raise ValueError(f"avro: unknown primitive {t!r}")
-    t = schema["type"]
-    if t == "record":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return {f["name"]: _decode(cur, f["type"], names)
-                for f in schema["fields"]}
-    if t == "enum":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return schema["symbols"][cur.read_long()]
-    if t == "fixed":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return cur.read(schema["size"])
-    if t == "array":
-        out = []
-        while True:
-            n = cur.read_long()
-            if n == 0:
-                return out
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                cur.read_long()
-            for _ in range(n):
-                out.append(_decode(cur, schema["items"], names))
-    if t == "map":
-        out = {}
-        while True:
-            n = cur.read_long()
-            if n == 0:
-                return out
-            if n < 0:
-                n = -n
-                cur.read_long()
-            for _ in range(n):
-                k = cur.read(cur.read_long()).decode("utf-8")
-                out[k] = _decode(cur, schema["values"], names)
-    if t in ("null", "boolean", "int", "long", "float", "double",
-             "bytes", "string"):
-        return _decode(cur, t, names)  # {"type": "long"} wrapper form
-    raise ValueError(f"avro: unsupported schema {t!r}")
-
-
-def avro_blocks(payload: bytes):
-    """Container-level decode: returns ``(header_metadata,
-    [(record_count, decompressed_block_bytes), ...])``.  null and
-    deflate codecs via stdlib; snappy through pyarrow when present.
-    The per-datum decode is left to the caller — the Avro source's
-    vectorized path consumes whole blocks with numpy instead of
-    walking them byte-by-byte."""
-    cur = _Cursor(payload)
-    if cur.read(4) != _AVRO_MAGIC:
-        raise ValueError("not an Avro object-container file")
-    meta_schema = {"type": "map", "values": "bytes"}
-    meta = _decode(cur, meta_schema, {})
-    sync = cur.read(16)
-    codec = meta.get("avro.codec", b"null").decode("utf-8")
-    blocks = []
-    while cur.pos < len(cur.buf):
-        n = cur.read_long()
-        size = cur.read_long()
-        block = cur.read(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        elif codec == "snappy":
-            block = _snappy(block)
-        elif codec != "null":
-            raise ValueError(f"avro: unsupported codec {codec!r}")
-        if cur.read(16) != sync:
-            raise ValueError("avro: sync marker mismatch")
-        blocks.append((n, block))
-    return meta, blocks
-
-
-def avro_read(payload: bytes) -> tuple[dict, list]:
-    """Decode an Avro object-container file: returns
-    (header_metadata, records)."""
-    meta, blocks = avro_blocks(payload)
-    schema = json.loads(meta["avro.schema"].decode("utf-8"))
-    records = []
-    for n, block in blocks:
-        bcur = _Cursor(block)
-        names: dict = {}
-        for _ in range(n):
-            records.append(_decode(bcur, schema, names))
-    return meta, records
-
-
-def _snappy(block: bytes) -> bytes:
-    """Avro-snappy blocks: raw snappy body + big-endian CRC32 of the
-    UNCOMPRESSED data.  Raw snappy's leading varint is the
-    uncompressed length, which pyarrow's decompressor needs."""
-    import pyarrow as pa
-    body, crc = block[:-4], block[-4:]
-    size = shift = i = 0
-    while True:
-        b = body[i]
-        size |= (b & 0x7F) << shift
-        i += 1
-        if not b & 0x80:
-            break
-        shift += 7
-    out = pa.decompress(body, decompressed_size=size, codec="snappy")
-    data = out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
-    if struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF) != crc:
-        raise ValueError("avro: snappy block CRC mismatch")
-    return data
 
 
 # ------------------------------------------------------------------ schema

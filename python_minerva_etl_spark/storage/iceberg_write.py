@@ -8,8 +8,8 @@ racing writers can never both win a version; the protocol is
 :mod:`.commit`), and every byte of Avro written here follows the
 published specs:
 
-- Avro 1.11 object container files (header map, sync markers,
-  zigzag-varint longs) for manifests and manifest lists;
+- Avro 1.11 object container files for manifests and manifest
+  lists, written by ``avro_file.py`` (one null-codec block each);
 - Iceberg Table Spec v2 (https://iceberg.apache.org/spec/) for the
   manifest entry / manifest-file shapes, single-value binary bound
   serialization (int 4-byte LE, long/double 8-byte LE, string UTF-8),
@@ -41,6 +41,7 @@ from contextlib import suppress
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .avro_file import _avro_file, avro_read
 from .commit import (commit_attempts, hive_segment, publish_if_absent,
                      remove_files, replace_atomic, stage_parquet)
 from .dml import plan_merge, set_projection
@@ -51,80 +52,6 @@ from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
 
 class IcebergConcurrentCommit(FileExistsError):
     """Another writer committed the same metadata version first."""
-
-
-# ------------------------------------------------------------ avro writer
-
-
-def _zigzag(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _avro_encode(value, schema) -> bytes:
-    if isinstance(schema, list):  # union — null first per our schemas
-        if value is None:
-            return _zigzag(schema.index("null"))
-        idx = next(i for i, s in enumerate(schema) if s != "null")
-        return _zigzag(idx) + _avro_encode(value, schema[idx])
-    if isinstance(schema, str):
-        if schema == "null":
-            return b""
-        if schema == "boolean":
-            return b"\x01" if value else b"\x00"
-        if schema in ("int", "long"):
-            return _zigzag(int(value))
-        if schema == "float":
-            return struct.pack("<f", value)
-        if schema == "double":
-            return struct.pack("<d", value)
-        if schema == "bytes":
-            return _zigzag(len(value)) + bytes(value)
-        if schema == "string":
-            b = value.encode("utf-8")
-            return _zigzag(len(b)) + b
-        raise ValueError(f"avro encode: unsupported type {schema!r}")
-    t = schema["type"]
-    if t == "record":
-        return b"".join(_avro_encode(value.get(f["name"]), f["type"])
-                        for f in schema["fields"])
-    if t == "array":
-        if not value:
-            return _zigzag(0)
-        return (_zigzag(len(value))
-                + b"".join(_avro_encode(v, schema["items"])
-                           for v in value)
-                + _zigzag(0))
-    if t == "map":
-        if not value:
-            return _zigzag(0)
-        body = b"".join(_avro_encode(k, "string")
-                        + _avro_encode(v, schema["values"])
-                        for k, v in value.items())
-        return _zigzag(len(value)) + body + _zigzag(0)
-    raise ValueError(f"avro encode: unsupported type {t!r}")
-
-
-def _avro_file(schema: dict, records: list) -> bytes:
-    """Avro 1.11 object container file, null codec, one block."""
-    sync = uuid.uuid4().bytes
-    out = bytearray(b"Obj\x01")
-    out += _avro_encode(
-        {"avro.schema": json.dumps(schema).encode(),
-         "avro.codec": b"null"},
-        {"type": "map", "values": "bytes"})
-    out += sync
-    body = b"".join(_avro_encode(r, schema) for r in records)
-    out += _zigzag(len(records)) + _zigzag(len(body)) + body + sync
-    return bytes(out)
 
 
 # ------------------------------------------------ spark -> iceberg schema
@@ -1028,7 +955,6 @@ def _commit_append(table: IcebergTable, md: dict,
         for s in md.get("snapshots", []):
             if s.get("snapshot-id") == cur and "manifest-list" in s:
                 with open(_localize(s["manifest-list"]), "rb") as fh:
-                    from .iceberg import avro_read
                     _, prev_manifests = avro_read(fh.read())
                 break
     new_entry = {
@@ -1370,7 +1296,6 @@ def _commit_row_dml(table: IcebergTable, md: dict,
     for s in md.get("snapshots", []):
         if s.get("snapshot-id") == cur and "manifest-list" in s:
             with open(_localize(s["manifest-list"]), "rb") as fh:
-                from .iceberg import avro_read
                 _, prev_manifests = avro_read(fh.read())
             break
     carried = [{k: m.get(k) for k in _MANIFEST_CARRY_KEYS}
@@ -1845,7 +1770,6 @@ def _commit_zorder_incremental(table: IcebergTable, md: dict,
     never lost — with EXPLICIT per-entry sequence numbers so ordering
     survives the move), untouched data manifests and all DELETE
     manifests carried verbatim."""
-    from .iceberg import avro_read
 
     mdir = os.path.join(table.path, "metadata")
     snap_cur = table._snapshot(md, None)
@@ -2109,7 +2033,6 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
     trade-off of snapshot expiry."""
     if keep_last < 1:
         raise ValueError("expire_snapshots: keep_last must be >= 1")
-    from .iceberg import avro_read
 
     table = IcebergTable(path)
     md = table.metadata()

@@ -54,15 +54,14 @@ from .source_api import _flag, _opt, register, require_path
 
 class _SplitPartition(InputPartition):
     def __init__(self, path: str, start: int, end: int, canon: str,
-                 writer_schema: dict, plan, plan_gen,
-                 colnames: list[str], batch_bytes: int):
+                 writer_schema: dict, plan, colnames: list[str],
+                 batch_bytes: int):
         self.path = path
         self.start = start
         self.end = end
         self.canon = canon
         self.writer_schema = writer_schema
         self.plan = plan
-        self.plan_gen = plan_gen
         self.colnames = colnames
         self.batch_bytes = batch_bytes
 
@@ -76,8 +75,8 @@ def _read_split(p: _SplitPartition, schema: T.StructType):
 
     target = to_arrow_schema(schema)
     for pdf in split_frames(p.path, p.start, p.end, p.canon,
-                            p.writer_schema, p.plan, p.plan_gen,
-                            p.colnames, p.batch_bytes):
+                            p.writer_schema, p.plan, p.colnames,
+                            p.batch_bytes):
         tbl = pa.Table.from_pandas(pdf, schema=target,
                                    preserve_index=False)
         yield from tbl.to_batches()
@@ -93,8 +92,7 @@ class _AvroPlanMixin:
         self.batch_bytes = int(_opt(options, "batch_bytes",
                                     64 << 20))
         (files, self.writer_schema, self.schema_, self.canon,
-         self.plan_, self.plan_gen, self.colnames) = \
-            plan_read(self.path)
+         self.plan_, self.colnames) = plan_read(self.path)
         return files
 
     def _partitions_for(self, files: list[str]):
@@ -102,8 +100,7 @@ class _AvroPlanMixin:
 
         return [_SplitPartition(p, s, e, self.canon,
                                 self.writer_schema, self.plan_,
-                                self.plan_gen, self.colnames,
-                                self.batch_bytes)
+                                self.colnames, self.batch_bytes)
                 for p, s, e in plan_splits(files, self.split_bytes)]
 
 

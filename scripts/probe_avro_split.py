@@ -42,7 +42,8 @@ SCHEMA = {"type": "record", "name": "probe", "fields": [
 
 
 def _build_file() -> None:
-    from python_minerva_etl_spark.storage.iceberg_write import _zigzag
+    from python_minerva_etl_spark.storage.avro_file import (
+        _zigzag, write_container)
 
     os.makedirs(os.path.dirname(PATH), exist_ok=True)
     body = bytearray()
@@ -53,26 +54,15 @@ def _build_file() -> None:
     assert all(len(p) == len(patch[0]) for p in patch.values())
     w = len(patch[0])
 
-    import io
-
-    meta = {"avro.schema": json.dumps(SCHEMA).encode(),
-            "avro.codec": b"null"}
-    sync = bytes(range(16))
-    out = io.BytesIO()
-    out.write(b"Obj\x01")
-    out.write(_zigzag(len(meta)))
-    for k, v in meta.items():
-        kb = k.encode()
-        out.write(_zigzag(len(kb)) + kb + _zigzag(len(v)) + v)
-    out.write(b"\x00")
-    out.write(sync)
+    head = write_container(SCHEMA, [])  # magic, metadata map, sync
+    sync = head[-16:]
     frame = _zigzag(BLOCK_RECS) + _zigzag(len(body))
-    for k in range(N_BLOCKS):
-        out.write(frame)
-        out.write(patch[k] + body[w:])
-        out.write(sync)
     with open(PATH, "wb") as fh:
-        fh.write(out.getbuffer())
+        fh.write(head)
+        for k in range(N_BLOCKS):
+            fh.write(frame)
+            fh.write(patch[k] + body[w:])
+            fh.write(sync)
 
 
 def _measure(spark, split_bytes: int) -> tuple[float, int, int, int]:
@@ -91,9 +81,8 @@ def _measure(spark, split_bytes: int) -> tuple[float, int, int, int]:
 _CHILD = r"""
 import resource, sys, time
 sys.path.insert(0, %(repo)r)
-from python_minerva_etl_spark.sources.avro import (_read_header,
-                                                   _split_blocks)
-from python_minerva_etl_spark.storage.iceberg import _Cursor, _decode
+from python_minerva_etl_spark.storage.avro_file import (
+    _Cursor, _decode, _read_header, _split_blocks)
 import json as _json
 start, end = int(sys.argv[1]), int(sys.argv[2])
 with open(%(path)r, "rb") as fh:

@@ -9,11 +9,11 @@ import json
 import os
 import random
 
-from python_minerva_etl_spark.sources.avro import (_find_sync,
-                                                   _read_header,
-                                                   plan_splits,
+from python_minerva_etl_spark.sources.avro import (plan_splits,
                                                    read_avro,
                                                    write_avro)
+from python_minerva_etl_spark.storage.avro_file import (_find_sync,
+                                                        _read_header)
 from tests.test_avro_vector import _ALL_VARINT, _multi_block
 from tests.test_iceberg import _avro_file
 
@@ -71,7 +71,7 @@ def test_zstd_frame_content_size():
     size omitted and for non-zstd bytes."""
     import pyarrow as pa
 
-    from python_minerva_etl_spark.sources.avro import \
+    from python_minerva_etl_spark.storage.avro_file import \
         _zstd_frame_size
 
     for size in (0, 1, 255, 256, 300, 65_791, 65_792, 1 << 20):

@@ -1,6 +1,7 @@
-"""Vectorized Avro block decode: the numpy fast path must be
-byte-exact with the sequential decoder on every eligible shape, and
-must never claim files it cannot decode exactly."""
+"""Vectorized Avro block decode: the one block decoder must be
+byte-exact with the sequential decoder on both plan shapes (the
+numpy-scanned all-varint shape and the Python-scanned general
+shape), and must never claim files it cannot decode exactly."""
 
 from __future__ import annotations
 
@@ -9,7 +10,8 @@ import json
 import os
 import random
 
-from python_minerva_etl_spark.sources.avro import (_vector_plan,
+from python_minerva_etl_spark.sources.avro import (_all_varint,
+                                                   _vector_plan_general,
                                                    read_avro)
 from tests.test_iceberg import _avro_file, _enc, _zz
 
@@ -43,13 +45,17 @@ _ALL_VARINT = {"type": "record", "name": "r", "fields": [
 
 
 def test_vector_plan_eligibility():
-    assert _vector_plan(_ALL_VARINT) is not None
-    # strings, floats, nullable unions, nesting: all fall back
-    for bad in ("string", "double", "bytes", ["null", "long"],
-                {"type": "array", "items": "long"}):
+    assert _all_varint(_vector_plan_general(_ALL_VARINT))
+    # strings, floats, nullable unions: the general (Python-scanned)
+    # shape; nesting: no plan, sequential decode
+    for other in ("string", "double", "bytes", ["null", "long"]):
         s = {"type": "record", "name": "r", "fields": [
-            {"name": "id", "type": "long"}, {"name": "x", "type": bad}]}
-        assert _vector_plan(s) is None
+            {"name": "id", "type": "long"}, {"name": "x", "type": other}]}
+        assert not _all_varint(_vector_plan_general(s))
+    s = {"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "x", "type": {"type": "array", "items": "long"}}]}
+    assert _vector_plan_general(s) is None
 
 
 def test_vector_path_matches_sequential_exactly(spark, tmp_path):
@@ -137,13 +143,12 @@ def test_write_avro_roundtrip_and_refusals(spark, tmp_path):
 
 def test_write_avro_force_required_hits_vector_path(spark, tmp_path):
     """force_required writes plain long schemas, which the vectorized
-    reader claims (the plan is non-None) — and values round-trip."""
+    reader scans with numpy (the all-varint plan shape) — and values
+    round-trip."""
     from pyspark.sql import functions as F
 
-    from python_minerva_etl_spark.sources.avro import (_vector_plan,
-                                                       read_avro,
-                                                       write_avro)
-    from python_minerva_etl_spark.storage.iceberg import avro_read
+    from python_minerva_etl_spark.sources.avro import read_avro, write_avro
+    from python_minerva_etl_spark.storage.avro_file import avro_read
 
     df = spark.range(100).select(
         "id", (F.col("id") * 7 - 350).alias("v"))
@@ -152,7 +157,7 @@ def test_write_avro_force_required_hits_vector_path(spark, tmp_path):
     import json
     meta, _recs = avro_read(open(f0, "rb").read())
     schema = json.loads(meta["avro.schema"].decode())
-    assert _vector_plan(schema) is not None
+    assert _all_varint(_vector_plan_general(schema))
     got = sorted((r["id"], r["v"])
                  for r in read_avro(spark, d).collect())
     assert got == [(i, i * 7 - 350) for i in range(100)]
@@ -219,10 +224,8 @@ def _mixed_records(n, seed=11):
 
 
 def test_general_plan_eligibility():
-    from python_minerva_etl_spark.sources.avro import \
-        _vector_plan_general
-    assert _vector_plan(_MIXED) is None
     assert _vector_plan_general(_MIXED) is not None
+    assert not _all_varint(_vector_plan_general(_MIXED))
     # nesting / multi-branch unions / decimal still fall back
     for bad in ({"type": "array", "items": "long"},
                 ["null", "long", "string"],
@@ -244,14 +247,14 @@ def test_general_path_matches_sequential_exactly(spark, tmp_path):
     with open(p, "wb") as fh:
         fh.write(raw)
 
-    from python_minerva_etl_spark.sources.avro import (
-        _decode_block_general, _vector_plan_general)
+    from python_minerva_etl_spark.sources.avro import \
+        _decode_block_general
     df = read_avro(spark, p)
     got = df.toPandas()
     assert len(got) == 400
 
     # drive the block decoder directly against the raw records
-    from python_minerva_etl_spark.storage.iceberg import avro_blocks
+    from python_minerva_etl_spark.storage.avro_file import avro_blocks
     _, blocks = avro_blocks(raw)
     plan = _vector_plan_general(_MIXED)
     off = 0
@@ -298,7 +301,7 @@ def test_write_avro_flushes_multiple_blocks(spark, tmp_path):
     """The sink splits large batches into ~4 MiB blocks so files it
     writes always stay inside the vectorized reader's cap."""
     from python_minerva_etl_spark.sources.avro import write_avro
-    from python_minerva_etl_spark.storage.iceberg import avro_blocks
+    from python_minerva_etl_spark.storage.avro_file import avro_blocks
     big = spark.range(6).selectExpr(
         "id", "repeat('x', 3000000) AS text").coalesce(1)
     paths = write_avro(big, str(tmp_path / "blk"))
@@ -323,8 +326,8 @@ def test_general_path_property_random_values(tmp_path):
     from hypothesis import strategies as st
 
     from python_minerva_etl_spark.sources.avro import (
-        _convert, _decode_block_general, _vector_plan_general)
-    from python_minerva_etl_spark.storage.iceberg import avro_blocks
+        _convert, _decode_block_general)
+    from python_minerva_etl_spark.storage.avro_file import avro_blocks
 
     plan = _vector_plan_general(_MIXED)
 
@@ -366,3 +369,84 @@ def test_general_path_property_random_values(tmp_path):
             off += n
 
     check()
+
+
+def test_all_varint_keep_parity():
+    """Column-pruned (``keep``) decode of the all-varint shape: each
+    kept column equals the sequential decoder's value, for single
+    columns, subsets and the full set."""
+    from python_minerva_etl_spark.sources.avro import (
+        _convert, _decode_block_general)
+    from python_minerva_etl_spark.storage.avro_file import (_Cursor,
+                                                            _decode,
+                                                            avro_blocks)
+
+    rng = random.Random(5)
+    recs = [{"id": rng.choice([0, -1, 2**62, -2**63, 2**63 - 1,
+                               rng.randint(-2**40, 2**40)]),
+             "small": rng.randint(-2**31, 2**31 - 1),
+             "flag": rng.random() < 0.5,
+             "kind": rng.choice(["A", "B", "C"]),
+             "d": rng.randint(-10000, 30000),
+             "ts": rng.randint(0, 2**48),
+             "tms": rng.randint(0, 2**44)} for _ in range(60)]
+    _, blocks = avro_blocks(_multi_block(_ALL_VARINT, recs, per_block=7))
+    plan = _vector_plan_general(_ALL_VARINT)
+    assert _all_varint(plan)
+    fields = _ALL_VARINT["fields"]
+    for keep in ([0], [1, 3], [2, 4, 6], [5], list(range(7))):
+        off = 0
+        for n, body in blocks:
+            cur = _Cursor(body)
+            ref = [_decode(cur, _ALL_VARINT, {}) for _ in range(n)]
+            assert ref == recs[off:off + n]
+            cols = _decode_block_general(body, n, plan, keep)
+            assert len(cols) == len(keep)
+            for col, f in zip(cols, keep):
+                name, ftype = fields[f]["name"], fields[f]["type"]
+                got = [v.item() if hasattr(v, "item") else v
+                       for v in col]
+                assert got == [_convert(r[name], ftype) for r in ref], \
+                    (keep, name)
+            off += n
+        assert off == len(recs)
+
+
+def test_enum_and_union_indexes_range_checked(spark, tmp_path):
+    """An enum index outside the symbol list (-1 would wrap to the
+    last symbol) raises on both plan shapes — the all-varint one and
+    the general one, whose fallback is the sequential decoder — and
+    so does a union branch index outside the union."""
+    import pytest
+
+    from python_minerva_etl_spark.sources.avro import (plan_read,
+                                                       split_frames)
+    from python_minerva_etl_spark.storage.avro_file import (
+        avro_read, write_container)
+
+    enum = {"type": "enum", "name": "E", "symbols": ["A", "B", "C"]}
+    for ftype in (enum, ["null", enum]):
+        schema = {"type": "record", "name": "r", "fields": [
+            {"name": "id", "type": "long"}, {"name": "e", "type": ftype}]}
+        branch = _zz(1) if isinstance(ftype, list) else b""
+        for bad in (-1, 3):
+            body = b"".join(_zz(i) + branch + _zz(idx)
+                            for i, idx in ((0, 0), (1, bad), (2, 2)))
+            p = tmp_path / f"e{len(branch)}_{bad}.avro"
+            p.write_bytes(write_container(schema, [(3, body)]))
+            files, ws, _, canon, plan, colnames = plan_read(str(p))
+            assert _all_varint(plan) == (ftype is enum)
+            with pytest.raises(ValueError,
+                               match="enum index out of range"):
+                list(split_frames(str(p), 0, os.path.getsize(p), canon,
+                                  ws, plan, colnames, 1 << 20))
+            with pytest.raises(Exception,
+                               match="enum index out of range"):
+                read_avro(spark, str(p)).collect()
+
+    schema = {"type": "record", "name": "u", "fields": [
+        {"name": "x", "type": ["null", "long"]}]}
+    for bad in (-1, 2):
+        blob = write_container(schema, [(1, _zz(bad) + _zz(5))])
+        with pytest.raises(ValueError, match="union index out of range"):
+            avro_read(blob)

@@ -14,8 +14,8 @@ import zlib
 
 import pytest
 
+from python_minerva_etl_spark.storage.avro_file import avro_read
 from python_minerva_etl_spark.storage.iceberg import (IcebergTable,
-                                                      avro_read,
                                                       read_iceberg)
 
 # ------------------------------------------------- minimal avro writer
@@ -579,8 +579,6 @@ def test_avro_decoder_property_roundtrip():
     cases (zigzag boundaries, unicode, empty/nested collections)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from python_minerva_etl_spark.storage.iceberg import avro_read
 
     schema = {"type": "record", "name": "r", "fields": [
         {"name": "i", "type": "long"},

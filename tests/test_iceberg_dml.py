@@ -13,11 +13,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from python_minerva_etl_spark.storage.avro_file import _avro_file, avro_read
 from python_minerva_etl_spark.storage.iceberg import (
-    IcebergTable, avro_read, read_iceberg, read_iceberg_incremental)
+    IcebergTable, read_iceberg, read_iceberg_incremental)
 from python_minerva_etl_spark.storage.iceberg_write import (
-    _avro_file, delete_iceberg, merge_iceberg, update_iceberg,
-    write_iceberg)
+    delete_iceberg, merge_iceberg, update_iceberg, write_iceberg)
 
 
 def _rows(df):

@@ -12,8 +12,8 @@ import os
 
 import pytest
 
+from python_minerva_etl_spark.storage.avro_file import avro_read
 from python_minerva_etl_spark.storage.iceberg import (IcebergTable,
-                                                      avro_read,
                                                       read_iceberg)
 from python_minerva_etl_spark.storage.iceberg_write import (
     _murmur3_bytes, _murmur3_long, _parse_partition_by,
