@@ -54,15 +54,6 @@ def dn_entity_type(dn: Column | str) -> Column:
     return F.regexp_extract(c, r"([^,=]+)=[^,=]*$", 1)
 
 
-def dn_build(**parts: Column | str) -> Column:
-    """Build a DN column from type=column pairs (kwarg order kept)."""
-    pieces = []
-    for k, v in parts.items():
-        col = F.col(v) if isinstance(v, str) else v
-        pieces.append(F.concat(F.lit(f"{k}="), col.cast("string")))
-    return F.concat_ws(",", *pieces)
-
-
 def entity_key(dn: Column | str) -> Column:
     """Deterministic content-derived entity key (OP-DIR-ENTITY)."""
     c = F.col(dn) if isinstance(dn, str) else dn

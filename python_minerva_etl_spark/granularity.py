@@ -83,22 +83,6 @@ def trunc_col(ts: Column, granularity: str, tz: str | None = None) -> Column:
     return F.to_utc_timestamp(F.date_trunc(unit, local), tz)
 
 
-def series_col(start: Column, stop: Column, granularity: str) -> Column:
-    """Array of bucket starts covering [start, stop] — granularity.range.
-
-    Use with ``explode`` to build a dense time spine (gap detection,
-    dense reports).  Months/weeks step by calendar interval, which
-    ``sequence`` handles natively.
-    """
-    g = normalize(granularity)
-    secs, unit = _GRANULARITIES[g]
-    if secs is not None:
-        interval = F.expr(f"interval {secs} seconds")
-    else:
-        interval = F.expr(f"interval 1 {unit}")
-    return F.sequence(trunc_col(start, g), trunc_col(stop, g), interval)
-
-
 @dataclass(frozen=True)
 class Granularity:
     """Driver-side bucket arithmetic (mirrors the reference class).

@@ -66,16 +66,6 @@ class Relation:
     target_col: str
 
 
-@dataclass(frozen=True)
-class AggregationSpec:
-    """One rollup edge: a store aggregated to a coarser granularity
-    and/or up an entity relation."""
-
-    source_part: str
-    target_granularity: str | None = None
-    relation: Relation | None = None
-
-
 def _agg_col(fn_name: str, trend: Trend) -> Column:
     fn = _AGG_FNS[fn_name.lower().replace("avg", "avg_sum")]
     c = F.col(trend.name)

@@ -68,6 +68,7 @@ import re
 import time
 import uuid
 from contextlib import suppress
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -436,6 +437,28 @@ def _commit_path(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:020d}.json")
 
 
+class _Change(NamedTuple):
+    """One file of a Delta change feed, classified by
+    :meth:`DeltaTable._change_plan`."""
+    version: int
+    ts_ms: int
+    kind: str  # "cdc" | "insert" | "delete" | "dv_diff"
+    # the cdc/add/remove action; a remove's partitionValues recovered
+    action: dict
+    # the partition columns the file was written under
+    part_cols: list[str]
+    # dv_diff: the file's deletion vector before the commit
+    old_dv: dict | None
+
+    @property
+    def change_type(self) -> str | None:
+        """The ``_change_type`` of the record's rows; None for a cdc
+        file, whose rows carry their own."""
+        if self.kind == "cdc":
+            return None
+        return "delete" if self.kind == "dv_diff" else self.kind
+
+
 class DeltaConcurrentCommit(FileExistsError):
     """A concurrent writer committed the version this writer staged.
     ``DeltaTable.write`` retries internally; this surfaces only when
@@ -623,10 +646,7 @@ class DeltaTable:
                 f"covers them — refusing a partial replay")
         for v in versions:
             if cp_version < v <= target:
-                with open(_commit_path(self.path, v)) as fh:
-                    for line in fh:
-                        if line.strip():
-                            actions.append(json.loads(line))
+                actions += self._actions(v)[0]
 
         meta: dict | None = None
         protocol: dict | None = None
@@ -704,19 +724,20 @@ class DeltaTable:
         return T.StructType.fromJson(
             json.loads(snap["metaData"]["schemaString"]))
 
-    def _commit_ts_ms(self, v: int) -> int:
-        """A commit's timestamp in epoch ms: the in-commit
-        ``commitInfo.timestamp`` when present, else the log file's
-        modification time — the same resolution order Spark's Delta
-        uses for timestamp time travel."""
+    def _actions(self, v: int) -> tuple[list[dict], int]:
+        """Commit ``v``: its actions and its timestamp in epoch ms —
+        the in-commit ``commitInfo.timestamp`` when present, else the
+        log file's modification time (the resolution order Spark's
+        Delta uses for timestamp time travel).  The one reader of
+        commit JSON files."""
         cpath = _commit_path(self.path, v)
         with open(cpath) as fh:
-            for line in fh:
-                if line.strip():
-                    info = json.loads(line).get("commitInfo")
-                    if info and info.get("timestamp") is not None:
-                        return int(info["timestamp"])
-        return int(os.path.getmtime(cpath) * 1000)
+            actions = [json.loads(line) for line in fh if line.strip()]
+        ts = next((a["commitInfo"].get("timestamp") for a in actions
+                   if a.get("commitInfo")), None)
+        if ts is None:
+            ts = os.path.getmtime(cpath) * 1000
+        return actions, int(ts)
 
     def version_at(self, timestamp) -> int:
         """The version a ``timestamp_as_of`` read resolves to: the
@@ -737,7 +758,7 @@ class DeltaTable:
         best = None
         run = 0
         for v in versions:
-            run = max(run, self._commit_ts_ms(v))
+            run = max(run, self._actions(v)[1])
             if run <= ms:
                 best = v
         if best is None:
@@ -1037,9 +1058,9 @@ class DeltaTable:
                       rows: list[tuple]) -> DataFrame:
         """(abs file path, dv json, prior dv json | None) descriptors
         expanded to (``_del_path``, ``_del_pos``) pairs — the
-        positions of the dv MINUS the prior dv — decoded
-        executor-side (one mapInPandas task per DV, the from-scratch
-        roaring reader in :mod:`.delta_dv`); the driver holds only
+        positions of the dv MINUS the prior dv
+        (:func:`.delta_dv.dv_minus`) — decoded executor-side (one
+        mapInPandas task per DV); the driver holds only
         descriptors."""
         table_path = os.path.abspath(self.path)
         desc = spark.createDataFrame(
@@ -1047,18 +1068,15 @@ class DeltaTable:
         desc = desc.repartition(min(len(rows), 64))
 
         def expand(batches):
-            import numpy as np
             import pandas as pd
 
-            from .delta_dv import dv_load
+            from .delta_dv import dv_minus
             for pdf in batches:
                 for dp, nj, oj in zip(pdf["_del_path"], pdf["_new"],
                                       pdf["_old"]):
-                    positions = dv_load(table_path, json.loads(nj))
-                    if oj is not None:
-                        positions = np.setdiff1d(
-                            positions,
-                            dv_load(table_path, json.loads(oj)))
+                    positions = dv_minus(
+                        table_path, json.loads(nj),
+                        json.loads(oj) if oj is not None else None)
                     yield pd.DataFrame({
                         "_del_path": dp,
                         "_del_pos": positions.astype("int64")})
@@ -1081,40 +1099,128 @@ class DeltaTable:
             & (out["_dl_pos"] == deleted["_del_pos"]),
             "left_anti")
 
-    def changes(self, spark: SparkSession, starting_version: int = 0,
-                ending_version: int | None = None) -> DataFrame:
-        """Change Data Feed read over commits
-        ``[starting_version, ending_version]``: the table schema plus
-        ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``
-        (the layout Delta's ``table_changes`` exposes).
-
-        Per commit: ``cdc`` actions win when present (their
-        ``_change_data/`` parquet carries ``_change_type`` including
-        update pre/post images — PROTOCOL.md "Add CDC File"; when a
-        commit has cdc actions, readers must use ONLY those).
-        Otherwise changes derive from the file actions: a
-        dataChange add is an ``insert`` of its live rows (minus its
-        DV); a dataChange remove is a ``delete`` of the rows that
-        were live (minus the remove's DV); a remove+add pair on one
-        path with a new deletion vector is a ``delete`` of exactly
-        the newly-masked positions (new DV minus old, computed
-        executor-side).  An in-place rewrite without cdc actions and
-        without a DV is not derivable and refuses.  Compaction pairs
-        (dataChange=false) contribute nothing, as they must."""
+    def _change_range(self, start: int,
+                      end: int | None) -> tuple[int, dict]:
+        """``end`` (default: the latest commit) and its metaData for
+        a change-feed read of commits ``[start, end]``.  Refuses
+        commits missing from the range and, through :meth:`_replay`,
+        a protocol this reader cannot read."""
         avail = self.versions()
         if not avail:
-            raise FileNotFoundError(
-                f"no Delta log at {self.path!r}")
-        end = avail[-1] if ending_version is None else ending_version
-        want = list(range(starting_version, end + 1))
-        missing = sorted(set(want) - set(avail))
+            raise FileNotFoundError(f"no Delta log at {self.path!r}")
+        end = avail[-1] if end is None else end
+        missing = sorted(set(range(start, end + 1)) - set(avail))
         if missing:
             raise ValueError(
                 f"Delta changes: commits {missing[0]}..{missing[-1]} "
                 "are missing (expired or future) — the change feed "
                 "cannot be reconstructed")
-        snap = self._replay(end)  # protocol gate
-        meta = snap["metaData"]
+        return end, self._replay(end)["metaData"]
+
+    def _change_plan(self, start: int, end: int,
+                     meta: dict) -> list[_Change]:
+        """The change feed of commits ``[start, end]`` as per-file
+        records — the one classification :meth:`changes` and the
+        registered source's ``readChangeFeed`` reader both consume.
+        ``end`` and ``meta`` (its metaData) come from
+        :meth:`_change_range`, which checks the range.
+
+        Per commit: ``cdc`` actions win when present (their
+        ``_change_data/`` parquet carries ``_change_type`` including
+        update pre/post images — PROTOCOL.md "Add CDC File"; when a
+        commit has cdc actions, readers must use ONLY those).
+        Otherwise changes derive from the file actions: a dataChange
+        add is an ``insert`` of its live rows (minus its DV); a
+        dataChange remove is a ``delete`` of the rows that were live
+        (minus the remove's DV); a remove+add pair on one path with a
+        new deletion vector is a ``dv_diff``, the delete of exactly
+        the rows the new DV masks and the old one did not.
+        Compaction pairs (dataChange=false) contribute nothing.
+
+        Metadata may evolve inside the range, so each record carries
+        the partition columns its file was written under: removes and
+        DV updates reference files of the PRE-commit partitioning,
+        adds and cdc files the post-commit one.  A remove that omits
+        its partitionValues gets them from the pre-commit snapshot.
+        Refusals: an in-place rewrite without cdc actions and without
+        a DV (the row-level delta is not derivable), a commit with no
+        metaData at or before it, and a column set that changes
+        inside the range (real CDF refuses incompatible schema
+        change)."""
+
+        def names(m: dict) -> list[str]:
+            return [f["name"]
+                    for f in json.loads(m["schemaString"])["fields"]]
+
+        @functools.lru_cache(maxsize=1)
+        def live_before(v: int) -> dict[str, dict]:
+            return {f["path"]: f for f in self._replay(v - 1)["files"]}
+
+        want = names(meta)
+        cur = self._replay(start - 1)["metaData"] if start > 0 else None
+        plan: list[_Change] = []
+        for v in range(start, end + 1):
+            actions, ts = self._actions(v)
+            after = next((a["metaData"] for a in actions
+                          if a.get("metaData")), cur)
+            if after is None:
+                raise ValueError(
+                    f"Delta changes: no metaData at or before commit "
+                    f"{v}")
+            if names(after) != want:
+                raise NotImplementedError(
+                    f"Delta changes: the schema changed inside the "
+                    f"requested range (commit {v}) — refusing a "
+                    "mixed-schema change feed")
+            was = (cur or after).get("partitionColumns") or []
+            now = after.get("partitionColumns") or []
+            cur = after
+            cdc = [a["cdc"] for a in actions if a.get("cdc")]
+            if cdc:
+                plan += [_Change(v, ts, "cdc", c, now, None) for c in cdc]
+                continue
+            adds = {a["add"]["path"]: a["add"] for a in actions
+                    if a.get("add")}
+            removes = {a["remove"]["path"]: a["remove"]
+                       for a in actions if a.get("remove")}
+            for path in sorted(set(adds) | set(removes)):
+                a, r = adds.get(path), removes.get(path)
+                if a and r:
+                    if not (a.get("dataChange")
+                            or r.get("dataChange")):
+                        continue  # compaction pair: no data change
+                    if not a.get("deletionVector"):
+                        raise NotImplementedError(
+                            f"Delta changes: commit {v} rewrites "
+                            f"{path!r} in place without cdc actions "
+                            "— the row-level delta is not derivable")
+                    old = live_before(v).get(path, {}).get(
+                        "deletionVector")
+                    plan.append(_Change(v, ts, "dv_diff", a, was, old))
+                elif a is not None:
+                    if a.get("dataChange"):
+                        plan.append(_Change(v, ts, "insert", a, now,
+                                            None))
+                elif r.get("dataChange"):
+                    if r.get("partitionValues") is None and was:
+                        r = dict(r, partitionValues=live_before(v).get(
+                            path, {}).get("partitionValues"))
+                    plan.append(_Change(v, ts, "delete", r, was, None))
+        return plan
+
+    def changes(self, spark: SparkSession, starting_version: int = 0,
+                ending_version: int | None = None) -> DataFrame:
+        """Change Data Feed read over commits
+        ``[starting_version, ending_version]``: the table schema plus
+        ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``
+        (the layout Delta's ``table_changes`` exposes).  Scans the
+        records of :meth:`_change_plan` with Spark's parquet reader,
+        one scan per commit and kind: cdc files as written, inserts
+        and deletes minus their DVs, DV updates semi-joined to the
+        newly masked positions (new DV minus old, computed
+        executor-side)."""
+        end, meta = self._change_range(starting_version, ending_version)
+        plan = self._change_plan(starting_version, end, meta)
         cm_mode = (meta.get("configuration") or {}).get(
             "delta.columnMapping.mode") or "none"
         mapped = cm_mode if cm_mode != "none" else None
@@ -1133,123 +1239,44 @@ class DeltaTable:
                              {_CM_PHYS: "_change_type"}
                              if mapped else None)])
         cols = [f.name for f in schema.fields] + ["_change_type"]
-        # metadata evolves inside the range: a commit's REMOVES
-        # reference files written under the PRE-commit partitioning,
-        # its adds/cdc under the post-commit one.  Column sets must
-        # stay fixed (real CDF refuses incompatible schema change).
-        cur_meta = (self._replay(starting_version - 1)["metaData"]
-                    if starting_version > 0 else None)
+        groups: dict[tuple[int, str], list[_Change]] = {}
+        for c in plan:
+            groups.setdefault((c.version, c.kind), []).append(c)
         pieces: list[DataFrame] = []
-        for v in want:
-            cpath = _commit_path(self.path, v)
-            with open(cpath) as fh:
-                actions = [json.loads(line) for line in fh
-                           if line.strip()]
-            info = next((a["commitInfo"] for a in actions
-                         if a.get("commitInfo")), {}) or {}
-            ts = int(info.get("timestamp")
-                     or os.path.getmtime(cpath) * 1000)
-            new_meta = next((a["metaData"] for a in actions
-                             if a.get("metaData")), None)
-            meta_after = new_meta or cur_meta
-            if meta_after is None:
-                raise ValueError(
-                    f"Delta changes: no metaData at or before commit "
-                    f"{v}")
-            names = [f.name for f in T.StructType.fromJson(
-                json.loads(meta_after["schemaString"])).fields]
-            if names != [f.name for f in schema.fields]:
-                raise NotImplementedError(
-                    f"Delta changes: the schema changed inside the "
-                    f"requested range (commit {v}) — refusing a "
-                    "mixed-schema change feed")
-            part_before = ((cur_meta or meta_after)
-                           .get("partitionColumns") or [])
-            part_cols = meta_after.get("partitionColumns") or []
-            cur_meta = meta_after
-
-            def stamp(df, ctype=None, v=v, ts=ts):
-                if ctype is not None:
-                    df = df.withColumn("_change_type", F.lit(ctype))
-                return df.select(
-                    *cols,
-                    F.lit(v).cast("long").alias("_commit_version"),
-                    F.timestamp_millis(F.lit(ts))
-                    .alias("_commit_timestamp"))
-
-            cdc = [a["cdc"] for a in actions if a.get("cdc")]
-            if cdc:
-                pieces.append(stamp(self._scan_files(
-                    spark, cdc, cdc_schema, part_cols, mapped,
-                    False)))
-                continue
-            adds = {a["add"]["path"]: a["add"] for a in actions
-                    if a.get("add")}
-            removes = {a["remove"]["path"]: a["remove"]
-                       for a in actions if a.get("remove")}
-            ins, dels, dv_diffs = [], [], []
-            for path in sorted(set(adds) | set(removes)):
-                a, r = adds.get(path), removes.get(path)
-                if a and r:
-                    if not (a.get("dataChange")
-                            or r.get("dataChange")):
-                        continue  # compaction pair: no data change
-                    if not a.get("deletionVector"):
-                        raise NotImplementedError(
-                            f"Delta changes: commit {v} rewrites "
-                            f"{path!r} in place without cdc actions "
-                            "— the row-level delta is not derivable")
-                    dv_diffs.append(a)
-                elif a is not None:
-                    if a.get("dataChange"):
-                        ins.append(a)
-                elif r.get("dataChange"):
-                    dels.append(r)
-            if part_before and any(e.get("partitionValues") is None
-                                   for e in dels):
-                # removes may omit partitionValues; recover them from
-                # the pre-commit snapshot
-                prev = {f["path"]: f.get("partitionValues")
-                        for f in self._replay(v - 1)["files"]}
-                dels = [dict(e, partitionValues=prev.get(e["path"]))
-                        if e.get("partitionValues") is None else e
-                        for e in dels]
-
-            def live_rows(entries, ctype, pcols):
-                dvm = {e["path"]: e["deletionVector"]
-                       for e in entries if e.get("deletionVector")}
-                df = self._scan_files(spark, entries, schema,
-                                      pcols, mapped, bool(dvm))
-                if dvm:
-                    df = self._apply_dvs(spark, df, dvm).drop(
-                        "_dl_path", "_dl_pos")
-                return stamp(df, ctype)
-
-            if ins:
-                pieces.append(live_rows(ins, "insert", part_cols))
-            if dels:
-                pieces.append(live_rows(dels, "delete", part_before))
-            if dv_diffs:
-                by_path = {f["path"]: f for f in
-                           self._replay(v - 1)["files"]}
-                rows = []
-                for a in dv_diffs:
-                    old = (by_path.get(a["path"]) or {}).get(
-                        "deletionVector")
-                    rows.append((
-                        os.path.abspath(
-                            os.path.join(self.path, a["path"])),
-                        json.dumps(a["deletionVector"]),
-                        json.dumps(old) if old else None))
-                posdf = self._dv_positions(spark, rows)
-                df = self._scan_files(spark, dv_diffs, schema,
-                                      part_before, mapped, True)
+        for (v, kind), recs in sorted(groups.items()):
+            pcols = recs[0].part_cols
+            files = [c.action for c in recs]
+            if kind == "cdc":
+                df = self._scan_files(spark, files, cdc_schema, pcols,
+                                      mapped, False)
+            elif kind == "dv_diff":
+                posdf = self._dv_positions(spark, [
+                    (os.path.abspath(os.path.join(self.path,
+                                                  c.action["path"])),
+                     json.dumps(c.action["deletionVector"]),
+                     json.dumps(c.old_dv) if c.old_dv else None)
+                    for c in recs])
+                df = self._scan_files(spark, files, schema, pcols,
+                                      mapped, True)
                 df = df.join(
                     posdf,
                     (df["_dl_path"] == posdf["_del_path"])
                     & (df["_dl_pos"] == posdf["_del_pos"]),
-                    "left_semi").drop("_dl_path", "_dl_pos")
-                pieces.append(stamp(df, "delete"))
+                    "left_semi")
+            else:
+                dvm = {f["path"]: f["deletionVector"] for f in files
+                       if f.get("deletionVector")}
+                df = self._scan_files(spark, files, schema, pcols,
+                                      mapped, bool(dvm))
+                if dvm:
+                    df = self._apply_dvs(spark, df, dvm)
+            if kind != "cdc":
+                df = df.withColumn("_change_type",
+                                   F.lit(recs[0].change_type))
+            pieces.append(df.select(
+                *cols, F.lit(v).cast("long").alias("_commit_version"),
+                F.timestamp_millis(F.lit(recs[0].ts_ms))
+                .alias("_commit_timestamp")))
         if not pieces:
             return spark.createDataFrame([], T.StructType(
                 cdc_schema.fields

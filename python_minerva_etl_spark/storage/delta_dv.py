@@ -344,6 +344,17 @@ def dv_load(table_path: str, dv: dict) -> np.ndarray:
     return vals
 
 
+def dv_minus(table_path: str, dv: dict,
+             prior: dict | None = None) -> np.ndarray:
+    """The sorted row indexes ``dv`` deletes and ``prior`` (the
+    file's earlier deletion vector, if any) did not — the rows a DV
+    update newly masks."""
+    positions = dv_load(table_path, dv)
+    if prior is None:
+        return positions
+    return np.setdiff1d(positions, dv_load(table_path, prior))
+
+
 def dv_write(table_path: str, positions,
              inline_threshold: int = 512) -> dict:
     """Serialize one DV and return its add-action descriptor: bitmaps

@@ -23,9 +23,12 @@ side (append, row-level DELETE/UPDATE/MERGE, compaction) is
 - **merge-on-read deletes**: v2 position-delete and equality-delete
   files are applied at scan time (:meth:`IcebergTable._apply_deletes`;
   equality deletes only to data files with a smaller sequence
-  number);
+  number).  Which delete reaches which data file is decided here
+  once (:func:`_delete_pairs`, :func:`_delete_may_touch`) for these
+  anti joins and for the registered source's Arrow readers;
 - **incremental append scan** between two snapshots
-  (:meth:`IcebergTable.incremental`).
+  (:meth:`IcebergTable.incremental`), over the same parent-chain
+  walk (:func:`_walk_chain`) the registered source streams along.
 
 Refusals (raise, never misread):
 
@@ -307,10 +310,157 @@ def _manifest_may_match(m: dict, preds, specs: dict,
 
 # ------------------------------------------------------------------ table
 
+# 'file:///p' / 'file:/p' -> '/p': the local path a manifest's file
+# URI names, and the form in which it, a position delete's file_path
+# and Spark's _metadata.file_path all compare equal
+_FILE_URI = "^file:/+"
+
+
 def _localize(uri: str) -> str:
-    if uri.startswith("file://"):
-        return uri[len("file://"):]
-    return uri
+    return re.sub(_FILE_URI, "/", uri)
+
+
+# ------------------------------------------------------ snapshot ancestry
+
+def _parent_id(snap: dict, ordered: list[int]) -> int | None:
+    """``snap``'s parent id.  Writers may omit parent-snapshot-id (it
+    is optional in the spec); fall back to metadata list order, which
+    is append order for a linear history."""
+    parent = snap.get("parent-snapshot-id")
+    if parent is None:
+        i = ordered.index(snap["snapshot-id"])
+        parent = ordered[i - 1] if i > 0 else None
+    return parent
+
+
+def _walk_chain(md: dict, start_id: int, end_id: int, ctx: str):
+    """``(snaps by id, ids in metadata order, chain)``: the chain is
+    the snapshots after ``start_id`` up to and including ``end_id``,
+    newest first, along the parent ancestry.  ``start_id == -1``
+    means the whole history.  Refuses an ``end_id`` not in the
+    metadata and a ``start_id`` that is not an ancestor of it."""
+    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
+    ordered = [s["snapshot-id"] for s in md.get("snapshots") or []]
+    cur = snaps.get(end_id)
+    if cur is None:
+        raise ValueError(
+            f"{ctx}: snapshot {end_id} not in metadata (expired?)")
+    chain: list[dict] = []
+    found = start_id == -1
+    while cur is not None:
+        if cur["snapshot-id"] == start_id:
+            found = True
+            break
+        chain.append(cur)
+        parent = _parent_id(cur, ordered)
+        cur = snaps.get(parent) if parent is not None else None
+    if not found:
+        raise ValueError(
+            f"{ctx}: snapshot {start_id} is not an ancestor of "
+            f"{end_id} (expired, or the history diverged) — the "
+            "delta cannot be computed")
+    return snaps, ordered, chain
+
+
+# ------------------------------------------------------ delete assignment
+
+_PATH_FIELD_ID = 2147483546  # reserved: position-delete file_path
+
+
+def _types_by_id(ice_schema: dict) -> dict:
+    return {fld["id"]: fld["type"] for fld in ice_schema["fields"]
+            if isinstance(fld["type"], str)}
+
+
+def _delete_may_touch(f: dict, d: dict, types_by_id: dict) -> bool:
+    """Manifest-bounds check: can delete file ``d`` kill rows of
+    data file ``f``?  Decided from manifest entries ALONE — no
+    parquet is opened.  Conservative per the Iceberg scan-planning
+    contract: missing bounds, unknown types, or undecodable values
+    keep the pair.
+
+    - position deletes (content=1): compared on the reserved
+      ``file_path`` column's bounds (field id 2147483546) against
+      ``f``'s own path;
+    - equality deletes (content=2): a data file written at or after
+      the delete's sequence number is untouchable; otherwise the
+      delete's key-column bounds must overlap the data file's.
+    """
+    d_lo = _bounds_map(d.get("lower_bounds"))
+    d_hi = _bounds_map(d.get("upper_bounds"))
+    if d.get("content") == 1:
+        lo, hi = d_lo.get(_PATH_FIELD_ID), d_hi.get(_PATH_FIELD_ID)
+        if lo is None or hi is None:
+            return True  # no path bounds: may reference f
+        try:
+            return (lo.decode("utf-8") <= f["file_path"]
+                    <= hi.decode("utf-8"))
+        except UnicodeDecodeError:
+            return True
+    if d.get("content") == 2:
+        fseq = int(f["_seq"]) if f.get("_seq") is not None else None
+        dseq = int(d["_seq"]) if d.get("_seq") is not None else None
+        if fseq is not None and dseq is not None and fseq >= dseq:
+            return False  # equality deletes only reach OLDER files
+        f_lo = _bounds_map(f.get("lower_bounds"))
+        f_hi = _bounds_map(f.get("upper_bounds"))
+        for fid in (d.get("equality_ids") or ()):
+            t = types_by_id.get(fid)
+            dl = _decode_bound(t, d_lo.get(fid))
+            dh = _decode_bound(t, d_hi.get(fid))
+            fl = _decode_bound(t, f_lo.get(fid))
+            fh = _decode_bound(t, f_hi.get(fid))
+            try:
+                if (dh is not None and fl is not None
+                        and dh < fl) or \
+                   (dl is not None and fh is not None
+                        and dl > fh):
+                    return False
+            except TypeError:
+                continue  # incomparable: stay conservative
+        return True
+    return True  # unknown content: never drop silently
+
+
+def _delete_pairs(deletes: list[dict], data_files: list[dict],
+                  ice_schema: dict):
+    """The delete files of :meth:`IcebergTable._data_files` as
+    ``(value, manifest entry)`` pairs, split into position and
+    equality deletes: a position delete's value is its local path, an
+    equality delete's ``(local path, sequence number, key columns)``.
+    Refuses an equality key naming an unknown field id, and equality
+    deletes over a data file without a sequence number (the spec's
+    ordering — a delete reaches only data files with a STRICTLY
+    smaller sequence number — is then undefined)."""
+    by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
+    pos, eq = [], []
+    for d in deletes:
+        if d.get("content") == 1:
+            pos.append((_localize(d["file_path"]), d))
+        elif d.get("content") == 2:
+            unknown = [i for i in d["equality_ids"] if i not in by_id]
+            if unknown:
+                raise ValueError(
+                    f"iceberg: equality delete references unknown "
+                    f"field id {unknown[0]}")
+            eq.append(((_localize(d["file_path"]), int(d["_seq"]),
+                        tuple(by_id[i] for i in d["equality_ids"])),
+                       d))
+    if eq and any(f.get("_seq") is None for f in data_files):
+        raise ValueError(
+            "iceberg: table has equality deletes but a data file "
+            "carries no sequence number — ordering is undefined, "
+            "refusing rather than over-deleting")
+    return pos, eq
+
+
+def _touching(f: dict, pairs, types_by_id: dict) -> tuple:
+    """The values of the delete ``pairs`` whose manifest bounds can
+    touch data file ``f`` — a reader opens only those delete
+    parquets, so its work is O(touching deletes), not O(all deletes)
+    on a long-lived upsert table."""
+    return tuple(v for v, d in pairs
+                 if _delete_may_touch(f, d, types_by_id))
 
 
 class IcebergTable:
@@ -710,39 +860,14 @@ class IcebergTable:
                                  f"{op!r}")
             if col not in {f["name"] for f in ice_schema["fields"]}:
                 raise ValueError(f"iceberg: unknown column {col!r}")
-        snaps = {s["snapshot-id"]: s
-                 for s in md.get("snapshots") or []}
         to_id = (md.get("current-snapshot-id")
                  if to_snapshot_id is None else to_snapshot_id)
         if to_id in (None, -1):
             return spark.createDataFrame(
                 [], _to_spark_schema(ice_schema))
-        if to_id not in snaps:
-            raise ValueError(
-                f"iceberg: snapshot {to_id} not in metadata")
-        ordered = [s["snapshot-id"] for s in md.get("snapshots")
-                   or []]
-        chain: list[dict] = []
-        cur: dict | None = snaps[to_id]
-        found_from = from_snapshot_id is None
-        while cur is not None:
-            if cur["snapshot-id"] == from_snapshot_id:
-                found_from = True
-                break
-            chain.append(cur)
-            parent = cur.get("parent-snapshot-id")
-            if parent is None:
-                # writers may omit parent-snapshot-id (it is optional
-                # in the spec); fall back to metadata list order,
-                # which is append order for a linear history
-                i = ordered.index(cur["snapshot-id"])
-                parent = ordered[i - 1] if i > 0 else None
-            cur = snaps.get(parent) if parent is not None else None
-        if not found_from:
-            raise ValueError(
-                f"iceberg incremental: snapshot {from_snapshot_id} "
-                f"is not an ancestor of {to_id} (expired, or the "
-                "history diverged) — the delta cannot be computed")
+        _, _, chain = _walk_chain(
+            md, -1 if from_snapshot_id is None else from_snapshot_id,
+            to_id, "iceberg incremental")
         files: list[dict] = []
         for s in reversed(chain):  # oldest first
             op = (s.get("summary") or {}).get("operation", "append")
@@ -797,18 +922,10 @@ class IcebergTable:
         shuffle."""
         from pyspark.sql import functions as F
 
-        # 'file:///p' / 'file:/p' -> '/p' so the manifest's URI form
-        # and Spark's _metadata.file_path form always agree.
         def norm(c):
-            return F.regexp_replace(c, "^file:/+", "/")
+            return F.regexp_replace(c, _FILE_URI, "/")
 
-        def norm_py(p: str) -> str:
-            import re as _re
-            return _re.sub("^file:/+", "/", p)
-
-        pos = [d for d in delete_files if d.get("content") == 1]
-        eq = [d for d in delete_files if d.get("content") == 2]
-
+        pos, eq = _delete_pairs(delete_files, data_files, ice_schema)
         out = data.select(
             "*",
             norm(F.col("_metadata.file_path")).alias("_ice_path"),
@@ -818,8 +935,7 @@ class IcebergTable:
                     .schema(T.StructType([
                         T.StructField("file_path", T.StringType()),
                         T.StructField("pos", T.LongType())]))
-                    .parquet(*[_localize(d["file_path"])
-                               for d in pos])
+                    .parquet(*[p for p, _ in pos])
                     .select(norm(F.col("file_path"))
                             .alias("_del_path"),
                             F.col("pos").alias("_del_pos"))
@@ -830,15 +946,8 @@ class IcebergTable:
                 & (out["_ice_pos"] == dset["_del_pos"]),
                 "left_anti")
         if eq:
-            if any(f.get("_seq") is None for f in data_files):
-                raise ValueError(
-                    "iceberg: table has equality deletes but a data "
-                    "file carries no sequence number — ordering is "
-                    "undefined, refusing rather than over-deleting")
-            by_id = {f["id"]: f["name"]
-                     for f in ice_schema["fields"]}
             seq_df = spark.createDataFrame(
-                [(norm_py(f["file_path"]), int(f["_seq"]))
+                [(_localize(f["file_path"]), int(f["_seq"]))
                  for f in data_files],
                 "_seq_path string, _file_seq long")
             out = out.join(F.broadcast(seq_df),
@@ -853,25 +962,15 @@ class IcebergTable:
             # whole group applies as ONE aggregated broadcast anti
             # join, O(1) plan size per key set at any batch count.
             groups: dict[tuple, list] = {}
-            for d in eq:
-                cols = []
-                for fid in d["equality_ids"]:
-                    name = by_id.get(fid)
-                    if name is None:
-                        raise ValueError(
-                            f"iceberg: equality delete references "
-                            f"unknown field id {fid}")
-                    cols.append(name)
-                groups.setdefault(tuple(cols), []).append(d)
+            for (path, seq, cols), _ in eq:
+                groups.setdefault(cols, []).append((path, seq))
             for cols, ds in sorted(groups.items()):
                 dset = None
-                for d in ds:
-                    piece = (spark.read
-                             .parquet(_localize(d["file_path"]))
+                for path, seq in ds:
+                    piece = (spark.read.parquet(path)
                              .select([F.col(c).alias(f"_eq_{c}")
                                       for c in cols])
-                             .withColumn("_del_seq",
-                                         F.lit(int(d["_seq"]))))
+                             .withColumn("_del_seq", F.lit(seq)))
                     dset = piece if dset is None \
                         else dset.unionByName(piece)
                 dset = (dset.groupBy(*[f"_eq_{c}" for c in cols])

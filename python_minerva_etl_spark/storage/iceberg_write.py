@@ -1123,12 +1123,10 @@ def _position_hits(spark: SparkSession, rows: DataFrame,
     EXACTLY the form the data manifests use — mapped back from the
     normalized filesystem form via a broadcast lookup — so any spec
     reader matches the delete entries."""
-    import re as _re
-
     from pyspark.sql import functions as F
 
-    mapping = [(_re.sub("^file:/+", "/", f["file_path"]),
-                f["file_path"]) for f in files]
+    mapping = [(_localize(f["file_path"]), f["file_path"])
+               for f in files]
     map_df = spark.createDataFrame(mapping,
                                    "_norm string, _orig string")
     return (rows.select(F.col("_ice_path").alias("_norm"),

@@ -135,8 +135,12 @@ def may_match(lo, hi, op: str, lit) -> bool:
     """False only when the bounds ``[lo, hi]`` prove no value ``v``
     satisfies ``v <op> lit``.  A None bound is open; an unknown op or
     an incomparable literal keeps the file (pruning is an
-    optimization, never a filter)."""
+    optimization, never a filter).  A pair with ``hi < lo`` is
+    impossible (older sinks could record a string max of ``''``
+    above a non-empty min) and reads as unbounded."""
     try:
+        if lo is not None and hi is not None and hi < lo:
+            return True
         if op == "=":
             return not ((lo is not None and lit < lo)
                         or (hi is not None and lit > hi))

@@ -18,6 +18,13 @@ upstream source's "data update detected" error; ``ignoreChanges`` /
 ``ignoreDeletes`` opt into the upstream's documented
 may-emit-duplicates behavior.
 
+``option("readChangeFeed", "true")`` is the batch Change Data Feed:
+it consumes the change plan :meth:`DeltaTable._change_plan` builds
+for :meth:`DeltaTable.changes` too — one input partition per planned
+file, read under the partition columns that file was written with —
+so both change-feed readers share one classification and one set of
+refusals.
+
 Scope: tables this engine can read, including column-mapped ones
 (mode "name" resolves physicalName, mode "id" resolves the file's
 own PARQUET:field_id — rename-proof), NESTED mapped columns
@@ -53,26 +60,31 @@ from pyspark.sql.datasource import (DataSource,
                                     WriterCommitMessage)
 
 from ..storage.commit import hive_segment, remove_files, write_parts
-from ..storage.delta import DeltaTable, _commit_path
+from ..storage.delta import DeltaTable
 from .admission import admission_state, admit, cap_option
 from .source_api import (_flag, _opt, empty_when_pruned,
                          preds_from_filters, register, require_path)
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, table_path: str, rel_path: str,
-                 pvals: dict, dv: dict | None, cm=None,
-                 keep_positions=None):
+    """One data file of the add/cdc/remove ``action``, read under the
+    partition columns it was written with."""
+
+    def __init__(self, table_path: str, action: dict,
+                 part_cols: list[str], cm=None,
+                 dv_diff: tuple[dict, dict | None] | None = None):
         self.table_path = table_path
-        self.rel_path = rel_path
-        self.pvals = pvals
-        self.dv = dv
+        self.rel_path = action["path"]
+        self.pvals = action.get("partitionValues") or {}
+        self.part_cols = part_cols
         # column mapping: ("name"|"id", ((logical, physical, fid),
         # ...)) or None — resolved executor-side per file
         self.cm = cm
-        # when set: emit ONLY these 0-based row ordinals (the CDF
-        # dv-diff case — rows newly masked by a deletion vector)
-        self.keep_positions = keep_positions
+        # (new DV, old DV): emit ONLY the rows the new deletion
+        # vector masks and the old one did not (a change-feed DV
+        # update); otherwise the action's own DV masks rows out
+        self.dv_diff = dv_diff
+        self.dv = None if dv_diff else action.get("deletionVector")
 
 
 def _parse_pval(raw: str | None, dt: T.DataType):
@@ -97,13 +109,12 @@ def _parse_pval(raw: str | None, dt: T.DataType):
         "supported by the registered source — use read_delta()")
 
 
-def _read_partition(p: _FilePartition, schema: T.StructType,
-                    part_cols: list[str]):
+def _read_partition(p: _FilePartition, schema: T.StructType):
     """One data file → pyarrow RecordBatches matching ``schema``:
-    file columns cast to the Arrow types Spark expects, partition
-    columns attached as typed constants, deletion-vector positions
-    masked out by row index.  Column-mapped tables resolve each
-    logical column to its file column executor-side — by
+    file columns cast to the Arrow types Spark expects, the file's
+    partition columns attached as typed constants, deletion-vector
+    positions masked out by row index.  Column-mapped tables resolve
+    each logical column to its file column executor-side — by
     physicalName (mode "name") or by the PARQUET:field_id the file
     declares (mode "id", rename-proof); a column the file lacks
     null-fills (schema evolution)."""
@@ -112,8 +123,9 @@ def _read_partition(p: _FilePartition, schema: T.StructType,
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..storage.delta_dv import dv_load
+    from ..storage.delta_dv import dv_load, dv_minus
 
+    part_cols = p.part_cols
     target = to_arrow_schema(schema)
     fpath = os.path.join(p.table_path, p.rel_path)
     pf = pq.ParquetFile(fpath)
@@ -164,11 +176,10 @@ def _read_partition(p: _FilePartition, schema: T.StructType,
         mask = np.ones(tbl.num_rows, dtype=bool)
         mask[positions] = False
         tbl = tbl.filter(pa.array(mask))
-    if p.keep_positions is not None:
+    if p.dv_diff:
+        keep = dv_minus(p.table_path, *p.dv_diff)
         mask = np.zeros(tbl.num_rows, dtype=bool)
-        idx = np.fromiter((i for i in p.keep_positions
-                           if i < tbl.num_rows), dtype=np.int64)
-        mask[idx] = True
+        mask[keep[keep < tbl.num_rows]] = True
         tbl = tbl.filter(pa.array(mask))
     arrays = []
     for f in schema.fields:
@@ -281,7 +292,7 @@ def _arrow_rebuild(arr, spec, target_type, mode):
     return out.cast(target_type)
 
 
-def _check_supported(dt: DeltaTable, snap: dict):
+def _check_supported(meta: dict):
     """Returns the partition descriptor's column-mapping tuple
     (("name"|"id", ((logical, physical, fid, nested_spec), ...)) or
     None) — raising on unknown modes.  Nested mapped columns carry a
@@ -291,15 +302,14 @@ def _check_supported(dt: DeltaTable, snap: dict):
 
     from ..storage.delta import _field_id, _physical_name
 
-    conf = snap["metaData"].get("configuration") or {}
+    conf = meta.get("configuration") or {}
     mode = conf.get("delta.columnMapping.mode") or "none"
     if mode == "none":
         return None
     if mode not in ("name", "id"):
         raise NotImplementedError(
             f"minerva_delta: column mapping mode {mode!r} unknown")
-    schema = T.StructType.fromJson(
-        _json.loads(snap["metaData"]["schemaString"]))
+    schema = T.StructType.fromJson(_json.loads(meta["schemaString"]))
     return (mode, tuple(
         (f.name, _physical_name(f),
          _field_id(f) if mode == "id" else None,
@@ -325,7 +335,7 @@ class _BatchReader(DataSourceReader):
                 pass
             vao = dt.version_at(tao)
         snap = dt._replay(int(vao) if vao is not None else None)
-        self.cm = _check_supported(dt, snap)
+        self.cm = _check_supported(snap["metaData"])
         meta = snap["metaData"]
         self.schema_ = T.StructType.fromJson(
             json.loads(meta["schemaString"]))
@@ -354,45 +364,40 @@ class _BatchReader(DataSourceReader):
             files = [f for f in files
                      if _add_may_match(f, self.preds,
                                        self.part_cols, type_of)]
-        return [_FilePartition(self.table_path, f["path"],
-                               f.get("partitionValues") or {},
-                               f.get("deletionVector"), cm=self.cm)
+        return [_FilePartition(self.table_path, f, self.part_cols,
+                               self.cm)
                 for f in files]
 
     @empty_when_pruned
     def read(self, partition):
-        return _read_partition(partition, self.schema_,
-                               self.part_cols)
+        return _read_partition(partition, self.schema_)
 
 
 class _CdfPartition(InputPartition):
-    def __init__(self, fp: _FilePartition, kind: str, version: int,
-                 ts_ms: int):
+    def __init__(self, fp: _FilePartition, change_type: str | None,
+                 version: int, ts_ms: int):
         self.fp = fp
-        self.kind = kind      # "cdc" | "insert" | "delete"
+        # None: a cdc file, whose rows carry their own _change_type
+        self.change_type = change_type
         self.version = version
         self.ts_ms = ts_ms
 
 
 class _CdfBatchReader(DataSourceReader):
     """``option("readChangeFeed", "true")`` — the delta-spark CDF
-    batch interface over this engine's change reconstruction
-    (mirrors :meth:`storage.delta.DeltaTable.changes`; parity with it
-    is locked by tests): per commit, explicit cdc files read as-is,
-    add-only commits emit inserts, remove-only commits emit the
-    removed files' then-live rows as deletes, and a remove+add pair
-    with a grown deletion vector emits exactly the newly-masked rows
-    (computed executor-side from the two DV bins).  Output columns =
-    table schema + _change_type, _commit_version, _commit_timestamp.
-    In-place rewrites without cdc actions refuse (not derivable),
-    as do schema changes inside the range."""
+    batch interface over the change plan
+    :meth:`storage.delta.DeltaTable._change_plan` computes for
+    :meth:`~storage.delta.DeltaTable.changes` too, so the plan's
+    classification and refusals hold for both readers: one input
+    partition per planned file, read under the partition columns it
+    was written with — cdc files as-is, inserts and deletes minus
+    their deletion vectors, DV updates as exactly the newly-masked
+    rows (computed executor-side from the two DV bins).  Output
+    columns = table schema + _change_type, _commit_version,
+    _commit_timestamp."""
 
     def __init__(self, options: dict):
         self.path = require_path(options, "minerva_delta")
-        dt = DeltaTable(self.path)
-        avail = dt.versions()
-        if not avail:
-            raise FileNotFoundError(f"no Delta log at {self.path!r}")
         sv = _opt(options, "startingVersion")
         if sv is None:
             # delta-spark's batch readChangeFeed errors without a
@@ -402,23 +407,15 @@ class _CdfBatchReader(DataSourceReader):
             raise ValueError(
                 "minerva_delta readChangeFeed requires "
                 "option('startingVersion', …)")
-        start = int(sv)
         endo = _opt(options, "endingVersion")
-        end = avail[-1] if endo is None else int(endo)
-        snap = dt._replay(end)
-        self.cm = _check_supported(dt, snap)
-        meta = snap["metaData"]
+        self.dt = DeltaTable(self.path)
+        self.start = int(sv)
+        self.end, self.meta = self.dt._change_range(
+            self.start, None if endo is None else int(endo))
+        self.cm = _check_supported(self.meta)
         self.schema_ = T.StructType.fromJson(
-            json.loads(meta["schemaString"]))
-        self.part_cols = meta.get("partitionColumns") or []
+            json.loads(self.meta["schemaString"]))
         self.table_path = os.path.abspath(self.path)
-        self.dt = dt
-        self.start, self.end = start, end
-        missing = sorted(set(range(start, end + 1)) - set(avail))
-        if missing:
-            raise ValueError(
-                f"minerva_delta CDF: commits {missing[0]}.."
-                f"{missing[-1]} are missing (expired or future)")
 
     def cdf_schema(self) -> T.StructType:
         return T.StructType(
@@ -433,129 +430,34 @@ class _CdfBatchReader(DataSourceReader):
             cm_ct = (self.cm[0],
                      self.cm[1] + (("_change_type", "_change_type",
                                     None, None),))
-        names = [f.name for f in self.schema_.fields]
-        cur_meta = (self.dt._replay(self.start - 1)["metaData"]
-                    if self.start > 0 else None)
-        out: list[_CdfPartition] = []
-        prev_files: dict | None = None
-        for v in range(self.start, self.end + 1):
-            cpath = _commit_path(self.path, v)
-            with open(cpath) as fh:
-                actions = [json.loads(line) for line in fh
-                           if line.strip()]
-            info = next((a["commitInfo"] for a in actions
-                         if a.get("commitInfo")), {}) or {}
-            ts = int(info.get("timestamp")
-                     or os.path.getmtime(cpath) * 1000)
-            new_meta = next((a["metaData"] for a in actions
-                             if a.get("metaData")), None)
-            meta_after = new_meta or cur_meta
-            if meta_after is not None:
-                got = [f.name for f in T.StructType.fromJson(
-                    json.loads(meta_after["schemaString"])).fields]
-                if got != names:
-                    raise NotImplementedError(
-                        f"minerva_delta CDF: the schema changed "
-                        f"inside the range at commit {v}")
-            part_before = ((cur_meta or meta_after)
-                           .get("partitionColumns") or [])
-            cur_meta = meta_after
-
-            cdc = [a["cdc"] for a in actions if a.get("cdc")]
-            if cdc:
-                for c in cdc:
-                    out.append(_CdfPartition(_FilePartition(
-                        self.table_path, c["path"],
-                        c.get("partitionValues") or {}, None,
-                        cm=cm_ct), "cdc", v, ts))
-                continue
-            adds = {a["add"]["path"]: a["add"] for a in actions
-                    if a.get("add")}
-            removes = {a["remove"]["path"]: a["remove"]
-                       for a in actions if a.get("remove")}
-            need_prev = any(
-                (adds.get(pth) and removes.get(pth))
-                or (removes.get(pth, {}).get("dataChange")
-                    and removes.get(pth, {}).get("partitionValues")
-                    is None)
-                for pth in removes)
-            if need_prev:
-                prev_files = {f["path"]: f for f in
-                              self.dt._replay(v - 1)["files"]}
-            for pth in sorted(set(adds) | set(removes)):
-                a, r = adds.get(pth), removes.get(pth)
-                if a and r:
-                    if not (a.get("dataChange")
-                            or r.get("dataChange")):
-                        continue  # compaction pair
-                    if not a.get("deletionVector"):
-                        raise NotImplementedError(
-                            f"minerva_delta CDF: commit {v} rewrites "
-                            f"{pth!r} in place without cdc actions — "
-                            "the row-level delta is not derivable")
-                    old = (prev_files.get(pth) or {}).get(
-                        "deletionVector")
-                    # newly-masked positions = new DV minus old DV,
-                    # resolved executor-side from the descriptors
-                    out.append(_CdfPartition(_FilePartition(
-                        self.table_path, pth,
-                        a.get("partitionValues") or {}, None,
-                        cm=self.cm,
-                        keep_positions=("__dv_diff__",
-                                        a["deletionVector"], old)),
-                        "delete", v, ts))
-                elif a is not None:
-                    if a.get("dataChange"):
-                        out.append(_CdfPartition(_FilePartition(
-                            self.table_path, pth,
-                            a.get("partitionValues") or {},
-                            a.get("deletionVector"), cm=self.cm),
-                            "insert", v, ts))
-                elif r.get("dataChange"):
-                    pv = r.get("partitionValues")
-                    if pv is None and part_before:
-                        pv = (prev_files.get(pth) or {}).get(
-                            "partitionValues")
-                    out.append(_CdfPartition(_FilePartition(
-                        self.table_path, pth, pv or {},
-                        r.get("deletionVector"), cm=self.cm),
-                        "delete", v, ts))
-        return out
+        plan = self.dt._change_plan(self.start, self.end, self.meta)
+        return [_CdfPartition(
+            _FilePartition(
+                self.table_path, c.action, c.part_cols,
+                cm_ct if c.kind == "cdc" else self.cm,
+                (c.action["deletionVector"], c.old_dv)
+                if c.kind == "dv_diff" else None),
+            c.change_type, c.version, c.ts_ms) for c in plan]
 
     @empty_when_pruned
     def read(self, partition: _CdfPartition):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from ..storage.delta_dv import dv_load
-
-        fp = partition.fp
-        if isinstance(fp.keep_positions, tuple) \
-                and fp.keep_positions \
-                and fp.keep_positions[0] == "__dv_diff__":
-            _tag, new_dv, old_dv = fp.keep_positions
-            dead_new = set(dv_load(fp.table_path, new_dv))
-            dead_old = set(dv_load(fp.table_path, old_dv)) \
-                if old_dv else set()
-            fp.keep_positions = sorted(dead_new - dead_old)
-        if partition.kind == "cdc":
-            read_schema = T.StructType(
-                self.schema_.fields
-                + [T.StructField("_change_type", T.StringType())])
-            batches = _read_partition(fp, read_schema,
-                                      self.part_cols)
-        else:
-            batches = _read_partition(fp, self.schema_,
-                                      self.part_cols)
+        cdc = partition.change_type is None
+        read_schema = T.StructType(
+            self.schema_.fields
+            + [T.StructField("_change_type", T.StringType())]) \
+            if cdc else self.schema_
         target = to_arrow_schema(self.cdf_schema())
         ts_type = target.field("_commit_timestamp").type
-        for batch in batches:
+        for batch in _read_partition(partition.fp, read_schema):
             tbl = pa.Table.from_batches([batch])
             n = tbl.num_rows
-            if partition.kind != "cdc":
+            if not cdc:
                 tbl = tbl.append_column(
                     "_change_type",
-                    pa.array([partition.kind] * n, pa.string()))
+                    pa.array([partition.change_type] * n, pa.string()))
             tbl = tbl.append_column(
                 "_commit_version",
                 pa.array([partition.version] * n, pa.int64()))
@@ -575,7 +477,7 @@ class _StreamReader(DataSourceStreamReader):
         self.path = require_path(options, "minerva_delta")
         self.dt = DeltaTable(self.path)
         snap = self.dt._replay()
-        self.cm = _check_supported(self.dt, snap)
+        self.cm = _check_supported(snap["metaData"])
         meta = snap["metaData"]
         self.schema_ = T.StructType.fromJson(
             json.loads(meta["schemaString"]))
@@ -599,7 +501,7 @@ class _StreamReader(DataSourceStreamReader):
             ms = as_of_ms(st)
             run, sv = 0, None
             for v in self.dt.versions():
-                run = max(run, self.dt._commit_ts_ms(v))
+                run = max(run, self.dt._actions(v)[1])
                 if run >= ms:
                     sv = v
                     break
@@ -630,10 +532,8 @@ class _StreamReader(DataSourceStreamReader):
             int(loaded) if loaded is not None else None)
 
     def _commit_add_count(self, v: int) -> int:
-        with open(_commit_path(self.path, v)) as fh:
-            return sum(1 for line in fh if line.strip()
-                       and json.loads(line).get("add", {})
-                       .get("dataChange"))
+        return sum(1 for a in self.dt._actions(v)[0]
+                   if (a.get("add") or {}).get("dataChange"))
 
     def _prime(self, *vers) -> None:
         known = [int(v) for v in vers if v is not None]
@@ -678,9 +578,7 @@ class _StreamReader(DataSourceStreamReader):
         out = []
         for v in range(int(start["version"]) + 1,
                        int(end["version"]) + 1):
-            with open(_commit_path(self.path, v)) as fh:
-                actions = [json.loads(line) for line in fh
-                           if line.strip()]
+            actions = self.dt._actions(v)[0]
             removes = [a["remove"] for a in actions
                        if a.get("remove")
                        and a["remove"].get("dataChange")]
@@ -703,16 +601,13 @@ class _StreamReader(DataSourceStreamReader):
                 # ignoreChanges: emit the re-added files' live rows
                 # (upstream-documented duplicate emission)
                 pass
-            out.append([
-                _FilePartition(self.table_path, a["path"],
-                               a.get("partitionValues") or {},
-                               a.get("deletionVector"), cm=self.cm)
-                for a in adds])
-        return [p for grp in out for p in grp] or []
+            out += [_FilePartition(self.table_path, a,
+                                   self.part_cols, self.cm)
+                    for a in adds]
+        return out
 
     def read(self, partition):
-        return _read_partition(partition, self.schema_,
-                               self.part_cols)
+        return _read_partition(partition, self.schema_)
 
     def commit(self, end: dict) -> None:
         self._prime(end.get("version"))
@@ -807,7 +702,7 @@ class _DeltaWriter(DataSourceArrowWriter):
         dt = DeltaTable(self.path)
         if dt.versions():
             snap = dt._replay()  # fail fast, before executors write
-            _check_supported(dt, snap)
+            _check_supported(snap["metaData"])
             dt._check_writable(snap, self.mode)
             table_pcols = snap["metaData"].get(
                 "partitionColumns") or []

@@ -31,7 +31,10 @@ Scope: parquet data files.  BATCH mode applies merge-on-read
 POSITION deletes executor-side (each file's deleted row ordinals
 mask its pyarrow read — positions are 0-based per file, exactly the
 spec's addressing) and sequence-ordered EQUALITY deletes (each task
-anti-joins its own rows against the small delete parquet).
+anti-joins its own rows against the small delete parquet).  Which
+delete files reach which data file, and the parent-chain walk the
+stream follows, come from :mod:`storage.iceberg`, the same rules
+``read_iceberg`` applies.
 
 Shared with the other registered sources: :mod:`.source_api`
 (options, path check, filter translation, registration),
@@ -56,7 +59,9 @@ from pyspark.sql.datasource import (DataSource,
                                     WriterCommitMessage)
 
 from ..storage.commit import hive_segment, remove_files, write_parts
-from ..storage.iceberg import IcebergTable, _localize, _to_spark_schema
+from ..storage.iceberg import (_FILE_URI, IcebergTable, _delete_pairs,
+                               _localize, _parent_id, _to_spark_schema,
+                               _touching, _types_by_id, _walk_chain)
 from .admission import admission_state, admit, cap_option
 from .source_api import (_flag, _opt, empty_when_pruned,
                          preds_from_filters, register, require_path)
@@ -84,21 +89,16 @@ def _deleted_positions(orig_path: str, delete_paths):
     """0-based row ordinals the given position-delete files mask out
     of THIS data file (executor-side: each task reads only the small
     delete parquet, filtered to its own file path)."""
-    import re
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    def norm(x: str) -> str:
-        return re.sub("^file:/+", "/", x)
-
-    mine = pa.array(sorted({norm(orig_path)}))
+    mine = pa.array([_localize(orig_path)])
     out = set()
     for dp in delete_paths:
         t = pq.read_table(dp, columns=["file_path", "pos"])
         mask = pc.is_in(pc.replace_substring_regex(
-            t.column("file_path"), "^file:/+", "/"),
+            t.column("file_path"), _FILE_URI, "/"),
             value_set=mine)
         out.update(t.filter(mask).column("pos").to_pylist())
     return out
@@ -304,134 +304,6 @@ def _parquet_paths(files: list[dict]) -> list[str]:
     return out
 
 
-def _walk_chain(md: dict, start_id: int, end_id: int,
-                ctx: str = "stream"):
-    """(snaps, ordered, chain oldest-exclusive..end) along the parent
-    ancestry — shared by the streaming offsets and the batch
-    changelog view.  start_id == -1 means the whole history."""
-    snaps = {s["snapshot-id"]: s
-             for s in md.get("snapshots") or []}
-    ordered = [s["snapshot-id"] for s in md.get("snapshots") or []]
-    chain: list[dict] = []
-    cur = snaps.get(end_id)
-    if cur is None:
-        raise ValueError(
-            f"minerva_iceberg {ctx}: snapshot {end_id} not in "
-            "metadata (expired?)")
-    found = start_id == -1
-    while cur is not None:
-        if cur["snapshot-id"] == start_id:
-            found = True
-            break
-        chain.append(cur)
-        parent = cur.get("parent-snapshot-id")
-        if parent is None:
-            i = ordered.index(cur["snapshot-id"])
-            parent = ordered[i - 1] if i > 0 else None
-        cur = snaps.get(parent) if parent is not None else None
-    if not found:
-        raise ValueError(
-            f"minerva_iceberg {ctx}: snapshot {start_id} is not an "
-            f"ancestor of {end_id} — the table history diverged "
-            "(rollback?)")
-    return snaps, ordered, chain
-
-
-_PATH_FIELD_ID = 2147483546  # reserved: position-delete file_path
-
-
-def _delete_may_touch(f: dict, d: dict, types_by_id: dict) -> bool:
-    """Manifest-bounds check: can delete file ``d`` kill rows of
-    data file ``f``?  Decided from manifest entries ALONE — no
-    parquet is opened.  Conservative per the Iceberg scan-planning
-    contract: missing bounds, unknown types, or undecodable values
-    keep the pair.
-
-    - position deletes (content=1): compared on the reserved
-      ``file_path`` column's bounds (field id 2147483546) against
-      ``f``'s own path;
-    - equality deletes (content=2): a data file written at or after
-      the delete's sequence number is untouchable; otherwise the
-      delete's key-column bounds must overlap the data file's.
-    """
-    from ..storage.iceberg import _bounds_map, _decode_bound
-
-    d_lo = _bounds_map(d.get("lower_bounds"))
-    d_hi = _bounds_map(d.get("upper_bounds"))
-    if d.get("content") == 1:
-        lo, hi = d_lo.get(_PATH_FIELD_ID), d_hi.get(_PATH_FIELD_ID)
-        if lo is None or hi is None:
-            return True  # no path bounds: may reference f
-        try:
-            return (lo.decode("utf-8") <= f["file_path"]
-                    <= hi.decode("utf-8"))
-        except UnicodeDecodeError:
-            return True
-    if d.get("content") == 2:
-        fseq = int(f["_seq"]) if f.get("_seq") is not None else None
-        dseq = int(d["_seq"]) if d.get("_seq") is not None else None
-        if fseq is not None and dseq is not None and fseq >= dseq:
-            return False  # equality deletes only reach OLDER files
-        f_lo = _bounds_map(f.get("lower_bounds"))
-        f_hi = _bounds_map(f.get("upper_bounds"))
-        for fid in (d.get("equality_ids") or ()):
-            t = types_by_id.get(fid)
-            dl = _decode_bound(t, d_lo.get(fid))
-            dh = _decode_bound(t, d_hi.get(fid))
-            fl = _decode_bound(t, f_lo.get(fid))
-            fh = _decode_bound(t, f_hi.get(fid))
-            try:
-                if (dh is not None and fl is not None
-                        and dh < fl) or \
-                   (dl is not None and fh is not None
-                        and dl > fh):
-                    return False
-            except TypeError:
-                continue  # incomparable: stay conservative
-        return True
-    return True  # unknown content: never drop silently
-
-
-def _delete_pairs(dels: list[dict], ice_schema: dict, ctx: str = ""):
-    """Position and equality delete files as ``(value, manifest
-    entry)`` pairs: a position delete's value is its local path, an
-    equality delete's ``(local path, sequence number, key columns)``
-    as :func:`_eq_dead_mask` takes it."""
-    by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-    pos, eq = [], []
-    for d in dels:
-        if d.get("content") == 1:
-            pos.append((_localize(d["file_path"]), d))
-        elif d.get("content") == 2:
-            cols = tuple(by_id.get(i) for i in
-                         (d.get("equality_ids") or ()))
-            if not cols or any(c is None for c in cols):
-                raise ValueError(
-                    f"minerva_iceberg{ctx}: equality delete "
-                    "references unknown field ids")
-            if d.get("_seq") is None:
-                raise ValueError(
-                    f"minerva_iceberg{ctx}: equality delete "
-                    "without a sequence number")
-            eq.append(((_localize(d["file_path"]), int(d["_seq"]),
-                        cols), d))
-    return pos, eq
-
-
-def _touching(f: dict, pairs, types_by_id: dict) -> tuple:
-    """The values of the delete ``pairs`` whose manifest bounds can
-    touch data file ``f`` — a task opens only those delete parquets,
-    so its work is O(touching deletes), not O(all deletes) on a
-    long-lived upsert table."""
-    return tuple(v for v, d in pairs
-                 if _delete_may_touch(f, d, types_by_id))
-
-
-def _types_by_id(ice_schema: dict) -> dict:
-    return {fld["id"]: fld["type"] for fld in ice_schema["fields"]
-            if isinstance(fld["type"], str)}
-
-
 def _file_partition(path: str, f: dict, pos, eq,
                     types_by_id: dict) -> _IceFilePartition:
     """Data file ``f`` read at ``path`` under the ``pos``/``eq``
@@ -471,10 +343,7 @@ def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
                 "is not derivable")
         if skip_deletes:
             continue
-        parent_id = s.get("parent-snapshot-id")
-        if parent_id is None:
-            i = ordered.index(sid)
-            parent_id = ordered[i - 1] if i > 0 else None
+        parent_id = _parent_id(s, ordered)
         if parent_id is None:
             continue  # table began with a delete: nothing was live
         parent = snaps.get(parent_id)
@@ -490,12 +359,12 @@ def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
         seen = {d["file_path"] for d in dels_p}
         new_pos, new_eq = _delete_pairs(
             [d for d in dels_s if d["file_path"] not in seen],
-            ice_schema, " changelog")
+            files_p, ice_schema)
         if not new_pos and not new_eq:
             continue
         # a pre-image task opens only the parent and new delete
         # parquets whose manifest bounds can touch its file
-        pos_p, eq_p = _delete_pairs(dels_p, ice_schema, " changelog")
+        pos_p, eq_p = _delete_pairs(dels_p, files_p, ice_schema)
         for p, f in zip(_parquet_paths(files_p), files_p):
             np_ = _touching(f, new_pos, types_by_id)
             ne = _touching(f, new_eq, types_by_id)
@@ -535,7 +404,8 @@ class _IceChangelogBatchReader(DataSourceReader):
         if self.end_id == -1:
             return []
         snaps, ordered, chain = _walk_chain(
-            self.md, self.start_id, self.end_id, "changelog")
+            self.md, self.start_id, self.end_id,
+            "minerva_iceberg changelog")
         return _build_changelog_partitions(
             self.tbl, self.ice_schema, self.md, snaps, ordered,
             chain, skip_deletes=False)
@@ -585,15 +455,8 @@ class _IceBatchReader(DataSourceReader):
             self.md)
         # sequence-ordered equality deletes are applied EXECUTOR-side
         # per file (each task anti-joins its own rows against the
-        # small delete parquet) — refuse only when the ordering is
-        # undefined, mirroring read_iceberg
-        if (any(d.get("content") == 2 for d in deletes)
-                and any(f.get("_seq") is None for f in files)):
-            raise NotImplementedError(
-                "minerva_iceberg: equality deletes present but a "
-                "data file carries no sequence number — ordering "
-                "is undefined; use read_iceberg()")
-        pos, eq = _delete_pairs(deletes, self.ice_schema)
+        # small delete parquet)
+        pos, eq = _delete_pairs(deletes, files, self.ice_schema)
         if self.preds:
             field_id = {f["name"]: f["id"]
                         for f in self.ice_schema["fields"]}
@@ -689,7 +552,8 @@ class _IceStreamReader(DataSourceStreamReader):
         if (self.max_files is not None
                 and self._snap_seen is not None
                 and cur != -1 and cur != self._snap_seen):
-            _, _, chain = _walk_chain(md, self._snap_seen, cur)
+            _, _, chain = _walk_chain(md, self._snap_seen, cur,
+                                      "minerva_iceberg stream")
             chain.reverse()  # oldest first
             taken = admit(chain, [(self._snap_file_count,
                                    self.max_files)])
@@ -715,7 +579,7 @@ class _IceStreamReader(DataSourceStreamReader):
         start_id = int(start["snapshot"])
         md = self.tbl.metadata()
         snaps, ordered, chain = _walk_chain(md, start_id, end_id,
-                                            "stream")
+                                            "minerva_iceberg stream")
         if self.changelog:
             return _build_changelog_partitions(
                 self.tbl, self.ice_schema, md, snaps, ordered,

@@ -272,6 +272,44 @@ def test_format_footer_stats_pinned(tmp_path, case):
         assert delta._add_may_match(add, pred, [], {}) is delta_keeps, pred
 
 
+def _delta_keeps(lo, hi, op, lit):
+    from python_minerva_etl_spark.storage.delta import _add_may_match
+
+    add = {"stats": json.dumps({"minValues": {"s": lo},
+                                "maxValues": {"s": hi}})}
+    return _add_may_match(add, [("s", op, lit)], [], {})
+
+
+def _iceberg_keeps(lo, hi, op, lit):
+    from python_minerva_etl_spark.storage.iceberg import _file_may_match
+
+    entry = {"lower_bounds": {1: lo.encode()},
+             "upper_bounds": {1: hi.encode()}}
+    return _file_may_match(entry, [("s", op, lit)], {"s": 1},
+                           {"s": "string"})
+
+
+def _snaptable_keeps(lo, hi, op, lit):
+    from python_minerva_etl_spark.storage.stats import may_match
+
+    return may_match(lo, hi, op, lit)
+
+
+@pytest.mark.parametrize("keeps", [_delta_keeps, _iceberg_keeps,
+                                   _snaptable_keeps],
+                         ids=["delta", "iceberg", "snaptable"])
+def test_impossible_bound_pair_reads_as_unbounded(keeps):
+    """Older sinks could record a string max of '' above a non-empty
+    min.  A max below its min is impossible, so every format's file
+    skipping reads the column as unbounded and keeps the file; a
+    sound pair still prunes."""
+    for op, lit in [("=", "zzz"), ("=", "a"), (">", "zzz"),
+                    (">=", "zzz"), ("<", "a"), ("<=", "")]:
+        assert keeps("abc", "", op, lit) is True, (op, lit)
+    assert keeps("abc", "abd", "=", "zzz") is False
+    assert keeps("abc", "abd", "<", "a") is False
+
+
 def test_delta_version_at_exact_millis(tmp_path):
     """``timestamp_as_of`` resolves through exact integer epoch ms: a
     target that equals a commit's timestamp selects that commit, not
@@ -286,7 +324,7 @@ def test_delta_version_at_exact_millis(tmp_path):
     dt = DeltaTable(str(tmp_path / "t"))
     v = dt.version_at(_D(2004, 3, 12, 7, 28, 15, 616000))
     assert v == 1
-    assert dt._commit_ts_ms(v) == 1079076495616
+    assert dt._actions(v)[1] == 1079076495616
 
 
 def test_footer_statistics_read_only_in_stats_module():

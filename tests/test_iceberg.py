@@ -1092,3 +1092,26 @@ def test_lit_physical_timestamp_micros_exact():
         # naive datetimes are treated as UTC
         assert _lit_physical(
             "timestamp", t.replace(tzinfo=None)) == want, t
+
+
+def test_hadoop_style_file_uris_read(spark, tmp_path):
+    """Hadoop-written metadata spells local locations ``file:/p``
+    (one slash): the manifest list, manifests and data files it names
+    open like plain paths, and position deletes still match."""
+    from python_minerva_etl_spark.storage.iceberg import read_iceberg
+    from python_minerva_etl_spark.storage.iceberg_write import (
+        delete_iceberg, write_iceberg)
+
+    p = str(tmp_path / "t")
+    write_iceberg(spark, spark.range(0, 10).toDF("id"), p)
+    delete_iceberg(spark, p, [("id", "<", 3)])
+    md_path = IcebergTable(p)._metadata_path()
+    with open(md_path) as fh:
+        md = json.load(fh)
+    for s in md["snapshots"]:
+        s["manifest-list"] = "file:" + os.path.abspath(
+            s["manifest-list"].replace("file://", ""))
+    with open(md_path, "w") as fh:
+        json.dump(md, fh)
+    assert sorted(r.id for r in read_iceberg(spark, p).collect()) == \
+        list(range(3, 10))

@@ -1,0 +1,87 @@
+"""One home per rule for the lake formats' change and delete logic:
+the Delta change feed is classified once in ``storage/delta.py`` and
+both of its readers consume that plan, and Iceberg's delete
+assignment, path normalization and snapshot-chain walk live in
+``storage/iceberg.py``."""
+
+from __future__ import annotations
+
+import inspect
+import os
+import re
+
+import python_minerva_etl_spark
+from python_minerva_etl_spark.streaming.delta_source import _CdfBatchReader
+
+_PKG = os.path.dirname(python_minerva_etl_spark.__file__)
+
+
+def _modules():
+    for root, _dirs, names in os.walk(_PKG):
+        for name in sorted(names):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, _PKG), fh.read()
+
+
+def _holders(rx: re.Pattern, family: str = "") -> list[str]:
+    return sorted(rel for rel, text in _modules()
+                  if family in os.path.basename(rel)
+                  and rx.search(text))
+
+
+def test_delta_change_feed_is_planned_once():
+    # commit JSON files are opened by DeltaTable._actions alone
+    assert _holders(re.compile(r"_commit_path|:020d}\.json")) == [
+        "storage/delta.py"]
+    assert _holders(re.compile(r"not derivable"), "delta") == [
+        "storage/delta.py"]
+    assert _holders(re.compile(r"def _change_plan\b")) == [
+        "storage/delta.py"]
+    assert _holders(re.compile(r"__dv_diff__")) == []
+    # the CDF reader maps plan records to partitions; it classifies
+    # no actions itself
+    src = inspect.getsource(_CdfBatchReader)
+    assert "_change_plan" in src
+    assert "dataChange" not in src and "_actions(" not in src
+
+
+def test_iceberg_delete_rules_live_in_storage_iceberg():
+    assert _holders(re.compile(r"\^file:/\+"), "iceberg") == [
+        "storage/iceberg.py"]
+    for name in ("_walk_chain", "_parent_id", "_delete_may_touch",
+                 "_delete_pairs", "_touching", "_types_by_id"):
+        assert _holders(re.compile(rf"def {name}\b")) == [
+            "storage/iceberg.py"], name
+    assert _holders(re.compile(r"_PATH_FIELD_ID\s*=")) == [
+        "storage/iceberg.py"]
+    assert _holders(re.compile(r"unknown field id")) == [
+        "storage/iceberg.py"]
+    assert _holders(re.compile(r"carries no sequence number")) == [
+        "storage/iceberg.py"]
+
+
+def test_delete_assignment_refusals():
+    """Both Iceberg scans (the JVM anti joins and the registered
+    source's batch and changelog readers) take their delete pairs
+    from ``_delete_pairs``, so its refusals hold for all of them."""
+    import pytest
+
+    from python_minerva_etl_spark.storage.iceberg import _delete_pairs
+
+    schema = {"fields": [{"id": 1, "name": "id", "type": "long"}]}
+    eq = {"content": 2, "file_path": "file:///t/d.parquet", "_seq": 2,
+          "equality_ids": [1]}
+    pos = {"content": 1, "file_path": "file:///t/p.parquet", "_seq": 2}
+    data = {"content": 0, "file_path": "/t/a.parquet", "_seq": 1}
+    got_pos, got_eq = _delete_pairs([pos, eq], [data], schema)
+    assert got_pos == [("/t/p.parquet", pos)]
+    assert got_eq == [(("/t/d.parquet", 2, ("id",)), eq)]
+    with pytest.raises(ValueError, match="unknown field id 7"):
+        _delete_pairs([dict(eq, equality_ids=[7])], [data], schema)
+    with pytest.raises(ValueError, match="no sequence number"):
+        _delete_pairs([eq], [dict(data, _seq=None)], schema)
+    # position deletes need no ordering
+    assert _delete_pairs([pos], [dict(data, _seq=None)], schema)[0]
+
