@@ -25,7 +25,12 @@ metadata encoding, error type and conflict rules.
 4. **Hive path codec** (:func:`hive_segment`, :func:`hive_values`):
    ``col=value`` directory names, null as
    ``__HIVE_DEFAULT_PARTITION__``.
-5. **Arrow part writer** (:func:`write_parts`): the task side of the
+5. **Local paths** (:func:`_localize`, :func:`_localize_col`): a
+   ``file:`` URI with any number of slashes (``file:/p``,
+   ``file:///p``) names the local file ``/p``.  Spark's
+   ``_metadata.file_path``, Hadoop-style writers and the formats' own
+   metadata all reach the same file through this one rule.
+6. **Arrow part writer** (:func:`write_parts`): the task side of the
    registered ``minerva_delta`` and ``minerva_iceberg`` sinks.  One
    snappy parquet file per distinct key, at a final name the format
    chooses, with no min/max for a string column holding a value over
@@ -36,6 +41,7 @@ metadata encoding, error type and conflict rules.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 from typing import Callable, Iterator
@@ -49,6 +55,8 @@ _STATS_MAX_BYTES = 4096
 _BYTE_TYPES = ("string", "binary", "large_string", "large_binary")
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+_FILE_URI = "^file:/+"
 
 
 def _write_temp(final: str, data: bytes | str) -> str:
@@ -92,6 +100,17 @@ def commit_attempts(where: str, error: type[Exception]) -> Iterator[int]:
     yield from range(COMMIT_ATTEMPTS)
     raise error(f"lost the commit race {COMMIT_ATTEMPTS} times at "
                 f"{where!r}")
+
+
+def _localize(uri: str) -> str:
+    return re.sub(_FILE_URI, "/", uri)
+
+
+def _localize_col(c):
+    """:func:`_localize` as a Spark column expression."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(c, _FILE_URI, "/")
 
 
 def hive_segment(col: str, value: str | None) -> str:

@@ -74,8 +74,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import (commit_attempts, hive_values, publish_if_absent,
-                     remove_files, replace_atomic, stage_parquet)
+from .commit import (_localize, _localize_col, commit_attempts,
+                     hive_values, publish_if_absent, remove_files,
+                     replace_atomic, stage_parquet)
 from .dml import is_true, plan_merge, set_projection, table_projection
 from .stats import (as_of_ms, footer_bounds, may_match, zorder_cluster,
                     zorder_proxy_sql)
@@ -544,8 +545,7 @@ class DeltaTable:
                 sidecars.append(row["sidecar"])
         sc_dir = os.path.join(_log_dir(self.path), "_sidecars")
         for sc in sidecars:
-            sp = sc["path"]
-            sp = re.sub("^file:/+", "/", sp)
+            sp = _localize(sc["path"])
             if not os.path.isabs(sp):
                 sp = os.path.join(sc_dir, sp)
             if not os.path.exists(sp):
@@ -899,8 +899,8 @@ class DeltaTable:
         if need_pos:
             df = df.select(
                 "*",
-                F.regexp_replace(F.col("_metadata.file_path"),
-                                 "^file:/+", "/").alias("_dl_path"),
+                _localize_col(F.col("_metadata.file_path"))
+                .alias("_dl_path"),
                 F.col("_metadata.row_index").alias("_dl_pos"))
             keep += ["_dl_path", "_dl_pos"]
         return df.select(*keep)
@@ -993,8 +993,7 @@ class DeltaTable:
                 # 'file:///p' -> '/p' so descriptor paths and Spark's
                 # _metadata.file_path form always agree
                 sel = sel + [
-                    F.regexp_replace(F.col("_metadata.file_path"),
-                                     "^file:/+", "/")
+                    _localize_col(F.col("_metadata.file_path"))
                     .alias("_dl_path"),
                     F.col("_metadata.row_index").alias("_dl_pos")]
             if mapped or need_pos:
@@ -2346,15 +2345,11 @@ class DeltaTable:
         seen: dict[str, int] = {}
         for v in self.versions():
             try:
-                with open(_commit_path(self.path, v)) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        a = json.loads(line).get("add")
-                        if a:
-                            seen[a["path"]] = v
+                actions, _ = self._actions(v)
             except FileNotFoundError:
                 continue  # checkpoint-swallowed prefix
+            seen.update((a["add"]["path"], v) for a in actions
+                        if a.get("add"))
         return seen
 
     def _last_zorder_version(self,
@@ -2365,20 +2360,34 @@ class DeltaTable:
         want = json.dumps(zorder_by)
         for v in reversed(self.versions()):
             try:
-                with open(_commit_path(self.path, v)) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        ci = json.loads(line).get("commitInfo")
-                        if not ci:
-                            continue
-                        if (ci.get("operation") == "OPTIMIZE"
-                                and (ci.get("operationParameters")
-                                     or {}).get("zOrderBy") == want):
-                            return v
+                actions, _ = self._actions(v)
             except FileNotFoundError:
                 continue
+            if any(a["commitInfo"].get("operation") == "OPTIMIZE"
+                   and (a["commitInfo"].get("operationParameters")
+                        or {}).get("zOrderBy") == want
+                   for a in actions if a.get("commitInfo")):
+                return v
         return None
+
+    def _unclustered(self, snap: dict,
+                     zorder_by: list[str]) -> list[dict] | None:
+        """The Z-order debt of ``snap``: its active files added after
+        the latest surviving OPTIMIZE commit that recorded the SAME
+        zOrderBy, or None when no such commit survives (every file is
+        debt, and a rewrite must be full).  ``zorder_by`` names
+        logical columns; on column-mapped tables the marker records
+        the physical names :meth:`optimize` clusters on.  A file whose
+        add only a checkpoint holds counts as OLD: it predates every
+        surviving commit."""
+        cm = self._cm_mapping(snap)
+        zv = self._last_zorder_version(
+            [cm[c] for c in zorder_by] if cm is not None else zorder_by)
+        if zv is None:
+            return None
+        added = self._add_versions()
+        return [f for f in snap["files"]
+                if added.get(f["path"], -1) > zv]
 
     def optimize(self, spark: SparkSession,
                  small_file_bytes: int = 128 << 20,
@@ -2450,6 +2459,13 @@ class DeltaTable:
             for f in data_fields:
                 if f.name in zorder_by:
                     zorder_proxy_sql(f.name, f.dataType)
+        candidate: set[str] | None = None  # None = all files
+        if incremental:
+            debt = self._unclustered(snap, zorder_by)
+            if debt is not None:
+                if not debt:
+                    return None
+                candidate = {f["path"] for f in debt}
         # column-mapped: compact entirely in the PHYSICAL world —
         # read physical columns, re-stage physical columns — so
         # files, stats, and partitionValues stay physically keyed
@@ -2475,17 +2491,6 @@ class DeltaTable:
             if zorder_by:
                 zorder_by = [cm[c] for c in zorder_by]
         clustering = bool(sort_by or zorder_by)
-        candidate: set[str] | None = None  # None = all files
-        if incremental and zorder_by:
-            zv = self._last_zorder_version(zorder_by)
-            if zv is not None:
-                added = self._add_versions()
-                # unknown (checkpoint-swallowed) counts as OLD:
-                # it predates every surviving commit, hence zv
-                candidate = {f["path"] for f in snap["files"]
-                             if added.get(f["path"], -1) > zv}
-                if not candidate:
-                    return None
         groups: dict[tuple, list[dict]] = {}
         for f in snap["files"]:
             if candidate is not None and f["path"] not in candidate:
@@ -2512,8 +2517,7 @@ class DeltaTable:
             if dv_map:
                 df = df.select(
                     "*",
-                    F.regexp_replace(F.col("_metadata.file_path"),
-                                     "^file:/+", "/")
+                    _localize_col(F.col("_metadata.file_path"))
                     .alias("_dl_path"),
                     F.col("_metadata.row_index").alias("_dl_pos"))
                 df = self._apply_dvs(spark, df, dv_map).drop(
@@ -2771,18 +2775,9 @@ def maybe_optimize_delta(spark: SparkSession, path: str,
     snap = dt._replay()
     if not snap["files"]:
         return None
-    # the marker in commitInfo records PHYSICAL column names on
-    # column-mapped tables (optimize() renames before recording) —
-    # look it up the same way or the debt never resets
-    cm = dt._cm_mapping(snap)
-    zv = dt._last_zorder_version(
-        [cm[c] for c in zorder_by] if cm is not None else zorder_by)
-    if zv is None:
+    debt = dt._unclustered(snap, zorder_by)
+    if debt is None:
         debt = snap["files"]
-    else:
-        added = dt._add_versions()
-        debt = [f for f in snap["files"]
-                if added.get(f["path"], -1) > zv]
     if (len(debt) <= max_unclustered_files
             and sum(f.get("size") or 0 for f in debt)
             <= max_unclustered_bytes):

@@ -63,14 +63,13 @@ without them refuses (or worse, resurrects deleted rows).
 from __future__ import annotations
 
 import os
-import re
 import struct
 import uuid
 import zlib
 
 import numpy as np
 
-from .commit import replace_atomic
+from .commit import _localize, replace_atomic
 
 # ------------------------------------------------------------- Z85
 
@@ -313,7 +312,7 @@ def dv_load(table_path: str, dv: dict) -> np.ndarray:
         if st == "u":
             p = _dv_file_path(table_path, dv["pathOrInlineDv"])
         else:
-            p = re.sub("^file:/+", "/", dv["pathOrInlineDv"])
+            p = _localize(dv["pathOrInlineDv"])
         with open(p, "rb") as fh:
             buf = fh.read()
         if not buf or buf[0] != _FORMAT_VERSION:

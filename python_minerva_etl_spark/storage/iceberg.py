@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_file import avro_read
+from .commit import _localize, _localize_col
 from .stats import DAY, US, as_of_ms, epoch, may_match
 
 
@@ -306,18 +307,6 @@ def _manifest_may_match(m: dict, preds, specs: dict,
             if plit is not None and not may_match(lo, hi, op, plit):
                 return False
     return True
-
-
-# ------------------------------------------------------------------ table
-
-# 'file:///p' / 'file:/p' -> '/p': the local path a manifest's file
-# URI names, and the form in which it, a position delete's file_path
-# and Spark's _metadata.file_path all compare equal
-_FILE_URI = "^file:/+"
-
-
-def _localize(uri: str) -> str:
-    return re.sub(_FILE_URI, "/", uri)
 
 
 # ------------------------------------------------------ snapshot ancestry
@@ -922,13 +911,10 @@ class IcebergTable:
         shuffle."""
         from pyspark.sql import functions as F
 
-        def norm(c):
-            return F.regexp_replace(c, _FILE_URI, "/")
-
         pos, eq = _delete_pairs(delete_files, data_files, ice_schema)
         out = data.select(
             "*",
-            norm(F.col("_metadata.file_path")).alias("_ice_path"),
+            _localize_col(F.col("_metadata.file_path")).alias("_ice_path"),
             F.col("_metadata.row_index").alias("_ice_pos"))
         if pos:
             dset = (spark.read
@@ -936,7 +922,7 @@ class IcebergTable:
                         T.StructField("file_path", T.StringType()),
                         T.StructField("pos", T.LongType())]))
                     .parquet(*[p for p, _ in pos])
-                    .select(norm(F.col("file_path"))
+                    .select(_localize_col(F.col("file_path"))
                             .alias("_del_path"),
                             F.col("pos").alias("_del_pos"))
                     .dropDuplicates(["_del_path", "_del_pos"]))

@@ -16,11 +16,11 @@ published specs:
   snapshot + metadata JSON fields.
 
 Scope (documented in COVERAGE.md): create + append (unpartitioned or
-ONE identity-transform partition column of int/long/string, with
-manifest partition summaries) and merge-on-read DELETE
-(:func:`delete_iceberg` — position-delete files, no data-file
-rewrites).  Overwrite and schema evolution are out of scope; spec
-mismatches refuse loudly.  Bounds are written for top-level
+ONE partition field, with manifest partition summaries),
+add-column evolution, overwrite, merge-on-read DELETE / UPDATE /
+MERGE and equality deletes, compaction and Z-order clustering, refs
+and snapshot expiry; spec mismatches refuse loudly.  Every snapshot
+commits through :func:`_commit`.  Bounds are written for top-level
 int/long/float/double/string/date/timestamp columns so our own
 reader's scan planning (``iceberg.py:_file_may_match``) can prune
 the files this writer produces.
@@ -36,16 +36,16 @@ import os
 import struct
 import time
 import uuid
-from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_file import _avro_file, avro_read
-from .commit import (commit_attempts, hive_segment, publish_if_absent,
-                     remove_files, replace_atomic, stage_parquet)
+from .commit import (_localize, commit_attempts, hive_segment,
+                     publish_if_absent, remove_files, replace_atomic,
+                     stage_parquet)
 from .dml import plan_merge, set_projection
-from .iceberg import IcebergTable, _localize, _to_spark_schema
+from .iceberg import IcebergTable, _parent_id, _to_spark_schema
 from .stats import (DAY, US, epoch, footer_bounds, zorder_cluster,
                     zorder_proxy_sql)
 
@@ -717,8 +717,8 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
                                         merge_schema)
     data_files = _stage_data_files(df, path, part, ice_schema)
     _bound_entries(data_files, ice_schema)
-    _commit_staged(path, data_files, ice_schema, part,
-                   df_schema=df.schema if merge_schema else None)
+    _commit(IcebergTable(path), "append", data=data_files, part=part,
+            create=ice_schema, evolve=df.schema if merge_schema else None)
 
 
 def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
@@ -732,23 +732,14 @@ def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
     like :func:`write_iceberg`.  Incremental append scans refuse
     ranges containing the overwrite — correct, a truncation cannot be
     consumed as appends."""
-    mdir = os.path.join(path, "metadata")
-    if not (os.path.isdir(mdir)
-            and any(n.endswith(".metadata.json")
-                    for n in os.listdir(mdir))):
+    if not _has_metadata(path):
         write_iceberg(spark, df, path, partition_by=partition_by)
         return
     ice_schema, part = _precheck_append(path, df.schema, partition_by)
     data_files = _stage_data_files(df, path, part, ice_schema)
     _bound_entries(data_files, ice_schema)
-    table = IcebergTable(path)
-    for _ in commit_attempts(path, IcebergConcurrentCommit):
-        md = table.metadata()
-        base_version = _version_of(table._metadata_path())
-        with suppress(IcebergConcurrentCommit):
-            _commit_append(table, md, data_files, base_version,
-                           part, carry=False, operation="overwrite")
-            return
+    _commit(IcebergTable(path), "overwrite", data=data_files, part=part,
+            rewritten=True)
 
 
 def _precheck_append(path: str, df_schema: T.StructType,
@@ -762,11 +753,8 @@ def _precheck_append(path: str, df_schema: T.StructType,
     transforms/types.  Returns ``(ice_schema, part_field)`` — the
     EVOLVED schema when ``merge_schema`` adds columns."""
     table = IcebergTable(path)
-    mdir = os.path.join(path, "metadata")
-    os.makedirs(mdir, exist_ok=True)
-
-    exists = any(n.endswith(".metadata.json") for n in os.listdir(mdir))
-    if exists:
+    os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
+    if _has_metadata(path):
         md = table.metadata()
         ice_schema = table._current_schema(md)
         if not _append_compatible(_to_spark_schema(ice_schema),
@@ -808,60 +796,234 @@ def _precheck_append(path: str, df_schema: T.StructType,
     return ice_schema, part
 
 
-def _commit_staged(path: str, data_files: list[dict],
-                   ice_schema: dict, part: "_PartField | None",
-                   df_schema: T.StructType | None = None,
-                   extra_summary: dict | None = None) -> None:
-    """The CAS retry half of :func:`write_iceberg`, given
-    already-staged manifest entries (with bounds).  ``df_schema``
-    (merge-schema appends only) lets a retry RE-derive the evolved
-    schema against freshly-read metadata — a racer may have evolved
-    the table first, and blindly committing our pre-race schema
-    would drop their columns."""
-    table = IcebergTable(path)
+def _has_metadata(path: str) -> bool:
     mdir = os.path.join(path, "metadata")
-    for _ in commit_attempts(path, IcebergConcurrentCommit):
-        schema_patch = None
-        if any(n.endswith(".metadata.json") for n in os.listdir(mdir)):
-            md = table.metadata()
-            base_version = _version_of(table._metadata_path())
-            if df_schema is not None:
-                cur = table._current_schema(md)
-                evolved = _evolve_schema(cur, df_schema)
-                if evolved is not cur:
-                    ice_schema = evolved
-                    schema_patch = evolved
-                else:
-                    ice_schema = cur
-        else:
-            base_version = 0
-            md = {
-                "format-version": 2,
-                "table-uuid": str(uuid.uuid4()),
-                "location": path,
-                "last-sequence-number": 0,
-                "last-column-id": _last_column_id(ice_schema),
-                "schemas": [ice_schema],
-                "current-schema-id": 0,
-                "partition-specs": [{
-                    "spec-id": 0,
-                    "fields": [] if part is None else [{
-                        "name": part.name,
-                        "transform": part.transform,
-                        "source-id": next(
-                            f["id"] for f in ice_schema["fields"]
-                            if f["name"] == part.source),
-                        "field-id": 1000,
-                    }]}],
-                "default-spec-id": 0,
-                "snapshots": [],
-                "current-snapshot-id": -1,
-            }
-        with suppress(IcebergConcurrentCommit):
-            _commit_append(table, md, data_files, base_version,
-                           part, schema_patch=schema_patch,
-                           extra_summary=extra_summary)
-            return
+    return os.path.isdir(mdir) and any(
+        n.endswith(".metadata.json") for n in os.listdir(mdir))
+
+
+def _new_metadata(path: str, ice_schema: dict,
+                  part: "_PartField | None") -> dict:
+    """The snapshot-less metadata an append that creates the table
+    commits on top of, with ``part`` as the default spec."""
+    return {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": path,
+        "last-sequence-number": 0,
+        "last-column-id": _last_column_id(ice_schema),
+        "schemas": [ice_schema],
+        "current-schema-id": 0,
+        "partition-specs": [{
+            "spec-id": 0,
+            "fields": [] if part is None else [{
+                "name": part.name,
+                "transform": part.transform,
+                "source-id": next(
+                    f["id"] for f in ice_schema["fields"]
+                    if f["name"] == part.source),
+                "field-id": 1000,
+            }]}],
+        "default-spec-id": 0,
+        "snapshots": [],
+        "current-snapshot-id": -1,
+    }
+
+
+def _commit(table: IcebergTable, operation: str, *,
+            data: list[dict] = (),
+            deletes: list[dict] | None = None,
+            part: "_PartField | None" = None,
+            rewritten: "bool | set[str]" = False,
+            summary: dict | None = None,
+            conflict=None,
+            create: dict | None = None,
+            evolve: T.StructType | None = None) -> int:
+    """Commit ONE snapshot adding the staged ``data`` files (and, for
+    row-level DML, the staged ``deletes``; an empty list still reports
+    delete counts in the summary) and return its id.  Every Iceberg
+    writer commits here.  Staged files are immutable and uniquely
+    named, so a retry never rewrites them.  Each attempt:
+
+    1. re-reads the metadata (:func:`_read_base`).  Only an append
+       passes ``create`` (its table schema), which gives a missing
+       table its first metadata;
+    2. runs the operation's conflict rule: ``conflict(md)`` raises
+       :class:`IcebergConcurrentCommit` when the staged work is stale,
+       and a ``merge_schema`` append re-derives its evolved schema
+       from ``evolve`` (the batch schema) against the schema just
+       read, since a racer may have evolved the table first;
+    3. writes a data manifest (unless the commit adds only deletes)
+       and a delete manifest (when ``deletes``), whose entries inherit
+       the new sequence number (:func:`_write_manifest`);
+    4. carries the current snapshot's manifests (:func:`_carried`);
+    5. publishes the snapshot with its parent id and summary
+       (``operation``, the added counts, then ``summary``) by CAS.  A
+       lost race removes the files this attempt wrote.
+
+    A refused or exhausted commit removes the staged files too:
+    nothing references them."""
+    mdir = os.path.join(table.path, "metadata")
+    written: list[str] = []
+
+    def write(name: str, schema: dict, records: list) -> str:
+        path = os.path.join(mdir, name)
+        with open(path, "wb") as fh:
+            fh.write(_avro_file(schema, records))
+        written.append(path)
+        return path
+
+    try:
+        for _ in commit_attempts(table.path, IcebergConcurrentCommit):
+            patch = None
+            if create is not None and not _has_metadata(table.path):
+                base_version = 0
+                md = _new_metadata(table.path, create, part)
+            else:
+                base_version, md = _read_base(table)
+                if conflict is not None:
+                    conflict(md)
+                if evolve is not None:
+                    cur = table._current_schema(md)
+                    evolved = _evolve_schema(cur, evolve)
+                    patch = None if evolved is cur else evolved
+            seq = md.get("last-sequence-number", 0) + 1
+            snap_id = max([s["snapshot-id"]
+                           for s in md.get("snapshots", [])],
+                          default=0) + 1
+            tag = uuid.uuid4().hex
+            written.clear()
+            manifests = []
+            if data or not deletes:
+                manifests.append(_write_manifest(
+                    write, f"m-{tag}.avro", 0, data, part, snap_id, seq))
+            if deletes:
+                manifests.append(_write_manifest(
+                    write, f"dm-{tag}.avro", 1, deletes, None, snap_id,
+                    seq))
+            manifests += _carried(table, md, rewritten, write,
+                                  f"m-{tag}", len(manifests))
+            mlist = write(f"snap-{snap_id}-{tag}.avro",
+                          _MANIFEST_FILE_SCHEMA, manifests)
+
+            now_ms = int(time.time() * 1000)
+            new_md = dict(md)
+            new_md["last-sequence-number"] = seq
+            new_md["last-updated-ms"] = now_ms
+            if patch is not None:
+                sid = max([s.get("schema-id", 0)
+                           for s in md.get("schemas", [])], default=0) + 1
+                new_md["schemas"] = md.get("schemas", []) + [
+                    dict(patch, **{"schema-id": sid})]
+                new_md["current-schema-id"] = sid
+                new_md["last-column-id"] = _last_column_id(patch)
+            # summary metric values are STRINGS per the spec
+            counts = {"operation": operation,
+                      "added-data-files": str(len(data)),
+                      "added-records": str(sum(f["record_count"]
+                                               for f in data))}
+            if deletes is not None:
+                counts["added-delete-files"] = str(len(deletes))
+                for content, key in ((1, "added-position-deletes"),
+                                     (2, "added-equality-deletes")):
+                    counts[key] = str(sum(f["record_count"]
+                                          for f in deletes
+                                          if f["content"] == content))
+            snap = {"snapshot-id": snap_id, "sequence-number": seq,
+                    "timestamp-ms": now_ms, "manifest-list": mlist,
+                    "summary": {**counts, **(summary or {})}}
+            if md.get("current-snapshot-id") not in (None, -1):
+                # ancestry chain: incremental scans walk parent ids
+                snap["parent-snapshot-id"] = md["current-snapshot-id"]
+            new_md["snapshots"] = md.get("snapshots", []) + [snap]
+            new_md["current-snapshot-id"] = snap_id
+            try:
+                _cas_metadata(table, new_md, base_version)
+                return snap_id
+            except IcebergConcurrentCommit:
+                remove_files(written)
+    except IcebergConcurrentCommit:
+        remove_files(f["file_path"] for f in [*data, *(deletes or ())])
+        raise
+
+
+def _write_manifest(write, name: str, content: int, files: list[dict],
+                    part: "_PartField | None", snap_id: int,
+                    seq: int) -> dict:
+    """Write ``files`` as one manifest (``content`` 0 = data, 1 =
+    deletes) whose entries inherit ``seq``, and return its
+    manifest-list entry.  A partitioned data manifest records each
+    file's partition value and one partition summary, the bounds the
+    reader's manifest-level pruning reads."""
+    schema, summaries = _MANIFEST_ENTRY_SCHEMA, None
+    if part is not None and files:
+        schema = _partitioned_entry_schema(part)
+        enc = part.bound_encoder()
+        vals = [f["partition"][part.name] for f in files]
+        summaries = [{"contains_null": False,
+                      "lower_bound": enc(min(vals)),
+                      "upper_bound": enc(max(vals))}]
+    path = write(name, schema, [
+        {"status": 1, "snapshot_id": snap_id,
+         "sequence_number": None,  # inherited = commit seq
+         "data_file": f} for f in files])
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": 0,
+        "content": content,
+        "sequence_number": seq,
+        "added_snapshot_id": snap_id,
+        "added_files_count": len(files),
+        "added_rows_count": sum(f["record_count"] for f in files),
+        "partitions": summaries,
+    }
+
+
+def _carried(table: IcebergTable, md: dict, rewritten: "bool | set[str]",
+             write, stem: str, first: int) -> list[dict]:
+    """The current snapshot's manifest-list entries a commit keeps
+    (:data:`_MANIFEST_CARRY_KEYS`): all of them (``rewritten=False``),
+    none (``True``), or, for a set of rewritten data-file paths, every
+    delete manifest verbatim and every data manifest minus those
+    files.  A data manifest that loses entries is rewritten as
+    ``<stem>-<n>.avro`` (``n`` counts from ``first``) with its OWN
+    Avro schema, so foreign column stats survive; its survivors turn
+    EXISTING with explicit sequence numbers, so ordering survives the
+    move.  One that loses every entry drops out."""
+    snap = table._snapshot(md, None)
+    if rewritten is True or not snap.get("manifest-list"):
+        return []
+    with open(_localize(snap["manifest-list"]), "rb") as fh:
+        _, listed = avro_read(fh.read())
+    out = []
+    for m in listed:
+        keep = {k: m.get(k) for k in _MANIFEST_CARRY_KEYS}
+        if rewritten and m.get("content", 0) != 1:
+            with open(_localize(m["manifest_path"]), "rb") as fh:
+                meta, recs = avro_read(fh.read())
+            live = [r for r in recs if r.get("status") != 2]
+            survivors = [dict(r, status=0)  # EXISTING
+                         for r in live
+                         if r["data_file"]["file_path"] not in rewritten]
+            if len(survivors) < len(live):
+                if not survivors:
+                    continue
+                for r in survivors:
+                    for k in ("sequence_number", "file_sequence_number"):
+                        if r.get(k) is None:
+                            r[k] = m.get("sequence_number")
+                keep["manifest_path"] = write(
+                    f"{stem}-{first + len(out)}.avro",
+                    json.loads(meta["avro.schema"]), survivors)
+                keep["manifest_length"] = os.path.getsize(
+                    keep["manifest_path"])
+                keep["added_files_count"] = 0
+                keep["added_rows_count"] = 0
+                # the old partition summaries stay conservative:
+                # dropping entries can only narrow the true bounds
+        out.append(keep)
+    return out
 
 
 def _last_column_id(ice_schema: dict) -> int:
@@ -882,6 +1044,16 @@ def _last_column_id(ice_schema: dict) -> int:
 
     nested = [i for f in ice_schema["fields"] for i in walk(f["type"])]
     return max(top + nested)
+
+
+def _read_base(table: IcebergTable) -> tuple[int, dict]:
+    """The current metadata version and the metadata a commit builds
+    on, the version read first: a racer landing between the two reads
+    then makes the CAS above that version lose, where the other order
+    would pair the racer's version with stale metadata and drop the
+    racer's snapshot."""
+    base_version = _version_of(table._metadata_path())
+    return base_version, table.metadata()
 
 
 def _version_of(metadata_path: str) -> int:
@@ -907,119 +1079,12 @@ def _partitioned_entry_schema(part: "_PartField") -> dict:
     return schema
 
 
-def _commit_append(table: IcebergTable, md: dict,
-                   data_files: list[dict],
-                   base_version: int,
-                   part_info: "_PartField | None" = None,
-                   carry: bool = True,
-                   operation: str = "append",
-                   schema_patch: dict | None = None,
-                   extra_summary: dict | None = None) -> None:
-    """Commit one snapshot on top of ``md``, which was read from
-    metadata version ``base_version``.  ``carry=True`` is a fast
-    append (the previous snapshot's manifests carry over unchanged);
-    ``carry=False`` with ``operation="replace"`` makes the new
-    manifest the ONLY one — the compaction commit shape.
-    ``schema_patch`` (merge-schema appends) publishes an evolved
-    schema alongside the snapshot: appended to ``schemas`` under a
-    bumped schema-id, made current, last-column-id raised."""
-    path, mdir = table.path, os.path.join(table.path, "metadata")
-    seq = md.get("last-sequence-number", 0) + 1
-    snap_id = max([s["snapshot-id"] for s in md.get("snapshots", [])],
-                  default=0) + 1
-    commit_uuid = uuid.uuid4().hex
-
-    manifest = os.path.join(mdir, f"m-{commit_uuid}.avro")
-    entries = [{"status": 1, "snapshot_id": snap_id,
-                "sequence_number": None,  # inherited = commit seq
-                "data_file": f} for f in data_files]
-    if part_info is None or not data_files:
-        entry_schema = _MANIFEST_ENTRY_SCHEMA
-        summaries = None
-    else:
-        entry_schema = _partitioned_entry_schema(part_info)
-        # manifest-list partition summary (one field): the reader's
-        # manifest-level pruning consumes these bounds
-        enc = part_info.bound_encoder()
-        vals = [f["partition"][part_info.name] for f in data_files]
-        summaries = [{"contains_null": False,
-                      "lower_bound": enc(min(vals)),
-                      "upper_bound": enc(max(vals))}]
-    with open(manifest, "wb") as fh:
-        fh.write(_avro_file(entry_schema, entries))
-
-    # fast append: previous snapshot's manifests carry over unchanged
-    prev_manifests: list[dict] = []
-    cur = md.get("current-snapshot-id", -1)
-    if carry:
-        for s in md.get("snapshots", []):
-            if s.get("snapshot-id") == cur and "manifest-list" in s:
-                with open(_localize(s["manifest-list"]), "rb") as fh:
-                    _, prev_manifests = avro_read(fh.read())
-                break
-    new_entry = {
-        "manifest_path": manifest,
-        "manifest_length": os.path.getsize(manifest),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq,
-        "added_snapshot_id": snap_id,
-        "added_files_count": len(data_files),
-        "added_rows_count": sum(f["record_count"]
-                                for f in data_files),
-        "partitions": summaries,
-    }
-    carried = [{k: m.get(k) for k in _MANIFEST_CARRY_KEYS}
-               for m in prev_manifests]
-    mlist = os.path.join(mdir, f"snap-{snap_id}-{commit_uuid}.avro")
-    with open(mlist, "wb") as fh:
-        fh.write(_avro_file(_MANIFEST_FILE_SCHEMA,
-                            [new_entry] + carried))
-
-    now_ms = int(time.time() * 1000)
-    new_md = dict(md)
-    new_md["last-sequence-number"] = seq
-    new_md["last-updated-ms"] = now_ms
-    if schema_patch is not None:
-        new_sid = max([s.get("schema-id", 0)
-                       for s in md.get("schemas", [])], default=0) + 1
-        patched = dict(schema_patch)
-        patched["schema-id"] = new_sid
-        new_md["schemas"] = md.get("schemas", []) + [patched]
-        new_md["current-schema-id"] = new_sid
-        new_md["last-column-id"] = _last_column_id(patched)
-    snap: dict = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist,
-        # summary metric values are STRINGS per the spec
-        "summary": {
-            "operation": operation,
-            "added-data-files": str(len(data_files)),
-            "added-records": str(sum(f["record_count"]
-                                     for f in data_files)),
-            **(extra_summary or {}),
-        },
-    }
-    prev_cur = md.get("current-snapshot-id")
-    if prev_cur not in (None, -1):
-        # ancestry chain: incremental scans walk parent ids
-        snap["parent-snapshot-id"] = prev_cur
-    new_md["snapshots"] = md.get("snapshots", []) + [snap]
-    new_md["current-snapshot-id"] = snap_id
-    _cas_metadata(table, new_md, base_version,
-                  cleanup=(manifest, mlist))
-
-
 def _cas_metadata(table: IcebergTable, new_md: dict,
-                  base_version: int,
-                  cleanup: tuple[str, ...] = ()) -> None:
+                  base_version: int) -> None:
     """Commit ``new_md`` as ``v<base_version+1>.metadata.json`` via
     :func:`.commit.publish_if_absent` (two racers can never both win
-    the version) and refresh ``version-hint.text``.  On a lost race the
-    freshly-written ``cleanup`` files are removed and
-    :class:`IcebergConcurrentCommit` raises.  The CAS target is
+    the version) and refresh ``version-hint.text``.  A lost race
+    raises :class:`IcebergConcurrentCommit`.  The CAS target is
     ALWAYS base_version + 1: deriving it from the directory at commit
     time would let a writer holding stale metadata commit a higher
     version that silently drops a racer's snapshot."""
@@ -1028,11 +1093,6 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
     if not publish_if_absent(
             os.path.join(mdir, f"v{next_v}.metadata.json"),
             json.dumps(new_md)):
-        for p in cleanup:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
         raise IcebergConcurrentCommit(
             f"concurrent Iceberg commit at version {next_v}")
     replace_atomic(os.path.join(mdir, "version-hint.text"), str(next_v))
@@ -1049,10 +1109,11 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
 #                           file_path form (spec readers match
 #                           strings, not normalized URIs)
 #   _stage_position_deletes sorted position-delete parquet parts
-#   _commit_row_dml         ONE snapshot carrying a content=1
-#                           delete manifest and/or a content=0 data
-#                           manifest plus the carried-over previous
-#                           manifests, CAS-committed
+#   _deletes_still_apply    the conflict rule :func:`_commit` runs
+#                           before each attempt; the commit itself
+#                           is the one every writer makes: a content=0
+#                           data manifest and/or a content=1 delete
+#                           manifest plus every previous manifest
 
 
 def _validate_preds(ice_schema: dict, preds) -> None:
@@ -1152,9 +1213,9 @@ def _stage_position_deletes(spark: SparkSession, path: str,
             hits.sortWithinPartitions("file_path", "pos"), path, "del"):
         # the distinct data files this delete file addresses (one
         # dictionary-encoded column read per staged part, driver-side
-        # but bounded by the DML's own output) — _retry_row_dml
-        # validates them against the refreshed snapshot before any
-        # retry commit so a concurrent compact/overwrite can't
+        # but bounded by the DML's own output) — _deletes_still_apply
+        # validates them against the refreshed snapshot before every
+        # commit attempt so a concurrent compact/overwrite can't
         # silently resurrect the deleted rows
         refs = (pq.read_table(final, columns=["file_path"])
                 .column("file_path").unique().to_pylist())
@@ -1214,162 +1275,30 @@ def _bound_entries(data_files: list[dict], ice_schema: dict) -> None:
         f["upper_bounds"] = hi or None
 
 
-def _commit_row_dml(table: IcebergTable, md: dict,
-                    data_entries: list[dict],
-                    del_entries: list[dict],
-                    part_info: "_PartField | None",
-                    base_version: int,
-                    operation: str = "overwrite") -> int:
-    """Commit ONE snapshot carrying any mix of a content=0 data
-    manifest (rewritten/inserted rows, with partition summaries when
-    partitioned) and a content=1 delete manifest (position deletes),
-    plus the previous snapshot's manifests carried over unchanged.
-    Both new manifests inherit the commit's sequence number, so the
-    position deletes apply to every OLDER file (and address the old
-    files by path — the new data files are untouched by
-    construction).  Returns the committed snapshot id."""
-    mdir = os.path.join(table.path, "metadata")
-    seq = md.get("last-sequence-number", 0) + 1
-    snap_id = max([s["snapshot-id"] for s in md.get("snapshots", [])],
-                  default=0) + 1
-    commit_uuid = uuid.uuid4().hex
-    new_manifests: list[dict] = []
-    written: list[str] = []
-
-    if data_entries:
-        manifest = os.path.join(mdir, f"m-{commit_uuid}.avro")
-        entries = [{"status": 1, "snapshot_id": snap_id,
-                    "sequence_number": None,  # inherited = commit seq
-                    "data_file": f} for f in data_entries]
-        if part_info is None:
-            entry_schema = _MANIFEST_ENTRY_SCHEMA
-            summaries = None
-        else:
-            entry_schema = _partitioned_entry_schema(part_info)
-            enc = part_info.bound_encoder()
-            vals = [f["partition"][part_info.name]
-                    for f in data_entries]
-            summaries = [{"contains_null": False,
-                          "lower_bound": enc(min(vals)),
-                          "upper_bound": enc(max(vals))}]
-        with open(manifest, "wb") as fh:
-            fh.write(_avro_file(entry_schema, entries))
-        new_manifests.append({
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(data_entries),
-            "added_rows_count": sum(f["record_count"]
-                                    for f in data_entries),
-            "partitions": summaries,
-        })
-        written.append(manifest)
-
-    if del_entries:
-        dmanifest = os.path.join(mdir, f"dm-{commit_uuid}.avro")
-        entries = [{"status": 1, "snapshot_id": snap_id,
-                    "sequence_number": None,
-                    "data_file": f} for f in del_entries]
-        with open(dmanifest, "wb") as fh:
-            fh.write(_avro_file(_MANIFEST_ENTRY_SCHEMA, entries))
-        new_manifests.append({
-            "manifest_path": dmanifest,
-            "manifest_length": os.path.getsize(dmanifest),
-            "partition_spec_id": 0,
-            "content": 1,
-            "sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(del_entries),
-            "added_rows_count": sum(f["record_count"]
-                                    for f in del_entries),
-            "partitions": None,
-        })
-        written.append(dmanifest)
-
-    prev_manifests: list[dict] = []
-    cur = md.get("current-snapshot-id", -1)
-    for s in md.get("snapshots", []):
-        if s.get("snapshot-id") == cur and "manifest-list" in s:
-            with open(_localize(s["manifest-list"]), "rb") as fh:
-                _, prev_manifests = avro_read(fh.read())
-            break
-    carried = [{k: m.get(k) for k in _MANIFEST_CARRY_KEYS}
-               for m in prev_manifests]
-    mlist = os.path.join(mdir, f"snap-{snap_id}-{commit_uuid}.avro")
-    with open(mlist, "wb") as fh:
-        fh.write(_avro_file(_MANIFEST_FILE_SCHEMA,
-                            new_manifests + carried))
-
-    now_ms = int(time.time() * 1000)
-    new_md = dict(md)
-    new_md["last-sequence-number"] = seq
-    new_md["last-updated-ms"] = now_ms
-    snap: dict = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist,
-        # summary metric values are STRINGS per the spec
-        "summary": {
-            "operation": operation,
-            "added-data-files": str(len(data_entries)),
-            "added-records": str(sum(f["record_count"]
-                                     for f in data_entries)),
-            "added-delete-files": str(len(del_entries)),
-            "added-position-deletes": str(sum(
-                f["record_count"] for f in del_entries)),
-        },
-    }
-    prev_cur = md.get("current-snapshot-id")
-    if prev_cur not in (None, -1):
-        snap["parent-snapshot-id"] = prev_cur
-    new_md["snapshots"] = md.get("snapshots", []) + [snap]
-    new_md["current-snapshot-id"] = snap_id
-    _cas_metadata(table, new_md, base_version,
-                  cleanup=tuple(written) + (mlist,))
-    return snap_id
-
-
-def _retry_row_dml(table: IcebergTable, data_entries: list[dict],
-                   del_entries: list[dict],
-                   part_info: "_PartField | None",
-                   operation: str, verb: str,
-                   referenced_paths: "set[str] | None" = None) -> int:
-    """The optimistic-concurrency tail every DML verb shares: re-read
-    metadata, CAS at base_version+1, retry on a lost race with the
-    already-staged files (immutable and uniquely named — a retry
-    never rewrites them).
-
-    Before EVERY commit attempt (first included — the CAS re-reads
-    metadata, so a race that landed between the DML's scan and its
-    first commit would otherwise succeed) the data files addressed by
-    the staged position deletes (``referenced_paths``) are validated
-    against the refreshed snapshot's live file set — a concurrent
-    ``compact_iceberg``/overwrite replaces those files, and blindly
+def _deletes_still_apply(table: IcebergTable, referenced: set[str],
+                         verb: str):
+    """Row-level DML's conflict rule, run before EVERY commit attempt
+    (the first included: a race that landed between the DML's scan
+    and its first commit counts too): the data files the staged
+    position deletes address (``referenced``) must still be live.  A
+    concurrent ``compact_iceberg``/overwrite replaces them, and
     committing the stale deletes would silently resurrect the
-    deleted/updated rows (the compaction itself checks snapshot-id
-    the same way)."""
-    for _ in commit_attempts(table.path, IcebergConcurrentCommit):
-        md = table.metadata()
-        if referenced_paths:
-            cur_files, _ = table._data_files(table._snapshot(md, None))
-            gone = referenced_paths - {f["file_path"]
-                                       for f in cur_files}
-            if gone:
-                raise IcebergConcurrentCommit(
-                    f"iceberg {verb}: a concurrent commit rewrote "
-                    f"{len(gone)} data file(s) this DML's position "
-                    f"deletes address (e.g. {sorted(gone)[0]!r}) — "
-                    f"the staged deletes are stale; rerun the DML "
-                    f"against the new snapshot")
-        base_version = _version_of(table._metadata_path())
-        with suppress(IcebergConcurrentCommit):
-            return _commit_row_dml(table, md, data_entries,
-                                   del_entries, part_info,
-                                   base_version, operation)
+    deleted or updated rows.  None when no position delete addresses
+    a file."""
+    if not referenced:
+        return None
+
+    def rule(md: dict) -> None:
+        cur_files, _ = table._data_files(table._snapshot(md, None))
+        gone = referenced - {f["file_path"] for f in cur_files}
+        if gone:
+            raise IcebergConcurrentCommit(
+                f"iceberg {verb}: a concurrent commit rewrote "
+                f"{len(gone)} data file(s) this DML's position "
+                f"deletes address (e.g. {sorted(gone)[0]!r}) — "
+                f"the staged deletes are stale; rerun the DML "
+                f"against the new snapshot")
+    return rule
 
 
 def delete_iceberg(spark: SparkSession, path: str,
@@ -1426,8 +1355,8 @@ def delete_iceberg(spark: SparkSession, path: str,
         spark, path, _position_hits(spark, live, files))
     if not del_entries:
         return 0
-    _retry_row_dml(table, [], del_entries, None, "delete", "delete",
-                   referenced_paths=refd)
+    _commit(table, "delete", deletes=del_entries,
+            conflict=_deletes_still_apply(table, refd, "delete"))
     return n_deleted
 
 
@@ -1488,8 +1417,7 @@ def equality_delete_iceberg(spark: SparkSession, path: str,
         })
     if not del_entries:
         raise ValueError("iceberg equality delete: empty key set")
-    return _retry_row_dml(table, [], del_entries, None, "delete",
-                          "equality-delete")
+    return _commit(table, "delete", deletes=del_entries)
 
 
 def update_iceberg(spark: SparkSession, path: str, set: dict,
@@ -1535,9 +1463,9 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
         raise
     finally:
         matched.unpersist()
-    _retry_row_dml(table, data_entries, del_entries, part_info,
-                   "overwrite", "update",
-                   referenced_paths=refd)
+    _commit(table, "overwrite", data=data_entries, deletes=del_entries,
+            part=part_info,
+            conflict=_deletes_still_apply(table, refd, "update"))
     return n
 
 
@@ -1587,10 +1515,10 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
         raise
     if not del_entries and not data_entries:
         return None
-    operation = "append" if not del_entries else "overwrite"
-    return _retry_row_dml(table, data_entries, del_entries,
-                          part_info, operation, "merge",
-                          referenced_paths=refd)
+    return _commit(table, "overwrite" if del_entries else "append",
+                   data=data_entries, deletes=del_entries,
+                   part=part_info,
+                   conflict=_deletes_still_apply(table, refd, "merge"))
 
 
 # ------------------------------------------------------- maintenance
@@ -1650,7 +1578,7 @@ def compact_iceberg(spark: SparkSession, path: str,
     if incremental and not zorder_by:
         raise ValueError(
             "compact_iceberg: incremental=True needs zorder_by")
-    rewritten: set[str] | None = None
+    rewritten: bool | set[str] = True
     if zorder_by:
         import math
 
@@ -1665,14 +1593,12 @@ def compact_iceberg(spark: SparkSession, path: str,
             zorder_proxy_sql(c, type_of[c])  # fail fast on types
         target = data_files
         if incremental:
-            z = _last_zorder_snapshot(md, zorder_by)
-            if z is not None:
-                zseq = z.get("sequence-number") or 0
-                target = [f for f in data_files
-                          if (f.get("_seq") or 0) > zseq]
-                if not target:
+            debt = _unclustered(md, data_files, zorder_by)
+            if debt is not None:
+                if not debt:
                     return None
-                rewritten = {f["file_path"] for f in target}
+                target = debt
+                rewritten = {f["file_path"] for f in debt}
         # per-partition clustering (the Delta optimize shape): each
         # partition value clusters and quantile-bins as its OWN
         # group — its files cover narrow hyper-rectangles within the
@@ -1690,7 +1616,7 @@ def compact_iceberg(spark: SparkSession, path: str,
             groups = [target]
         staged = []
         for fs in groups:
-            if rewritten is not None or part_info is not None:
+            if rewritten is not True or part_info is not None:
                 df = table._scan_planned(spark, fs, delete_files,
                                          md, [])
             else:
@@ -1705,177 +1631,48 @@ def compact_iceberg(spark: SparkSession, path: str,
         df = table.read(spark)
         staged = _stage_data_files(df, path, part_info, ice_schema)
     _bound_entries(staged, ice_schema)
-    for _ in commit_attempts(path, IcebergConcurrentCommit):
-        cur_md = table.metadata()
-        cur = table._snapshot(cur_md, None)
-        if cur.get("snapshot-id") != snap.get("snapshot-id"):
+    return _commit(
+        table, "replace", data=staged, part=part_info, rewritten=rewritten,
+        summary={"zorder-by": json.dumps(zorder_by)} if zorder_by else None,
+        conflict=_unchanged_since(snap["snapshot-id"]))
+
+
+def _unchanged_since(snapshot_id: int):
+    """Compaction's conflict rule: refuse once the table advanced past
+    the snapshot the rewrite scanned (a blind replace would drop the
+    racer's rows)."""
+    def rule(md: dict) -> None:
+        if md.get("current-snapshot-id") != snapshot_id:
             raise IcebergConcurrentCommit(
                 "iceberg compact: the table advanced since the "
                 "compaction scanned it — rerun compact_iceberg")
-        base_version = _version_of(table._metadata_path())
-        with suppress(IcebergConcurrentCommit):
-            if rewritten is not None:
-                _commit_zorder_incremental(table, cur_md, staged,
-                                           base_version, rewritten,
-                                           zorder_by, part_info)
-            else:
-                _commit_append(
-                    table, cur_md, staged, base_version,
-                    part_info, carry=False, operation="replace",
-                    extra_summary=(
-                        {"zorder-by": json.dumps(zorder_by)}
-                        if zorder_by else None))
-            return table._snapshot(table.metadata(),
-                                   None).get("snapshot-id")
+    return rule
 
 
-def _last_zorder_snapshot(md: dict, zorder_by: list[str]) -> dict | None:
-    """Walk the CURRENT ancestry newest-first for the latest snapshot
-    whose summary records the SAME zorder-by column list.  The walk
-    stops at any intervening plain ``replace`` snapshot (a later
+def _unclustered(md: dict, data_files: list[dict],
+                 zorder_by: list[str]) -> list[dict] | None:
+    """The Z-order debt: the live ``data_files`` whose sequence number
+    postdates the latest snapshot in the CURRENT ancestry whose
+    summary records the SAME zorder-by column list (the marker both
+    Z-order paths write).  None when no marker survives: the walk
+    stops at an intervening plain ``replace`` snapshot (an
     un-clustered compaction rewrote the files and invalidated the
-    clustering); appends/deletes/DML don't invalidate — their new
-    files carry higher sequence numbers and become candidates."""
+    clustering), so every file is debt and a rewrite must be full.
+    Appends, deletes and DML don't invalidate: their new files carry
+    higher sequence numbers and become debt."""
     want = json.dumps(zorder_by)
     snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    ordered = [s["snapshot-id"] for s in md.get("snapshots") or []]
+    ordered = list(snaps)
     cur = snaps.get(md.get("current-snapshot-id"))
     while cur is not None:
         summ = cur.get("summary") or {}
         if summ.get("zorder-by") == want:
-            return cur
+            zseq = cur.get("sequence-number") or 0
+            return [f for f in data_files if (f.get("_seq") or 0) > zseq]
         if summ.get("operation") == "replace":
             return None
-        parent = cur.get("parent-snapshot-id")
-        if parent is None:
-            i = ordered.index(cur["snapshot-id"])
-            parent = ordered[i - 1] if i > 0 else None
-        cur = snaps.get(parent) if parent is not None else None
+        cur = snaps.get(_parent_id(cur, ordered))
     return None
-
-
-def _commit_zorder_incremental(table: IcebergTable, md: dict,
-                               staged: list[dict],
-                               base_version: int,
-                               rewritten: set[str],
-                               zorder_by: list[str],
-                               part_info: "_PartField | None" = None
-                               ) -> None:
-    """One REPLACE snapshot for an incremental clustering pass: the
-    new clustered manifest, every old DATA manifest rewritten to drop
-    the absorbed entries (SCHEMA-PRESERVING — the old manifest's own
-    Avro schema re-encodes the survivors, so foreign column stats are
-    never lost — with EXPLICIT per-entry sequence numbers so ordering
-    survives the move), untouched data manifests and all DELETE
-    manifests carried verbatim."""
-
-    mdir = os.path.join(table.path, "metadata")
-    snap_cur = table._snapshot(md, None)
-    with open(_localize(snap_cur["manifest-list"]), "rb") as fh:
-        _, lentries = avro_read(fh.read())
-    seq = md.get("last-sequence-number", 0) + 1
-    snap_id = max([s["snapshot-id"]
-                   for s in md.get("snapshots", [])], default=0) + 1
-    commit_uuid = uuid.uuid4().hex
-    cleanup: list[str] = []
-
-    if part_info is None or not staged:
-        entry_schema = _MANIFEST_ENTRY_SCHEMA
-        summaries = None
-    else:
-        entry_schema = _partitioned_entry_schema(part_info)
-        enc = part_info.bound_encoder()
-        vals = [f["partition"][part_info.name] for f in staged]
-        summaries = [{"contains_null": False,
-                      "lower_bound": enc(min(vals)),
-                      "upper_bound": enc(max(vals))}]
-    manifest = os.path.join(mdir, f"m-{commit_uuid}.avro")
-    with open(manifest, "wb") as fh:
-        fh.write(_avro_file(entry_schema,
-                            [{"status": 1, "snapshot_id": snap_id,
-                              "sequence_number": None,
-                              "data_file": f} for f in staged]))
-    cleanup.append(manifest)
-    out = [{
-        "manifest_path": manifest,
-        "manifest_length": os.path.getsize(manifest),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq,
-        "added_snapshot_id": snap_id,
-        "added_files_count": len(staged),
-        "added_rows_count": sum(f["record_count"] for f in staged),
-        "partitions": summaries,
-    }]
-    for m in lentries:
-        carry = {k: m.get(k) for k in _MANIFEST_CARRY_KEYS}
-        if m.get("content", 0) == 1:   # delete manifest: verbatim
-            out.append(carry)
-            continue
-        mseq = m.get("sequence_number")
-        with open(_localize(m["manifest_path"]), "rb") as fh:
-            mschema, recs = avro_read(fh.read())
-        live = [r for r in recs if r.get("status") != 2]
-        hit = [r for r in live
-               if r["data_file"]["file_path"] in rewritten]
-        if not hit:
-            out.append(carry)
-            continue
-        survivors = []
-        for r in live:
-            if r["data_file"]["file_path"] in rewritten:
-                continue
-            r = dict(r)
-            r["status"] = 0  # EXISTING
-            if r.get("sequence_number") is None:
-                r["sequence_number"] = mseq
-            if r.get("file_sequence_number") is None:
-                r["file_sequence_number"] = mseq
-            survivors.append(r)
-        if not survivors:
-            continue  # manifest fully absorbed by the rewrite
-        new_m = os.path.join(
-            mdir, f"m-{commit_uuid}-{len(out)}.avro")
-        with open(new_m, "wb") as fh:
-            fh.write(_avro_file(mschema, survivors))
-        cleanup.append(new_m)
-        carry["manifest_path"] = new_m
-        carry["manifest_length"] = os.path.getsize(new_m)
-        carry["added_files_count"] = 0
-        carry["added_rows_count"] = 0
-        # partition summaries copied from the old entry stay
-        # conservative: dropping entries can only NARROW true bounds
-        out.append(carry)
-
-    mlist = os.path.join(mdir, f"snap-{snap_id}-{commit_uuid}.avro")
-    with open(mlist, "wb") as fh:
-        fh.write(_avro_file(_MANIFEST_FILE_SCHEMA, out))
-    cleanup.append(mlist)
-
-    now_ms = int(time.time() * 1000)
-    new_md = dict(md)
-    new_md["last-sequence-number"] = seq
-    new_md["last-updated-ms"] = now_ms
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist,
-        "summary": {
-            "operation": "replace",
-            "zorder-by": json.dumps(zorder_by),
-            "added-data-files": str(len(staged)),
-            "added-records": str(sum(f["record_count"]
-                                     for f in staged)),
-        },
-    }
-    prev_cur = md.get("current-snapshot-id")
-    if prev_cur not in (None, -1):
-        snap["parent-snapshot-id"] = prev_cur
-    new_md["snapshots"] = md.get("snapshots", []) + [snap]
-    new_md["current-snapshot-id"] = snap_id
-    _cas_metadata(table, new_md, base_version,
-                  cleanup=tuple(cleanup))
 
 
 def compaction_stats(path: str) -> dict:
@@ -1956,13 +1753,9 @@ def maybe_zorder_iceberg(spark: SparkSession, path: str,
     data_files, _ = table._data_files(snap)
     if not data_files:
         return None
-    z = _last_zorder_snapshot(md, zorder_by)
-    if z is None:
+    debt = _unclustered(md, data_files, zorder_by)
+    if debt is None:
         debt = data_files
-    else:
-        zseq = z.get("sequence-number") or 0
-        debt = [f for f in data_files
-                if (f.get("_seq") or 0) > zseq]
     if (len(debt) <= max_unclustered_files
             and sum(int(f.get("file_size_in_bytes") or 0)
                     for f in debt) <= max_unclustered_bytes):
@@ -1984,7 +1777,7 @@ def tag_iceberg(path: str, name: str,
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref_type {ref_type!r} (tag|branch)")
     table = IcebergTable(path)
-    md = table.metadata()
+    base_version, md = _read_base(table)
     if snapshot_id is None:
         snapshot_id = md.get("current-snapshot-id")
         if snapshot_id in (None, -1):
@@ -1997,8 +1790,7 @@ def tag_iceberg(path: str, name: str,
     refs = dict(md.get("refs") or {})
     refs[name] = {"snapshot-id": snapshot_id, "type": ref_type}
     new_md["refs"] = refs
-    _cas_metadata(table, new_md, _version_of(table._metadata_path()),
-                  cleanup=())
+    _cas_metadata(table, new_md, base_version)
     return snapshot_id
 
 
@@ -2006,7 +1798,7 @@ def drop_ref_iceberg(path: str, name: str) -> None:
     """Remove a named snapshot ref (the snapshot itself survives
     until expiry)."""
     table = IcebergTable(path)
-    md = table.metadata()
+    base_version, md = _read_base(table)
     refs = dict(md.get("refs") or {})
     if name not in refs:
         raise ValueError(
@@ -2015,8 +1807,7 @@ def drop_ref_iceberg(path: str, name: str) -> None:
     del refs[name]
     new_md = dict(md)
     new_md["refs"] = refs
-    _cas_metadata(table, new_md, _version_of(table._metadata_path()),
-                  cleanup=())
+    _cas_metadata(table, new_md, base_version)
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
@@ -2033,7 +1824,7 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
         raise ValueError("expire_snapshots: keep_last must be >= 1")
 
     table = IcebergTable(path)
-    md = table.metadata()
+    base_version, md = _read_base(table)
     snaps = md.get("snapshots") or []
     cur = md.get("current-snapshot-id", -1)
     order = sorted(snaps, key=lambda s: (s.get("sequence-number", 0),
@@ -2081,7 +1872,6 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
         new_md["snapshot-log"] = [
             e for e in new_md["snapshot-log"]
             if e.get("snapshot-id") in keep_ids]
-    base_version = _version_of(table._metadata_path())
     _cas_metadata(table, new_md, base_version)
     root = os.path.abspath(path) + os.sep
     deleted: list[str] = []

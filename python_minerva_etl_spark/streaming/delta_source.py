@@ -597,10 +597,9 @@ class _StreamReader(DataSourceStreamReader):
                         "ignoreDeletes (deletes) or ignoreChanges "
                         "(updates; may emit duplicates) to skip")
                 continue  # ignoreDeletes: masked rows just drop
-            if removes:
-                # ignoreChanges: emit the re-added files' live rows
-                # (upstream-documented duplicate emission)
-                pass
+            # with removes, ignoreChanges lands here: the re-added
+            # files' live rows are emitted again (upstream-documented
+            # duplicate emission)
             out += [_FilePartition(self.table_path, a,
                                    self.part_cols, self.cm)
                     for a in adds]

@@ -58,10 +58,11 @@ from pyspark.sql.datasource import (DataSource,
                                     InputPartition,
                                     WriterCommitMessage)
 
-from ..storage.commit import hive_segment, remove_files, write_parts
-from ..storage.iceberg import (_FILE_URI, IcebergTable, _delete_pairs,
-                               _localize, _parent_id, _to_spark_schema,
-                               _touching, _types_by_id, _walk_chain)
+from ..storage.commit import (_FILE_URI, _localize, hive_segment,
+                              remove_files, write_parts)
+from ..storage.iceberg import (IcebergTable, _delete_pairs, _parent_id,
+                               _to_spark_schema, _touching, _types_by_id,
+                               _walk_chain)
 from .admission import admission_state, admit, cap_option
 from .source_api import (_flag, _opt, empty_when_pruned,
                          preds_from_filters, register, require_path)
@@ -636,9 +637,11 @@ class _IceWriter(DataSourceArrowWriter):
     """Append-only batch writer: executors write uniquely-named
     parquet files under ``data/`` (every schema column kept, the
     Iceberg rule) and compute their manifest bounds; the driver
-    CAS-commits one append snapshot from the gathered entries.
-    Overwrite mode refuses — an Iceberg overwrite is a REPLACE
-    snapshot, which `compact_iceberg` models; this writer appends."""
+    commits one append snapshot from the gathered entries through
+    :func:`storage.iceberg_write._commit`, the commit every Iceberg
+    writer makes (the streaming writer adds its batch ledger to the
+    summary).  Overwrite mode refuses: this writer appends, and
+    :func:`storage.iceberg_write.overwrite_iceberg` overwrites."""
 
     def __init__(self, options: dict, schema: T.StructType,
                  overwrite: bool):
@@ -708,12 +711,12 @@ class _IceWriter(DataSourceArrowWriter):
         _bound_entries(entries, self.ice_schema)
         return _IceCommitMessage(entries)
 
-    def commit(self, messages):
-        from ..storage.iceberg_write import _commit_staged
+    def commit(self, messages, summary: dict | None = None):
+        from ..storage.iceberg_write import _commit
 
-        entries = [e for m in messages if m for e in m.entries]
-        _commit_staged(self.path, entries, self.ice_schema,
-                       self.part)
+        _commit(IcebergTable(self.path), "append",
+                data=[e for m in messages if m for e in m.entries],
+                part=self.part, create=self.ice_schema, summary=summary)
 
     def abort(self, messages):
         remove_files(e["file_path"] for m in messages
@@ -748,10 +751,9 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
         return self._batch.write(iterator)
 
     def _max_committed(self) -> int:
-        mdir = os.path.join(self._batch.path, "metadata")
-        if not (os.path.isdir(mdir)
-                and any(n.endswith(".metadata.json")
-                        for n in os.listdir(mdir))):
+        from ..storage.iceberg_write import _has_metadata
+
+        if not _has_metadata(self._batch.path):
             return -1
         md = IcebergTable(self._batch.path).metadata()
         best = -1
@@ -767,18 +769,12 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
         return best
 
     def commit(self, messages, batchId: int):
-        from ..storage.iceberg_write import _commit_staged
-
         if int(batchId) <= self._max_committed():
             self._batch.abort(messages)  # replay: already committed
             return
-        entries = [e for m in messages if m for e in m.entries]
-        _commit_staged(
-            self._batch.path, entries, self._batch.ice_schema,
-            self._batch.part,
-            extra_summary={
-                "minerva-txn-app-id": self.app_id,
-                "minerva-txn-batch-id": str(int(batchId))})
+        self._batch.commit(messages, {
+            "minerva-txn-app-id": self.app_id,
+            "minerva-txn-batch-id": str(int(batchId))})
 
     def abort(self, messages, batchId: int):
         self._batch.abort(messages)

@@ -402,8 +402,9 @@ def test_retry_dml_refuses_when_compaction_rewrote_target_files(
     deleted rows."""
     from python_minerva_etl_spark.storage.iceberg import IcebergTable
     from python_minerva_etl_spark.storage.iceberg_write import (
-        IcebergConcurrentCommit, _live_rows, _position_hits,
-        _retry_row_dml, _stage_position_deletes, compact_iceberg)
+        IcebergConcurrentCommit, _commit, _deletes_still_apply,
+        _live_rows, _position_hits, _stage_position_deletes,
+        compact_iceberg)
 
     p = str(tmp_path / "t")
     _table(spark, p)
@@ -418,8 +419,8 @@ def test_retry_dml_refuses_when_compaction_rewrote_target_files(
     # concurrent compaction replaces every data file
     assert compact_iceberg(spark, p) is not None
     with pytest.raises(IcebergConcurrentCommit, match="rerun the DML"):
-        _retry_row_dml(table, [], del_entries, None, "delete",
-                       "delete", referenced_paths=refd)
+        _commit(table, "delete", deletes=del_entries,
+                conflict=_deletes_still_apply(table, refd, "delete"))
     # nothing was committed: all 11 rows still live
     assert read_iceberg(spark, p).count() == 11
 

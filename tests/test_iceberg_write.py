@@ -14,7 +14,7 @@ from python_minerva_etl_spark.storage.avro_file import avro_read
 from python_minerva_etl_spark.storage.iceberg import (IcebergTable,
                                                       read_iceberg)
 from python_minerva_etl_spark.storage.iceberg_write import (
-    IcebergConcurrentCommit, _commit_append, write_iceberg)
+    IcebergConcurrentCommit, _commit, write_iceberg)
 
 
 def _rows(df):
@@ -128,24 +128,36 @@ def test_written_bounds_prune_files(spark, tmp_path):
     assert got == [(i, "y") for i in range(100, 110)]
 
 
-def test_concurrent_commit_loser_retries(spark, tmp_path):
+def test_concurrent_commit_loser_retries(spark, tmp_path, monkeypatch):
     """A writer that loses the metadata CAS retries against the new
     version and both appends survive."""
+    from python_minerva_etl_spark.storage import commit, iceberg_write
+
     p = str(tmp_path / "t")
     write_iceberg(spark, spark.createDataFrame(
         [(1, "a")], "id long, v string"), p)
     t = IcebergTable(p)
 
-    # simulate: a racer commits version 2 between md read and commit
-    md_before = t.metadata()
+    # simulate: a racer commits version 2 between the loser's read and
+    # its commit, and the loser has one attempt only
     racer = spark.createDataFrame([(2, "b")], "id long, v string")
-    write_iceberg(spark, racer, p)  # now v2 exists
+    version_of = iceberg_write._version_of
+
+    def read_then_race(path):
+        monkeypatch.setattr(iceberg_write, "_version_of", version_of)
+        v = version_of(path)
+        write_iceberg(spark, racer, p)  # now v2 exists
+        return v
+
+    monkeypatch.setattr(iceberg_write, "_version_of", read_then_race)
+    monkeypatch.setattr(commit, "COMMIT_ATTEMPTS", 1)
     with pytest.raises(IcebergConcurrentCommit):
-        _commit_append(t, md_before, [{
+        _commit(t, "append", data=[{
             "content": 0, "file_path": "/nope.parquet",
             "file_format": "PARQUET", "record_count": 1,
             "file_size_in_bytes": 1, "lower_bounds": None,
-            "upper_bounds": None}], base_version=1)
+            "upper_bounds": None}])
+    monkeypatch.undo()
     # the losing racer's manifest/manifest-list litter was cleaned up
     mdir = os.path.join(p, "metadata")
     # write_iceberg's outer retry loop succeeds end-to-end

@@ -1,11 +1,14 @@
-"""One home per rule for the lake formats' change and delete logic:
-the Delta change feed is classified once in ``storage/delta.py`` and
-both of its readers consume that plan, and Iceberg's delete
-assignment, path normalization and snapshot-chain walk live in
-``storage/iceberg.py``."""
+"""One home per rule for the lake formats' change, delete and commit
+logic: the Delta change feed is classified once in
+``storage/delta.py`` and both of its readers consume that plan,
+Iceberg's delete assignment and snapshot-chain walk live in
+``storage/iceberg.py``, every Iceberg snapshot commits through one
+retry loop in ``storage/iceberg_write.py``, and the ``file:`` URI
+rule of every format lives in ``storage/commit.py``."""
 
 from __future__ import annotations
 
+import ast
 import inspect
 import os
 import re
@@ -31,10 +34,24 @@ def _holders(rx: re.Pattern, family: str = "") -> list[str]:
                   and rx.search(text))
 
 
+def _callers(rel: str, name: str) -> set[str]:
+    """The functions in module ``rel`` whose body calls ``name``."""
+    with open(os.path.join(_PKG, rel), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return {fn.name for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and any(isinstance(c, ast.Call)
+                    and getattr(c.func, "id", None) == name
+                    for c in ast.walk(fn))}
+
+
 def test_delta_change_feed_is_planned_once():
-    # commit JSON files are opened by DeltaTable._actions alone
+    # commit JSON files are opened by DeltaTable._actions alone;
+    # DeltaTable._commit publishes them
     assert _holders(re.compile(r"_commit_path|:020d}\.json")) == [
         "storage/delta.py"]
+    assert _callers("storage/delta.py", "_commit_path") == {
+        "_actions", "_commit"}
     assert _holders(re.compile(r"not derivable"), "delta") == [
         "storage/delta.py"]
     assert _holders(re.compile(r"def _change_plan\b")) == [
@@ -48,8 +65,8 @@ def test_delta_change_feed_is_planned_once():
 
 
 def test_iceberg_delete_rules_live_in_storage_iceberg():
-    assert _holders(re.compile(r"\^file:/\+"), "iceberg") == [
-        "storage/iceberg.py"]
+    # one file-URI rule for every format
+    assert _holders(re.compile(r"\^file:/\+")) == ["storage/commit.py"]
     for name in ("_walk_chain", "_parent_id", "_delete_may_touch",
                  "_delete_pairs", "_touching", "_types_by_id"):
         assert _holders(re.compile(rf"def {name}\b")) == [
@@ -85,3 +102,19 @@ def test_delete_assignment_refusals():
     # position deletes need no ordering
     assert _delete_pairs([pos], [dict(data, _seq=None)], schema)[0]
 
+
+def test_iceberg_commits_once():
+    """One retry loop and one manifest-list writer for every Iceberg
+    snapshot: appends, overwrite, row-level DML, both compactions and
+    the registered sinks."""
+    assert _holders(re.compile(r"commit_attempts\("), "iceberg") == [
+        "storage/iceberg_write.py"]
+    with open(os.path.join(_PKG, "storage/iceberg_write.py"),
+              encoding="utf-8") as fh:
+        src = fh.read()
+    assert src.count("commit_attempts(") == 1
+    assert _callers("storage/iceberg_write.py", "commit_attempts") == {
+        "_commit"}
+    assert len(re.findall(r"\b_MANIFEST_FILE_SCHEMA\b", src)) == 2
+    assert _callers("storage/iceberg_write.py", "_avro_file") == {
+        "_commit", "write"}
