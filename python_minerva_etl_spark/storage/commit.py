@@ -3,8 +3,10 @@
 Every write in the three table formats ends the same way: data files
 are staged, then one metadata file names them, published so that two
 racing writers can never both win the same version.  This module holds
-the four mechanisms behind that step.  Each format keeps its own
-metadata encoding, error type and conflict rules.
+the mechanisms behind that step.  Each format keeps its own
+metadata encoding, error type and conflict rules, and runs one retry
+loop for all of its writers: ``SnapTable._commit``,
+``DeltaTable._commit`` and Iceberg's ``iceberg_write._commit``.
 
 1. **Publish** (:func:`publish_if_absent`): write a hidden temp file
    beside the target, then ``os.link`` it into place.  ``link`` fails

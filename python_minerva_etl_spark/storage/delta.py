@@ -24,10 +24,14 @@ for checkpoints), so this engine can:
 - WRITE Delta tables other systems can read — append / overwrite
   commits with correct add/remove actions, schemaString, and periodic
   parquet checkpoints (including remove tombstones, as PROTOCOL.md
-  requires) + ``_last_checkpoint``.  Commit files are published
-  put-if-absent and checkpoints replaced whole; staging, retries and
-  the Hive path codec are shared with SnapTable and Iceberg
-  (:mod:`.commit`).
+  requires) + ``_last_checkpoint``.  Every writer — append and
+  overwrite (also from the registered sinks), row-level DML, RESTORE,
+  table properties, constraints and OPTIMIZE — commits through one
+  loop, :meth:`DeltaTable._commit`: each attempt lists the next
+  version, replays the snapshot before it, runs the operation's rule
+  against that snapshot and publishes the commit file put-if-absent.
+  Checkpoints are replaced whole; staging, retries and the Hive path
+  codec are shared with SnapTable and Iceberg (:mod:`.commit`).
 
 Scope (documented, not hidden): reader supports protocol
 minReaderVersion 1 tables, minReaderVersion 2 tables in every
@@ -487,6 +491,15 @@ class DeltaTable:
                     continue
         return sorted(out)
 
+    def _checkpoint_versions(self) -> set[int]:
+        """Versions with a checkpoint.  A fully checkpointed log may
+        have no surviving JSON at all (log cleanup expired every commit
+        <= the checkpoint), so these are snapshot versions too."""
+        if not os.path.isdir(_log_dir(self.path)):
+            return set()
+        return (set(self._checkpoint_files(1 << 62))
+                | set(self._v2_checkpoint_files(1 << 62)))
+
     def _checkpoint_files(self, version: int) -> dict[int, list[str]]:
         """All classic checkpoints at or below ``version`` found by
         directory scan: {checkpoint_version: [part files in order]}."""
@@ -617,13 +630,7 @@ class DeltaTable:
 
     def _replay(self, version: int | None = None) -> dict:
         versions = self.versions()
-        # A fully checkpointed log may have no surviving JSON at all
-        # (log cleanup expired every commit <= the checkpoint); the
-        # checkpoint versions are valid snapshot targets too.
-        cp_versions = (sorted(set(self._checkpoint_files(1 << 62))
-                              | set(self._v2_checkpoint_files(1 << 62)))
-                       if os.path.isdir(_log_dir(self.path)) else [])
-        all_versions = sorted(set(versions) | set(cp_versions))
+        all_versions = sorted(set(versions) | self._checkpoint_versions())
         if not all_versions:
             raise FileNotFoundError(
                 f"no Delta log at {self.path!r} ({_LOG}/ missing or empty)")
@@ -1290,8 +1297,11 @@ class DeltaTable:
     # ------------------------------------------------ write
 
     def _next_version(self) -> int:
-        vs = self.versions()
-        return (vs[-1] + 1) if vs else 0
+        """One past the newest commit, whose JSON a checkpoint may have
+        replaced: version 0 on a fully checkpointed log would restart
+        the log below its checkpoint, where no reader looks."""
+        return max([*self.versions(), *self._checkpoint_versions()],
+                   default=-1) + 1
 
     def _cm_mapping(self, snap: dict) -> "_CmMap | None":
         """{logical name: physical parquet name} for a column-mapped
@@ -1405,19 +1415,106 @@ class DeltaTable:
             adds.append({action: entry})
         return adds
 
-    def _commit(self, version: int, actions: list[dict]) -> None:
+    def _publish(self, version: int, actions: list[dict]) -> None:
         """Publish ``actions`` as commit ``version``
         (:func:`.commit.publish_if_absent`).  An existing commit file
         means a concurrent writer won — raise
         :class:`DeltaConcurrentCommit` (the Delta optimistic-
-        concurrency contract; the write loops retry on it)."""
+        concurrency contract; :meth:`_commit` retries on it)."""
         if not publish_if_absent(
                 _commit_path(self.path, version),
                 "\n".join(json.dumps(a) for a in actions) + "\n"):
             raise DeltaConcurrentCommit(
                 f"concurrent Delta commit at version {version}")
+
+    def _commit(self, operation: str, rule, params: dict | None = None,
+                *, writable: str, create: bool = False,
+                txn: tuple[str, int] | None = None,
+                staged: list[dict] = (), dvs: list = ()):
+        """Build and publish ONE commit and return its version; every
+        Delta writer commits here.  Each attempt:
+
+        1. lists the next version ``v``;
+        2. replays the fixed snapshot ``v - 1`` — in this order, so a
+           commit landing after the listing makes this attempt lose
+           the put-if-absent instead of building on a stale snapshot.
+           Only a write (``create``) may find no table and commit
+           version 0 with no snapshot;
+        3. returns ``v - 1`` when the snapshot's ledger already holds
+           ``txn`` = (app id, version): a retry of this batch won;
+        4. refuses what this engine cannot write
+           (:meth:`_check_writable` for operation ``writable``);
+        5. runs the operation's ``rule(snapshot, now_ms)``, which
+           returns the commit's actions, or raises when the staged
+           work no longer applies to the snapshot.  Any other return
+           value means there is nothing to commit and is returned;
+        6. prepends the one ``commitInfo`` (``operation``, ``params``);
+        7. publishes put-if-absent (:meth:`_publish`); a lost race
+           retries.
+
+        Unless the commit lands, the files the operation staged — the
+        ``staged`` add/cdc actions and the DVs of the ``dvs`` rows —
+        are removed: nothing references them.  Every
+        :data:`_CHECKPOINT_EVERY`-th version is checkpointed."""
+        version = None
+        try:
+            for _ in commit_attempts(self.path, DeltaConcurrentCommit):
+                v = self._next_version()
+                cur = self._replay(v - 1) if v or not create else None
+                if cur is not None:
+                    if txn is not None \
+                            and cur["txns"].get(txn[0], -1) >= txn[1]:
+                        return v - 1
+                    self._check_writable(cur, writable)
+                now = int(time.time() * 1000)
+                actions = rule(cur, now)
+                if not isinstance(actions, list):
+                    return actions
+                with suppress(DeltaConcurrentCommit):
+                    self._publish(v, [{"commitInfo": {
+                        "timestamp": now, "operation": operation,
+                        "operationParameters": params or {},
+                        "engineInfo": "python-minerva-etl-spark"}}]
+                        + actions)
+                    version = v
+                    break
+        finally:
+            if version is None:
+                self._remove_staged(dvs, staged)
         if version % _CHECKPOINT_EVERY == 0 and version > 0:
             self._write_checkpoint(version)
+        return version
+
+    @staticmethod
+    def _remove(f: dict, now: int, data_change: bool = True) -> dict:
+        """The remove action retiring active file ``f``.  It carries
+        ``f``'s DV: a remove cancels only the add with the same (path,
+        DV id), so without it the file would stay active."""
+        rm = {"path": f["path"], "deletionTimestamp": now,
+              "dataChange": data_change}
+        if f.get("deletionVector"):
+            rm["deletionVector"] = f["deletionVector"]
+        return {"remove": rm}
+
+    @staticmethod
+    def _unchanged(snap: dict, cur: dict, paths: list[str],
+                   operation: str) -> list[dict]:
+        """``cur``'s add of each of ``paths``, files a scan of ``snap``
+        read.  Raises :class:`DeltaConcurrentCommit` when a racer
+        rewrote, removed or re-deleted one since: the work staged from
+        that scan no longer applies."""
+        was = {f["path"]: f.get("deletionVector") for f in snap["files"]}
+        by_path = {f["path"]: f for f in cur["files"]}
+        out = []
+        for rel in paths:
+            f = by_path.get(rel)
+            if f is None or f.get("deletionVector") != was.get(rel):
+                raise DeltaConcurrentCommit(
+                    f"data file {rel!r} changed (rewritten, removed, or "
+                    f"re-deleted) since this {operation} scanned it — "
+                    "rerun")
+            out.append(f)
+        return out
 
     @staticmethod
     def _append_compatible(table: T.StructType, df: T.StructType) -> bool:
@@ -1499,16 +1596,11 @@ class DeltaTable:
         def key(f):
             return (f["path"], dv_unique_id(f.get("deletionVector")))
 
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            self._check_writable(cur, "restore")
-            now = int(time.time() * 1000)
+        tgt_by = {key(f): f for f in target["files"]}
+
+        def rule(cur: dict, now: int):
             cur_by = {key(f): f for f in cur["files"]}
-            tgt_by = {key(f): f for f in target["files"]}
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": "RESTORE",
-                "operationParameters": {"version": int(version)},
-                "engineInfo": "python-minerva-etl-spark"}}]
+            actions: list[dict] = []
             mt, mc = target["metaData"], cur["metaData"]
             if (mt["schemaString"] != mc["schemaString"]
                     or (mt.get("partitionColumns") or [])
@@ -1522,28 +1614,16 @@ class DeltaTable:
                 meta["configuration"] = (
                     mt.get("configuration") or {})
                 actions.append({"metaData": meta})
-            for k in sorted(cur_by, key=str):
-                if k in tgt_by:
-                    continue
-                f = cur_by[k]
-                rm = {"path": f["path"], "deletionTimestamp": now,
-                      "dataChange": True}
-                if f.get("deletionVector"):
-                    rm["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": rm})
-            for k in sorted(tgt_by, key=str):
-                if k in cur_by:
-                    continue
-                add = dict(tgt_by[k])
-                add["dataChange"] = True
-                add["modificationTime"] = now
-                actions.append({"add": add})
-            if len(actions) == 1:
-                return cur["version"]  # already at the target state
-            new_version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(new_version, actions)
-                return new_version
+            actions += [self._remove(cur_by[k], now)
+                        for k in sorted(cur_by, key=str) if k not in tgt_by]
+            actions += [{"add": dict(tgt_by[k], dataChange=True,
+                                     modificationTime=now)}
+                        for k in sorted(tgt_by, key=str) if k not in cur_by]
+            # already at the target state: the current version
+            return actions or cur["version"]
+
+        return self._commit("RESTORE", rule, {"version": int(version)},
+                            writable="restore")
 
     def txn_version(self, app_id: str) -> int:
         """Latest ``txn`` (setTransaction) version recorded for
@@ -1581,8 +1661,6 @@ class DeltaTable:
         new snapshot).  Returns the committed version."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.versions()[-1]
         partition_by = list(partition_by)
         missing_pcols = [c for c in partition_by if c not in df.columns]
         if missing_pcols:
@@ -1590,10 +1668,12 @@ class DeltaTable:
                 f"partition_by columns {missing_pcols} not in batch")
         os.makedirs(self.path, exist_ok=True)
         cm = None
-        if self.versions():
+        if self._next_version():
+            pre = self._replay()
+            if txn is not None and pre["txns"].get(txn[0], -1) >= txn[1]:
+                return pre["version"]  # this batch already committed
             # refuse before staging any data: a commit that ignores an
             # unknown writer feature's invariants corrupts the table
-            pre = self._replay()
             self._check_writable(pre, mode)
             cm = self._cm_mapping(pre)
             if cm is not None and mode == "overwrite":
@@ -1619,89 +1699,80 @@ class DeltaTable:
                         f"append partition_by {partition_by} != "
                         f"table's partitionColumns {table_pcols}")
                 partition_by = table_pcols  # appends inherit it
+            self._write_meta(pre, mode, df.schema, partition_by,
+                             merge_schema)
         adds = self._stage_data_files(df, partition_by, cm=cm)
         return self._commit_write(adds, mode, partition_by,
                                   df.schema, txn, merge_schema)
+
+    def _write_meta(self, cur: dict | None, mode: str,
+                    schema: T.StructType, partition_by: list[str],
+                    merge_schema: bool) -> list[dict]:
+        """The protocol/metaData actions a ``mode`` write of a batch
+        with ``schema`` commits on top of snapshot ``cur`` (None: the
+        write creates the table).  An overwrite restates the schema
+        and partitioning; an append must match the table's schema
+        unless ``merge_schema`` evolves it (:meth:`_merge_schemas`),
+        and raises otherwise — a mismatched append would commit files
+        every reader then silently misreads.  :meth:`write` runs this
+        before staging anything; the commit re-runs it against the
+        snapshot it builds on."""
+        if cur is None:
+            return [
+                {"protocol": {"minReaderVersion": 1,
+                              "minWriterVersion": 2}},
+                {"metaData": {
+                    "id": str(uuid.uuid4()),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": schema.json(),
+                    "partitionColumns": partition_by,
+                    "configuration": {},
+                    "createdTime": int(time.time() * 1000)}}]
+        meta = dict(cur["metaData"])
+        if mode == "overwrite":
+            meta["schemaString"] = schema.json()
+            meta["partitionColumns"] = partition_by
+            return [{"metaData": meta}]
+        table = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        if self._append_compatible(table, schema):
+            return []
+        if not merge_schema:
+            raise ValueError(
+                "Delta append schema mismatch: table has "
+                f"{table.simpleString()}, batch has "
+                f"{schema.simpleString()} — appending would commit "
+                "files readers silently misread (use mode='overwrite' "
+                "to change the schema, or merge_schema=True to evolve "
+                "it)")
+        evolved = self._merge_schemas(table, schema).json()
+        if evolved == meta["schemaString"]:
+            return []
+        meta["schemaString"] = evolved
+        return [{"metaData": meta}]
 
     def _commit_write(self, adds: list[dict], mode: str,
                       partition_by: list[str],
                       df_schema: T.StructType,
                       txn: tuple[str, int] | None = None,
                       merge_schema: bool = False) -> int:
-        """Retry-loop commit of already-staged add actions — the tail
-        of :meth:`write`, shared with the registered data source's
-        writer (whose executors stage the files themselves)."""
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            version = self._next_version()
-            if txn is not None and version > 0 \
-                    and self.txn_version(txn[0]) >= txn[1]:
-                return version - 1  # a concurrent retry won the race
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper()},
-                "engineInfo": "python-minerva-etl-spark",
-            }}]
-            if version == 0:
-                actions.append({"protocol": {
-                    "minReaderVersion": 1, "minWriterVersion": 2}})
-                actions.append({"metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df_schema.json(),
-                    "partitionColumns": partition_by,
-                    "configuration": {},
-                    "createdTime": int(time.time() * 1000),
-                }})
-            elif mode == "overwrite":
-                # schema may change on overwrite: re-state metaData
-                prev = self._replay()
-                self._check_writable(prev, "overwrite")
-                meta = dict(prev["metaData"])
-                meta["schemaString"] = df_schema.json()
-                meta["partitionColumns"] = partition_by
-                actions.append({"metaData": meta})
-                now = int(time.time() * 1000)
-                for f in prev["files"]:
-                    # a remove cancels an add only when their (path,
-                    # DV id) match — drop the DV reference too or the
-                    # file would stay active
-                    rm = {"path": f["path"], "deletionTimestamp": now,
-                          "dataChange": True}
-                    if f.get("deletionVector"):
-                        rm["deletionVector"] = f["deletionVector"]
-                    actions.append({"remove": rm})
-            else:  # append to an existing table: schemas must line up
-                prev = self._replay()
-                self._check_writable(prev, "append")
-                table_schema = T.StructType.fromJson(
-                    json.loads(prev["metaData"]["schemaString"]))
-                if self._append_compatible(table_schema, df_schema):
-                    pass
-                elif merge_schema:
-                    evolved = self._merge_schemas(
-                        table_schema, df_schema)
-                    if evolved.json() != prev["metaData"][
-                            "schemaString"]:
-                        meta = dict(prev["metaData"])
-                        meta["schemaString"] = evolved.json()
-                        actions.append({"metaData": meta})
-                else:
-                    raise ValueError(
-                        "Delta append schema mismatch: table has "
-                        f"{table_schema.simpleString()}, batch has "
-                        f"{df_schema.simpleString()} — appending would "
-                        "commit files readers silently misread "
-                        "(use mode='overwrite' to change the schema, "
-                        "or merge_schema=True to evolve it)")
+        """Commit already-staged add actions — the tail of
+        :meth:`write`, shared with the registered data source's writer
+        (whose executors stage the files themselves).  An overwrite
+        removes every file active in the snapshot it builds on."""
+        def rule(cur: dict | None, now: int) -> list[dict]:
+            actions = self._write_meta(cur, mode, df_schema,
+                                       partition_by, merge_schema)
+            if cur is not None and mode == "overwrite":
+                actions += [self._remove(f, now) for f in cur["files"]]
             if txn is not None:
                 actions.append({"txn": {
                     "appId": txn[0], "version": int(txn[1]),
-                    "lastUpdated": int(time.time() * 1000)}})
-            actions.extend(adds)
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+                    "lastUpdated": now}})
+            return actions + adds
+
+        return self._commit("WRITE", rule, {"mode": mode.upper()},
+                            writable=mode, create=True, txn=txn,
+                            staged=adds)
 
     @staticmethod
     def _check_writable(snap: dict, operation: str) -> None:
@@ -1881,10 +1952,10 @@ class DeltaTable:
                 .collect())  # bounded: one row per touched file
 
     def _remove_staged(self, touched: list, actions: list[dict]) -> None:
-        """Delete what a row DML staged before it failed: the ``.bin``
-        of each DV in ``touched`` (inline DVs have none) and the file
-        of each add/cdc action.  Called only before the commit
-        starts — a commit attempt may already reference them."""
+        """Delete what an operation staged and will never commit: the
+        ``.bin`` of each DV in ``touched`` (inline DVs have none) and
+        the file of each add/cdc action.  Called when staging fails
+        and by :meth:`_commit` when the commit does not land."""
         from .delta_dv import _dv_file_path
 
         dvs = [json.loads(row["_dv"]) for row in touched]
@@ -1940,53 +2011,31 @@ class DeltaTable:
             actions.append({"metaData": meta})
         return actions
 
-    def _commit_row_dml(self, operation: str, touched: list,
-                        snap: dict, extra_actions: list[dict],
-                        cdf: bool) -> int:
-        """Commit a row-level DML (DELETE / UPDATE / MERGE): per
-        touched file ``remove(path, old DV)`` + ``add(path, new
-        DV)`` — the reconciliation pairing foreign readers expect —
-        plus ``extra_actions`` (new data files / cdc files),
-        upgrading the protocol on first feature use.  Raises
-        :class:`DeltaConcurrentCommit` if a racer touches any
-        affected file between the scan of ``snap`` and the commit."""
+    def _commit_row_dml(self, operation: str, writable: str,
+                        touched: list, snap: dict,
+                        extra_actions: list[dict], cdf: bool) -> int:
+        """Commit a row-level DML (DELETE / UPDATE / MERGE /
+        replaceWhere): per touched file ``remove(path, old DV)`` +
+        ``add(path, new DV)`` — the reconciliation pairing foreign
+        readers expect — plus ``extra_actions`` (new data files / cdc
+        files), upgrading the protocol on first feature use.  Raises
+        :class:`DeltaConcurrentCommit` if a racer touched any affected
+        file since the scan of ``snap`` (:meth:`_unchanged`)."""
         table_path = os.path.abspath(self.path)
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            by_path = {f["path"]: f for f in cur["files"]}
-            now = int(time.time() * 1000)
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": operation,
-                "operationParameters": {},
-                "engineInfo": "python-minerva-etl-spark"}}]
-            need_r = {"deletionVectors"} if touched else set()
-            need_w = set(need_r)
-            if cdf:
-                need_w.add("changeDataFeed")
-            actions += self._upgrade_actions(
+        rels = [os.path.relpath(row["_dl_path"], table_path)
+                .replace(os.sep, "/") for row in touched]
+        need_r = {"deletionVectors"} if touched else set()
+        need_w = need_r | ({"changeDataFeed"} if cdf else set())
+
+        def rule(cur: dict, now: int) -> list[dict]:
+            actions = self._upgrade_actions(
                 cur, need_r, need_w,
                 {"delta.enableDeletionVectors": "true"}
                 if touched else None)
-            for row in touched:
-                rel = os.path.relpath(row["_dl_path"], table_path)
-                rel = rel.replace(os.sep, "/")
-                f = by_path.get(rel)
-                if f is None or f.get("deletionVector") != old_dv.get(rel):
-                    raise DeltaConcurrentCommit(
-                        f"data file {rel!r} changed (rewritten, "
-                        f"removed, or re-deleted) since this "
-                        f"{operation} scanned it — rerun")
-                remove = {"path": rel, "deletionTimestamp": now,
-                          "dataChange": True}
-                if f.get("deletionVector"):
-                    remove["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": remove})
-                add = dict(f)
-                add["deletionVector"] = json.loads(row["_dv"])
-                add["dataChange"] = True
-                add["modificationTime"] = now
+            for row, f in zip(touched, self._unchanged(snap, cur, rels,
+                                                        operation)):
+                add = dict(f, deletionVector=json.loads(row["_dv"]),
+                           dataChange=True, modificationTime=now)
                 if add.get("stats"):
                     # min/max may no longer be tight once rows are
                     # masked out; numRecords stays physical
@@ -1996,12 +2045,11 @@ class DeltaTable:
                         add["stats"] = json.dumps(stats)
                     except (ValueError, TypeError):
                         pass
-                actions.append({"add": add})
-            actions += extra_actions
-            version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+                actions += [self._remove(f, now), {"add": add}]
+            return actions + extra_actions
+
+        return self._commit(operation, rule, writable=writable,
+                            staged=extra_actions, dvs=touched)
 
     def delete(self, spark: SparkSession, where) -> int | None:
         """Merge-on-read DELETE: rows matching ``where`` (a Column or
@@ -2053,7 +2101,7 @@ class DeltaTable:
             if cdf:
                 matched.unpersist()
         return self._commit_row_dml(
-            "DELETE", touched, snap, cdc_actions, cdf)
+            "DELETE", "delete", touched, snap, cdc_actions, cdf)
 
     def update(self, spark: SparkSession, set: dict,
                where=None) -> int | None:
@@ -2106,7 +2154,8 @@ class DeltaTable:
             raise
         finally:
             matched.unpersist()
-        return self._commit_row_dml("UPDATE", touched, snap, extra, cdf)
+        return self._commit_row_dml("UPDATE", "update", touched, snap,
+                                    extra, cdf)
 
     def replace_where(self, spark: SparkSession, df: DataFrame,
                       where) -> int | None:
@@ -2173,7 +2222,8 @@ class DeltaTable:
         finally:
             if cdf:
                 matched.unpersist()
-        return self._commit_row_dml("WRITE", touched, snap, extra, cdf)
+        return self._commit_row_dml("WRITE", "replaceWhere", touched,
+                                    snap, extra, cdf)
 
     def merge(self, spark: SparkSession, source: DataFrame, on,
               when_matched_update: dict | None = None,
@@ -2233,7 +2283,9 @@ class DeltaTable:
         except BaseException:
             self._remove_staged(touched, extra)
             raise
-        return self._commit_row_dml("MERGE", touched, snap, extra, cdf)
+        return self._commit_row_dml(
+            "MERGE", "merge" if have_matched else "append", touched, snap,
+            extra, cdf)
 
     def set_properties(self, props: dict) -> int:
         """ALTER TABLE SET TBLPROPERTIES: merge ``props`` into the
@@ -2251,26 +2303,16 @@ class DeltaTable:
                 "without validating existing rows — use "
                 "add_constraint(spark, name, expr), which scans the "
                 "table first")
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            self._check_writable(cur, "set_properties")
-            need_w = builtins.set()
-            if str(props.get("delta.enableChangeDataFeed", "")
-                   ).lower() == "true":
-                need_w.add("changeDataFeed")
-            up = self._upgrade_actions(cur, builtins.set(), need_w,
-                                       props)
-            if not up:
-                return cur["version"]  # already at requested state
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {},
-                "engineInfo": "python-minerva-etl-spark"}}] + up
-            version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+        need_w = builtins.set()
+        if str(props.get("delta.enableChangeDataFeed", "")
+               ).lower() == "true":
+            need_w.add("changeDataFeed")
+        return self._commit(
+            "SET TBLPROPERTIES",
+            # no actions: already at the requested state
+            lambda cur, now: self._upgrade_actions(
+                cur, builtins.set(), need_w, props) or cur["version"],
+            writable="set_properties")
 
     def add_constraint(self, spark: SparkSession, name: str,
                        expr: str) -> int:
@@ -2287,55 +2329,39 @@ class DeltaTable:
             raise ValueError(
                 f"constraint name {name!r} must be alphanumeric/_")
         key = f"delta.constraints.{name.lower()}"
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            self._check_writable(cur, "add_constraint")
+
+        def rule(cur: dict, now: int):
             conf = cur["metaData"].get("configuration") or {}
             if conf.get(key) == expr:
                 return cur["version"]
             existing = self.read(spark, cur["version"])
-            bad = existing.filter(~is_true(F.expr(expr))).limit(1)
-            if bad.count():
+            if existing.filter(~is_true(F.expr(expr))).limit(1).count():
                 raise ValueError(
                     f"add_constraint {name!r}: existing rows violate "
                     f"{expr!r} — nothing was committed")
-            up = self._upgrade_actions(
-                cur, builtins.set(), {"checkConstraints"},
-                {key: expr})
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-                "engineInfo": "python-minerva-etl-spark"}}] + up
-            version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+            return self._upgrade_actions(
+                cur, builtins.set(), {"checkConstraints"}, {key: expr})
+
+        return self._commit("ADD CONSTRAINT", rule,
+                            {"name": name, "expr": expr},
+                            writable="add_constraint")
 
     def drop_constraint(self, name: str) -> int | None:
         """ALTER TABLE DROP CONSTRAINT: removes
         ``delta.constraints.<name>`` with a metaData commit (None
         when the constraint does not exist — a drop is idempotent)."""
         key = f"delta.constraints.{name.lower()}"
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            self._check_writable(cur, "drop_constraint")
+
+        def rule(cur: dict, now: int):
             conf = dict(cur["metaData"].get("configuration") or {})
             if key not in conf:
                 return None
             del conf[key]
-            meta = dict(cur["metaData"])
-            meta["configuration"] = conf
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-                "engineInfo": "python-minerva-etl-spark"}},
-                {"metaData": meta}]
-            version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+            return [{"metaData": dict(cur["metaData"],
+                                      configuration=conf)}]
+
+        return self._commit("DROP CONSTRAINT", rule, {"name": name},
+                            writable="drop_constraint")
 
     def _add_versions(self) -> dict[str, int]:
         """path → latest commit version carrying an ``add`` for it,
@@ -2505,72 +2531,55 @@ class DeltaTable:
                 or any(f.get("deletionVector") for f in fs)}
         if not todo:
             return None
-        old_dv = {f["path"]: f.get("deletionVector")
-                  for f in snap["files"]}
         new_adds: list[dict] = []
-        rewritten: list[str] = []
-        for pv, fs in sorted(todo.items()):
-            df = spark.read.schema(data_schema).parquet(
-                *[os.path.join(self.path, f["path"]) for f in fs])
-            dv_map = {f["path"]: f["deletionVector"] for f in fs
-                      if f.get("deletionVector")}
-            if dv_map:
-                df = df.select(
-                    "*",
-                    _localize_col(F.col("_metadata.file_path"))
-                    .alias("_dl_path"),
-                    F.col("_metadata.row_index").alias("_dl_pos"))
-                df = self._apply_dvs(spark, df, dv_map).drop(
-                    "_dl_path", "_dl_pos")
-            total = sum(f.get("size") or 0 for f in fs)
-            nparts = max(1, math.ceil(total / target_file_bytes))
-            if zorder_by:
-                df = zorder_cluster(
-                    df, zorder_by,
-                    {f.name: f.dataType for f in data_schema.fields},
-                    nparts)
-            elif sort_by:
-                # range-cluster: each output file covers a narrow
-                # sort-key range, so its stats prune tightly
-                df = (df.repartitionByRange(nparts, *sort_by)
-                      .sortWithinPartitions(*sort_by))
-            else:
-                df = df.coalesce(nparts)
-            staged = self._stage_data_files(df, [])
-            for a in staged:
-                # files land at the table root; partitionValues in the
-                # log are authoritative (the protocol does not require
-                # hive-style paths)
-                a["add"]["partitionValues"] = dict(pv)
-                a["add"]["dataChange"] = False
-                new_adds.append(a)
-            rewritten.extend(f["path"] for f in fs)
-        for _ in commit_attempts(self.path, DeltaConcurrentCommit):
-            cur = self._replay()
-            by_path = {f["path"]: f for f in cur["files"]}
-            now = int(time.time() * 1000)
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": "OPTIMIZE",
-                "operationParameters": (
-                    {"zOrderBy": json.dumps(zorder_by)}
-                    if zorder_by else {}),
-                "engineInfo": "python-minerva-etl-spark"}}]
-            for rel in rewritten:
-                f = by_path.get(rel)
-                if f is None or f.get("deletionVector") != old_dv.get(rel):
-                    raise DeltaConcurrentCommit(
-                        f"data file {rel!r} changed since OPTIMIZE "
-                        "scanned it — rerun optimize()")
-                rm = {"path": rel, "deletionTimestamp": now,
-                      "dataChange": False}
-                if f.get("deletionVector"):
-                    rm["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": rm})
-            actions.extend(new_adds)
-            version = self._next_version()
-            with suppress(DeltaConcurrentCommit):
-                self._commit(version, actions)
-                return version
+        try:
+            for pv, fs in sorted(todo.items()):
+                df = spark.read.schema(data_schema).parquet(
+                    *[os.path.join(self.path, f["path"]) for f in fs])
+                dv_map = {f["path"]: f["deletionVector"] for f in fs
+                          if f.get("deletionVector")}
+                if dv_map:
+                    df = df.select(
+                        "*",
+                        _localize_col(F.col("_metadata.file_path"))
+                        .alias("_dl_path"),
+                        F.col("_metadata.row_index").alias("_dl_pos"))
+                    df = self._apply_dvs(spark, df, dv_map).drop(
+                        "_dl_path", "_dl_pos")
+                total = sum(f.get("size") or 0 for f in fs)
+                nparts = max(1, math.ceil(total / target_file_bytes))
+                if zorder_by:
+                    df = zorder_cluster(
+                        df, zorder_by,
+                        {f.name: f.dataType for f in data_schema.fields},
+                        nparts)
+                elif sort_by:
+                    # range-cluster: each output file covers a narrow
+                    # sort-key range, so its stats prune tightly
+                    df = (df.repartitionByRange(nparts, *sort_by)
+                          .sortWithinPartitions(*sort_by))
+                else:
+                    df = df.coalesce(nparts)
+                for a in self._stage_data_files(df, []):
+                    # files land at the table root; partitionValues in
+                    # the log are authoritative (the protocol does not
+                    # require hive-style paths)
+                    a["add"]["partitionValues"] = dict(pv)
+                    a["add"]["dataChange"] = False
+                    new_adds.append(a)
+        except BaseException:
+            self._remove_staged([], new_adds)
+            raise
+        rewritten = [f["path"] for _, fs in sorted(todo.items())
+                     for f in fs]
+        return self._commit(
+            "OPTIMIZE",
+            lambda cur, now: [
+                self._remove(f, now, data_change=False)
+                for f in self._unchanged(snap, cur, rewritten, "OPTIMIZE")
+            ] + new_adds,
+            {"zOrderBy": json.dumps(zorder_by)} if zorder_by else {},
+            writable="optimize", staged=new_adds)
 
     def vacuum(self, retention_hours: float = 168,
                now_ms: int | None = None,

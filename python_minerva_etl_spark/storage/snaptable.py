@@ -27,14 +27,14 @@ dependency-free:
   the batch's key envelope are read and rewritten; everything else is
   carried into the new manifest by reference.  A 100 TB table with a
   few hot partitions rewrites a few files, not the table.
-* **Conflict detection** — append, MERGE, DELETE and OPTIMIZE commit
-  through one loop.  A write that loses the commit race checks the
-  files added by the commits it missed against its rule: none for an
-  append, key-envelope overlap for MERGE/DELETE, any file for
-  OPTIMIZE.  With no conflict the commit is retried on top (at most
-  :data:`.commit.COMMIT_ATTEMPTS` times), otherwise
-  :class:`CommitConflict` is raised for the caller to re-run (Delta's
-  write-conflict semantics).
+* **Conflict detection** — append, MERGE, DELETE, OPTIMIZE and
+  restore commit through one loop.  A write that loses the commit race
+  checks the files added by the commits it missed against its rule:
+  none for an append or a restore, key-envelope overlap for
+  MERGE/DELETE, any file for OPTIMIZE.  With no conflict the commit
+  is retried on top (at most :data:`.commit.COMMIT_ATTEMPTS` times),
+  otherwise :class:`CommitConflict` is raised for the caller to re-run
+  (Delta's write-conflict semantics).
 * **Time travel** — ``read(spark, version=N)`` reads any retained
   snapshot; ``history()`` lists them.
 """
@@ -543,16 +543,19 @@ class SnapTable:
 
     def _commit(self, op: str, key: list[str], new: list[dict],
                 txn: tuple[str, int] | None = None,
-                base: list[dict] = (), replaced: list[dict] = (),
+                base: list[dict] = (),
+                replaced: list[dict] | None = (),
                 conflicts=None) -> int:
         """Publish the next version: the latest snapshot's files minus
-        ``replaced``, plus ``new`` (module docstring, *Conflict
-        detection*).  Returns early when the txn ledger holds ``txn``;
+        ``replaced`` (all of them when None: a restore replaces the
+        whole list), plus ``new`` (module docstring, *Conflict
+        detection*).  The txn ledger carries forward from the latest
+        snapshot.  Returns early when the ledger holds ``txn``;
         raises :class:`CommitConflict` on a file that is not in
         ``base`` (the files the write read) for which ``conflicts``
         holds."""
         seen = {e["path"] for e in base}
-        gone = {e["path"] for e in replaced}
+        gone = None if replaced is None else {e["path"] for e in replaced}
         for _ in commit_attempts(self.path, CommitConflict):
             v = (self.latest_version() or 0) + 1
             if self._txn_seen(txn, v - 1 if v > 1 else None):
@@ -564,7 +567,8 @@ class SnapTable:
                         raise CommitConflict(
                             f"concurrent commit conflicts with {op}: "
                             f"{e['path']}")
-            files = [e for e in cur if e["path"] not in gone] + new
+            files = [e for e in cur
+                     if gone is not None and e["path"] not in gone] + new
             manifest = {"version": v, "op": op, "files": files,
                         "n_files": len(files)}
             if key:
@@ -722,17 +726,16 @@ class SnapTable:
         preserved, time travel still reaches the undone versions, and
         :meth:`changes` across the restore shows exactly the rows the
         rollback changed.  Pure metadata — no data file is read or
-        written; concurrent-writer safety via the same atomic
-        publish."""
+        written.  It commits through :meth:`_commit` like every other
+        write, so the txn ledger carries forward from the latest
+        version, as Delta's RESTORE leaves ``txn`` actions alone: a
+        batch committed before the restore is still skipped when it
+        is delivered again."""
         old = self._manifest(to_version)  # raises on unknown version
-        for _ in commit_attempts(self.path, CommitConflict):
-            latest = self.latest_version() or 0
-            if to_version == latest:
-                return latest  # restoring to the tip is a no-op
-            manifest = {**old, "version": latest + 1, "op": "restore",
-                        "restored_from": to_version}
-            if self._publish(manifest, latest + 1):
-                return latest + 1
+        if to_version == self.latest_version():
+            return to_version  # restoring to the tip is a no-op
+        return self._commit("restore", old.get("key") or [],
+                            old["files"], replaced=None)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Drop manifests beyond the newest ``keep_versions`` and delete

@@ -699,7 +699,7 @@ class _DeltaWriter(DataSourceArrowWriter):
         part_cols = ([c.strip() for c in pb.split(",") if c.strip()]
                      if pb else [])
         dt = DeltaTable(self.path)
-        if dt.versions():
+        if dt._next_version():
             snap = dt._replay()  # fail fast, before executors write
             _check_supported(snap["metaData"])
             dt._check_writable(snap, self.mode)
@@ -711,6 +711,8 @@ class _DeltaWriter(DataSourceArrowWriter):
                         f"append partitionBy {part_cols} != table's "
                         f"partitionColumns {table_pcols}")
                 part_cols = table_pcols
+            dt._write_meta(snap, self.mode, schema, part_cols,
+                           self.merge_schema)
         missing = [c for c in part_cols
                    if c not in {f.name for f in schema.fields}]
         if missing:

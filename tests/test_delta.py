@@ -113,7 +113,7 @@ def test_commit_conflict_and_bad_versions(spark, tmp_path):
     write_delta(spark, spark.createDataFrame([(1,)], "id long"), p)
     t = DeltaTable(p)
     with pytest.raises(FileExistsError, match="concurrent"):
-        t._commit(0, [{"commitInfo": {}}])
+        t._publish(0, [{"commitInfo": {}}])
     with pytest.raises(ValueError, match="not in Delta log"):
         t.read(spark, version_as_of=99)
     with pytest.raises(FileNotFoundError):
@@ -342,7 +342,7 @@ def test_concurrent_commit_retries_cleanly(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(spark, spark.createDataFrame([(1,)], "id long"), p)
     t = DT(p)
-    orig_commit = t._commit
+    orig_commit = t._publish
     calls = {"n": 0}
 
     def racing_commit(version, actions):
@@ -353,7 +353,7 @@ def test_concurrent_commit_retries_cleanly(spark, tmp_path):
             orig_commit(version, [{"commitInfo": {"operation": "RACE"}}])
         orig_commit(version, actions)
 
-    t._commit = racing_commit
+    t._publish = racing_commit
     v = t.write(spark, spark.createDataFrame([(2,)], "id long"))
     assert v == 2  # lost v1 to the race, retried onto v2
     assert _rows(read_delta(spark, p)) == [(1,), (2,)]
@@ -503,7 +503,7 @@ def test_append_stream_delta_exactly_once(spark, tmp_path):
 
 
 def test_losing_commit_racer_never_clobbers_winner(spark, tmp_path):
-    """ADVICE r5: _commit must be put-if-absent.  A racer that loses
+    """ADVICE r5: _publish must be put-if-absent.  A racer that loses
     at version N must raise AND leave the winner's committed file
     byte-identical — the old exists-check + os.replace pair let the
     loser silently overwrite the winner's actions."""
@@ -513,7 +513,7 @@ def test_losing_commit_racer_never_clobbers_winner(spark, tmp_path):
     commit0 = os.path.join(p, "_delta_log", f"{0:020d}.json")
     winner_bytes = open(commit0, "rb").read()
     with pytest.raises(FileExistsError, match="concurrent"):
-        t._commit(0, [{"commitInfo": {"operation": "LOSER"}}])
+        t._publish(0, [{"commitInfo": {"operation": "LOSER"}}])
     assert open(commit0, "rb").read() == winner_bytes
     # and the loser's tmp file was cleaned up
     leftovers = [n for n in os.listdir(os.path.join(p, "_delta_log"))

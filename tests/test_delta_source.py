@@ -163,7 +163,7 @@ def test_batch_refuses_column_mapped_table(ds_spark, tmp_path):
     conf = dict(meta.get("configuration") or {})
     conf["delta.columnMapping.mode"] = "name"
     meta["configuration"] = conf
-    dt._commit(dt._next_version(), [
+    dt._publish(dt._next_version(), [
         {"commitInfo": {"timestamp": 0, "operation": "SET",
                         "operationParameters": {}}},
         {"metaData": meta}])

@@ -563,12 +563,15 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     t = SnapTable(str(tmp_path / "restore"))
     t.merge(spark, spark.createDataFrame(
         [(1, 10.0, 1), (2, 20.0, 1)], "k long, v double, seq int"),
-        key=["k"], seq_col="seq")                       # v1
+        key=["k"], seq_col="seq", txn=("app", 1))       # v1
     t.merge(spark, spark.createDataFrame(
         [(2, 99.0, 2), (3, 30.0, 2)], "k long, v double, seq int"),
-        key=["k"], seq_col="seq")                       # v2
+        key=["k"], seq_col="seq", txn=("app", 2))       # v2
+    ledger = t.txns()
     v3 = t.restore(1)
     assert v3 == 3 and t.versions() == [1, 2, 3]
+    # the exactly-once ledger is not rolled back with the data
+    assert t.txns() == ledger == {"app": 2}
     assert [h["version"] for h in t.history()] == [1, 2, 3]
     assert t.history()[-1]["op"] == "restore"
     got = {(r.k, r.v) for r in t.read(spark).select("k", "v").collect()}

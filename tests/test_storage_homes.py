@@ -3,8 +3,9 @@ logic: the Delta change feed is classified once in
 ``storage/delta.py`` and both of its readers consume that plan,
 Iceberg's delete assignment and snapshot-chain walk live in
 ``storage/iceberg.py``, every Iceberg snapshot commits through one
-retry loop in ``storage/iceberg_write.py``, and the ``file:`` URI
-rule of every format lives in ``storage/commit.py``."""
+retry loop in ``storage/iceberg_write.py`` and every Delta commit
+through one in ``storage/delta.py``, and the ``file:`` URI rule of
+every format lives in ``storage/commit.py``."""
 
 from __future__ import annotations
 
@@ -45,13 +46,27 @@ def _callers(rel: str, name: str) -> set[str]:
                     for c in ast.walk(fn))}
 
 
+def _method_calls(rel: str) -> list[tuple[str, list[str]]]:
+    """``(function name, its obj.<name>(...) method calls in source
+    order)`` for each function of module ``rel`` (a nested function's
+    calls are listed for it and for its outer function)."""
+    with open(os.path.join(_PKG, rel), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return [(fn.name, [c.func.attr for c in sorted(
+                (c for c in ast.walk(fn) if isinstance(c, ast.Call)
+                 and isinstance(c.func, ast.Attribute)),
+                key=lambda c: (c.lineno, c.col_offset))])
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
 def test_delta_change_feed_is_planned_once():
     # commit JSON files are opened by DeltaTable._actions alone;
-    # DeltaTable._commit publishes them
+    # DeltaTable._publish publishes them
     assert _holders(re.compile(r"_commit_path|:020d}\.json")) == [
         "storage/delta.py"]
     assert _callers("storage/delta.py", "_commit_path") == {
-        "_actions", "_commit"}
+        "_actions", "_publish"}
     assert _holders(re.compile(r"not derivable"), "delta") == [
         "storage/delta.py"]
     assert _holders(re.compile(r"def _change_plan\b")) == [
@@ -118,3 +133,28 @@ def test_iceberg_commits_once():
     assert len(re.findall(r"\b_MANIFEST_FILE_SCHEMA\b", src)) == 2
     assert _callers("storage/iceberg_write.py", "_avro_file") == {
         "_commit", "write"}
+
+
+def test_delta_commits_once():
+    """One retry loop and one commitInfo builder for every Delta
+    commit: writes and the registered sinks, row-level DML, restore,
+    table properties, constraints and OPTIMIZE.  Each attempt lists
+    its version before it replays the snapshot it builds on."""
+    assert _holders(re.compile(r"commit_attempts\("), "delta") == [
+        "storage/delta.py"]
+    with open(os.path.join(_PKG, "storage/delta.py"),
+              encoding="utf-8") as fh:
+        src = fh.read()
+    assert src.count("commit_attempts(") == 1
+    assert _callers("storage/delta.py", "commit_attempts") == {"_commit"}
+    assert src.count('"engineInfo"') == 1
+    listers = set()
+    for rel, _text in _modules():
+        if "delta" not in os.path.basename(rel):
+            continue
+        for fn, calls in _method_calls(rel):
+            if "_next_version" in calls and "_replay" in calls:
+                listers.add(fn)
+                assert calls.index("_next_version") \
+                    < calls.index("_replay"), (rel, fn)
+    assert "_commit" in listers
