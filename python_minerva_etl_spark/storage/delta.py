@@ -20,7 +20,10 @@ for checkpoints), so this engine can:
 - READ Delta tables written by other systems — current snapshot or
   ``version_as_of`` time travel, including Hive-partitioned tables
   (partition columns reconstructed from ``partitionValues``) and
-  multi-part checkpoints;
+  multi-part checkpoints.  One read plan
+  (:meth:`DeltaTable._read_plan`), shared with the registered
+  source's batch reader, resolves time travel, builds the
+  column-mapping view (:func:`_column_mapping`) and prunes files;
 - WRITE Delta tables other systems can read — append / overwrite
   commits with correct add/remove actions, schemaString, and periodic
   parquet checkpoints (including remove tombstones, as PROTOCOL.md
@@ -65,6 +68,7 @@ where Delta/Iceberg neighbors are the norm.
 from __future__ import annotations
 
 import builtins
+import datetime
 import functools
 import json
 import os
@@ -162,23 +166,46 @@ def _file_stats(path: str, fields: list[T.StructField]) -> str | None:
                        "tightBounds": True})
 
 
+def _partition_value(raw: str | None, dt: T.DataType):
+    """A Delta partitionValues string as a typed Python value (the
+    serialization PROTOCOL.md 'Partition Value Serialization'
+    defines) — the one parser of partition values: file pruning and
+    the registered source's reader both use it.  ValueError for a
+    string that does not parse; NotImplementedError for the types it
+    does not read (timestamps, decimals, binary — ``read_delta``
+    reads them through Spark's own cast)."""
+    if raw is None:
+        return None
+    if isinstance(dt, T.StringType):
+        return raw
+    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType,
+                       T.ByteType)):
+        return int(raw)
+    if isinstance(dt, T.BooleanType):
+        if raw.lower() not in ("true", "false"):
+            raise ValueError(f"not a boolean partition value: {raw!r}")
+        return raw.lower() == "true"
+    if isinstance(dt, T.DateType):
+        return datetime.date.fromisoformat(raw)
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return float(raw)
+    raise NotImplementedError(
+        f"Delta partition type "
+        f"{dt.simpleString() if dt is not None else '?'!r}: no "
+        "partition-value parser (read_delta() reads it)")
+
+
 def _add_may_match(add: dict, preds: list[tuple],
                    part_cols: list[str],
                    type_of: dict[str, T.DataType]) -> bool:
     """Conservative file-skip test: False only when the add action's
     partitionValues or stats PROVE no row can satisfy every
-    predicate.  Anything unparseable keeps the file (pruning is an
-    optimization, never a filter)."""
-    def cast_pv(col, raw):
-        if raw is None:
-            return None
-        dt = type_of.get(col)
-        if isinstance(dt, (T.IntegerType, T.LongType)):
-            return int(raw)
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            return float(raw)
-        return raw
-
+    predicate.  Column names are the keys the add action uses
+    (physical ones on a column-mapped table — :meth:`_ReadPlan.pruned`
+    maps them).  A string literal on a non-string partition column is
+    parsed by the same rule as the partition value; anything
+    unparseable keeps the file (pruning is an optimization, never a
+    filter)."""
     stats = None
     if add.get("stats"):
         try:
@@ -187,10 +214,14 @@ def _add_may_match(add: dict, preds: list[tuple],
             stats = None
     for col, op, lit in preds:
         if col in part_cols:
+            dt = type_of.get(col)
             try:
-                pv = cast_pv(col, (add.get("partitionValues")
-                                   or {}).get(col))
-            except (ValueError, TypeError):
+                pv = _partition_value(
+                    (add.get("partitionValues") or {}).get(col), dt)
+                if isinstance(lit, str) \
+                        and not isinstance(dt, T.StringType):
+                    lit = _partition_value(lit, dt)
+            except (ValueError, TypeError, NotImplementedError):
                 continue
             if pv is None:
                 # a null partition value satisfies no comparison
@@ -223,15 +254,93 @@ def _physical_name(f: T.StructField) -> str:
     return pname
 
 
-class _CmMap(dict):
-    """{logical: physical} column mapping with an optional ``.ids``
-    ({logical: column id}) attribute for mode-id staging and a
-    ``.fields`` ({logical: StructField}) attribute carrying the full
-    mapped schema fields (nested physicalName/id metadata included)
-    so staging can rebuild nested columns physically."""
+class _ColumnMapping(NamedTuple):
+    """A snapshot's column mapping (PROTOCOL.md Column Mapping: data
+    files, partitionValues and stats speak PHYSICAL names, the
+    metaData schema speaks logical ones), built once from its
+    ``metaData`` by :func:`_column_mapping`.  Reads, the change feed,
+    the registered source and every writer take it from there.  With
+    mapping off the physical names are the logical ones."""
+    # None (mapping off), "name" or "id"
+    mode: str | None
+    # the logical schema
+    schema: T.StructType
+    # logical -> physical top-level column name
+    physical: dict[str, str]
+    # per field (logical, physical, field id or None, nested spec):
+    # what the registered source's Arrow reader resolves per file
+    specs: tuple
 
-    ids: dict | None = None
-    fields: dict | None = None
+
+def _column_mapping(meta: dict) -> _ColumnMapping:
+    """The column-mapping view of a ``metaData`` action — the one
+    reader of ``delta.columnMapping.mode``.  Refuses an unknown mode
+    and, eagerly (plan time, even for an empty table), a mapped
+    schema field without its physical name (or, in mode ``id``, its
+    field id): such a table is malformed, never misread."""
+    mode = (meta.get("configuration") or {}).get(
+        "delta.columnMapping.mode") or "none"
+    if mode not in ("none", "name", "id"):
+        raise NotImplementedError(
+            f"Delta column mapping mode {mode!r} unknown")
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    mapped = mode != "none"
+    specs = tuple((f.name, _physical_name(f) if mapped else f.name,
+                   _field_id(f) if mode == "id" else None,
+                   _nested_spec(f.dataType, mode) if mapped else None)
+                  for f in schema.fields)
+    return _ColumnMapping(mode if mapped else None, schema,
+                          {lg: ph for lg, ph, _fid, _spec in specs},
+                          specs)
+
+
+def _nested_spec(dt: T.DataType, mode: str):
+    """Picklable nested-resolution spec for one mapped column, or
+    None when nothing below needs renaming:
+
+        ("struct", ((logical, physical, fid, child_spec), ...))
+        ("array", element_spec)
+        ("map", value_spec)         # map keys carry no field names
+    """
+    if not _needs_rename(dt):
+        return None
+    if isinstance(dt, T.StructType):
+        return ("struct", tuple(
+            (f.name, _physical_name(f),
+             _field_id(f) if mode == "id" else None,
+             _nested_spec(f.dataType, mode))
+            for f in dt.fields))
+    if isinstance(dt, T.ArrayType):
+        return ("array", _nested_spec(dt.elementType, mode))
+    return ("map", _nested_spec(dt.valueType, mode))
+
+
+class _ReadPlan(NamedTuple):
+    """A snapshot read planned once by :meth:`DeltaTable._read_plan`
+    — the version time travel resolved to, its column-mapping view,
+    its partition columns and the add actions the predicates may
+    match.  :meth:`DeltaTable.read` and the registered source's batch
+    reader scan it."""
+    version: int
+    cm: _ColumnMapping
+    part_cols: list[str]
+    files: list[dict]
+
+    def pruned(self, where: list[tuple] | None) -> "_ReadPlan":
+        """This plan keeping only the files whose partitionValues or
+        stats may satisfy every ``(column, op, literal)`` predicate of
+        ``where`` (logical column names, mapped here to the physical
+        keys the add actions use)."""
+        if not where:
+            return self
+        phys = self.cm.physical
+        preds = [(phys.get(c, c), op, lit) for c, op, lit in where]
+        type_of = {phys[f.name]: f.dataType
+                   for f in self.cm.schema.fields}
+        part_cols = [phys[c] for c in self.part_cols]
+        return self._replace(files=[
+            f for f in self.files
+            if _add_may_match(f, preds, part_cols, type_of)])
 
 
 def _field_id(f: T.StructField) -> int:
@@ -774,12 +883,35 @@ class DeltaTable:
                 f"commit {versions[0]} of {self.path!r}")
         return best
 
+    def _read_plan(self, version_as_of: int | None = None,
+                   timestamp_as_of=None,
+                   where: list[tuple] | None = None) -> _ReadPlan:
+        """The one plan of a snapshot read, shared by :meth:`read` and
+        the registered source's batch reader: time travel (a
+        ``timestamp_as_of`` resolves via :meth:`version_at`; it and
+        ``version_as_of`` are mutually exclusive), the replay, the
+        column-mapping view and file pruning on partitionValues and
+        per-file stats (:meth:`_ReadPlan.pruned`)."""
+        if timestamp_as_of is not None:
+            if version_as_of is not None:
+                raise ValueError(
+                    "Delta time travel: pass version_as_of OR "
+                    "timestamp_as_of (source options versionAsOf / "
+                    "timestampAsOf), not both")
+            version_as_of = self.version_at(timestamp_as_of)
+        snap = self._replay(version_as_of)
+        meta = snap["metaData"]
+        return _ReadPlan(snap["version"], _column_mapping(meta),
+                         meta.get("partitionColumns") or [],
+                         snap["files"]).pruned(where)
+
     def read(self, spark: SparkSession,
              version_as_of: int | None = None,
              where: list[tuple] | None = None,
              timestamp_as_of=None,
              _with_pos: bool = False) -> DataFrame:
-        """Snapshot read (optionally time-traveled).  Partitioned
+        """Snapshot read (optionally time-traveled), over the files
+        :meth:`_read_plan` keeps.  Partitioned
         tables: files group by their ``partitionValues`` and the
         partition columns come back as typed literals — one
         spark.read per partition-value combination, unioned (the
@@ -795,36 +927,12 @@ class DeltaTable:
         100 TB the expansion scales out and the driver holds only
         descriptors.  ``_with_pos=True`` (internal; :meth:`delete`
         uses it) keeps the ``_dl_path``/``_dl_pos`` provenance
-        columns on the result.
-
-        ``timestamp_as_of`` time travel resolves via
-        :meth:`version_at` (latest commit at or before the target;
-        mutually exclusive with ``version_as_of``)."""
-        if timestamp_as_of is not None:
-            if version_as_of is not None:
-                raise ValueError(
-                    "pass version_as_of OR timestamp_as_of, not both")
-            version_as_of = self.version_at(timestamp_as_of)
-        snap = self._replay(version_as_of)
-        meta = snap["metaData"]
-        schema = T.StructType.fromJson(
-            json.loads(meta["schemaString"]))
-        part_cols = meta.get("partitionColumns") or []
-        cm_mode = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode") or "none"
-        if cm_mode not in ("none", "name", "id"):
-            raise NotImplementedError(
-                f"Delta column mapping mode {cm_mode!r} unknown")
-        mapped = cm_mode if cm_mode != "none" else None
-        if mapped:
-            # validate the mapping metadata EAGERLY (plan time, even
-            # for empty tables): a table claiming column mapping with
-            # unmapped schema fields is malformed, never misread
-            for f in schema.fields:
-                _physical_name(f)
-                if mapped == "id":
-                    _field_id(f)
-        if mapped == "id":
+        columns on the result.  ``where`` predicates prune files and
+        are re-applied as filters, so results never depend on the
+        pruning."""
+        plan = self._read_plan(version_as_of, timestamp_as_of, where)
+        schema = plan.cm.schema
+        if plan.cm.mode == "id":
             # flat id columns resolve via Spark's field-id parquet
             # path — a session conf, safe to pin (it only changes
             # behavior when ids are present in the read schema);
@@ -832,29 +940,18 @@ class DeltaTable:
             # instead, so no pruning conf is ever touched
             spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
                            "true")
-        files = snap["files"]
-        pos_fields = [T.StructField("_dl_path", T.StringType()),
-                      T.StructField("_dl_pos", T.LongType())]
+        files = plan.files
         if not files:
+            pos_fields = [T.StructField("_dl_path", T.StringType()),
+                          T.StructField("_dl_pos", T.LongType())]
             return spark.createDataFrame(
                 [], T.StructType(schema.fields + pos_fields)
                 if _with_pos else schema)
-        if where:
-            # file skipping on partitionValues + per-file stats: the
-            # scan never opens a file whose metadata excludes every
-            # predicate (the residual filter below keeps exactness)
-            type_of = {f.name: f.dataType for f in schema.fields}
-            files = [f for f in files
-                     if _add_may_match(f, where, part_cols, type_of)]
-            if not files:
-                return spark.createDataFrame(
-                    [], T.StructType(schema.fields + pos_fields)
-                    if _with_pos else schema)
         dv_map = {f["path"]: f["deletionVector"] for f in files
                   if f.get("deletionVector")}
         need_pos = _with_pos or bool(dv_map)
-        out = self._scan_files(spark, files, schema, part_cols,
-                               mapped, need_pos)
+        out = self._scan_files(spark, files, schema, plan.part_cols,
+                               plan.cm, need_pos)
         if dv_map:
             out = self._apply_dvs(spark, out, dv_map)
         if need_pos and not _with_pos:
@@ -867,8 +964,7 @@ class DeltaTable:
         return out
 
     @staticmethod
-    def _hive_layout(files: list[dict], part_cols: list[str],
-                     pkey: dict[str, str]) -> bool:
+    def _hive_layout(files: list[dict], part_cols: list[str]) -> bool:
         """True when every file's directory path IS the Hive encoding
         of its logged ``partitionValues`` (one ``col=value`` segment
         per partition column, in order, values compared PARSED so the
@@ -876,14 +972,12 @@ class DeltaTable:
         conform by construction; a foreign table with flat file names
         and log-only partitionValues does not, and keeps the general
         path."""
-        want = [pkey[c] for c in part_cols]
         for f in files:
             vals = hive_values(f["path"].rpartition("/")[0])
-            if vals is None or list(vals) != want:
+            if vals is None or list(vals) != part_cols:
                 return False
             fpv = f.get("partitionValues") or {}
-            if any(vals[pkey[c]] != fpv.get(pkey[c], fpv.get(c))
-                   for c in part_cols):
+            if any(vals[c] != fpv.get(c) for c in part_cols):
                 return False
         return True
 
@@ -922,11 +1016,13 @@ class DeltaTable:
 
     def _scan_files(self, spark: SparkSession, files: list[dict],
                     schema: T.StructType, part_cols: list[str],
-                    mapped, need_pos: bool) -> DataFrame:
+                    cm: _ColumnMapping, need_pos: bool) -> DataFrame:
         """One DataFrame over explicit file-action entries (add or
-        cdc): files group by their ``partitionValues`` and the
-        partition columns come back as typed literals; column-mapped
-        tables (``mapped`` = "name" or "id") read physical names —
+        cdc) with ``schema`` (the table's, or the cdc files' with
+        ``_change_type``): files group by their ``partitionValues``
+        and the partition columns come back as typed literals;
+        column-mapped tables (``cm.mode`` "name" or "id") read
+        physical names —
         mode "id" additionally stamps ``parquet.field.id`` metadata so
         Spark matches parquet columns by the stable field id even
         when a file spells a different (pre-rename) physical name.
@@ -944,6 +1040,7 @@ class DeltaTable:
         path."""
         data_fields = [f for f in schema.fields
                        if f.name not in part_cols]
+        mapped = cm.mode
         by_id = mapped == "id"
 
         def _meta(f):
@@ -961,27 +1058,20 @@ class DeltaTable:
                                          and _meta(f) is not None),
                           f.nullable, _meta(f)) for f in data_fields
         ] if mapped else data_fields)
-        # partitionValues are keyed by PHYSICAL name once mapping is
-        # on (files and stats live in the physical world); fall back
-        # to the logical key defensively
-        pkey = {c: (_physical_name(next(
-            f for f in schema.fields if f.name == c))
-            if mapped else c) for c in part_cols}
-        ptype = {f.name: f.dataType for f in schema.fields}
+        type_of = {f.name: f.dataType for f in schema.fields}
         if (part_cols and not mapped
-                and all(isinstance(ptype[c], self._HIVE_FAST_TYPES)
+                and all(isinstance(type_of[c], self._HIVE_FAST_TYPES)
                         for c in part_cols)
-                and self._hive_layout(files, part_cols, pkey)):
+                and self._hive_layout(files, part_cols)):
             return self._scan_hive(spark, files, schema, need_pos)
         by_part: dict[tuple, list[str]] = {}
         for f in files:
+            # keyed by PHYSICAL name once mapping is on
             fpv = f.get("partitionValues") or {}
-            pv = tuple(fpv.get(pkey[c], fpv.get(c))
-                       for c in part_cols)
+            pv = tuple(fpv.get(cm.physical[c]) for c in part_cols)
             by_part.setdefault(pv, []).append(
                 os.path.join(self.path, f["path"]))
         out: DataFrame | None = None
-        type_of = {f.name: f.dataType for f in schema.fields}
         keep = [f.name for f in schema.fields]
         if need_pos:
             keep += ["_dl_path", "_dl_pos"]
@@ -1227,12 +1317,9 @@ class DeltaTable:
         executor-side)."""
         end, meta = self._change_range(starting_version, ending_version)
         plan = self._change_plan(starting_version, end, meta)
-        cm_mode = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode") or "none"
-        mapped = cm_mode if cm_mode != "none" else None
-        schema = T.StructType.fromJson(
-            json.loads(meta["schemaString"]))
-        if mapped == "id":
+        cm = _column_mapping(meta)
+        schema = cm.schema
+        if cm.mode == "id":
             spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
                            "true")
         # _change_type is synthetic: cdc files store it under its own
@@ -1243,7 +1330,7 @@ class DeltaTable:
             schema.fields
             + [T.StructField("_change_type", T.StringType(), True,
                              {_CM_PHYS: "_change_type"}
-                             if mapped else None)])
+                             if cm.mode else None)])
         cols = [f.name for f in schema.fields] + ["_change_type"]
         groups: dict[tuple[int, str], list[_Change]] = {}
         for c in plan:
@@ -1254,7 +1341,7 @@ class DeltaTable:
             files = [c.action for c in recs]
             if kind == "cdc":
                 df = self._scan_files(spark, files, cdc_schema, pcols,
-                                      mapped, False)
+                                      cm, False)
             elif kind == "dv_diff":
                 posdf = self._dv_positions(spark, [
                     (os.path.abspath(os.path.join(self.path,
@@ -1263,7 +1350,7 @@ class DeltaTable:
                      json.dumps(c.old_dv) if c.old_dv else None)
                     for c in recs])
                 df = self._scan_files(spark, files, schema, pcols,
-                                      mapped, True)
+                                      cm, True)
                 df = df.join(
                     posdf,
                     (df["_dl_path"] == posdf["_del_path"])
@@ -1273,7 +1360,7 @@ class DeltaTable:
                 dvm = {f["path"]: f["deletionVector"] for f in files
                        if f.get("deletionVector")}
                 df = self._scan_files(spark, files, schema, pcols,
-                                      mapped, bool(dvm))
+                                      cm, bool(dvm))
                 if dvm:
                     df = self._apply_dvs(spark, df, dvm)
             if kind != "cdc":
@@ -1303,42 +1390,12 @@ class DeltaTable:
         return max([*self.versions(), *self._checkpoint_versions()],
                    default=-1) + 1
 
-    def _cm_mapping(self, snap: dict) -> "_CmMap | None":
-        """{logical name: physical parquet name} for a column-mapped
-        table (modes ``name`` AND ``id``), None when mapping is off —
-        every write path stages parquet under PHYSICAL names on
-        mapped tables (PROTOCOL.md Column Mapping: data files and
-        partitionValues speak physical, the metaData schema speaks
-        logical).  For mode ``id`` the returned mapping additionally
-        carries ``.ids`` ({logical: column id}) so the staging can
-        stamp ``parquet.field.id`` metadata — Spark then writes the
-        PARQUET:field_id every id-resolving reader (including ours)
-        matches on, at EVERY nesting level (``.fields`` carries the
-        full mapped StructFields; staging rebuilds nested columns
-        physically — :func:`_physical_expr` — and applies nested
-        metadata via ``DataFrame.to``)."""
-        conf = snap["metaData"].get("configuration") or {}
-        mode = conf.get("delta.columnMapping.mode") or "none"
-        if mode == "none":
-            return None
-        if mode not in ("name", "id"):
-            raise NotImplementedError(
-                f"Delta column mapping mode {mode!r}: writes "
-                "unsupported")
-        schema = T.StructType.fromJson(
-            json.loads(snap["metaData"]["schemaString"]))
-        out = _CmMap({f.name: _physical_name(f)
-                      for f in schema.fields})
-        out.fields = {f.name: f for f in schema.fields}
-        if mode == "id":
-            out.ids = {f.name: _field_id(f) for f in schema.fields}
-        return out
-
     def _stage_data_files(self, df: DataFrame,
                           partition_by: list[str],
                           subdir: str = "",
                           action: str = "add",
-                          cm: dict | None = None) -> list[dict]:
+                          cm: _ColumnMapping | None = None
+                          ) -> list[dict]:
         """Write df as parquet part files at the table root with
         delta-style unique names; return add actions.  With
         ``partition_by``, files land in Hive-style ``col=value/``
@@ -1350,8 +1407,9 @@ class DeltaTable:
         change-data files: ``action='cdc'`` lands the parts under
         ``_change_data/`` and returns ``cdc`` actions (PROTOCOL.md
         "Add CDC File": path, partitionValues, size,
-        dataChange=false — no stats, the files never serve reads)."""
-        if cm:
+        dataChange=false — no stats, the files never serve reads).
+        ``cm``: the table's column-mapping view."""
+        if cm is not None and cm.mode:
             # column-mapped table: the parquet files and Hive dirs
             # speak PHYSICAL names at EVERY nesting level (extra
             # columns like _change_type pass through unmapped);
@@ -1360,8 +1418,8 @@ class DeltaTable:
             # expressions cannot carry nested metadata) so Spark
             # writes the PARQUET:field_id the id-resolving readers
             # match on
-            with_ids = getattr(cm, "ids", None) is not None
-            fields = getattr(cm, "fields", None) or {}
+            with_ids = cm.mode == "id"
+            fields = {f.name: f for f in cm.schema.fields}
             exprs = []
             for c in df.columns:
                 f = fields.get(c)
@@ -1384,7 +1442,7 @@ class DeltaTable:
                 else:
                     exprs.append(expr.alias(_physical_name(f)))
             df = df.select(*exprs)
-            partition_by = [cm.get(c, c) for c in partition_by]
+            partition_by = [cm.physical.get(c, c) for c in partition_by]
         prefix = "cdc" if action == "cdc" else "part"
 
         def place(rel_dir: str, _values: dict) -> str:
@@ -1675,13 +1733,13 @@ class DeltaTable:
             # refuse before staging any data: a commit that ignores an
             # unknown writer feature's invariants corrupts the table
             self._check_writable(pre, mode)
-            cm = self._cm_mapping(pre)
-            if cm is not None and mode == "overwrite":
+            cm = _column_mapping(pre["metaData"])
+            if cm.mode and mode == "overwrite":
                 raise NotImplementedError(
                     "Delta overwrite on a column-mapped table: "
                     "restating the schema would need fresh field "
                     "ids/physical names — append or DML instead")
-            if cm is not None and merge_schema:
+            if cm.mode and merge_schema:
                 raise NotImplementedError(
                     "Delta merge_schema on a column-mapped table: "
                     "new columns would need fresh field ids/physical "
@@ -2093,7 +2151,7 @@ class DeltaTable:
                        .withColumn("_change_type", F.lit("delete")))
                 cdc_actions = self._stage_data_files(
                     pre, part_cols, subdir="_change_data",
-                    action="cdc", cm=self._cm_mapping(snap))
+                    action="cdc", cm=_column_mapping(snap["metaData"]))
         except BaseException:
             self._remove_staged(touched, cdc_actions)
             raise
@@ -2138,7 +2196,7 @@ class DeltaTable:
             touched = self._write_dvs(spark, matched, snap)
             if not touched:
                 return None
-            cm = self._cm_mapping(snap)
+            cm = _column_mapping(snap["metaData"])
             extra = self._stage_data_files(updated, part_cols, cm=cm)
             if cdf:
                 pre = (matched.drop("_dl_path", "_dl_pos")
@@ -2198,7 +2256,7 @@ class DeltaTable:
         touched, extra = [], []
         try:
             touched = self._write_dvs(spark, matched, snap)
-            cm = self._cm_mapping(snap)
+            cm = _column_mapping(snap["metaData"])
             if not new_rows.isEmpty():
                 extra = self._stage_data_files(new_rows, part_cols,
                                                cm=cm)
@@ -2260,7 +2318,7 @@ class DeltaTable:
                     self._enforce_constraints(snap, new_rows, "MERGE")
                 touched = ([] if plan.positions is None
                            else self._write_dvs(spark, plan.positions, snap))
-                cm = self._cm_mapping(snap)
+                cm = _column_mapping(snap["metaData"])
                 extra = ([] if new_rows is None
                          else self._stage_data_files(new_rows, part_cols,
                                                      cm=cm))
@@ -2406,9 +2464,9 @@ class DeltaTable:
         the physical names :meth:`optimize` clusters on.  A file whose
         add only a checkpoint holds counts as OLD: it predates every
         surviving commit."""
-        cm = self._cm_mapping(snap)
+        phys = _column_mapping(snap["metaData"]).physical
         zv = self._last_zorder_version(
-            [cm[c] for c in zorder_by] if cm is not None else zorder_by)
+            [phys.get(c, c) for c in zorder_by])
         if zv is None:
             return None
         added = self._add_versions()
@@ -2497,11 +2555,11 @@ class DeltaTable:
         # files, stats, and partitionValues stay physically keyed
         # with no rename round-trip; mode id resolves (and re-emits)
         # parquet.field.id metadata at every nesting level
-        cm = self._cm_mapping(snap)
-        if cm is None:
+        cm = _column_mapping(snap["metaData"])
+        if cm.mode is None:
             data_schema = T.StructType(data_fields)
         else:
-            by_id = getattr(cm, "ids", None) is not None
+            by_id = cm.mode == "id"
             if by_id:
                 spark.conf.set(
                     "spark.sql.parquet.fieldId.read.enabled", "true")
@@ -2509,13 +2567,13 @@ class DeltaTable:
                 T.StructField(_physical_name(f),
                               _physical_type(f.dataType, by_id),
                               f.nullable,
-                              {"parquet.field.id": cm.ids[f.name]}
+                              {"parquet.field.id": _field_id(f)}
                               if by_id else None)
                 for f in data_fields])
             if sort_by:
-                sort_by = [cm[c] for c in sort_by]
+                sort_by = [cm.physical[c] for c in sort_by]
             if zorder_by:
-                zorder_by = [cm[c] for c in zorder_by]
+                zorder_by = [cm.physical[c] for c in zorder_by]
         clustering = bool(sort_by or zorder_by)
         groups: dict[tuple, list[dict]] = {}
         for f in snap["files"]:

@@ -16,8 +16,11 @@ side (append, row-level DELETE/UPDATE/MERGE, compaction) is
   ``StructType`` (primitives, decimal, struct/list/map);
 - **scan**: the live data files (``status != DELETED`` entries) read
   with the converted schema — parquet and ORC, grouped by format
-  and unioned.  ``where`` predicates first skip whole manifests by
-  their partition summaries, then files by their per-column
+  and unioned.  One read plan (:meth:`IcebergTable._read_plan`),
+  shared with the registered source's batch reader and the
+  row-level DML, resolves the snapshot and checks the ``where``
+  predicates, which first skip whole manifests by their partition
+  summaries, then files by their per-column
   ``lower_bounds``/``upper_bounds``, and are re-applied as DataFrame
   filters so correctness never depends on the pruning;
 - **merge-on-read deletes**: v2 position-delete and equality-delete
@@ -36,8 +39,8 @@ Refusals (raise, never misread):
   rare in practice);
 - renamed columns: Iceberg resolves columns by field id, this reader
   by name — a scanned file whose footer lacks a REQUIRED schema
-  column raises (a missing optional column, the add-column case,
-  reads as nulls);
+  column raises (:func:`_check_footer`, run by every reader; a
+  missing optional column, the add-column case, reads as nulls);
 - malformed Avro: unknown codecs, sync mismatches, out-of-range enum
   or union indexes.
 
@@ -53,6 +56,7 @@ import json
 import os
 import re
 import struct
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -179,6 +183,27 @@ def _file_may_match(df_entry: dict, preds, field_id: dict,
         if not may_match(lo, hi, op, lit):
             return False
     return True
+
+
+def _check_footer(path: str, names, schema: T.StructType) -> None:
+    """Refuse a data file whose footer (column ``names``) lacks a
+    REQUIRED column of ``schema`` — the one footer guard of
+    ``read_iceberg``'s driver-side scan and the registered source's
+    executor-side reader.  Add-column schema evolution is legal: old
+    data files lack the new (optional) column and read as nulls.  A
+    required column can never have been absent at write time, so its
+    absence by name means the table was renamed or otherwise
+    schema-evolved in a way this name-based (not field-id) reader
+    can't follow."""
+    missing = {f.name for f in schema.fields if not f.nullable} \
+        - set(names)
+    if missing:
+        raise ValueError(
+            f"iceberg: file {os.path.basename(path)!r} lacks "
+            f"required columns {sorted(missing)} — the table "
+            "was renamed or schema-evolved beyond what this "
+            "name-based reader resolves (Iceberg resolves by "
+            "field-id); refusing rather than returning nulls")
 
 
 def _partition_specs(md: dict) -> dict[int, list[dict]]:
@@ -452,6 +477,67 @@ def _touching(f: dict, pairs, types_by_id: dict) -> tuple:
                  if _delete_may_touch(f, d, types_by_id))
 
 
+class _ReadPlan(NamedTuple):
+    """A snapshot read planned once by :meth:`IcebergTable._read_plan`
+    — the table metadata, the snapshot time travel resolved to and
+    the checked predicates.  :meth:`IcebergTable.read`, the registered
+    source's batch reader and the row-level DML list their files
+    through :meth:`files`; :meth:`IcebergTable.incremental` prunes its
+    added files through :meth:`pruned`."""
+    table: "IcebergTable"
+    md: dict
+    # the snapshot entry; {} when the table has none
+    snap: dict
+    # (column, op, literal) with a known column and op
+    preds: list
+
+    @property
+    def ice_schema(self) -> dict:
+        return self.table._current_schema(self.md)
+
+    def where(self, where: list[tuple] | None) -> "_ReadPlan":
+        """This plan with the predicates ``where``, checked against
+        the schema."""
+        preds = list(where or [])
+        names = {f["name"] for f in self.ice_schema["fields"]}
+        for col, op, _ in preds:
+            if op not in ("=", "<", "<=", ">", ">="):
+                raise ValueError(f"iceberg: unsupported predicate op "
+                                 f"{op!r}")
+            if col not in names:
+                raise ValueError(f"iceberg: unknown column {col!r}")
+        return self._replace(preds=preds)
+
+    def pruned(self, files: list[dict]) -> list[dict]:
+        """The data ``files`` whose column bounds may satisfy every
+        predicate (:func:`_file_may_match`)."""
+        if not self.preds:
+            return files
+        fields = self.ice_schema["fields"]
+        field_id = {f["name"]: f["id"] for f in fields}
+        field_type = {f["name"]: f["type"] for f in fields
+                      if isinstance(f["type"], str)}
+        return [f for f in files
+                if _file_may_match(f, self.preds, field_id, field_type)]
+
+    def files(self) -> tuple[list[dict], list[dict]]:
+        """The snapshot's live ``(data files, delete files)``: data
+        manifests whose partition summaries provably exclude a
+        predicate are never opened (:func:`_manifest_may_match`), then
+        data files are pruned on their column bounds."""
+        manifest_ok = None
+        if self.preds:
+            specs = _partition_specs(self.md)
+            by_id = {f["id"]: (f["name"], f["type"])
+                     for f in self.ice_schema["fields"]
+                     if isinstance(f["type"], str)}
+
+            def manifest_ok(m: dict) -> bool:
+                return _manifest_may_match(m, self.preds, specs, by_id)
+        files, deletes = self.table._data_files(self.snap, manifest_ok)
+        return self.pruned(files), deletes
+
+
 class IcebergTable:
     """An Iceberg table rooted at ``path`` — metadata + manifest
     replay, parquet scan of the live file set."""
@@ -521,17 +607,15 @@ class IcebergTable:
             f"iceberg: snapshot {snapshot_id} not in metadata (have "
             f"{[s.get('snapshot-id') for s in snaps]})")
 
-    def _data_files(self, snap: dict, preds=(),
-                    md: dict | None = None
+    def _data_files(self, snap: dict, manifest_ok=None
                     ) -> tuple[list[dict], list[dict]]:
         """Live ``(data_files, delete_files)`` for a snapshot: replay
         its manifest list, then every manifest, keeping
-        EXISTING/ADDED entries.  With ``preds`` and table metadata,
-        DATA manifests whose partition summaries provably exclude
-        every predicate are skipped before their Avro is even opened
-        (:func:`_manifest_may_match`); delete manifests are always
-        replayed (a pruned data file simply finds no partner in the
-        anti-join).  v2 position-delete files (content=1) and
+        EXISTING/ADDED entries.  DATA manifests that ``manifest_ok``
+        (the read plan's partition-summary pruning) rejects are
+        skipped before their Avro is even opened; delete manifests
+        are always replayed (a pruned data file simply finds no
+        partner in the anti-join).  v2 position-delete files (content=1) and
         equality-delete files (content=2) are returned for
         merge-on-read application at scan time; every entry carries
         ``_seq``, its data sequence number (explicit on the manifest
@@ -547,14 +631,9 @@ class IcebergTable:
         else:  # legacy v1 inline manifests list
             manifests = [{"manifest_path": p} for p in
                          snap.get("manifests", [])]
-        if preds and md is not None:
-            specs = _partition_specs(md)
-            by_id = {f["id"]: (f["name"], f["type"])
-                     for f in self._current_schema(md)["fields"]
-                     if isinstance(f["type"], str)}
+        if manifest_ok is not None:
             manifests = [m for m in manifests
-                         if m.get("content", 0) == 1
-                         or _manifest_may_match(m, preds, specs, by_id)]
+                         if m.get("content", 0) == 1 or manifest_ok(m)]
         out: list[dict] = []
         deletes: list[dict] = []
         for m in manifests:
@@ -651,66 +730,68 @@ class IcebergTable:
                 f"snapshot of {self.path!r}")
         return best
 
-    def read(self, spark: SparkSession,
-             snapshot_id: int | None = None,
-             where: list[tuple] | None = None,
-             ref: str | None = None,
-             as_of=None) -> DataFrame:
-        """Snapshot read (optionally time-traveled by snapshot id).
-
-        ``where`` — a list of ``(column, op, literal)`` predicates
-        with op in =, <, <=, >, >= — is applied twice: first as
-        FILE-LEVEL pruning against the manifests' per-column
-        lower/upper_bounds (the Iceberg scan-planning contract: at
-        100 TB a selective query must not list-and-scan every data
-        file), then as ordinary DataFrame filters so correctness
-        never depends on the pruning (missing or undecodable bounds
-        keep the file; Catalyst pushes the residual filters to the
-        parquet row groups).
-
-        Column resolution is BY NAME (Iceberg's is by field id):
-        every scanned file's parquet footer must contain every
-        top-level schema column, else raise — a renamed column would
-        otherwise come back as silent nulls."""
+    def _read_plan(self, snapshot_id: int | None = None,
+                   ref: str | None = None, as_of=None,
+                   where: list[tuple] | None = None) -> _ReadPlan:
+        """The one plan of a snapshot read (:class:`_ReadPlan`),
+        shared by :meth:`read`, the registered source's batch reader
+        and the row-level DML: at most one of ``snapshot_id`` /
+        ``ref`` / ``as_of`` (a ref resolves via :meth:`resolve_ref`, a
+        timestamp via :meth:`snapshot_at`; none: the current
+        snapshot), and the ``where`` predicates checked against the
+        schema.  Manifests and files are pruned when the plan lists
+        them (:meth:`_ReadPlan.files`)."""
         if sum(x is not None for x in (snapshot_id, ref, as_of)) > 1:
             raise ValueError(
-                "iceberg: pass only one of snapshot_id / ref / as_of")
+                "iceberg: pass only one of snapshot_id / ref / as_of "
+                "(source options snapshotId / ref / as-of-timestamp)")
         if ref is not None:
             snapshot_id = self.resolve_ref(ref)
         elif as_of is not None:
             snapshot_id = self.snapshot_at(as_of)
         md = self.metadata()
-        ice_schema = self._current_schema(md)
-        preds = list(where or [])
-        for col, op, _ in preds:
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"iceberg: unsupported predicate op "
-                                 f"{op!r}")
-            if col not in {f["name"] for f in ice_schema["fields"]}:
-                raise ValueError(f"iceberg: unknown column {col!r}")
-        files, delete_files = self._data_files(
-            self._snapshot(md, snapshot_id), preds, md)
-        return self._scan_planned(spark, files, delete_files, md,
-                                  preds)
+        return _ReadPlan(self, md, self._snapshot(md, snapshot_id),
+                         []).where(where)
+
+    def read(self, spark: SparkSession,
+             snapshot_id: int | None = None,
+             where: list[tuple] | None = None,
+             ref: str | None = None,
+             as_of=None) -> DataFrame:
+        """Snapshot read (optionally time-traveled by snapshot id, ref
+        or timestamp) of the files :meth:`_read_plan` lists.
+
+        ``where`` — a list of ``(column, op, literal)`` predicates
+        with op in =, <, <=, >, >= — is applied twice: first as
+        MANIFEST- and FILE-LEVEL pruning against the manifests'
+        partition summaries and per-column lower/upper_bounds (the
+        Iceberg scan-planning contract: at 100 TB a selective query
+        must not list-and-scan every data file), then as ordinary
+        DataFrame filters so correctness never depends on the pruning
+        (missing or undecodable bounds keep the file; Catalyst pushes
+        the residual filters to the parquet row groups).
+
+        Column resolution is BY NAME (Iceberg's is by field id):
+        every scanned file's parquet footer must contain every
+        required top-level column (:func:`_check_footer`), else raise
+        — a renamed column would otherwise come back as silent
+        nulls."""
+        plan = self._read_plan(snapshot_id, ref, as_of, where)
+        files, delete_files = plan.files()
+        return self._scan_planned(spark, files, delete_files, plan.md,
+                                  plan.preds)
 
     def _scan_planned(self, spark: SparkSession, files: list[dict],
                       delete_files: list[dict], md: dict,
-                      preds: list) -> DataFrame:
-        """Scan already-planned data files (with optional
-        merge-on-read deletes): file-level bound pruning, footer
-        name guard, typed read, delete application, residual
-        filters.  Shared by :meth:`read` and :meth:`incremental`."""
+                      preds: list, keep_pos: bool = False) -> DataFrame:
+        """Scan already-planned (and pruned) data files with optional
+        merge-on-read deletes: footer name guard, typed read, delete
+        application, residual filters.  Shared by :meth:`read`,
+        :meth:`incremental`, compaction and (``keep_pos``: the
+        ``_ice_path``/``_ice_pos`` columns of
+        :meth:`_apply_deletes`, parquet only) the row-level DML."""
         ice_schema = self._current_schema(md)
         schema = _to_spark_schema(ice_schema)
-        if preds:
-            field_id = {f["name"]: f["id"]
-                        for f in ice_schema["fields"]}
-            field_type = {f["name"]: f["type"]
-                          for f in ice_schema["fields"]
-                          if isinstance(f["type"], str)}
-            files = [f for f in files
-                     if _file_may_match(f, preds, field_id,
-                                        field_type)]
         if not files:
             return spark.createDataFrame([], schema)
         by_fmt: dict[str, list[str]] = {}
@@ -718,31 +799,11 @@ class IcebergTable:
             by_fmt.setdefault((f.get("file_format") or "PARQUET")
                               .upper(), []).append(
                 _localize(f["file_path"]))
-        want = {f.name for f in schema.fields}
-        required = {f["name"] for f in ice_schema["fields"]
-                    if f.get("required")}
-
-        def check_names(p: str, names) -> None:
-            # Add-column schema evolution is legal: old data files
-            # lack the new (optional) column and read as nulls via
-            # the enforced read schema.  Only a missing REQUIRED
-            # column is refused — a required column can never have
-            # been absent at write time, so its absence by name means
-            # the table was renamed or otherwise schema-evolved in a
-            # way this name-based (not field-id) reader can't follow.
-            missing = (want & required) - set(names)
-            if missing:
-                raise ValueError(
-                    f"iceberg: file {os.path.basename(p)!r} lacks "
-                    f"required columns {sorted(missing)} — the table "
-                    "was renamed or schema-evolved beyond what this "
-                    "name-based reader resolves (Iceberg resolves by "
-                    "field-id); refusing rather than returning nulls")
-
         import pyarrow.parquet as pq
         for p in by_fmt.get("PARQUET", []):
             if os.path.exists(p):
-                check_names(p, pq.ParquetFile(p).schema_arrow.names)
+                _check_footer(p, pq.ParquetFile(p).schema_arrow.names,
+                              schema)
         if by_fmt.get("ORC"):
             try:
                 import pyarrow.orc as po
@@ -751,20 +812,21 @@ class IcebergTable:
             if po is not None:
                 for p in by_fmt["ORC"]:
                     if os.path.exists(p):
-                        check_names(p, po.ORCFile(p).schema.names)
-        if delete_files and by_fmt.get("ORC"):
+                        _check_footer(p, po.ORCFile(p).schema.names,
+                                      schema)
+        if (delete_files or keep_pos) and by_fmt.get("ORC"):
             raise NotImplementedError(
-                "iceberg: position deletes over ORC data files "
-                "unsupported (Spark exposes _metadata.row_index for "
-                "parquet scans only)")
+                "iceberg: position deletes and row-level DML over ORC "
+                "data files unsupported (Spark exposes "
+                "_metadata.row_index for parquet scans only)")
         out = None
         if by_fmt.get("PARQUET"):
             out = spark.read.schema(schema).parquet(
                 *by_fmt["PARQUET"])
-            if delete_files:
+            if delete_files or keep_pos:
                 out = self._apply_deletes(
                     spark, out, delete_files, schema, ice_schema,
-                    files)
+                    files, keep_pos)
         if by_fmt.get("ORC"):
             orc_df = spark.read.schema(schema).orc(*by_fmt["ORC"])
             out = orc_df if out is None else out.unionByName(orc_df)
@@ -839,21 +901,14 @@ class IcebergTable:
         diff for those), while ``overwrite``/``replace`` snapshots
         REFUSE — rewritten files re-add records an append-only
         consumer would double-count.  ``where`` prunes and filters
-        exactly like :meth:`read`."""
-        md = self.metadata()
-        ice_schema = self._current_schema(md)
-        preds = list(where or [])
-        for col, op, _ in preds:
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"iceberg: unsupported predicate op "
-                                 f"{op!r}")
-            if col not in {f["name"] for f in ice_schema["fields"]}:
-                raise ValueError(f"iceberg: unknown column {col!r}")
+        exactly like :meth:`read`, through the same plan."""
+        plan = self._read_plan(where=where)
+        md = plan.md
         to_id = (md.get("current-snapshot-id")
                  if to_snapshot_id is None else to_snapshot_id)
         if to_id in (None, -1):
             return spark.createDataFrame(
-                [], _to_spark_schema(ice_schema))
+                [], _to_spark_schema(plan.ice_schema))
         _, _, chain = _walk_chain(
             md, -1 if from_snapshot_id is None else from_snapshot_id,
             to_id, "iceberg incremental")
@@ -869,7 +924,8 @@ class IcebergTable:
                     "APPEND scan is only defined over append/delete "
                     "history (rewritten files would double-count)")
             files += self._added_files(s)
-        return self._scan_planned(spark, files, [], md, preds)
+        return self._scan_planned(spark, plan.pruned(files), [], md,
+                                  plan.preds)
 
     @staticmethod
     def _apply_deletes(spark: SparkSession, data: DataFrame,

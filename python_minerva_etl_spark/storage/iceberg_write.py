@@ -1116,65 +1116,22 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
 #                           manifest plus every previous manifest
 
 
-def _validate_preds(ice_schema: dict, preds) -> None:
-    names = {f["name"] for f in ice_schema["fields"]}
-    for col, op, _ in preds:
-        if op not in ("=", "<", "<=", ">", ">="):
-            raise ValueError(
-                f"iceberg: unsupported predicate op {op!r}")
-        if col not in names:
-            raise ValueError(f"iceberg: unknown column {col!r}")
-
-
-def _live_rows(spark: SparkSession, table: IcebergTable, md: dict,
-               preds: list) -> tuple[DataFrame | None, list[dict]]:
-    """Current-snapshot rows with position AND equality deletes
-    applied (so DML can never touch — or worse, resurrect — an
-    already-deleted row), plus two extra columns per row:
-    ``_ice_path`` (normalized data-file path) and ``_ice_pos``
-    (0-based parquet row ordinal from ``_metadata.row_index``).
-    ``preds`` prune at the manifest and file level exactly like
-    :meth:`IcebergTable.read` and re-apply as residual filters.
-    Returns ``(None, [])`` when no live data file can match."""
-    from pyspark.sql import functions as F
-
-    from .iceberg import _file_may_match
-
-    files, delete_files = table._data_files(
-        table._snapshot(md, None), list(preds), md)
+def _live_rows(spark: SparkSession, plan
+               ) -> tuple[DataFrame | None, list[dict]]:
+    """The rows of ``plan`` (:meth:`IcebergTable._read_plan`, whose
+    predicates prune manifests and files exactly as for
+    :meth:`IcebergTable.read` and re-apply as residual filters) with
+    position AND equality deletes applied (so DML can never touch —
+    or worse, resurrect — an already-deleted row), plus two extra
+    columns per row: ``_ice_path`` (normalized data-file path) and
+    ``_ice_pos`` (0-based parquet row ordinal from
+    ``_metadata.row_index``).  Returns ``(None, [])`` when no live
+    data file can match."""
+    files, delete_files = plan.files()
     if not files:
         return None, []
-    ice_schema = table._current_schema(md)
-    schema = _to_spark_schema(ice_schema)
-    if preds:
-        field_id = {f["name"]: f["id"]
-                    for f in ice_schema["fields"]}
-        field_type = {f["name"]: f["type"]
-                      for f in ice_schema["fields"]
-                      if isinstance(f["type"], str)}
-        files = [f for f in files
-                 if _file_may_match(f, preds, field_id, field_type)]
-        if not files:
-            return None, []
-    fmts = {(f.get("file_format") or "PARQUET").upper()
-            for f in files}
-    if fmts - {"PARQUET"}:
-        raise NotImplementedError(
-            "iceberg row-level DML: parquet data files only (row "
-            "positions come from _metadata.row_index, which Spark "
-            f"exposes for parquet scans only); table has "
-            f"{sorted(fmts - {'PARQUET'})} files")
-    scan = spark.read.schema(schema).parquet(
-        *[_localize(f["file_path"]) for f in files])
-    out = IcebergTable._apply_deletes(
-        spark, scan, delete_files, schema, ice_schema, files,
-        keep_pos=True)
-    for col, op, lit in preds:
-        c = F.col(col)
-        out = out.filter({"=": c == lit, "<": c < lit,
-                          "<=": c <= lit, ">": c > lit,
-                          ">=": c >= lit}[op])
-    return out, files
+    return plan.table._scan_planned(spark, files, delete_files, plan.md,
+                                    plan.preds, keep_pos=True), files
 
 
 def _position_hits(spark: SparkSession, rows: DataFrame,
@@ -1331,16 +1288,14 @@ def delete_iceberg(spark: SparkSession, path: str,
             "iceberg delete: empty predicate would delete every row; "
             "pass explicit (column, op, literal) predicates")
     table = IcebergTable(path)
-    md = table.metadata()
-    _validate_preds(table._current_schema(md), list(where))
+    plan = table._read_plan(where=where)
     if equality:
         bad = [p for p in where if p[1] != "="]
         if bad:
             raise ValueError(
                 f"iceberg delete: equality=True needs '=' predicates "
                 f"only, got {bad}")
-        ice_schema = table._current_schema(md)
-        spark_schema = _to_spark_schema(ice_schema)
+        spark_schema = _to_spark_schema(plan.ice_schema)
         by_name = {f.name: f.dataType for f in spark_schema.fields}
         keys = spark.createDataFrame(
             [tuple(lit for _c, _op, lit in where)],
@@ -1348,7 +1303,7 @@ def delete_iceberg(spark: SparkSession, path: str,
                           for c, _op, _lit in where]))
         equality_delete_iceberg(spark, path, keys)
         return 1
-    live, files = _live_rows(spark, table, md, list(where))
+    live, files = _live_rows(spark, plan)
     if live is None:
         return 0
     del_entries, n_deleted, refd = _stage_position_deletes(
@@ -1436,16 +1391,14 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
     Returns the number of updated rows (0 = nothing matched, no
     commit)."""
     table = IcebergTable(path)
-    md = table.metadata()
-    ice_schema = table._current_schema(md)
+    plan = table._read_plan(where=where)
+    ice_schema = plan.ice_schema
     projection = set_projection(_to_spark_schema(ice_schema), set,
                                 "iceberg update: SET")
-    preds = list(where or [])
-    _validate_preds(ice_schema, preds)
-    live, files = _live_rows(spark, table, md, preds)
+    live, files = _live_rows(spark, plan)
     if live is None:
         return 0
-    part_info = _part_info(md, ice_schema)
+    part_info = _part_info(plan.md, ice_schema)
     matched = live.persist()
     del_entries, data_entries = [], []
     try:
@@ -1482,11 +1435,11 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
     clause commits as ``overwrite``.  Returns the committed snapshot
     id, or None when the merge is a no-op."""
     table = IcebergTable(path)
-    md = table.metadata()
-    ice_schema = table._current_schema(md)
+    plan = table._read_plan()
+    ice_schema = plan.ice_schema
     schema = _to_spark_schema(ice_schema)
-    part_info = _part_info(md, ice_schema)
-    live, files = _live_rows(spark, table, md, [])
+    part_info = _part_info(plan.md, ice_schema)
+    live, files = _live_rows(spark, plan)
     if live is None:
         full = T.StructType(list(schema.fields) + [
             T.StructField("_ice_path", T.StringType()),

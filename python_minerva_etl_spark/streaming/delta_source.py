@@ -7,6 +7,13 @@ Structured Streaming — via PySpark 4's Python DataSource API
     (spark.readStream.format("minerva_delta")              # stream
      .option("startingVersion", 0).load(path))
 
+A BATCH read scans the plan :meth:`DeltaTable._read_plan` builds for
+``read_delta`` too: time travel (``versionAsOf`` / ``timestampAsOf``),
+the column-mapping view and file pruning on the pushed filters are
+decided there once, so both readers agree on which files a query
+reads and how their columns resolve.  The stream and change-feed
+readers take their column-mapping view from the same place.
+
 The STREAMING reader is the point: micro-batch offsets are Delta
 commit versions, so a query tails the transaction log exactly like
 Delta's own streaming source — each trigger processes the dataChange
@@ -29,9 +36,11 @@ Scope: tables this engine can read, including column-mapped ones
 (mode "name" resolves physicalName, mode "id" resolves the file's
 own PARQUET:field_id — rename-proof), NESTED mapped columns
 included (executor-side arrow rebuild, struct children by field id
-or physical name, missing children null-fill); exotic partition
-types refuse loudly — ``read_delta`` remains the full-fidelity
-batch path.  Data files
+or physical name, missing children null-fill); partition types the
+one partition-value parser (:func:`storage.delta._partition_value`)
+does not read — timestamps, decimals — refuse loudly, and
+``read_delta`` reads them.  The sinks refuse column-mapped tables
+(their executors stage logical names).  Data files
 must carry every non-partition column (true for Spark-written
 tables).
 
@@ -44,8 +53,6 @@ the sinks' task-side parquet write in
 
 from __future__ import annotations
 
-import datetime
-import json
 import os
 import uuid
 
@@ -60,7 +67,8 @@ from pyspark.sql.datasource import (DataSource,
                                     WriterCommitMessage)
 
 from ..storage.commit import hive_segment, remove_files, write_parts
-from ..storage.delta import DeltaTable
+from ..storage.delta import (DeltaTable, _column_mapping,
+                             _partition_value)
 from .admission import admission_state, admit, cap_option
 from .source_api import (_flag, _opt, empty_when_pruned,
                          preds_from_filters, register, require_path)
@@ -71,42 +79,21 @@ class _FilePartition(InputPartition):
     partition columns it was written with."""
 
     def __init__(self, table_path: str, action: dict,
-                 part_cols: list[str], cm=None,
+                 part_cols: list[str], cm: tuple,
                  dv_diff: tuple[dict, dict | None] | None = None):
         self.table_path = table_path
         self.rel_path = action["path"]
         self.pvals = action.get("partitionValues") or {}
         self.part_cols = part_cols
-        # column mapping: ("name"|"id", ((logical, physical, fid),
-        # ...)) or None — resolved executor-side per file
+        # (mode, specs) of the column-mapping view
+        # (storage.delta._ColumnMapping) — resolved executor-side per
+        # file
         self.cm = cm
         # (new DV, old DV): emit ONLY the rows the new deletion
         # vector masks and the old one did not (a change-feed DV
         # update); otherwise the action's own DV masks rows out
         self.dv_diff = dv_diff
         self.dv = None if dv_diff else action.get("deletionVector")
-
-
-def _parse_pval(raw: str | None, dt: T.DataType):
-    """A Delta partitionValues string as a typed Python value (the
-    serialization PROTOCOL.md 'Partition Value Serialization'
-    defines)."""
-    if raw is None:
-        return None
-    if isinstance(dt, T.StringType):
-        return raw
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType,
-                       T.ByteType)):
-        return int(raw)
-    if isinstance(dt, T.BooleanType):
-        return raw == "true"
-    if isinstance(dt, T.DateType):
-        return datetime.date.fromisoformat(raw)
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float(raw)
-    raise NotImplementedError(
-        f"minerva_delta: partition type {dt.simpleString()!r} not "
-        "supported by the registered source — use read_delta()")
 
 
 def _read_partition(p: _FilePartition, schema: T.StructType):
@@ -128,46 +115,36 @@ def _read_partition(p: _FilePartition, schema: T.StructType):
     part_cols = p.part_cols
     target = to_arrow_schema(schema)
     fpath = os.path.join(p.table_path, p.rel_path)
-    pf = pq.ParquetFile(fpath)
-    file_names = set(pf.schema_arrow.names)
-    mode, fmap = p.cm if p.cm else (None, ())
-    # logical -> (file column name or None, partitionValues key)
+    sa = pq.ParquetFile(fpath).schema_arrow
+    file_names = set(sa.names)
+    mode, specs = p.cm
+    # mode id: match by the field ids the FILE declares
+    id_to_name = {}
+    if mode == "id":
+        for i in range(len(sa.names)):
+            raw = (sa.field(i).metadata or {}).get(b"PARQUET:field_id")
+            if raw is not None:
+                id_to_name[int(raw)] = sa.field(i).name
+    # logical -> file column name (None: the file lacks it), its
+    # partitionValues key (the physical name) and nested spec
     col_of: dict[str, str | None] = {}
     pkey: dict[str, str] = {}
     spec_of: dict[str, tuple | None] = {}
-    if mode is None:
-        for f in schema.fields:
-            col_of[f.name] = f.name if f.name in file_names else None
-            pkey[f.name] = f.name
-            spec_of[f.name] = None
-    elif mode == "name":
-        for lg, ph, _fid, spc in fmap:
+    for lg, ph, fid, spc in specs:
+        # a mapped field with no id (the synthetic _change_type in
+        # cdc files) matches by its physical NAME; a FILE with no
+        # PARQUET:field_id metadata at all (written by an engine that
+        # skipped id stamping) resolves by physicalName like mode
+        # "name" — id_to_name is empty, so an id lookup would
+        # null-fill every column and silently return all-null rows
+        # where the batch reader (parquet.fieldId.read.enabled) fails
+        # loudly
+        if fid is not None and id_to_name:
+            col_of[lg] = id_to_name.get(fid)
+        else:
             col_of[lg] = ph if ph in file_names else None
-            pkey[lg] = ph
-            spec_of[lg] = spc
-    else:  # id: match by the field ids the FILE declares
-        sa = pf.schema_arrow
-        id_to_name = {}
-        for i in range(len(sa.names)):
-            fld = sa.field(i)
-            raw = (fld.metadata or {}).get(b"PARQUET:field_id")
-            if raw is not None:
-                id_to_name[int(raw)] = fld.name
-        for lg, ph, fid, spc in fmap:
-            # a mapped field with no id (the synthetic _change_type
-            # in cdc files) matches by its physical NAME; a FILE
-            # with no PARQUET:field_id metadata at all (written by
-            # an engine that skipped id stamping) resolves by
-            # physicalName like mode "name" — id_to_name is empty,
-            # so an id lookup would null-fill every column and
-            # silently return all-null rows where the batch reader
-            # (parquet.fieldId.read.enabled) fails loudly
-            if fid is not None and id_to_name:
-                col_of[lg] = id_to_name.get(fid)
-            else:
-                col_of[lg] = ph if ph in file_names else None
-            pkey[lg] = ph
-            spec_of[lg] = spc
+        pkey[lg] = ph
+        spec_of[lg] = spc
     want = sorted({c for lg, c in col_of.items()
                    if c is not None and lg not in part_cols})
     tbl = pq.read_table(fpath, columns=want)
@@ -185,9 +162,8 @@ def _read_partition(p: _FilePartition, schema: T.StructType):
     for f in schema.fields:
         at = target.field(f.name).type
         if f.name in part_cols:
-            v = _parse_pval(p.pvals.get(pkey[f.name],
-                                        p.pvals.get(f.name)),
-                            f.dataType)
+            v = _partition_value(p.pvals.get(pkey[f.name]),
+                                 f.dataType)
             arrays.append(pa.array([v] * tbl.num_rows).cast(at))
         elif col_of[f.name] is None:
             # schema evolution: old files lack the new column
@@ -201,30 +177,6 @@ def _read_partition(p: _FilePartition, schema: T.StructType):
     out = pa.table(arrays, schema=target)
     for batch in out.to_batches():
         yield batch
-
-
-def _nested_spec(dt_: T.DataType, mode: str):
-    """Picklable nested-resolution spec for one mapped column, or
-    None when nothing below needs renaming:
-
-        ("struct", ((logical, physical, fid, child_spec), ...))
-        ("array", element_spec)
-        ("map", value_spec)         # map keys carry no field names
-    """
-    from ..storage.delta import (_field_id, _needs_rename,
-                                 _physical_name)
-
-    if not _needs_rename(dt_):
-        return None
-    if isinstance(dt_, T.StructType):
-        return ("struct", tuple(
-            (f.name, _physical_name(f),
-             _field_id(f) if mode == "id" else None,
-             _nested_spec(f.dataType, mode))
-            for f in dt_.fields))
-    if isinstance(dt_, T.ArrayType):
-        return ("array", _nested_spec(dt_.elementType, mode))
-    return ("map", _nested_spec(dt_.valueType, mode))
 
 
 def _arrow_rebuild(arr, spec, target_type, mode):
@@ -292,56 +244,32 @@ def _arrow_rebuild(arr, spec, target_type, mode):
     return out.cast(target_type)
 
 
-def _check_supported(meta: dict):
-    """Returns the partition descriptor's column-mapping tuple
-    (("name"|"id", ((logical, physical, fid, nested_spec), ...)) or
-    None) — raising on unknown modes.  Nested mapped columns carry a
-    :func:`_nested_spec` resolved executor-side by
-    :func:`_arrow_rebuild`."""
-    import json as _json
-
-    from ..storage.delta import _field_id, _physical_name
-
-    conf = meta.get("configuration") or {}
-    mode = conf.get("delta.columnMapping.mode") or "none"
-    if mode == "none":
-        return None
-    if mode not in ("name", "id"):
-        raise NotImplementedError(
-            f"minerva_delta: column mapping mode {mode!r} unknown")
-    schema = T.StructType.fromJson(_json.loads(meta["schemaString"]))
-    return (mode, tuple(
-        (f.name, _physical_name(f),
-         _field_id(f) if mode == "id" else None,
-         _nested_spec(f.dataType, mode))
-        for f in schema.fields))
+def _read_plan(options: dict):
+    """The table's read plan (:meth:`DeltaTable._read_plan`) at the
+    ``versionAsOf`` / ``timestampAsOf`` options."""
+    vao = _opt(options, "versionAsOf")
+    tao = _opt(options, "timestampAsOf")
+    if tao is not None:
+        # epoch-ms if numeric, else ISO-8601 (option values always
+        # arrive as strings)
+        try:
+            tao = int(tao)
+        except ValueError:
+            pass
+    return DeltaTable(require_path(options, "minerva_delta"))._read_plan(
+        int(vao) if vao is not None else None, tao)
 
 
 class _BatchReader(DataSourceReader):
+    """A snapshot read over :meth:`DeltaTable._read_plan`, the plan
+    ``read_delta`` scans: one input partition per file the pushed
+    filters may match."""
+
     def __init__(self, options: dict):
-        self.path = require_path(options, "minerva_delta")
-        dt = DeltaTable(self.path)
-        vao = _opt(options, "versionAsOf")
-        tao = _opt(options, "timestampAsOf")
-        if vao is not None and tao is not None:
-            raise ValueError("minerva_delta: pass versionAsOf OR "
-                             "timestampAsOf, not both")
-        if tao is not None:
-            # epoch-ms if numeric, else ISO-8601 (option values
-            # always arrive as strings)
-            try:
-                tao = int(tao)
-            except ValueError:
-                pass
-            vao = dt.version_at(tao)
-        snap = dt._replay(int(vao) if vao is not None else None)
-        self.cm = _check_supported(snap["metaData"])
-        meta = snap["metaData"]
-        self.schema_ = T.StructType.fromJson(
-            json.loads(meta["schemaString"]))
-        self.part_cols = meta.get("partitionColumns") or []
-        self.table_path = os.path.abspath(self.path)
-        self.files = snap["files"]
+        self.plan = _read_plan(options)
+        self.schema_ = self.plan.cm.schema
+        self.table_path = os.path.abspath(
+            require_path(options, "minerva_delta"))
         self.preds: list[tuple] = []
 
     def pushFilters(self, filters):
@@ -355,18 +283,10 @@ class _BatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        files = self.files
-        if self.preds:
-            from ..storage.delta import _add_may_match
-
-            type_of = {f.name: f.dataType
-                       for f in self.schema_.fields}
-            files = [f for f in files
-                     if _add_may_match(f, self.preds,
-                                       self.part_cols, type_of)]
-        return [_FilePartition(self.table_path, f, self.part_cols,
-                               self.cm)
-                for f in files]
+        plan = self.plan.pruned(self.preds)
+        cm = (plan.cm.mode, plan.cm.specs)
+        return [_FilePartition(self.table_path, f, plan.part_cols, cm)
+                for f in plan.files]
 
     @empty_when_pruned
     def read(self, partition):
@@ -412,9 +332,9 @@ class _CdfBatchReader(DataSourceReader):
         self.start = int(sv)
         self.end, self.meta = self.dt._change_range(
             self.start, None if endo is None else int(endo))
-        self.cm = _check_supported(self.meta)
-        self.schema_ = T.StructType.fromJson(
-            json.loads(self.meta["schemaString"]))
+        cm = _column_mapping(self.meta)
+        self.cm = (cm.mode, cm.specs)
+        self.schema_ = cm.schema
         self.table_path = os.path.abspath(self.path)
 
     def cdf_schema(self) -> T.StructType:
@@ -425,11 +345,11 @@ class _CdfBatchReader(DataSourceReader):
                T.StructField("_commit_timestamp", T.TimestampType())])
 
     def partitions(self):
-        cm_ct = None
-        if self.cm:
-            cm_ct = (self.cm[0],
-                     self.cm[1] + (("_change_type", "_change_type",
-                                    None, None),))
+        # cdc files store the synthetic _change_type under its own
+        # name
+        cm_ct = (self.cm[0],
+                 self.cm[1] + (("_change_type", "_change_type",
+                                None, None),))
         plan = self.dt._change_plan(self.start, self.end, self.meta)
         return [_CdfPartition(
             _FilePartition(
@@ -476,12 +396,10 @@ class _StreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self.path = require_path(options, "minerva_delta")
         self.dt = DeltaTable(self.path)
-        snap = self.dt._replay()
-        self.cm = _check_supported(snap["metaData"])
-        meta = snap["metaData"]
-        self.schema_ = T.StructType.fromJson(
-            json.loads(meta["schemaString"]))
-        self.part_cols = meta.get("partitionColumns") or []
+        plan = self.dt._read_plan()
+        self.cm = (plan.cm.mode, plan.cm.specs)
+        self.schema_ = plan.cm.schema
+        self.part_cols = plan.part_cols
         self.table_path = os.path.abspath(self.path)
         sv = _opt(options, "startingVersion")
         st = _opt(options, "startingTimestamp")
@@ -701,7 +619,12 @@ class _DeltaWriter(DataSourceArrowWriter):
         dt = DeltaTable(self.path)
         if dt._next_version():
             snap = dt._replay()  # fail fast, before executors write
-            _check_supported(snap["metaData"])
+            if _column_mapping(snap["metaData"]).mode:
+                # executors stage logical names, which no reader of
+                # a mapped table resolves
+                raise NotImplementedError(
+                    "minerva_delta sink: column-mapped tables are "
+                    "unsupported (use DeltaTable.write)")
             dt._check_writable(snap, self.mode)
             table_pcols = snap["metaData"].get(
                 "partitionColumns") or []
@@ -781,10 +704,9 @@ class MinervaDeltaDataSource(DataSource):
         return _flag(dict(self.options), "readChangeFeed")
 
     def schema(self):
-        path = require_path(dict(self.options), "minerva_delta")
         if self._cdf():
             return _CdfBatchReader(dict(self.options)).cdf_schema()
-        return DeltaTable(path).schema()
+        return _read_plan(dict(self.options)).cm.schema
 
     def reader(self, schema) -> DataSourceReader:
         if self._cdf():

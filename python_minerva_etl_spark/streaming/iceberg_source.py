@@ -27,6 +27,15 @@ sequence-ordered), replace/compaction snapshots emit nothing, and
 order — a downstream aggregate can be maintained with signed
 re-aggregation exactly like the Delta CDF path.
 
+A BATCH read scans the plan :meth:`IcebergTable._read_plan` builds
+for ``read_iceberg`` and the row-level DML too: the snapshot
+selector (``snapshotId`` / ``ref`` / ``as-of-timestamp``), the
+predicate check and manifest and file pruning on the pushed filters
+are decided there once.  Every data file — batch, stream and
+changelog pre-image alike — is read by one Arrow reader
+(:func:`_read_ice_file`), which runs ``read_iceberg``'s footer guard
+(:func:`storage.iceberg._check_footer`) on the footer it opens.
+
 Scope: parquet data files.  BATCH mode applies merge-on-read
 POSITION deletes executor-side (each file's deleted row ordinals
 mask its pyarrow read — positions are 0-based per file, exactly the
@@ -60,7 +69,8 @@ from pyspark.sql.datasource import (DataSource,
 
 from ..storage.commit import (_FILE_URI, _localize, hive_segment,
                               remove_files, write_parts)
-from ..storage.iceberg import (IcebergTable, _delete_pairs, _parent_id,
+from ..storage.iceberg import (IcebergTable, _check_footer,
+                               _delete_pairs, _parent_id,
                                _to_spark_schema, _touching, _types_by_id,
                                _walk_chain)
 from .admission import admission_state, admit, cap_option
@@ -154,37 +164,48 @@ def _eq_dead_mask(tbl, file_seq, eq_deletes):
     return mask
 
 
-def _read_ice_partition(p: _IceFilePartition,
-                        schema: T.StructType):
-    """One Iceberg data file → pyarrow RecordBatches matching the
-    table schema (files carry every column — identity-partitioned
-    writers included; schema-evolution gaps null-fill); position
-    deletes mask rows by their 0-based ordinal, then sequence-ordered
-    equality deletes mask by key match, before emission."""
+def _live_mask(tbl, p: _IceFilePartition):
+    """Bool mask over ``tbl``'s raw file rows: True = live under the
+    delete files of ``p`` — position deletes by 0-based ordinal,
+    sequence-ordered equality deletes by key match."""
+    return ~(_pos_dead_mask(p.orig_path, p.delete_paths, tbl.num_rows)
+             | _eq_dead_mask(tbl, p.file_seq, p.eq_deletes))
+
+
+def _read_ice_file(p: _IceFilePartition, schema: T.StructType,
+                   keep=_live_mask):
+    """One Iceberg data file as a pyarrow Table matching ``schema``
+    (files carry every column — identity-partitioned writers
+    included; a missing optional column null-fills, a missing
+    required one refuses by :func:`storage.iceberg._check_footer`,
+    the guard ``read_iceberg`` runs), keeping the rows whose
+    ``keep(table, p)`` mask is True."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(schema)
-    have = set(pq.ParquetFile(p.file_path).schema_arrow.names)
-    want = [f.name for f in schema.fields]
-    tbl = pq.read_table(p.file_path,
-                        columns=[c for c in want if c in have])
-    keep = ~(_pos_dead_mask(p.orig_path, p.delete_paths,
-                            tbl.num_rows)
-             | _eq_dead_mask(tbl, p.file_seq, p.eq_deletes))
-    if not keep.all():
-        tbl = tbl.filter(pa.array(keep))
+    names = pq.ParquetFile(p.file_path).schema_arrow.names
+    _check_footer(p.file_path, names, schema)
+    have = set(names)
+    tbl = pq.read_table(p.file_path, columns=[
+        f.name for f in schema.fields if f.name in have])
+    mask = keep(tbl, p)
+    if not mask.all():
+        tbl = tbl.filter(pa.array(mask))
     arrays = []
     for f in schema.fields:
         at = target.field(f.name).type
-        if f.name not in have:
-            arrays.append(pa.nulls(tbl.num_rows, type=at))
-        else:
-            arrays.append(tbl.column(f.name).cast(at))
-    out = pa.table(arrays, schema=target)
-    for batch in out.to_batches():
-        yield batch
+        arrays.append(tbl.column(f.name).cast(at) if f.name in have
+                      else pa.nulls(tbl.num_rows, type=at))
+    return pa.table(arrays, schema=target)
+
+
+def _read_ice_partition(p: _IceFilePartition,
+                        schema: T.StructType):
+    """One Iceberg data file → pyarrow RecordBatches of its live
+    rows (:func:`_read_ice_file`)."""
+    yield from _read_ice_file(p, schema).to_batches()
 
 
 # --------------------------------------------- changelog streaming
@@ -244,7 +265,6 @@ def _read_change_partition(p: _IceChangePartition,
     """One changelog input partition → RecordBatches of table rows +
     change columns."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(out_schema)
@@ -259,38 +279,16 @@ def _read_change_partition(p: _IceChangePartition,
         out = pa.table(arrays, schema=target)
         yield from out.to_batches()
 
-    if p.kind == "insert":
-        for batch in _read_ice_partition(p.fp, base_schema):
-            yield from tag(pa.Table.from_batches([batch]))
-        return
+    def pre_image(tbl, fp: _IceFilePartition):
+        # live under the PARENT's delete state, and killed by the
+        # snapshot's NEW delete files
+        return _live_mask(tbl, fp) & (
+            _pos_dead_mask(fp.orig_path, p.new_pos, tbl.num_rows)
+            | _eq_dead_mask(tbl, fp.file_seq, p.new_eq))
 
-    fp = p.fp
-    have = set(pq.ParquetFile(fp.file_path).schema_arrow.names)
-    want = [f.name for f in base_schema.fields]
-    tbl = pq.read_table(fp.file_path,
-                        columns=[c for c in want if c in have])
-    # live under the PARENT's delete state ...
-    alive = ~(_pos_dead_mask(fp.orig_path, fp.delete_paths,
-                             tbl.num_rows)
-              | _eq_dead_mask(tbl, fp.file_seq, fp.eq_deletes))
-    # ... and killed by the snapshot's NEW delete files
-    newly_dead = (_pos_dead_mask(fp.orig_path, p.new_pos,
-                                 tbl.num_rows)
-                  | _eq_dead_mask(tbl, fp.file_seq, p.new_eq))
-    emit = alive & newly_dead
-    if not emit.any():
-        return
-    tbl = tbl.filter(pa.array(emit))
-    arrays = []
-    for f in base_schema.fields:
-        at = target.field(f.name).type
-        if f.name not in have:
-            arrays.append(pa.nulls(tbl.num_rows, type=at))
-        else:
-            arrays.append(tbl.column(f.name).cast(at))
-    named = pa.table(arrays, schema=pa.schema(
-        [target.field(f.name) for f in base_schema.fields]))
-    yield from tag(named)
+    yield from tag(_read_ice_file(
+        p.fp, base_schema,
+        _live_mask if p.kind == "insert" else pre_image))
 
 
 def _parquet_paths(files: list[dict]) -> list[str]:
@@ -355,8 +353,8 @@ def _build_changelog_partitions(tbl: IcebergTable, ice_schema: dict,
                 f"minerva_iceberg changelog: snapshot {sid}'s parent "
                 f"{parent_id} is expired — the delete's pre-images "
                 "cannot be reconstructed; start the feed after it")
-        files_p, dels_p = tbl._data_files(parent, (), md)
-        _, dels_s = tbl._data_files(s, (), md)
+        files_p, dels_p = tbl._data_files(parent)
+        _, dels_s = tbl._data_files(s)
         seen = {d["file_path"] for d in dels_p}
         new_pos, new_eq = _delete_pairs(
             [d for d in dels_s if d["file_path"] not in seen],
@@ -418,23 +416,18 @@ class _IceChangelogBatchReader(DataSourceReader):
 
 
 class _IceBatchReader(DataSourceReader):
+    """A snapshot read over :meth:`IcebergTable._read_plan`, the plan
+    ``read_iceberg`` lists its files from: one input partition per
+    data file the pushed filters may match."""
+
     def __init__(self, options: dict):
-        self.tbl = IcebergTable(require_path(options, "minerva_iceberg"))
-        self.md = self.tbl.metadata()
-        self.ice_schema = self.tbl._current_schema(self.md)
-        self.schema_ = _to_spark_schema(self.ice_schema)
         sid = _opt(options, "snapshotId")
-        ref = _opt(options, "ref")
         aot = _opt(options, "as-of-timestamp")  # upstream Spark name
-        if sum(x is not None for x in (sid, ref, aot)) > 1:
-            raise ValueError(
-                "minerva_iceberg: pass only one of snapshotId / ref "
-                "/ as-of-timestamp")
-        if ref is not None:
-            sid = self.tbl.resolve_ref(ref)
-        elif aot is not None:
-            sid = self.tbl.snapshot_at(int(aot))  # epoch ms
-        self.sid = int(sid) if sid is not None else None
+        self.plan = IcebergTable(
+            require_path(options, "minerva_iceberg"))._read_plan(
+            int(sid) if sid is not None else None, _opt(options, "ref"),
+            int(aot) if aot is not None else None)  # epoch ms
+        self.schema_ = _to_spark_schema(self.plan.ice_schema)
         self.preds: list[tuple] = []
 
     def pushFilters(self, filters):
@@ -449,25 +442,13 @@ class _IceBatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        from ..storage.iceberg import _file_may_match
-
-        files, deletes = self.tbl._data_files(
-            self.tbl._snapshot(self.md, self.sid), self.preds,
-            self.md)
+        plan = self.plan.where(self.preds)
+        files, deletes = plan.files()
         # sequence-ordered equality deletes are applied EXECUTOR-side
         # per file (each task anti-joins its own rows against the
         # small delete parquet)
-        pos, eq = _delete_pairs(deletes, files, self.ice_schema)
-        if self.preds:
-            field_id = {f["name"]: f["id"]
-                        for f in self.ice_schema["fields"]}
-            field_type = {f["name"]: f["type"]
-                          for f in self.ice_schema["fields"]
-                          if isinstance(f["type"], str)}
-            files = [f for f in files
-                     if _file_may_match(f, self.preds, field_id,
-                                        field_type)]
-        types_by_id = _types_by_id(self.ice_schema)
+        pos, eq = _delete_pairs(deletes, files, plan.ice_schema)
+        types_by_id = _types_by_id(plan.ice_schema)
         return [_file_partition(p, f, pos, eq, types_by_id)
                 for p, f in zip(_parquet_paths(files), files)]
 

@@ -47,32 +47,3 @@ def merge_stream(stream: DataFrame, table_path: str, key: list[str],
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def append_stream_delta(stream: DataFrame, table_path: str,
-                        query_name: str, checkpoint_dir: str,
-                        partition_by: list[str] = (),
-                        available_now: bool = True) -> StreamingQuery:
-    """Exactly-once streaming APPEND into a Delta table other engines
-    can read: foreachBatch + :meth:`storage.delta.DeltaTable.write`
-    with ``txn=(query_name, batch_id)`` — the protocol's Transaction
-    Identifiers pattern.  A batch re-delivered after a crash between
-    the Delta commit and the streaming checkpoint is recognized in
-    the replayed txn ledger and skipped, so every micro-batch lands
-    exactly once."""
-    from ..storage.delta import DeltaTable
-
-    table = DeltaTable(table_path)
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        table.write(batch_df.sparkSession, batch_df, mode="append",
-                    partition_by=list(partition_by),
-                    txn=(query_name, int(batch_id)))
-
-    writer = (stream.writeStream
-              .foreachBatch(_append)
-              .queryName(query_name)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

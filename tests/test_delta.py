@@ -494,7 +494,7 @@ def test_append_stream_delta_exactly_once(spark, tmp_path):
     t = DT(p)
     batch = spark.createDataFrame([(1, "a"), (2, "b")],
                                   "id long, v string")
-    # simulate the sink's _append being called twice with batch_id 0
+    # simulate batch 0 delivered twice
     for _ in range(2):
         t.write(spark, batch, mode="append", txn=("q1", 0))
     assert _rows(read_delta(spark, p)) == [(1, "a"), (2, "b")]

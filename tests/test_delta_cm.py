@@ -746,3 +746,83 @@ def test_deep_nesting_roundtrip_both_modes(spark, tmp_path):
                .load(p).collect()}
         assert sorted(map(str, got.values())) == \
             sorted(map(str, eng.values())), mode
+
+
+@pytest.mark.parametrize("mode", ["name", "id"])
+def test_mapped_filters_prune_on_physical_keys(spark, tmp_path, mode):
+    """A filter on a column-mapped partitioned table prunes on the
+    PHYSICAL partitionValues and stats keys, through read_delta's
+    ``where`` and the registered source's pushed filters alike, and
+    returns exactly the unpruned read's matching rows — proven by
+    corrupting the file the filter excludes (a pruned file is never
+    opened)."""
+    import shutil
+
+    import pyarrow as pa
+
+    from python_minerva_etl_spark.streaming.delta_source import (
+        register_delta_source)
+
+    register_delta_source(spark)
+    p = str(tmp_path / "t")
+    os.makedirs(os.path.join(p, "part"))
+    adds = []
+    for name, ids, region in (("f0", [1, 2], "emea"),
+                              ("f1", [3], "apac")):
+        _pq_with_ids(os.path.join(p, "part", f"{name}.parquet"),
+                     [("col-i", 1, pa.array(ids, type=pa.int64()))])
+        add = _add(f"part/{name}.parquet", {"col-r": region})
+        add["add"]["stats"] = json.dumps({
+            "numRecords": len(ids), "minValues": {"col-i": min(ids)},
+            "maxValues": {"col-i": max(ids)},
+            "nullCount": {"col-i": 0}})
+        adds.append(add)
+    _log(p, [_fld("id", "long", "col-i", 1),
+             _fld("region", "string", "col-r", 2)],
+         adds, partition_cols=["region"], mode=mode)
+    full = _rows(read_delta(spark, p))
+    assert full == [(1, "emea"), (2, "emea"), (3, "apac")]
+    for where, sql, want, excluded in (
+            ([("region", "=", "emea")], "region = 'emea'",
+             [(1, "emea"), (2, "emea")], "f1"),
+            ([("id", ">=", 3)], "id >= 3", [(3, "apac")], "f0")):
+        victim = os.path.join(p, "part", f"{excluded}.parquet")
+        shutil.copy(victim, victim + ".bak")
+        with open(victim, "wb") as fh:
+            fh.write(b"not parquet at all")
+        assert _rows(read_delta(spark, p, where=where)) == want, sql
+        got = spark.read.format("minerva_delta").load(p).filter(sql)
+        assert _rows(got) == want, sql
+        os.replace(victim + ".bak", victim)
+
+
+def test_unknown_mapping_mode_refuses_on_every_path(spark, tmp_path):
+    """One reader of ``delta.columnMapping.mode`` serves the snapshot
+    read, the change feed, the registered source and the writers, so
+    an unknown mode refuses on all of them; the change feed used to
+    read it as mode 'name'."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_minerva_etl_spark.storage.delta import DeltaTable
+    from python_minerva_etl_spark.streaming.delta_source import (
+        register_delta_source)
+
+    register_delta_source(spark)
+    p = str(tmp_path / "t")
+    os.makedirs(p)
+    pq.write_table(pa.table({"col-a": pa.array([1], pa.int64())}),
+                   os.path.join(p, "f0.parquet"))
+    _log(p, [_fld("id", "long", "col-a", 1)], [_add("f0.parquet")],
+         mode="future")
+    dt = DeltaTable(p)
+    for attempt in (
+            lambda: read_delta(spark, p),
+            lambda: dt.changes(spark, 0).collect(),
+            lambda: spark.read.format("minerva_delta").load(p).collect(),
+            lambda: (spark.read.format("minerva_delta")
+                     .option("readChangeFeed", "true")
+                     .option("startingVersion", 0).load(p).collect()),
+            lambda: dt.write(spark, spark.range(1).toDF("id"))):
+        with pytest.raises(Exception, match="'future' unknown"):
+            attempt()

@@ -6,6 +6,7 @@ never opened).  The residual filter keeps results exact."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -169,3 +170,57 @@ def test_optimize_sort_by_unknown_column_refuses(spark, tmp_path):
     write_delta(spark, spark.range(0, 5).toDF("id"), p)
     with pytest.raises(ValueError, match="sort_by"):
         DeltaTable(p).optimize(spark, sort_by=["nope"])
+
+
+@pytest.mark.parametrize("ddl,rows,where", [
+    ("d date", [datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)],
+     [("d", "=", datetime.date(2024, 1, 2))]),
+    ("d date", [datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)],
+     [("d", ">", "2024-01-01")]),
+    ("d boolean", [False, True], [("d", "=", True)]),
+    ("d boolean", [False, True], [("d", "<", True)]),
+])
+def test_typed_partition_values_prune(spark, tmp_path, ddl, rows,
+                                      where):
+    """Date and boolean partition values parse by the one Delta
+    partition-value parser, so a typed literal (what Spark's pushdown
+    hands the registered source) or a string literal parsed by the
+    same rule prunes the other file — it is corrupted and never
+    opened — and the rows equal the unpruned read's."""
+    from pyspark.sql import functions as F
+
+    from python_minerva_etl_spark.streaming.delta_source import (
+        register_delta_source)
+
+    register_delta_source(spark)
+    p = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(rows)],
+                               f"id long, {ddl}")
+    DeltaTable(p).write(spark, df, partition_by=["d"])
+    (col, op, lit), = where
+    cond = {"=": F.col(col) == F.lit(lit), ">": F.col(col) > F.lit(lit),
+            "<": F.col(col) < F.lit(lit)}[op]
+    want = _rows(read_delta(spark, p).filter(cond))
+    assert len(want) == 1
+    keep = str(want[0][1]).lower()
+    files = DeltaTable(p)._replay()["files"]
+    assert len(files) == 2
+    for f in files:
+        if f["partitionValues"]["d"] != keep:
+            _corrupt(p, f["path"])
+    assert _rows(read_delta(spark, p, where=where)) == want
+    got = spark.read.format("minerva_delta").load(p).filter(cond)
+    assert _rows(got) == want
+
+
+def test_unparsed_partition_values_keep_their_files(spark, tmp_path):
+    """A partition type the parser does not read (decimal) keeps every
+    file: a string literal is never compared with the raw partition
+    string, which orders '10.50' below '9.5'."""
+    p = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "9.25"), (2, "10.50")],
+                               "id long, d string").selectExpr(
+        "id", "CAST(d AS DECIMAL(6, 2)) AS d")
+    DeltaTable(p).write(spark, df, partition_by=["d"])
+    got = read_delta(spark, p, where=[("d", ">", "9.5")])
+    assert [r.id for r in got.collect()] == [2]

@@ -701,3 +701,45 @@ def test_max_files_per_trigger_live_stream(ds_spark, tmp_path):
         assert sizes and max(sizes) <= 10 and len(sizes) >= 4
     finally:
         q.stop()
+
+
+def test_batch_version_as_of_reads_that_versions_schema(ds_spark,
+                                                        tmp_path):
+    """The source declares the schema of the version it reads:
+    ``versionAsOf`` before an add-column evolution returns the old
+    columns, as read_delta does, instead of a schema mismatch."""
+    p = str(tmp_path / "t")
+    dt = DeltaTable(p)
+    dt.write(ds_spark, ds_spark.createDataFrame([(1,)], "id long"))
+    dt.write(ds_spark, ds_spark.createDataFrame(
+        [(2, "x")], "id long, v string"), merge_schema=True)
+    got = (ds_spark.read.format("minerva_delta")
+           .option("versionAsOf", 0).load(p))
+    assert got.columns == dt.read(ds_spark, 0).columns == ["id"]
+    assert _rows(got) == [(1,)]
+
+
+def test_sink_refuses_column_mapped_table(ds_spark, tmp_path):
+    """The sink's executors stage logical column names, which a
+    column-mapped table's readers never resolve: an append refuses
+    before any file is written instead of landing rows that read
+    back as nulls."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_delta_cm import _add, _fld, _log
+
+    p = str(tmp_path / "t")
+    os.makedirs(p)
+    pq.write_table(pa.table({"col-a": pa.array([1], pa.int64()),
+                             "col-b": pa.array(["x"])}),
+                   os.path.join(p, "f0.parquet"))
+    _log(p, [_fld("id", "long", "col-a", 1),
+             _fld("v", "string", "col-b", 2)], [_add("f0.parquet")])
+    with pytest.raises(Exception, match="column-mapped"):
+        (ds_spark.createDataFrame([(2, "y")], "id long, v string")
+         .write.format("minerva_delta").mode("append").save(p))
+    assert sorted(os.listdir(p)) == ["_delta_log", "f0.parquet"]
+    assert _rows(DeltaTable(p).read(ds_spark)) == [(1, "x")]

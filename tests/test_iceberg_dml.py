@@ -411,8 +411,8 @@ def test_retry_dml_refuses_when_compaction_rewrote_target_files(
     write_iceberg(spark, spark.createDataFrame(
         [(100, "x", 1)], "id long, name string, val long"), p)
     table = IcebergTable(p)
-    md = table.metadata()
-    live, files = _live_rows(spark, table, md, [("id", "<", 3)])
+    live, files = _live_rows(spark,
+                             table._read_plan(where=[("id", "<", 3)]))
     del_entries, n, refd = _stage_position_deletes(
         spark, p, _position_hits(spark, live, files))
     assert n == 3 and refd

@@ -5,8 +5,11 @@ append scan semantics)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from python_minerva_etl_spark.storage.iceberg import (IcebergTable,
                                                       read_iceberg)
@@ -747,3 +750,52 @@ def test_max_files_per_micro_batch_offset_walk(ice_spark, tmp_path):
         _IceStreamReader(
             {"path": p,
              "streaming-max-files-per-micro-batch": "0"})
+
+
+def test_batch_refuses_file_lacking_required_column(ice_spark, tmp_path):
+    """The registered source runs read_iceberg's footer guard on the
+    footer its executor-side reader opens: a data file lacking a
+    REQUIRED column (the rename case name-based resolution cannot
+    follow) refuses with the reader's error instead of null-filling a
+    non-nullable column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_iceberg import _build_table
+
+    root = str(tmp_path / "ice")
+    _build_table(root)
+    pq.write_table(pa.table({"id_old": pa.array([2], pa.int64()),
+                             "v": pa.array(["b"], pa.string())}),
+                   os.path.join(root, "data", "f2.parquet"))
+    with pytest.raises(Exception, match="renamed or schema-evolved"):
+        (ice_spark.read.format("minerva_iceberg")
+         .option("snapshotId", 1).load(root).collect())
+
+
+def test_changelog_pre_image_refuses_file_lacking_required_column(
+        ice_spark, tmp_path):
+    """A delete snapshot's pre-images read the parent's data files
+    through the same reader and footer guard as the batch source."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t")
+    df = ice_spark.createDataFrame(
+        [(i, f"v{i}") for i in range(4)],
+        T.StructType([T.StructField("id", T.LongType(), False),
+                      T.StructField("v", T.StringType())])).coalesce(1)
+    write_iceberg(ice_spark, df, p)
+    s1 = IcebergTable(p).metadata()["current-snapshot-id"]
+    delete_iceberg(ice_spark, p, [("id", "=", 2)])
+    data, = [f for f in glob.glob(os.path.join(p, "data", "*.parquet"))
+             if "del-" not in os.path.basename(f)]
+    pq.write_table(pa.table({"id_old": pa.array(range(4), pa.int64()),
+                             "v": pa.array([f"v{i}" for i in range(4)])}),
+                   data)
+    with pytest.raises(Exception, match="renamed or schema-evolved"):
+        (ice_spark.read.format("minerva_iceberg")
+         .option("changelog", "true").option("fromSnapshotId", s1)
+         .load(p).collect())

@@ -110,8 +110,7 @@ def test_written_bounds_prune_files(spark, tmp_path):
     write_iceberg(spark, hi, p)
     t = IcebergTable(p)
     md = t.metadata()
-    files, _ = t._data_files(t._snapshot(md, None),
-                             [("id", ">=", 100)], md)
+    files, _ = t._data_files(t._snapshot(md, None))
     # manifest replay keeps both; file pruning is in read()
     from python_minerva_etl_spark.storage.iceberg import \
         _file_may_match
@@ -493,7 +492,7 @@ def test_decimal_columns_roundtrip_and_where(spark, tmp_path):
         assert got == [(i,) for i in range(100, 105)], col
     t = IcebergTable(p)
     md = t.metadata()
-    files, _ = t._data_files(t._snapshot(md, None), [], md)
+    files, _ = t._data_files(t._snapshot(md, None))
     from python_minerva_etl_spark.storage.iceberg import _file_may_match
     sch = t._current_schema(md)
     fid = {f["name"]: f["id"] for f in sch["fields"]}

@@ -1,5 +1,7 @@
-"""One home per rule for the lake formats' change, delete and commit
-logic: the Delta change feed is classified once in
+"""One home per rule for the lake formats' read, change, delete and
+commit logic: each format plans a snapshot read once and its
+DataFrame reader and registered batch source both scan that plan,
+the Delta change feed is classified once in
 ``storage/delta.py`` and both of its readers consume that plan,
 Iceberg's delete assignment and snapshot-chain walk live in
 ``storage/iceberg.py``, every Iceberg snapshot commits through one
@@ -158,3 +160,74 @@ def test_delta_commits_once():
                 assert calls.index("_next_version") \
                     < calls.index("_replay"), (rel, fn)
     assert "_commit" in listers
+
+
+def _constant_homes(needle: str) -> set[tuple[str, str]]:
+    """``(module, innermost function)`` of every string constant
+    containing ``needle`` in the package, docstrings left out
+    (``""`` for module level)."""
+    homes = set()
+    for rel, text in _modules():
+        tree = ast.parse(text)
+        docs = {id(node.body[0].value) for node in ast.walk(tree)
+                if isinstance(node, (ast.Module, ast.ClassDef,
+                                     ast.FunctionDef,
+                                     ast.AsyncFunctionDef))
+                and node.body and isinstance(node.body[0], ast.Expr)
+                and isinstance(node.body[0].value, ast.Constant)}
+        fns = [fn for fn in ast.walk(tree)
+               if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for c in ast.walk(tree):
+            if (isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and needle in c.value and id(c) not in docs):
+                owners = [fn for fn in fns
+                          if fn.lineno <= c.lineno <= fn.end_lineno]
+                homes.add((rel, max(owners, key=lambda fn: fn.lineno).name
+                           if owners else ""))
+    return homes
+
+
+def test_snapshot_reads_planned_once():
+    """Time travel, column mapping, file pruning and the footer guard
+    of a snapshot read are decided once per format: Delta in
+    ``DeltaTable._read_plan`` (its column-mapping view in
+    ``_column_mapping``), Iceberg in ``IcebergTable._read_plan``.  The
+    DataFrame readers, the registered batch sources and Iceberg's
+    row-level DML scan those plans and plan nothing themselves."""
+    from python_minerva_etl_spark.storage.delta import DeltaTable
+    from python_minerva_etl_spark.storage.iceberg import IcebergTable
+    from python_minerva_etl_spark.storage.iceberg_write import _live_rows
+    from python_minerva_etl_spark.streaming.delta_source import (
+        _BatchReader)
+    from python_minerva_etl_spark.streaming.iceberg_source import (
+        _IceBatchReader)
+
+    assert _constant_homes("delta.columnMapping.mode") == {
+        ("storage/delta.py", "_column_mapping")}
+    # file pruning is called from the plans alone (SnapTable's
+    # _file_may_match is another function of the same name)
+    assert _holders(re.compile(r"\b_add_may_match\(")) == [
+        "storage/delta.py"]
+    assert _callers("storage/delta.py", "_add_may_match") == {"pruned"}
+    assert _holders(re.compile(r"\b_(file|manifest)_may_match\("),
+                    "iceberg") == ["storage/iceberg.py"]
+    assert _callers("storage/iceberg.py", "_file_may_match") == {
+        "pruned"}
+    assert _callers("storage/iceberg.py", "_manifest_may_match") == {
+        "files", "manifest_ok"}
+    planners = ("_replay(", "version_at(", "resolve_ref(",
+                "snapshot_at(", "_data_files(")
+    for reader in (_BatchReader, _IceBatchReader, _live_rows):
+        src = inspect.getsource(reader)
+        assert not [p for p in planners if p in src], reader
+    assert "_read_plan(" in inspect.getsource(DeltaTable.read)
+    assert "_read_plan(" in inspect.getsource(IcebergTable.read)
+    assert "pruned(" in inspect.getsource(_BatchReader)
+    assert "_read_plan(" in inspect.getsource(_IceBatchReader)
+    assert "files()" in inspect.getsource(_IceBatchReader)
+    assert "files()" in inspect.getsource(_live_rows)
+    # one predicate check and one footer guard
+    assert sum(text.count("unsupported predicate op")
+               for _rel, text in _modules()) == 1
+    assert _holders(re.compile(r"renamed or schema-evolved")) == [
+        "storage/iceberg.py"]
